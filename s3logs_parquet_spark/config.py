@@ -90,20 +90,12 @@ class EngineConfig:
     bulk_lines: int = 200_000
     threshold_lines: int = 10_000_000
     extra_field_prefix: str = "ExtraField"  # widening names (utils.rs:1217-1222)
-    corrupt_column: str = "_corrupt_line"
     # Base field names loaded from a config schema FILE (the
     # reference's startup path: S3LOGS_CONFIG_ROOT_PATH +
     # S3LOGS_CONFIG_PARQUET_SCHEMA_FILE -> parse_message_type,
     # utils.rs:781-791). None -> the built-in 26-name list
     # (schema.LOG_FIELDS, identical to the shipped parquet.schema).
     schema_fields: tuple[str, ...] | None = None
-
-    # training-data / query-layer extensions (no reference counterpart)
-    shuffle_partitions: int = 32
-    # dedup BEFORE the full parse (cheap prefix-regex key) — wins on
-    # redelivery-heavy backfills; see plans/batch.py:parse_and_dedup
-    # and the PERF.md measurements. Env: SPARK_GRAFT_DEDUP_EARLY.
-    dedup_early: bool = False
 
     def __post_init__(self) -> None:
         if self.aggregate_second < self.stagging_second:
@@ -219,7 +211,6 @@ class EngineConfig:
             ),
             compression=_env_str("S3LOGS_TRANSFORM_PARQUET_COMPRESSION", "gzip"),
             bulk_lines=_env_int("S3LOGS_TRANSFORM_PARQUET_WRTIER_BULK_LINES", 200_000),
-            dedup_early=_env_bool("SPARK_GRAFT_DEDUP_EARLY", False),
         )
 
 

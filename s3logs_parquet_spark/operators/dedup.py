@@ -546,62 +546,138 @@ def _scored_pairs(
     )
 
 
-def _with_bucket_sizes(
+def banded_pairs(
     banded: DataFrame,
-    keys: tuple[str, ...],
     id_col: str,
-    max_bucket_size: int,
-    want_rep: bool = False,
-    rep_expr=None,
+    keys: tuple[str, ...],
+    max_bucket_size: int | None,
+    oversize_policy: str,
+    op: str,
+    carry: str | None = None,
+    materialize: bool = False,
+    durable: bool = False,
 ) -> DataFrame:
-    """Tag each row of a banded frame whose bucket EXCEEDS
-    ``max_bucket_size`` with the bucket's ``_bsz`` (and, for the star
-    policy, ``_rep``); rows of in-cap buckets get NULL ``_bsz``.
-    Replaces the former count-over-window at the three hot-bucket cap
-    sites (round 14, guide §2.3/§5).
+    """Hot-bucket-capped candidate pairs of a banded frame — the one
+    candidate core of :func:`minhash_lsh_pairs`,
+    :func:`simhash_near_pairs` and :func:`embedding_neardup_pairs`.
 
-    Why not the window: WindowExec buffers each (bucket) partition's
-    FULL rows — signatures / unit vectors included — in
-    ExternalAppendOnlyUnsafeRowArray before it can emit a single one,
-    so the exact flood the cap exists to bound (one bucket holding a
-    duplicate cluster) exhausted execution memory inside the guard
+    ``banded`` holds one row per (id, bucket), the bucket named by
+    ``keys``. Returns (id_a, id_b) with id_a < id_b for every pair
+    sharing a bucket, NOT deduplicated across buckets (the caller
+    scores and dedups in whichever order its scorer prefers).
+    ``carry`` names a per-id column that rides along as
+    ``{carry}_a`` / ``{carry}_b`` (simhash scores from it before the
+    dedup). ``materialize`` checkpoints the tagged frame so both join
+    sides and the star branch read it once.
+
+    ``max_bucket_size`` guards the quadratic cliff: a boilerplate-heavy
+    corpus can put most docs into ONE bucket per band (measured: 1M
+    synthetic docs → 8 buckets of 500k-780k ≈ 1.8e12 candidate pairs,
+    which fills shuffle-spill disk long before any result, PERF.md
+    round 3). A bucket of B docs costs B²/2 pairs; buckets above the
+    cap are handled per ``oversize_policy``:
+
+    - ``"star"``: link every member to the bucket's min-id
+      representative — O(B) pairs, and the caller's exact scorer still
+      verifies every emitted pair. Connectivity caveat: capped
+      connectivity is a SUBSET of all-pairs connectivity. A member
+      whose similarity to the representative falls below the caller's
+      threshold loses links that member↔member pairs (or transitive
+      chains) would have kept under all-pairs — downstream
+      connected-components can split what uncapped LSH would merge. In
+      practice buckets big enough to trip the cap are band-identical
+      boilerplate (measured: the 1M-doc flood buckets were byte-similar
+      templates), where rep-similarity ≈ member-similarity and recall
+      loss is nil; for borderline-threshold corpora either raise the
+      cap or treat capped clusters as a lower bound.
+    - ``"drop"``: skip oversized buckets entirely (ids can still pair
+      via their other, smaller buckets).
+    - ``"error"``: poison oversized buckets' rows with a runtime
+      ``raise_error`` so the check stays distributed and the failure is
+      loud, not a silent multi-TB spill.
+
+    ``max_bucket_size=None`` opts back into exact all-pairs. The
+    operators default to 10_000: value-neutral at any corpus where no
+    single bucket exceeds 10k ids (5e7 pairs/bucket worst case, well
+    inside one executor's shuffle budget). The guard bounds
+    ADVERSARIAL skew only; uniform bucket saturation is sized by the
+    band width (see the simhash/embedding docstrings).
+
+    Tagging shape (round 14, guide §2.3/§5): a map-side-partial
+    aggregate reduces the banded frame to per-bucket (count, rep) rows,
+    FILTERED to the oversized ones, and a broadcast LEFT join attaches
+    them as ``_bsz`` / ``_rep`` (NULL ``_bsz`` = in-cap row). The
+    broadcast is bounded by construction — at most
+    ``rows / max_bucket_size`` buckets can exceed the cap, e.g. ≤ 100k
+    rows per billion inputs at the 10k default — so the banded side is
+    never shuffled or buffered per bucket. It replaced a
+    count-over-window: WindowExec buffers each bucket's FULL rows
+    (signatures / unit vectors included) in
+    ExternalAppendOnlyUnsafeRowArray before emitting one, so the exact
+    flood the cap bounds exhausted execution memory inside the guard
     itself (measured: ``UNABLE_TO_ACQUIRE_MEMORY`` in
     WindowEvaluator.fetchNextPartition at 200k clustered vectors,
-    local[8]).
+    local[8]). Null-safe join keys treat a NULL bucket key as an
+    ordinary bucket, as the window did.
+    """
+    if oversize_policy not in ("star", "drop", "error"):
+        raise ValueError(f"{op}: oversize_policy must be star|drop|error, got {oversize_policy!r}")
+    carried = [carry] if carry else []
+    star_pairs = None
+    if max_bucket_size is not None:
+        aggs = [F.count(F.lit(1)).alias("_bsz")]
+        if oversize_policy == "star":
+            # bucket-min id; a carried column rides in a struct with it.
+            # Struct only when needed: min(struct) plans as a
+            # SortAggregate, min(long) as a HashAggregate.
+            rep = F.struct(F.col(id_col).alias("id"), F.col(carry)) if carry else F.col(id_col)
+            aggs.append(F.min(rep).alias("_rep"))
+        big = banded.groupBy(*keys).agg(*aggs).filter(F.col("_bsz") > int(max_bucket_size))
+        big = big.toDF(*[f"_szk_{k}" for k in keys], *big.columns[len(keys):])
+        cond = [F.col(k).eqNullSafe(F.col(f"_szk_{k}")) for k in keys]
+        sized = banded.join(F.broadcast(big), on=cond, how="left").drop(
+            *[f"_szk_{k}" for k in keys]
+        )
+        if oversize_policy == "error":
+            sized = sized.withColumn(
+                "_bsz",
+                F.when(F.col("_bsz").isNull(), F.col("_bsz")).otherwise(
+                    F.raise_error(
+                        F.concat(
+                            F.lit(f"{op}: bucket over max_bucket_size={max_bucket_size} (size "),
+                            F.col("_bsz").cast("string"),
+                            F.lit(") — hot-bucket flood; use oversize_policy='star'"),
+                        )
+                    ).cast("long")
+                ),
+            )
+        if materialize:
+            sized = _materialize(sized, durable)
+        if oversize_policy == "star":
+            star_pairs = (
+                sized.filter(F.col("_bsz").isNotNull())
+                .select(
+                    F.col("_rep.id" if carry else "_rep").alias("id_a"),
+                    F.col(id_col).alias("id_b"),
+                    *[F.col(f"_rep.{c}").alias(f"{c}_a") for c in carried],
+                    *[F.col(c).alias(f"{c}_b") for c in carried],
+                )
+                .filter(F.col("id_a") != F.col("id_b"))
+            )
+        banded = sized.filter(F.col("_bsz").isNull()).drop("_bsz", "_rep")
 
-    Shape: a map-side-partial aggregate reduces the banded frame to
-    per-bucket (count, rep) rows, FILTERED to the oversized ones, and
-    a broadcast LEFT join attaches them. The broadcast is bounded by
-    construction — at most ``total_rows / max_bucket_size`` buckets
-    can exceed the cap (each holds more than ``max_bucket_size``
-    rows), e.g. ≤ 100k rows per billion inputs at the 10k default —
-    so the banded side is never shuffled, never buffered per bucket,
-    and the guard's cost is one aggregate pass over the (typically
-    checkpointed) banded blocks.
-
-    Value-identity with the window form: count/min over the same
-    groups; null-safe join keys reproduce the window's treatment of a
-    NULL bucket key as an ordinary group; in-cap rows are recognized
-    by ``_bsz IS NULL`` (callers filter on that instead of
-    ``_bsz <= cap``)."""
-    aggs = [F.count(F.lit(1)).alias("_bsz")]
-    if want_rep:
-        rep = rep_expr if rep_expr is not None else F.min(F.col(id_col))
-        aggs.append(rep.alias("_rep"))
-    big = (
-        banded.groupBy(*[F.col(k) for k in keys])
-        .agg(*aggs)
-        .filter(F.col("_bsz") > int(max_bucket_size))
+    l, r = banded.alias("l"), banded.alias("r")
+    pairs = l.join(
+        r,
+        on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+    ).select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+        *[F.col(f"l.{c}").alias(f"{c}_a") for c in carried],
+        *[F.col(f"r.{c}").alias(f"{c}_b") for c in carried],
     )
-    for k in keys:
-        big = big.withColumnRenamed(k, f"_szk_{k}")
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"_szk_{k}"))
-        cond = c if cond is None else (cond & c)
-    return banded.join(F.broadcast(big), on=cond, how="left").drop(
-        *[f"_szk_{k}" for k in keys]
-    )
+    return pairs if star_pairs is None else pairs.unionByName(star_pairs)
 
 
 def minhash_lsh_pairs(
@@ -637,42 +713,11 @@ def minhash_lsh_pairs(
     skew, and `spark.sql.shuffle.partitions` sizing the rest. Returns
     (id_a, id_b, est_jaccard) with id_a < id_b, deduped across bands.
 
-    ``max_bucket_size`` guards the quadratic cliff: a boilerplate-heavy
-    corpus can put most docs into ONE bucket per band (measured: 1M
-    synthetic docs → 8 buckets of 500k-780k ≈ 1.8e12 candidate pairs,
-    which fills shuffle-spill disk long before any result). A bucket of
-    B docs costs B²/2 pairs; buckets above the cap are handled per
-    ``oversize_policy``:
-
-    - ``"star"`` (default): link every member to the bucket's min-id
-      representative — O(B) pairs computed with a window over the SAME
-      (band, band_hash) exchange the join uses (no extra shuffle, no
-      join for the hot buckets). The per-pair est_jaccard filter still
-      verifies every emitted pair. Connectivity caveat: capped
-      connectivity is a SUBSET of all-pairs connectivity. Star pairs
-      pass through the same jaccard_threshold filter, so a member whose
-      similarity to the min-id representative falls below threshold
-      loses links that member↔member pairs (or transitive chains) would
-      have kept under all-pairs — downstream connected-components can
-      split what uncapped LSH would merge. In practice buckets big
-      enough to trip the cap are band-identical boilerplate (measured:
-      the 1M-doc flood buckets were byte-similar templates), where
-      rep-similarity ≈ member-similarity and recall loss is nil; for
-      borderline-threshold corpora either raise the cap or treat
-      capped clusters as a lower bound.
-    - ``"drop"``: skip oversized buckets entirely (docs can still pair
-      via their other, smaller bands).
-    - ``"error"``: raise at plan time semantics — emitted as a runtime
-      assert column so the check stays distributed.
-
-    The default cap is 10_000 — matching ``curate_documents`` — because
-    the uncapped operator is a measured scale-killer (PERF.md round 3:
-    one 777k-doc bucket → 1.8e12 candidate pairs → shuffle-spill disk
-    exhaustion), and a cap of 10k is value-neutral at any corpus where
-    no single band-bucket exceeds 10k docs (5e7 pairs/bucket worst
-    case, well inside one executor's shuffle budget). Pass
-    ``max_bucket_size=None`` to explicitly opt back into exact
-    all-pairs behavior.
+    ``max_bucket_size`` / ``oversize_policy``: the hot-bucket guard of
+    :func:`banded_pairs` over the (band, band_hash) buckets. The default
+    cap is 10_000 — matching ``curate_documents`` — because the uncapped
+    operator is a measured scale-killer (PERF.md round 3: one 777k-doc
+    bucket → 1.8e12 candidate pairs → shuffle-spill disk exhaustion).
 
     ``materialize`` checkpoints the signatures before the self-join so
     they are computed once, not once per join side — 7.7x faster in
@@ -682,8 +727,6 @@ def minhash_lsh_pairs(
     persisting signatures as a table (write-side precompute); disable
     only if you need a pure unexecuted plan.
     """
-    if oversize_policy not in ("star", "drop", "error"):
-        raise ValueError(f"oversize_policy must be star|drop|error, got {oversize_policy!r}")
     if banded is None:
         banded = minhash_banded(
             df, id_col, text_col, num_hashes, bands, shingle_k, seed, materialize, durable
@@ -698,46 +741,8 @@ def minhash_lsh_pairs(
     # every doc appears exactly once per band, so band 0 of the
     # PRE-cap-filter banded frame IS the (id, signature) table — read
     # straight off the checkpointed blocks, no dedup exchange (the
-    # cap filter below may remove a doc's band-0 row, so capture now)
+    # cap filter may remove a doc's band-0 row, so capture it first)
     sigs = banded.filter(F.col("band") == 0).select(id_col, "signature")
-
-    star_pairs = None
-    if max_bucket_size is not None:
-        # oversized-bucket broadcast tagging (round 14 — see
-        # _with_bucket_sizes: the former count-over-window buffered
-        # every bucket's signature-carrying rows and OOMed on the very
-        # flood the cap bounds); _bsz is NULL for in-cap rows
-        sized = _with_bucket_sizes(
-            banded,
-            ("band", "band_hash"),
-            id_col,
-            max_bucket_size,
-            want_rep=oversize_policy == "star",
-        )
-        if oversize_policy == "error":
-            # distributed guard: poison any oversized bucket's rows so the
-            # failure is loud, not a silent multi-TB spill
-            sized = sized.withColumn(
-                "_bsz",
-                F.when(F.col("_bsz").isNull(), F.col("_bsz")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit("minhash_lsh_pairs: bucket over max_bucket_size="),
-                            F.lit(str(max_bucket_size)),
-                            F.lit(" (size "),
-                            F.col("_bsz").cast("string"),
-                            F.lit(") — boilerplate flood; use oversize_policy='star'"),
-                        )
-                    ).cast("long")
-                ),
-            )
-        elif oversize_policy == "star":
-            # representative = bucket min id, from the broadcast table
-            big = sized.filter(F.col("_bsz").isNotNull()).select(
-                F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-            star_pairs = big.filter(F.col("id_a") != F.col("id_b"))
-        banded = sized.filter(F.col("_bsz").isNull()).drop("_bsz", "_rep")
 
     # Candidate IDS only through the band join and the cross-band
     # dedup: signatures (num_hashes ints per side) used to ride along
@@ -751,22 +756,14 @@ def minhash_lsh_pairs(
     # round 7, 236k docs / 522k true pairs): 26.8 s / 1.86 GB shuffle
     # (dedup-then-score) and 56.1 s (score-per-copy) → **21.5 s /
     # 0.16 GB**, identical pair fingerprints on all three.
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pair_ids = left.join(
-        right,
-        on=[
-            F.col("l.band") == F.col("r.band"),
-            F.col("l.band_hash") == F.col("r.band_hash"),
-            F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-        ],
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-    )
-    if star_pairs is not None:
-        pair_ids = pair_ids.unionByName(star_pairs)
-    pair_ids = pair_ids.distinct()
+    pair_ids = banded_pairs(
+        banded,
+        id_col,
+        ("band", "band_hash"),
+        max_bucket_size,
+        oversize_policy,
+        "minhash_lsh_pairs",
+    ).distinct()
     pairs = pair_ids.join(
         sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")),
         on="id_a",
@@ -1213,26 +1210,23 @@ def simhash_near_pairs(
     with native xxhash64 (no DuckDB oracle; the 32-bit default stays
     the portable, value-checked configuration).
 
-    ``max_bucket_size`` / ``oversize_policy`` (round 13): the same
-    hot-bucket guard as :func:`minhash_lsh_pairs` — an identical-text
-    flood shares ALL blocks and a naive block join evaluates m^2/2
-    pairs per block. ``star`` (default) joins oversized buckets'
-    members to the bucket-min representative only (connectivity
-    preserved, m^2 → m, every emitted pair still passes the exact
-    Hamming filter); ``drop`` excludes oversized buckets; ``error``
-    poisons them loudly; ``None`` opts back into exact all-pairs.
-    The guard bounds ADVERSARIAL skew; it does not remove the uniform
-    n^2/2^block_bits term above — size ``bits`` for that.
+    ``max_bucket_size`` / ``oversize_policy`` (round 13): the
+    :func:`banded_pairs` hot-bucket guard over the (blk, blk_val)
+    buckets — an identical-text flood shares ALL blocks and a naive
+    block join evaluates m^2/2 pairs per block; every star pair still
+    passes the exact Hamming filter. The guard bounds ADVERSARIAL skew;
+    it does not remove the uniform n^2/2^block_bits term above — size
+    ``bits`` for that.
     """
-    if oversize_policy not in ("star", "drop", "error"):
-        raise ValueError(f"oversize_policy must be star|drop|error, got {oversize_policy!r}")
     if not 1 <= n_blocks <= bits:
         raise ValueError(f"simhash_near_pairs: need 1 <= n_blocks <= bits, got {n_blocks}/{bits}")
     sigs = simhash(df, id_col, text_col, bits=bits)
     if materialize and max_bucket_size is None:
-        # guarded path checkpoints AFTER the bucket-size window instead
-        # (one checkpoint either way; the self-join never recomputes
-        # signatures)
+        # the guarded path checkpoints the TAGGED blocks in banded_pairs
+        # instead (one checkpoint either way; the self-join never
+        # recomputes signatures). Checkpointing before the tagging would
+        # replan the guard's aggregate + broadcast once per consumer
+        # (both join sides and the star branch).
         sigs = _materialize(sigs, durable)
     # block i covers bit range [i*bits//n_blocks, (i+1)*bits//n_blocks)
     # — equal 8-bit widths at the 32/4 default, uneven widths allowed
@@ -1255,78 +1249,22 @@ def simhash_near_pairs(
         ).alias("b"),
     ).select(id_col, "simhash", "b.blk", "b.blk_val")
 
-    star_pairs = None
-    if max_bucket_size is not None:
-        # aggregate + join-back bucket sizing AND (star) bucket-min
-        # representative in one tiny (blk, blk_val) table (round 14 —
-        # see _with_bucket_sizes: the former count-over-window buffered
-        # whole bucket partitions to size them); the checkpoint below
-        # still makes the three consumers (both join sides, the star
-        # branch) read the sized frame once
-        sized = _with_bucket_sizes(
-            blocks,
-            ("blk", "blk_val"),
-            id_col,
-            max_bucket_size,
-            want_rep=oversize_policy == "star",
-            rep_expr=F.min(
-                F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s"))
-            ),
-        )
-        if oversize_policy == "error":
-            sized = sized.withColumn(
-                "_bsz",
-                F.when(F.col("_bsz").isNull(), F.col("_bsz")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit("simhash_near_pairs: block bucket over max_bucket_size="),
-                            F.lit(str(max_bucket_size)),
-                            F.lit(" (size "),
-                            F.col("_bsz").cast("string"),
-                            F.lit(") — identical-text flood; use oversize_policy='star'"),
-                        )
-                    ).cast("long")
-                ),
-            )
-        if materialize:
-            sized = _materialize(sized, durable)
-        if oversize_policy == "star":
-            star_pairs = (
-                sized.filter(F.col("_bsz").isNotNull())
-                .select(
-                    F.col("_rep").getField("i").alias("id_a"),
-                    F.col(id_col).alias("id_b"),
-                    F.col("_rep").getField("s").alias("sh_a"),
-                    F.col("simhash").alias("sh_b"),
-                )
-                .filter(F.col("id_a") != F.col("id_b"))
-            )
-        blocks = sized.filter(F.col("_bsz").isNull()).drop("_bsz", "_rep")
-
-    l, r = blocks.alias("l"), blocks.alias("r")
-    pairs = (
-        l.join(
-            r,
-            on=[
-                F.col("l.blk") == F.col("r.blk"),
-                F.col("l.blk_val") == F.col("r.blk_val"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("sh_a"),
-            F.col("r.simhash").alias("sh_b"),
-        )
+    pairs = banded_pairs(
+        blocks,
+        id_col,
+        ("blk", "blk_val"),
+        max_bucket_size,
+        oversize_policy,
+        "simhash_near_pairs",
+        carry="simhash",
+        materialize=materialize,
+        durable=durable,
     )
-    if star_pairs is not None:
-        pairs = pairs.unionByName(star_pairs)
     # score before the pair dedup (the embedding_neardup_pairs rework,
     # PERF.md round 7): bit_count(xor) is identical on every block
     # copy, and pigeonhole collisions that FAIL the hamming cut — the
     # majority under random block matches — never reach the exchange.
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
@@ -1564,16 +1502,11 @@ def embedding_neardup_pairs(
     (the measured alpha=0.08 scaling point in PERF.md round 13 is that
     guard absorbing a 10-cluster adversarial corpus).
 
-    ``max_bucket_size`` guards the same quadratic cliff as
-    minhash_lsh_pairs' hot-bucket cap (PERF.md round 3) — an embedding
-    hot spot (the duplicate mass itself!) puts m near-identical
-    vectors in the same band bucket and a naive self-join evaluates
-    m²/2 pairs per band. Same policies: ``star`` (default) joins
-    oversized buckets' members to the bucket-min representative only —
-    connectivity for downstream clustering is preserved, pair count
-    drops m²→m, and every emitted pair still passes the exact cosine
-    filter; ``drop`` excludes oversized buckets; ``error`` poisons
-    them loudly. ``None`` opts back into exact all-pairs.
+    ``max_bucket_size`` / ``oversize_policy``: the :func:`banded_pairs`
+    hot-bucket guard over the (band, band_key) buckets — an embedding
+    hot spot (the duplicate mass itself!) puts m near-identical vectors
+    in the same band bucket and a naive self-join evaluates m²/2 pairs
+    per band; every star pair still passes the exact cosine filter.
 
     Per-pair scoring: the unit-vector L2 norm is precomputed per ROW
     and the pair test is an expanded dot / (na·nb) — bit-identical to
@@ -1588,8 +1521,6 @@ def embedding_neardup_pairs(
         with_unit_vector,
     )
 
-    if oversize_policy not in ("star", "drop", "error"):
-        raise ValueError(f"oversize_policy must be star|drop|error, got {oversize_policy!r}")
     first = df.select(F.size(F.col(vec_col)).alias("_d")).first()
     dim = int(first["_d"]) if first and first["_d"] is not None else 0
     if dim <= 0:
@@ -1621,47 +1552,6 @@ def embedding_neardup_pairs(
     # blocks, one row per input (the minhash band-0 trick)
     vecs = banded.filter(F.col("band") == 0).select(id_col, "_unit", "_un")
 
-    star_pairs = None
-    if max_bucket_size is not None:
-        # Oversized-bucket broadcast tagging instead of a
-        # count-over-window (round 14, guide §2.3/§5): the window form
-        # buffered every bucket's FULL rows — unit vectors included —
-        # in ExternalAppendOnlyUnsafeRowArray before emitting, so the
-        # very flood the cap guards against (one hot bucket holding a
-        # duplicate cluster) exhausted execution memory inside the
-        # guard itself (measured: UNABLE_TO_ACQUIRE_MEMORY in
-        # WindowEvaluator fetchNextPartition at 200k clustered vectors
-        # on local[8]). See _with_bucket_sizes for the shape and the
-        # broadcast bound (≤ rows/cap oversized buckets).
-        sized = _with_bucket_sizes(
-            banded,
-            ("band", "band_key"),
-            id_col,
-            max_bucket_size,
-            want_rep=oversize_policy == "star",
-        )
-        if oversize_policy == "error":
-            sized = sized.withColumn(
-                "_bsz",
-                F.when(F.col("_bsz").isNull(), F.col("_bsz")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit("embedding_neardup_pairs: bucket over max_bucket_size="),
-                            F.lit(str(max_bucket_size)),
-                            F.lit(" (size "),
-                            F.col("_bsz").cast("string"),
-                            F.lit(") — duplicate flood; use oversize_policy='star'"),
-                        )
-                    ).cast("long")
-                ),
-            )
-        elif oversize_policy == "star":
-            big = sized.filter(F.col("_bsz").isNotNull()).select(
-                F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-            star_pairs = big.filter(F.col("id_a") != F.col("id_b"))
-        banded = sized.filter(F.col("_bsz").isNull()).drop("_bsz", "_rep")
-
     # Candidate IDS only through the band join and the cross-band
     # distinct (16-byte rows), then each side's unit vector + norm
     # joins back ONCE per unique pair and the exact cosine evaluates
@@ -1674,21 +1564,14 @@ def embedding_neardup_pairs(
     # low-threshold shape (0.45, 12 bands) survivors dominate and the
     # dim-64 dot ran 12× per pair (bench regression 4.0 → 7.1 s).
     # Id-dedup + rejoin is the shape that wins at BOTH regimes.
-    l, r = banded.alias("l"), banded.alias("r")
-    pair_ids = l.join(
-        r,
-        on=[
-            F.col("l.band") == F.col("r.band"),
-            F.col("l.band_key") == F.col("r.band_key"),
-            F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-        ],
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-    )
-    if star_pairs is not None:
-        pair_ids = pair_ids.unionByName(star_pairs)
-    pair_ids = pair_ids.distinct()
+    pair_ids = banded_pairs(
+        banded,
+        id_col,
+        ("band", "band_key"),
+        max_bucket_size,
+        oversize_policy,
+        "embedding_neardup_pairs",
+    ).distinct()
     pairs = pair_ids.join(
         vecs.select(
             F.col(id_col).alias("id_a"),

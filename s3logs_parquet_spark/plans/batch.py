@@ -43,63 +43,13 @@ class TransformResult:
     extra_fields: int
 
 
-# Prefix extractor for the dedup key's third component: RequestID is
-# field index 5 (s3logs/src/utils.rs:1076), and fields 0-5 are bare
-# tokens (only Time at index 2 is bracketed), so this anchored prefix
-# regex agrees with the full tokenizer on every ts-parseable line —
-# the same cheap-extractor-beside-full-parser pattern the reference
-# itself uses for P2/P3 (utils.rs:43-44).
-REQID_PREFIX_PATTERN = r"^(\S+) (\S+) \[([^\]]+)\] (\S+) (\S+) (\S+)"
-
-
 def parse_and_dedup(
     lines: DataFrame,
     cfg: EngineConfig,
     extra_fields: int = 0,
-    dedup_early: bool = False,
 ) -> DataFrame:
     """Raw lines → parsed, filtered (F1), windowed (G1), bucket-keyed
-    (G3), deduplicated (D1) rows. Pure plan builder — no action.
-
-    ``dedup_early`` moves the D1 exchange BEFORE the full parse: the
-    dedup key (bucket, window, RequestID) is derived from cheap
-    anchored prefix regexes on the raw line, duplicates are dropped
-    while rows are still a single `value` column, and only survivors
-    pay the full-line tokenize. Same output, same single shuffle; the
-    shuffle payload is one string instead of 26 columns and the
-    tokenizer runs on (1 - dup_rate) of the input. Wins when
-    redelivery duplication is non-trivial; the prefix extraction is
-    extra map work when dup_rate ≈ 0 (measured numbers in PERF.md).
-    """
-    if (dedup_early or cfg.dedup_early) and cfg.deduplication:
-        from s3logs_parquet_spark.config import ALLBUCKETS
-        from s3logs_parquet_spark.functions.parse import extract_bucket
-        from s3logs_parquet_spark.functions.timeops import window_start
-
-        ts0 = extract_ts(F.col("value"))
-        b0 = (
-            F.lit(ALLBUCKETS)
-            if cfg.merge_orig_buckets
-            else extract_bucket(F.col("value"))
-        )
-        survivors = (
-            lines.withColumn("_ts0", ts0)
-            .filter(F.col("_ts0").isNotNull())  # F1 on the cheap extractor
-            .withColumn("_w0", window_start(F.col("_ts0"), cfg.aggregate_second))
-            .withColumn("_b0", b0)
-            .withColumn("_r0", F.regexp_extract(F.col("value"), REQID_PREFIX_PATTERN, 6))
-            .dropDuplicates(["_b0", "_w0", "_r0"])
-            .select("value")
-        )
-        parsed = parse_s3_access_log(
-            survivors,
-            extra_fields=extra_fields,
-            extra_prefix=cfg.extra_field_prefix,
-            fields=cfg.schema_fields,
-        )
-        clean = parsed.filter(F.col("ts").isNotNull())
-        windowed = with_agg_window(clean, align_seconds=cfg.aggregate_second)
-        return with_bucket_key(windowed, cfg)  # D1 already applied
+    (G3), deduplicated (D1) rows. Pure plan builder — no action."""
     parsed = parse_s3_access_log(
         lines,
         extra_fields=extra_fields,
@@ -115,8 +65,6 @@ def parse_and_dedup(
 def corrupt_lines(lines: DataFrame) -> DataFrame:
     """F1 side channel — the lines the reference silently drops
     (utils.rs:596-602), kept observable."""
-    from s3logs_parquet_spark.functions.parse import extract_ts
-
     return lines.filter(extract_ts(F.col("value")).isNull())
 
 

@@ -142,6 +142,21 @@ def release_tracked(tag_or_token: str) -> int:
     return len(entries)
 
 
+def _default_driver_memory() -> str:
+    """Heap for the local-mode driver JVM, which hosts all executor
+    threads and so IS the executor heap. 8g starved 32 threads at the
+    10M-doc scale bench (GCLocker churn, then OOM); 48g of a 128 GB
+    host left room for Python workers and page cache. Keep that 3/8
+    share on smaller hosts: a fixed 48g heap on a 15 GB swapless host
+    grows until the kernel kills the JVM mid-run."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(kib * 3 // 8 // 1024, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "s3logs-parquet-spark",
     master: str | None = None,
@@ -160,11 +175,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode: the driver JVM hosts all executor threads, so it
-        # IS the executor heap. 8g starved 32 threads at the 10M-doc
-        # scale bench (GCLocker churn, then OOM); 48g of the box's 128
-        # leaves room for Python workers and page cache.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The engine's expanded arithmetic kernels (pair cosine, minhash

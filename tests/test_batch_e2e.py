@@ -182,35 +182,6 @@ def test_metrics_count_this_batch_not_the_table(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2 * r1.rows_out
 
 
-def test_dedup_early_matches_late(spark):
-    # dedup_early moves the D1 exchange before the full parse; output
-    # multiset must be identical to the default shape in both bucket
-    # modes (verbatim-duplicate redelivery, the reference's D1 case).
-    from s3logs_parquet_spark.plans.batch import parse_and_dedup
-
-    lines = generate_lines(3000, seed=21, dup_fraction=0.15, garbage_fraction=0.03)
-    df = spark.createDataFrame([(l,) for l in lines], "value string")
-    for merge in (True, False):
-        cfg = EngineConfig(merge_orig_buckets=merge)
-        late = parse_and_dedup(df, cfg)
-        early = parse_and_dedup(df, cfg, dedup_early=True)
-
-        def _sig(d):
-            cols = sorted(d.columns)
-            h = d.select(
-                F.xxhash64(*[F.col(c).cast("string") for c in cols])
-                .cast("decimal(38,0)")
-                .alias("h")
-            )
-            return tuple(
-                h.agg(
-                    F.count("*"), F.sum("h"), F.sum(F.abs("h")), F.countDistinct("h")
-                ).collect()[0]
-            )
-
-        assert _sig(late) == _sig(early)
-
-
 def test_widening_append_preserves_existing_rows(spark, tmp_path):
     # Batch 1 populates the table; batch 2 carries >26-field lines.
     # The optimistic single-pass path is only legal on an empty table

@@ -73,20 +73,31 @@ def test_dedup_single_exchange(spark):
     assert _count_nodes(plan, "Exchange") == 1
 
 
+# docs_duplicated_spans' plan budget, shared by both span tests. The
+# gaps-and-islands merge must reuse ONE doc-keyed exchange for the lag
+# window, the break-sum window AND both downstream (doc,island)/(doc)
+# hash-aggs: three shuffles — (doc,ngram) distinct, ngram doc-frequency,
+# doc windows — over ONE sort. A further Exchange or second Sort means
+# the doc clustering was lost between the windows and the island
+# aggregation. One shuffle feeds two branches, so the static plan prints
+# it twice; AQE's final plan runs it once and reuses it.
+SPANS_WINDOWS, SPANS_SORTS, SPANS_SHUFFLES = 2, 1, 3
+
+
 def test_duplicated_spans_shuffle_budget(spark, sf_dir):
-    """The gaps-and-islands merge must reuse ONE doc-keyed exchange for
-    the lag window, the break-sum window, AND both downstream
-    (doc,island)/(doc) hash-aggs. Exactly three shuffles total —
-    (doc,ngram) distinct, ngram doc-frequency, doc windows — over ONE
-    sort; a fourth Exchange or second Sort means the doc clustering
-    was lost between the windows and the island aggregation."""
+    """Static (AQE initial) plan: the span budget, with the shared
+    shuffle printed on both of its branches. Read from the Initial Plan
+    section whether or not the cached gate frame has run yet."""
     from s3logs_parquet_spark.plans.queries import q_docs_duplicated_spans
 
-    plan = _plan(spark, q_docs_duplicated_spans(spark, sf_dir))
+    df = q_docs_duplicated_spans(spark, sf_dir)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    ).split("== Initial Plan ==", 1)[-1]
     assert "CartesianProduct" not in plan
-    assert _count_nodes(plan, "Window") == 2
-    assert _count_nodes(plan, "Exchange") == 3
-    assert _count_nodes(plan, "Sort") == 1
+    assert _count_nodes(plan, "Window") == SPANS_WINDOWS
+    assert _count_nodes(plan, "Exchange") == SPANS_SHUFFLES + 1
+    assert _count_nodes(plan, "Sort") == SPANS_SORTS
 
 
 def test_duplicated_spans_shuffle_budget_after_execution(spark, sf_dir):
@@ -111,9 +122,11 @@ def test_duplicated_spans_shuffle_budget_after_execution(spark, sf_dir):
     plan = _plan(spark, df)
     assert "== Initial Plan ==" not in plan
     assert "CartesianProduct" not in plan
-    assert _count_nodes(plan, "Window") == 2
-    assert _count_nodes(plan, "Exchange") == 3
-    assert _count_nodes(plan, "Sort") == 1
+    assert _count_nodes(plan, "Window") == SPANS_WINDOWS
+    assert _count_nodes(plan, "Sort") == SPANS_SORTS
+    # the final plan pays the static plan's extra Exchange by reuse
+    assert _count_nodes(plan, "Exchange") == SPANS_SHUFFLES
+    assert _count_nodes(plan, "ReusedExchange") == 1
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):

@@ -3,6 +3,9 @@ known ground truth."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.operators.dedup import (
@@ -146,28 +149,6 @@ def test_simhash_32bit_value_stable_across_construction(spark):
     legacy = {r["doc_id"]: r["s"] for r in counts.select("doc_id", sim.alias("s")).collect()}
     for r in sh:
         assert r["simhash"] == legacy[r["doc_id"]]
-
-
-def test_simhash_star_cap_bounds_identical_flood(spark):
-    """An identical-text flood shares ALL blocks; with the round-13
-    hot-bucket guard the oversized bucket emits rep->member star pairs
-    (m-1 of them, connectivity preserved) instead of m(m-1)/2."""
-    flood = [(i, "flood flood flood identical text body here") for i in range(30)]
-    distinct = [(100 + i, f"unique{i} totally different doc number {i} with words") for i in range(5)]
-    d = spark.createDataFrame(flood + distinct, ["doc_id", "text"])
-    out = simhash_near_pairs(
-        d, "doc_id", "text", max_hamming=3, max_bucket_size=10, oversize_policy="star"
-    ).collect()
-    flood_pairs = [(r["id_a"], r["id_b"]) for r in out if r["id_a"] < 30 and r["id_b"] < 30]
-    # star topology: every flood pair anchored at the bucket-min rep (0)
-    assert len(flood_pairs) == 29
-    assert all(a == 0 for a, _ in flood_pairs)
-    assert all(r["hamming"] == 0 for r in out if r["id_a"] == 0)
-    # drop policy excludes the flood entirely
-    dropped = simhash_near_pairs(
-        d, "doc_id", "text", max_hamming=3, max_bucket_size=10, oversize_policy="drop"
-    ).collect()
-    assert all(r["id_a"] >= 30 or r["id_b"] >= 30 for r in dropped) or not dropped
 
 
 def test_ngram_jaccard_exact_value(spark):
@@ -478,10 +459,9 @@ def test_lsh_bucket_cap_policies(spark):
     """max_bucket_size guards the boilerplate-flood quadratic cliff
     (measured: 1M synthetic docs put 500k-780k docs into ONE bucket per
     band = 1.8e12 candidate pairs → shuffle-spill disk exhaustion).
-    A non-engaging cap must be a no-op; 'star' must keep every flood
-    member linked to the bucket representative; 'error' must raise."""
-    import pytest
-
+    A non-engaging cap must be a no-op, and the capped policies may only
+    remove pairs: drop ⊆ star ⊆ uncapped. The per-policy behaviour of
+    all three banded operators is test_oversize_policy."""
     kw = dict(num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3)
     # boilerplate flood: 20 identical docs + the planted near/far docs
     flood = [(100 + i, BASE) for i in range(20)]
@@ -493,34 +473,123 @@ def test_lsh_bucket_cap_policies(spark):
     noop = minhash_lsh_pairs(d, "doc_id", "text", max_bucket_size=10**6, **kw)
     assert base.exceptAll(noop).count() == 0 and noop.exceptAll(base).count() == 0
 
-    star = minhash_lsh_pairs(
-        d, "doc_id", "text", max_bucket_size=4, oversize_policy="star", **kw
-    )
-    star_pairs = {(r["id_a"], r["id_b"]) for r in star.collect()}
-    # every emitted pair exists in the exact result
+    def pairs(policy):
+        out = minhash_lsh_pairs(
+            d, "doc_id", "text", max_bucket_size=4, oversize_policy=policy, **kw
+        )
+        return {(r["id_a"], r["id_b"]) for r in out.collect()}
+
     base_pairs = {(r["id_a"], r["id_b"]) for r in base.collect()}
+    star_pairs = pairs("star")
     assert star_pairs <= base_pairs
-    # the flood bucket's rep is doc 1 (min id among identical docs):
-    # every flood member stays linked -> connected-components unchanged
-    for fid, _ in flood:
-        assert (1, fid) in star_pairs
-    assert (1, 2) in star_pairs or (2, 21) in star_pairs or any(
-        2 in p for p in star_pairs
-    )  # near-dup still found via its own (small or star) buckets
+    assert any(2 in p for p in star_pairs)  # the near-dup still pairs
+    assert pairs("drop") <= star_pairs
 
-    drop = minhash_lsh_pairs(
-        d, "doc_id", "text", max_bucket_size=4, oversize_policy="drop", **kw
-    )
-    drop_pairs = {(r["id_a"], r["id_b"]) for r in drop.collect()}
-    assert drop_pairs <= star_pairs  # drop is strictly weaker than star
 
-    with pytest.raises(Exception, match="max_bucket_size"):
-        minhash_lsh_pairs(
-            d, "doc_id", "text", max_bucket_size=4, oversize_policy="error", **kw
-        ).count()
+# score of a pair of identical copies, per operator
+IDENTICAL_SCORE = {"minhash": 1.0, "simhash": 0, "embedding": 1.0}
 
-    with pytest.raises(ValueError, match="oversize_policy"):
-        minhash_lsh_pairs(d, "doc_id", "text", max_bucket_size=4, oversize_policy="nope", **kw)
+
+def _flood_case(spark, op):
+    """(call, flood ids, cap) for one banded near-dup operator over a
+    corpus whose identical copies share every band bucket, so each of
+    those buckets exceeds ``cap``. ``call(**kw)`` runs the operator
+    with extra keyword arguments."""
+    from s3logs_parquet_spark.operators.dedup import embedding_neardup_pairs
+
+    if op == "embedding":
+        rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(12)]
+        rows.append((99, [0.0, 1.0, 0.0, 0.0]))  # different region
+        v = spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+        def call(**kw):
+            return embedding_neardup_pairs(
+                v, "vec_id", "embedding", threshold=0.99, n_bands=4, bits_per_band=4, **kw
+            )
+
+        return call, set(range(12)), 5
+    flood = [(i, "flood flood flood identical text body here") for i in range(30)]
+    distinct = [
+        (100 + i, f"unique{i} totally different doc number {i} with words") for i in range(5)
+    ]
+    d = spark.createDataFrame(flood + distinct, ["doc_id", "text"])
+    if op == "simhash":
+
+        def call(**kw):
+            return simhash_near_pairs(d, "doc_id", "text", max_hamming=3, **kw)
+
+    else:
+
+        def call(**kw):
+            return minhash_lsh_pairs(
+                d, "doc_id", "text", num_hashes=32, bands=8, jaccard_threshold=0.3, **kw
+            )
+    return call, set(range(30)), 10
+
+
+@pytest.mark.parametrize("policy", ["star", "drop", "error", "invalid"])
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_oversize_policy(spark, op, policy):
+    """The banded_pairs hot-bucket guard, per operator and policy:
+    star links every flood member to the bucket-min representative and
+    to nothing else (m-1 pairs instead of the uncapped m(m-1)/2, each
+    still scored exactly); drop emits no pair touching the flood; error
+    fails the job loudly; an unknown policy is rejected when the plan
+    is built."""
+    call, flood, cap = _flood_case(spark, op)
+
+    def flood_pairs(**kw):
+        return [
+            tuple(r)
+            for r in call(**kw).collect()
+            if r["id_a"] in flood or r["id_b"] in flood
+        ]
+
+    if policy == "star":
+        star = flood_pairs(max_bucket_size=cap, oversize_policy="star")
+        assert sorted((a, b) for a, b, _ in star) == [(0, m) for m in sorted(flood - {0})]
+        assert all(abs(score - IDENTICAL_SCORE[op]) < 1e-12 for _, _, score in star)
+        m = len(flood)
+        assert len(flood_pairs(max_bucket_size=None)) == m * (m - 1) // 2
+    elif policy == "drop":
+        assert flood_pairs(max_bucket_size=cap, oversize_policy="drop") == []
+    elif policy == "error":
+        with pytest.raises(Exception, match="max_bucket_size"):
+            call(max_bucket_size=cap, oversize_policy="error").collect()
+    else:
+        with pytest.raises(ValueError, match="oversize_policy"):
+            call(max_bucket_size=cap, oversize_policy="nope")
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_capped_plans_tag_by_broadcast_not_window(spark, op):
+    """Pins the round-14 OOM fix: the guard sizes buckets with a
+    broadcast of a filtered per-bucket aggregate, not a count-over-
+    window, whose WindowExec buffered a flood bucket's full rows and
+    died with UNABLE_TO_ACQUIRE_MEMORY at 200k clustered vectors. In
+    the capped plan no Window node computes the bucket size, the size
+    filter is present, and the tag table adds a BroadcastExchange.
+    (Unmaterialized, so the guard is in the plan rather than behind a
+    checkpoint; the shingling window of the text operators is not the
+    guard's.)"""
+    from tools.audit_plan_duplication import exchange_hits, physical_plan
+
+    call, _, cap = _flood_case(spark, op)
+
+    def plan(max_bucket_size):
+        return physical_plan(
+            spark,
+            lambda *_: call(materialize=False, max_bucket_size=max_bucket_size),
+            None,
+        )
+
+    capped, uncapped = plan(cap), plan(None)
+    windows = [line for line in capped.splitlines() if re.search(r"\bWindow \[", line)]
+    assert not [line for line in windows if "_bsz" in line]
+    assert re.search(rf"Filter .*_bsz#\d+L > {cap}\b", capped)
+    assert exchange_hits(capped).get("BroadcastExchange", 0) > exchange_hits(
+        uncapped
+    ).get("BroadcastExchange", 0)
 
 
 def test_lsh_star_cap_preserves_clusters_on_flood(spark):
@@ -1290,41 +1359,6 @@ def test_semantic_dedup_incremental_validates_index(spark):
             batch, index2, "vec_id", "embedding", cents2,
             threshold=0.9, max_total_pairs=10,
         )
-
-
-def test_embedding_neardup_hot_bucket_star_cap(spark):
-    """A duplicate flood (identical vectors -> one band bucket) under
-    the cap: star policy keeps every member connected to the bucket
-    representative (m pairs, not m^2/2), all passing the exact cosine
-    filter; error policy fails loudly; uncapped emits all pairs."""
-    import pytest
-
-    from s3logs_parquet_spark.operators.dedup import embedding_neardup_pairs
-
-    n = 12
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(n)]
-    rows.append((99, [0.0, 1.0, 0.0, 0.0]))  # different region
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    star = embedding_neardup_pairs(
-        df, "vec_id", "embedding", threshold=0.99, n_bands=4, bits_per_band=4,
-        max_bucket_size=5, oversize_policy="star",
-    ).collect()
-    # representative 0 connected to every other clone, nothing else
-    assert {(r["id_a"], r["id_b"]) for r in star} == {(0, i) for i in range(1, n)}
-    assert all(abs(r["cosine"] - 1.0) < 1e-12 for r in star)
-
-    full = embedding_neardup_pairs(
-        df, "vec_id", "embedding", threshold=0.99, n_bands=4, bits_per_band=4,
-        max_bucket_size=None,
-    ).collect()
-    assert len(full) == n * (n - 1) // 2  # all clone pairs
-
-    with pytest.raises(Exception, match="max_bucket_size"):
-        embedding_neardup_pairs(
-            df, "vec_id", "embedding", threshold=0.99, n_bands=4, bits_per_band=4,
-            max_bucket_size=5, oversize_policy="error",
-        ).collect()
 
 
 def test_semantic_assign_rejects_dim_mismatch(spark):

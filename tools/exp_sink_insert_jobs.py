@@ -1,7 +1,7 @@
 """Decompose ONE bucketed-store contribution insert into its Spark
 jobs (VERDICT r12 #2 groundwork).
 
-The r12 trigger-floor record (tools/exp_trigger_job_floor.py, PERF.md)
+The r12 trigger-floor record (PERF.md)
 attributes 54 of 79 jobs in a 3-trigger run to the threaded sinks:
 insertInto + dynamic-partition bookkeeping per store per trigger. This
 tool isolates that cost: build a band_index store with --prebatches
