@@ -66,15 +66,21 @@ def run_aggregate(spark, inputs: list[str], staging: str, cfg: EngineConfig) -> 
 
 def run_transform_staged(spark, staging: str, output: str, cfg: EngineConfig) -> int:
     """Stage 2 over the staging tier: read staged raw lines and run the
-    same parse→dedup→partitioned-write job."""
-    from s3logs_parquet_spark.plans.batch import parse_and_dedup
-    from s3logs_parquet_spark.writer import with_partition_columns, write_partitioned_parquet
+    same job as the fused ``transform``."""
+    from s3logs_parquet_spark.plans.batch import _transform_lines
+    from s3logs_parquet_spark.writer import auto_files_per_partition
 
     lines = spark.read.parquet(staging).select("value")
-    result = parse_and_dedup(lines, cfg)
-    out = with_partition_columns(result, cfg).drop("n_fields", "ts", "agg_window", "bucket_key")
-    write_partitioned_parquet(out, output, cfg)
+    salt = auto_files_per_partition(staging, spark=spark)
+    _report(_transform_lines(spark, lines, output, cfg, salt))
     return 0
+
+
+def _report(res) -> None:
+    print(
+        f"rows_in={res.rows_in} rows_out={res.rows_out} extra_fields={res.extra_fields}",
+        file=sys.stderr,
+    )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -157,11 +163,7 @@ def main(argv: list[str] | None = None) -> int:
             return run_transform_staged(spark, args.staged, args.output, cfg)
         if not args.inputs:
             p.error("transform needs input paths or --staged")
-        res = run_batch_transform(spark, args.inputs, args.output, cfg)
-        print(
-            f"rows_in={res.rows_in} rows_out={res.rows_out} extra_fields={res.extra_fields}",
-            file=sys.stderr,
-        )
+        _report(run_batch_transform(spark, args.inputs, args.output, cfg))
         return 0
     if args.cmd == "maintenance":
         if "://" not in args.table and not os.path.exists(args.table):

@@ -73,17 +73,15 @@ def run_batch_transform(
     input_paths: str | list[str],
     output_path: str,
     cfg: EngineConfig | None = None,
-    adaptive_schema: bool = True,
-    collect_metrics: bool = True,
     corrupt_path: str | None = None,
     archive_path: str | None = None,
 ) -> TransformResult:
     """End-to-end: text in, partitioned deduplicated Parquet out.
 
-    ``adaptive_schema`` runs the M3 widening protocol: if any
-    parseable line has > 26 fields, the written table projects
-    nullable ``ExtraField{27..N}`` columns (naming per
-    utils.rs:1217-1222). The classic protocol is a dedicated probe
+    The written table runs the M3 widening protocol: if any
+    parseable line has > 26 fields, it projects nullable
+    ``ExtraField{27..N}`` columns (naming per utils.rs:1217-1222).
+    The classic protocol is a dedicated probe
     pass — a SECOND full read of the input, a 2× read tax at backfill
     scale. When the destination holds no data yet (the backfill case)
     we instead write optimistically at the 26-column schema while the
@@ -98,39 +96,53 @@ def run_batch_transform(
     Unlike the reference we never crash on empty input
     (divergence noted at SURVEY.md §7.4.6).
     """
+    from s3logs_parquet_spark.writer import auto_files_per_partition
+
+    return _transform_lines(
+        spark,
+        read_log_lines(spark, input_paths),
+        output_path,
+        cfg or EngineConfig(),
+        auto_files_per_partition(input_paths, spark=spark),
+        corrupt_path,
+        archive_path,
+    )
+
+
+def _transform_lines(
+    spark: SparkSession,
+    lines: DataFrame,
+    output_path: str,
+    cfg: EngineConfig,
+    files_per_partition: int,
+    corrupt_path: str | None = None,
+    archive_path: str | None = None,
+) -> TransformResult:
+    """:func:`run_batch_transform` over a frame of raw lines (one
+    ``value`` column), shared with the staged CLI path (``transform
+    --staged``) so both write the same table: M3 widening, the writer
+    salt ``files_per_partition`` and the counts."""
     from pyspark.sql import Observation
 
-    from s3logs_parquet_spark.writer import auto_files_per_partition, output_has_data
-
-    cfg = cfg or EngineConfig()
-    lines = read_log_lines(spark, input_paths)
+    from s3logs_parquet_spark.writer import output_has_data
 
     extra = 0
-    optimistic = False
-    if adaptive_schema:
-        if output_has_data(spark, output_path):
-            probe = parse_s3_access_log(lines).select("n_fields", "ts")
-            widest = max_field_count(probe.filter(F.col("ts").isNotNull()))
-            extra = max(0, widest - cfg.n_base_fields)
-        else:
-            optimistic = True
+    optimistic = not output_has_data(spark, output_path)
+    if not optimistic:
+        probe = parse_s3_access_log(lines).select("n_fields", "ts")
+        widest = max_field_count(probe.filter(F.col("ts").isNotNull()))
+        extra = max(0, widest - cfg.n_base_fields)
 
     # Metrics ride the write job itself via Observation nodes — no
     # second pass and no output read-back (which double-counted
     # pre-existing rows under mode=append), and rows_parsed is by
     # construction the SAME ts-not-null predicate the pipeline filters
     # on, not a lookalike regex.
-    obs_in = obs_parsed = obs_out = None
+    obs_in, obs_parsed, obs_out = Observation(), Observation(), Observation()
     obs_width = Observation() if optimistic else None
-    if collect_metrics:
-        obs_in, obs_parsed, obs_out = Observation(), Observation(), Observation()
 
     def _build(extra_fields: int, observe: bool):
-        src = (
-            lines.observe(obs_in, F.count(F.lit(1)).alias("n"))
-            if observe and collect_metrics
-            else lines
-        )
+        src = lines.observe(obs_in, F.count(F.lit(1)).alias("n")) if observe else lines
         parsed = parse_s3_access_log(
             src,
             extra_fields=extra_fields,
@@ -139,7 +151,7 @@ def run_batch_transform(
         )
         clean_plain = parsed.filter(F.col("ts").isNotNull())  # F1: drop unparseable
         clean = clean_plain
-        if observe and collect_metrics:
+        if observe:
             clean = clean.observe(obs_parsed, F.count(F.lit(1)).alias("n"))
         if observe and optimistic:
             clean = clean.observe(obs_width, F.max("n_fields").alias("m"))
@@ -149,16 +161,11 @@ def run_batch_transform(
         out_plain = with_partition_columns(result, cfg).drop(
             "n_fields", "ts", "agg_window", "bucket_key"
         )
-        out = (
-            out_plain.observe(obs_out, F.count(F.lit(1)).alias("n"))
-            if observe and collect_metrics
-            else out_plain
-        )
+        out = out_plain.observe(obs_out, F.count(F.lit(1)).alias("n")) if observe else out_plain
         return out, clean_plain, out_plain
 
     out, clean_plain, out_plain = _build(extra, observe=True)
-    salt = auto_files_per_partition(input_paths, spark=spark)
-    write_partitioned_parquet(out, output_path, cfg, files_per_partition=salt)
+    write_partitioned_parquet(out, output_path, cfg, files_per_partition=files_per_partition)
 
     if optimistic:
         try:
@@ -174,7 +181,7 @@ def run_batch_transform(
                 output_path,
                 cfg,
                 mode="overwrite_partitions",
-                files_per_partition=salt,
+                files_per_partition=files_per_partition,
             )
 
     if corrupt_path is not None:
@@ -188,9 +195,6 @@ def run_batch_transform(
         from s3logs_parquet_spark.writer import write_gzip_text_archive
 
         write_gzip_text_archive(lines, archive_path)
-
-    if not collect_metrics:
-        return TransformResult(-1, -1, -1, extra)
 
     def _obs_count(obs, fallback_df: DataFrame) -> int:
         # When the whole plan collapses to an empty relation (zero

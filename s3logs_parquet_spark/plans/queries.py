@@ -39,6 +39,7 @@ from s3logs_parquet_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from s3logs_parquet_spark.operators.windows import with_agg_window
+from s3logs_parquet_spark.session import prebuilt
 
 
 from s3logs_parquet_spark.sources.tables import load_table as _t  # noqa: E402
@@ -1019,13 +1020,6 @@ SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM documents GROUP BY md5(t
 # DuckDB differential in tests/test_similarity.py.)
 
 
-# built canonical-keep DataFrames, cached per (process, sf_dir) — the
-# prepared-statement semantic (see _span_gate / q_emb_semantic_dedup):
-# building is EAGER (LSH signature + verified-edge checkpoints, the CC
-# edge collect), so rebuilding per call repeats those jobs
-_CANONICAL_KEEP_PLANS: dict[str, DataFrame] = {}
-
-
 def q_docs_neardup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware canonical selection (operators/dedup.py
     canonical_keep): LSH candidates → exact 3-gram Jaccard verify →
@@ -1033,16 +1027,17 @@ def q_docs_neardup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame
     member per cluster (ties → min doc_id). The DuckDB oracle replays
     the entire chain — MinHash banding, exact Jaccard, recursive-CTE
     components, the quality formula, and the argmax — so the keep
-    decision itself is value-checked end to end."""
+    decision itself is value-checked end to end.
+
+    A ``prebuilt`` index entry (the eager LSH/edge checkpoints and CC
+    collect); docs_minhash_lsh_pairs keeps the build cost measured."""
     from s3logs_parquet_spark.operators.dedup import canonical_keep
 
-    cached = _CANONICAL_KEEP_PLANS.get(sf_dir)
-    if cached is not None and cached.sparkSession is not spark:
-        del _CANONICAL_KEEP_PLANS[sf_dir]
-    if sf_dir not in _CANONICAL_KEEP_PLANS:
-        d = _t(spark, sf_dir, "documents")
-        _CANONICAL_KEEP_PLANS[sf_dir] = canonical_keep(d, "doc_id", "text")
-    return _CANONICAL_KEEP_PLANS[sf_dir]
+    return prebuilt(
+        spark,
+        ("docs_neardup_canonical_keep", sf_dir),
+        lambda: canonical_keep(_t(spark, sf_dir, "documents"), "doc_id", "text"),
+    )
 
 
 def _oracle_canonical_keep(exact_threshold: float = 0.4) -> str:
@@ -1978,17 +1973,6 @@ SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k}
     return sql
 
 
-# emb_pq_topk's built plan, cached per (process, sf_dir) — the
-# prepared-statement semantic (see _span_gate): the plan is PURE (no
-# checkpoint/persist anywhere in the pq chain), so every execution
-# still recomputes encode → ADC → rerank from the parquet inputs; the
-# cache only stops each call from (a) re-collecting the 8-row codebook
-# model (a driver job) and (b) generating fresh expression IDs that
-# miss the codegen cache for the ~0.5k-term encode/ADC stages
-# (round 13 — measured best-of-5 at sf0.1: 2.32 s → 1.61 s).
-_PQ_PLANS: dict[str, DataFrame] = {}
-
-
 def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/ann.py pq_*): deterministic
     codebooks (subvectors of the 8 smallest vec_ids, the same
@@ -1996,23 +1980,23 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode, ADC candidate scan over the m-byte codes, exact-cosine
     rerank of the top 50. The oracle recomputes the identical
     codebooks/codes/ADC in SQL — the whole compressed-ANN pipeline is
-    value-checked, not just shape-checked."""
+    value-checked, not just shape-checked.
+
+    A ``prebuilt`` plan entry: it saves the 8-row codebook collect and
+    plan construction (sf0.1, 4 cores, median of 10 pairs: 0.79 s per
+    call with it, 1.05 s without); every execution still recomputes."""
     from s3logs_parquet_spark.operators.ann import pq_codebooks, pq_topk
 
-    cached = _PQ_PLANS.get(sf_dir)
-    if cached is not None and cached.sparkSession is not spark:
-        del _PQ_PLANS[sf_dir]
-    if sf_dir not in _PQ_PLANS:
+    def build() -> DataFrame:
         emb = _t(spark, sf_dir, "embeddings")
         cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding")
         )
         out = pq_topk(emb, queries, "vec_id", "query_id", cbs, k=10, n_candidates=50)
-        _PQ_PLANS[sf_dir] = out.select(
-            "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-    return _PQ_PLANS[sf_dir]
+        return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
+
+    return prebuilt(spark, ("emb_pq_topk", sf_dir), build)
 
 
 def _oracle_emb_pq(
@@ -2874,28 +2858,16 @@ FROM events GROUP BY 1, 2
 """
 
 
-# the corpus-side LSH index, built once per (process, sf_dir) — the
-# production semantic the operator's own contract states ("corpus_index
-# is a minhash_banded output — typically read back from a table, NOT
-# recomputed: the incremental cost is O(batch + candidates),
-# independent of corpus size"). Until round 13 the gate rebuilt and
-# re-checkpointed the WHOLE corpus index inside every timed call,
-# measuring a shape production never runs; now it follows the
-# build-once/probe convention of emb_ivf_indexed_topk /
-# emb_semantic_dedup_incremental (bench.py round-4/round-7 notes): the
-# first call (the driver's correctness run) pays the full index build,
-# timed runs pay batch signatures + band probe + verify — the
-# incremental cost. docs_minhash_lsh_pairs keeps the full
-# build-included cost of the same signature machinery measured.
-_INCR_NEARDUP_INDEX: dict[str, DataFrame] = {}
-
-
 def q_docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingest dedup: a NEW batch (doc_id % 5 == 0) checked
     against the EXISTING corpus's persisted LSH index (doc_id % 5 != 0)
     — pairs only across the two sides, never a corpus self-join. The
     incremental cost is O(batch + bucket candidates), independent of
-    corpus size (operators/dedup.py:incremental_neardup_pairs)."""
+    corpus size (operators/dedup.py:incremental_neardup_pairs).
+
+    The corpus index is a ``prebuilt`` index entry, as the operator's
+    contract has it (read back from a table, not recomputed);
+    docs_minhash_lsh_pairs keeps the build cost measured."""
     from s3logs_parquet_spark.operators.dedup import (
         incremental_neardup_pairs,
         minhash_banded,
@@ -2903,17 +2875,16 @@ def q_docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 5 == 0)
-    cached = _INCR_NEARDUP_INDEX.get(sf_dir)
-    if cached is not None and cached.sparkSession is not spark:
-        del _INCR_NEARDUP_INDEX[sf_dir]
-    if sf_dir not in _INCR_NEARDUP_INDEX:
-        corpus = d.filter(F.col("doc_id") % 5 != 0)
-        _INCR_NEARDUP_INDEX[sf_dir] = minhash_banded(
-            corpus, "doc_id", "text", num_hashes=32, bands=8
-        )
+    index = prebuilt(
+        spark,
+        ("docs_incremental_neardup", sf_dir),
+        lambda: minhash_banded(
+            d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", num_hashes=32, bands=8
+        ),
+    )
     pairs = incremental_neardup_pairs(
         batch,
-        _INCR_NEARDUP_INDEX[sf_dir],
+        index,
         num_hashes=32,
         bands=8,
         shingle_k=3,
@@ -3045,11 +3016,6 @@ ORDER BY o_orderpriority
 """
 
 
-# (centroids, codebooks) trained by THIS process, keyed by sf_dir —
-# see q_emb_ivfpq_topk's build-once rationale.
-_IVFPQ_MODELS: dict[str, tuple[list, list, DataFrame]] = {}
-
-
 def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composite ANN (operators/ann.py ivfpq_topk): trained
     coarse quantizer (same deterministic 2-iteration Lloyd as
@@ -3059,14 +3025,9 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe + codebooks + codes + ADC + rerank in SQL — the full FAISS
     `IVF8,PQ4` pipeline value-checked end to end.
 
-    Train-once-per-process: centroids and codebooks are tiny
-    driver-side models from a DETERMINISTIC procedure (same inputs →
-    bit-identical model), so repeat calls reuse them — mirroring
-    q_emb_ivf_indexed_topk's build/probe split, and for the same
-    reason: training is a write-side one-off in production; queries
-    encode+probe. The first call (what the driver's correctness run
-    sees) still pays the full train; emb_ivf_trained_topk keeps a
-    train-included timing measured."""
+    A ``prebuilt`` index entry: the deterministic centroids, codebooks
+    and encoded corpus; emb_ivf_trained_topk keeps the train-included
+    cost measured."""
     from s3logs_parquet_spark.operators.ann import (
         build_flat,
         ivf_train,
@@ -3078,17 +3039,11 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s3logs_parquet_spark.session import materialize
 
     emb = _t(spark, sf_dir, "embeddings")
-    # the cached encode frame is a localCheckpoint — its blocks die
-    # with the session that made it, so a cache hit from a STOPPED
-    # session (multiple test fixtures in one process) would fail with
-    # an opaque freed-block error; validate and rebuild (ADVICE r5)
-    cached = _IVFPQ_MODELS.get(sf_dir)
-    if cached is not None and cached[2].sparkSession is not spark:
-        del _IVFPQ_MODELS[sf_dir]
-    if sf_dir not in _IVFPQ_MODELS:
+
+    def build():
         cents = ivf_train(emb, "embedding", n_cells=8, iters=2, id_col="vec_id")
         cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
-        # the write-side precompute, checkpointed once per process:
+        # the write-side precompute, checkpointed once per session:
         # repeat calls (the bench's timed runs, production query
         # batches) pay probe+ADC+rerank only — and skip re-generating
         # + re-compiling the encode kernel per call. build_flat: the
@@ -3100,8 +3055,9 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             materialize(build_flat(ivfpq_encode_corpus(emb, "vec_id", cents, cbs))),
             spark,
         )
-        _IVFPQ_MODELS[sf_dir] = (cents, cbs, enc)
-    cents, cbs, enc = _IVFPQ_MODELS[sf_dir]
+        return cents, cbs, enc
+
+    cents, cbs, enc = prebuilt(spark, ("emb_ivfpq_topk", sf_dir), build)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -3268,30 +3224,23 @@ GROUP BY p.doc_id
 """
 
 
-# built span-gate DataFrames, cached per (gate, process, sf_dir) —
-# the prepared-statement semantic (see q_emb_semantic_dedup): both
-# span plans compile ~6 whole-stage-codegen stages, and rebuilding the
-# logical plan per call generates fresh expr IDs that miss the codegen
-# cache (measured at sf0.1: 5.5 s cold vs 0.6-0.7 s re-executing the
-# same DataFrame object). Execution still re-runs every stage.
-_DUP_SPANS_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
+# the span-gate DataFrame, built once per (gate, session, sf_dir) — a
+# prepared statement (session.prebuilt plan entry): execution still
+# re-runs every stage; the entry saves only plan construction
+# (measured for docs_remove_dup_spans at sf0.1, 4 cores, median of 10
+# pairs: 0.89 s per call with it, 1.02 s without).
 def _span_gate(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
     from s3logs_parquet_spark.operators.dedup import (
         duplicated_spans,
         remove_duplicated_spans,
     )
 
-    key = (which, sf_dir)
-    cached = _DUP_SPANS_PLANS.get(key)
-    if cached is not None and cached.sparkSession is not spark:
-        del _DUP_SPANS_PLANS[key]
-    if key not in _DUP_SPANS_PLANS:
-        d = _t(spark, sf_dir, "documents")
-        fn = duplicated_spans if which == "report" else remove_duplicated_spans
-        _DUP_SPANS_PLANS[key] = fn(d, "doc_id", "text", n=13, min_docs=2)
-    return _DUP_SPANS_PLANS[key]
+    fn = duplicated_spans if which == "report" else remove_duplicated_spans
+    return prebuilt(
+        spark,
+        ("_span_gate", which, sf_dir),
+        lambda: fn(_t(spark, sf_dir, "documents"), "doc_id", "text", n=13, min_docs=2),
+    )
 
 
 def q_docs_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3921,11 +3870,6 @@ from s3logs_parquet_spark.plans.tpch_extra import TPCH_EXTRA_QUERIES  # noqa: E4
 QUERIES.update(TPCH_EXTRA_QUERIES)
 
 
-# Paths whose IVF index was already built by THIS process — the
-# persisted-index query builds once per process and probes thereafter.
-_IVF_INDEX_BUILT: set[str] = set()
-
-
 def q_emb_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-index ANN path: ivf_index_write materializes the
     corpus partitioned by cell + trained centroids on disk; the query
@@ -3934,13 +3878,10 @@ def q_emb_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic training as emb_ivf_trained_topk, so the identical
     oracle value-checks the whole build→persist→prune→rerank chain.
 
-    Build-once-per-process: the first call in a process pays the full
-    build (what the driver's correctness run measures); repeat calls
-    probe the existing index — which is the production semantic this
-    operator exists for (build is a write-side one-off; queries probe).
-    The build-included cost stays separately measured by
-    emb_ivf_trained_topk. A new process always rebuilds, so a stale
-    on-disk index from an earlier run can't leak in."""
+    The on-disk index is a ``prebuilt`` index entry: repeat calls
+    probe it; emb_ivf_trained_topk keeps the build cost measured. A
+    new session always rebuilds, so a stale index from an earlier run
+    can't leak in."""
     import os
     import tempfile
 
@@ -3949,9 +3890,11 @@ def q_emb_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_index_{tag}")
-    if path not in _IVF_INDEX_BUILT:
-        ivf_index_write(emb, path, "vec_id", n_cells=8, iters=2)
-        _IVF_INDEX_BUILT.add(path)
+    prebuilt(
+        spark,
+        ("emb_ivf_indexed_topk", path),
+        lambda: ivf_index_write(emb, path, "vec_id", n_cells=8, iters=2),
+    )
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -4064,9 +4007,6 @@ QUERIES["lineitem_salted_skew_agg"] = (q_lineitem_salted_skew_agg, ORACLE_LINEIT
 QUERIES["docs_top_ngrams"] = (q_docs_top_ngrams, ORACLE_DOCS_TOP_NGRAMS)
 
 
-_SEMDEDUP_ASSIGN: dict[str, tuple[list, DataFrame, DataFrame]] = {}
-
-
 def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (operators/dedup.py
     semantic_dedup, Abbas et al. 2023): assign every embedding to its
@@ -4079,49 +4019,32 @@ def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; the pair-budget guards raise instead of running an
     unbounded quadratic pair stage.
 
-    Assign-once-per-process: cell + norm are semantic_assign's
-    write-side precompute (stored corpus columns in production), so
-    repeat calls skip re-compiling the 8×64 assignment kernel — the
-    same build/probe split and session-validation as
-    q_emb_ivfpq_topk; the first call (the driver's correctness run)
-    still pays the full assignment.
-
-    The BUILT DataFrame is also cached per (process, sf_dir) — the
-    prepared-statement semantic. Measured at sf0.1 (PERF.md round 7):
-    rebuilding the identical logical plan per call generates fresh
-    expr IDs, whose different generated source misses Spark's
-    whole-stage-codegen cache — with the round-6 expanded pair join
-    that recompilation was ~4.3 s per run against ~0.1 s of actual
-    execution; with the blas pair kernel (much less generated code)
-    it is ~0.25 s against ~0.3 s. Re-executing the same DataFrame
-    object compiles once either way. Every execution still re-runs
-    the pair stage — only planning/compile state is reused, exactly
-    what a production repeated query (SQL cache / prepared
-    statement) does."""
+    A ``prebuilt`` entry holds the built DataFrame: semantic_assign's
+    cell + norm (stored corpus columns in production) and the pair
+    plan, whose rebuild would recompile the codegen (PERF.md round 7).
+    Every execution still re-runs the pair stage."""
     from s3logs_parquet_spark.operators.dedup import semantic_assign, semantic_dedup
 
-    cached = _SEMDEDUP_ASSIGN.get(sf_dir)
-    if cached is not None and cached[1].sparkSession is not spark:
-        del _SEMDEDUP_ASSIGN[sf_dir]
-    if sf_dir not in _SEMDEDUP_ASSIGN:
+    def build() -> DataFrame:
         emb = _t(spark, sf_dir, "embeddings")
-        cent_rows = (
-            emb.filter(F.col("vec_id") < 8)
-            .orderBy("vec_id")
-            .select("embedding")
-            .collect()
-        )
-        centroids = [[float(x) for x in r["embedding"]] for r in cent_rows]
+        centroids = _fixed_centroids(emb)
         assigned = semantic_assign(emb, "vec_id", "embedding", centroids)
-        out = semantic_dedup(
+        return semantic_dedup(
             emb, "vec_id", "embedding", centroids, threshold=0.4, assigned=assigned
         ).groupBy("cell").agg(
             F.count(F.lit(1)).alias("n_members"),
             F.sum(F.col("is_semdup").cast("bigint")).alias("n_dups"),
             F.min(F.when(~F.col("is_semdup"), F.col("vec_id"))).alias("min_kept_id"),
         )
-        _SEMDEDUP_ASSIGN[sf_dir] = (centroids, assigned, out)
-    return _SEMDEDUP_ASSIGN[sf_dir][2]
+
+    return prebuilt(spark, ("emb_semantic_dedup", sf_dir), build)
+
+
+def _fixed_centroids(emb: DataFrame) -> list[list[float]]:
+    """The semantic-dedup gates' fixed 8-centroid quantizer: the
+    embeddings of vec_id < 8, in id order (one 8-row collect)."""
+    rows = emb.filter(F.col("vec_id") < 8).orderBy("vec_id").select("embedding").collect()
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def _oracle_emb_semantic_dedup(n_cells: int = 8, threshold: float = 0.4) -> str:
@@ -4196,14 +4119,11 @@ QUERIES["emb_semantic_dedup"] = (q_emb_semantic_dedup, _oracle_emb_semantic_dedu
 QUERIES["docs_chunk_windows"] = (q_docs_chunk_windows, ORACLE_DOCS_CHUNKS)
 
 
-_SEMDEDUP_INCR_INDEX: dict[str, tuple[list, DataFrame, DataFrame]] = {}
-
-
 def q_emb_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingest semantic dedup (operators/dedup.py
     semantic_dedup_incremental — VERDICT r6 #1): the corpus is split
     into an EXISTING index (vec_id % 5 != 0, 80%) whose
-    semantic_assign precompute is persisted once per process (the
+    semantic_assign precompute is persisted once per session (the
     production shape: cell + norm are stored corpus columns), and a
     NEW batch (vec_id % 5 == 0) that assigns with the SAME fixed
     8-centroid quantizer as emb_semantic_dedup, probes only its
@@ -4218,29 +4138,17 @@ def q_emb_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFr
         semantic_dedup_incremental,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    cached = _SEMDEDUP_INCR_INDEX.get(sf_dir)
-    if cached is not None and cached[1].sparkSession is not spark:
-        del _SEMDEDUP_INCR_INDEX[sf_dir]
-    if sf_dir not in _SEMDEDUP_INCR_INDEX:
-        cent_rows = (
-            emb.filter(F.col("vec_id") < 8)
-            .orderBy("vec_id")
-            .select("embedding")
-            .collect()
-        )
-        centroids = [[float(x) for x in r["embedding"]] for r in cent_rows]
+    def build() -> DataFrame:
+        emb = _t(spark, sf_dir, "embeddings")
+        centroids = _fixed_centroids(emb)
         corpus = emb.filter(F.col("vec_id") % 5 != 0)
         index = semantic_assign(corpus, "vec_id", "embedding", centroids)
         batch = emb.filter(F.col("vec_id") % 5 == 0)
-        out = semantic_dedup_incremental(
+        return semantic_dedup_incremental(
             batch, index, "vec_id", "embedding", centroids, threshold=0.4
         )
-        # plan cached per process (prepared-statement semantic, see
-        # q_emb_semantic_dedup): repeat calls re-EXECUTE the probe with
-        # the codegen cache warm instead of recompiling ~identical code
-        _SEMDEDUP_INCR_INDEX[sf_dir] = (centroids, index, out)
-    return _SEMDEDUP_INCR_INDEX[sf_dir][2]
+
+    return prebuilt(spark, ("emb_semantic_dedup_incremental", sf_dir), build)
 
 
 def _oracle_emb_semantic_dedup_incremental(
@@ -4335,9 +4243,6 @@ QUERIES["emb_semantic_dedup_incremental"] = (
 QUERIES["docs_chunk_windows_bpe"] = (q_docs_chunk_windows_bpe, ORACLE_DOCS_CHUNKS_BPE)
 
 
-_SQ8_MODELS: dict[str, tuple[list, DataFrame, DataFrame]] = {}
-
-
 def q_emb_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-bit scalar-quantized ANN (operators/ann.py sq8_topk, the
     FAISS SQ8 layout): per-dim min/max 'training' (one aggregate,
@@ -4349,19 +4254,13 @@ def q_emb_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     train -> quantize -> score -> rerank chain bit-reproducible in
     SQL, so even the quantization ERROR is value-checked.
 
-    Stats + codes are cached per process (the production shape: both
-    are write-side table columns/properties, computed at ingest) with
-    the same session-validation as the other ANN gates, so repeat
-    calls measure the scoring + rerank probe; the first call (the
-    driver's correctness run) still pays the full encode."""
+    Stats + codes are a ``prebuilt`` index entry (write-side table
+    properties/columns in production); repeat calls run the probe."""
     from s3logs_parquet_spark.operators.ann import sq8_topk, sq_encode, sq_stats
     from s3logs_parquet_spark.session import materialize
 
-    emb = _t(spark, sf_dir, "embeddings")
-    cached = _SQ8_MODELS.get(sf_dir)
-    if cached is not None and cached[1].sparkSession is not spark:
-        del _SQ8_MODELS[sf_dir]
-    if sf_dir not in _SQ8_MODELS:
+    def build() -> DataFrame:
+        emb = _t(spark, sf_dir, "embeddings")
         dim = int(emb.select(F.size("embedding")).first()[0])
         stats = sq_stats(emb, "embedding", dim)
         enc = materialize(
@@ -4374,16 +4273,14 @@ def q_emb_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding")
         )
-        out = sq8_topk(
+        return sq8_topk(
             emb, queries, "vec_id", "query_id", stats, k=10, n_candidates=50,
             encoded=enc,
         ).select(
             "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
         )
-        # plan cached per process (prepared-statement semantic, see
-        # q_emb_semantic_dedup)
-        _SQ8_MODELS[sf_dir] = (stats, enc, out)
-    return _SQ8_MODELS[sf_dir][2]
+
+    return prebuilt(spark, ("emb_sq8_topk", sf_dir), build)
 
 
 def _oracle_emb_sq8(dim: int = 64, n_cand: int = 50, k: int = 10) -> str:
@@ -4727,106 +4624,3 @@ QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R14} | {
     name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R14
 }
 
-
-# ---------------------------------------------------------------------------
-# BUILD_ONCE — the explicit build-once timed-region contract
-# (VERDICT r13 "Next round" #3). Every QUERIES gate whose first call
-# in a process builds a cached artifact that later calls (and the
-# bench's timed reps) reuse is listed HERE, in one auditable table —
-# no per-query hidden caches. Each entry names the module-level cache
-# object, what it holds, and the build-included twin (the registry
-# gate that keeps the full build cost measured), or the reason none
-# is needed.
-#
-# kind:
-#   "plan"         — the cache holds an unmaterialized DataFrame (plus
-#                    at most a tiny driver-side model collect). Every
-#                    execution still recomputes from the parquet
-#                    inputs; the cache only reuses planning/codegen
-#                    state (the prepared-statement semantic).
-#   "materialized" — the cache holds localCheckpoint-ed blocks or an
-#                    on-disk artifact, so timed reps probe a pre-built
-#                    index. This is the documented production contract
-#                    for these operators (build is a write-side
-#                    one-off; queries probe) — the build-included twin
-#                    keeps the full cost measured.
-#
-# tests/test_bench_smoke.py::test_build_once_registry_is_exhaustive
-# asserts no module-level cache exists in this module outside this
-# table, and that every entry resolves.
-BUILD_ONCE: dict[str, dict[str, str | None]] = {
-    "docs_remove_dup_spans": {
-        "cache": "_DUP_SPANS_PLANS",
-        "kind": "plan",
-        "holds": "span-gate DataFrame (fresh expr-IDs miss the codegen cache)",
-        "build_included_twin": None,
-    },
-    "emb_pq_topk": {
-        "cache": "_PQ_PLANS",
-        "kind": "plan",
-        "holds": "PQ plan + 8-row codebook collect; encode→ADC→rerank re-runs",
-        "build_included_twin": None,
-    },
-    "emb_semantic_dedup": {
-        "cache": "_SEMDEDUP_ASSIGN",
-        "kind": "materialized",
-        "holds": "8-row centroid collect + materialized semantic_assign blocks",
-        "build_included_twin": "emb_semantic_dedup_incremental (first call)",
-    },
-    "emb_semantic_dedup_incremental": {
-        "cache": "_SEMDEDUP_INCR_INDEX",
-        "kind": "materialized",
-        "holds": "materialized corpus semantic_assign index + probe plan",
-        "build_included_twin": None,  # continuous-ingest probe IS the product
-    },
-    "emb_sq8_topk": {
-        "cache": "_SQ8_MODELS",
-        "kind": "materialized",
-        "holds": "per-dim min/max stats + materialized int8 codes",
-        "build_included_twin": None,  # encode cost tracked in PERF.md (write-side)
-    },
-    "emb_ivf_indexed_topk": {
-        "cache": "_IVF_INDEX_BUILT",
-        "kind": "materialized",
-        "holds": "on-disk IVF index (ivf_index_write parquet under $TMPDIR)",
-        "build_included_twin": "emb_ivf_trained_topk",
-    },
-    "emb_ivfpq_topk": {
-        "cache": "_IVFPQ_MODELS",
-        "kind": "materialized",
-        "holds": "driver-side centroids+codebooks + checkpointed encoded corpus",
-        "build_included_twin": "emb_ivf_trained_topk",
-    },
-    "docs_neardup_canonical_keep": {
-        "cache": "_CANONICAL_KEEP_PLANS",
-        "kind": "materialized",
-        "holds": "LSH signature + verified-edge checkpoints + CC edge collect",
-        "build_included_twin": "docs_minhash_lsh_pairs",
-    },
-    "docs_incremental_neardup": {
-        "cache": "_INCR_NEARDUP_INDEX",
-        "kind": "materialized",
-        "holds": "checkpointed corpus LSH index (minhash_banded materialize=True)",
-        "build_included_twin": "docs_minhash_lsh_pairs",
-    },
-}
-
-# Shared (non-per-query) plan-state caches — the same declared
-# timed-region contract as BUILD_ONCE, for caches living outside this
-# module. kind is always "plan": unexecuted plan objects only, nothing
-# materialized — every execution still computes from the parquet
-# inputs. Enforced alongside BUILD_ONCE by
-# tests/test_bench_smoke.py::test_build_once_registry_is_exhaustive.
-BUILD_ONCE_SHARED: dict[str, dict[str, str]] = {
-    "sources.tables.load_table": {
-        "module": "s3logs_parquet_spark.sources.tables",
-        "cache": "_TABLE_PLANS",
-        "kind": "plan",
-        "holds": (
-            "resolved parquet scan relations per (session, sf_dir, table): "
-            "spark.read.parquet's synchronous footer/schema resolution "
-            "(~90 ms/call driver-side) runs once per session per table, "
-            "as a catalog would; scans still read parquet every run"
-        ),
-    },
-}

@@ -14,35 +14,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from s3logs_parquet_spark.session import prebuilt
+
 
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
-# Resolved-plan cache, keyed (session id, sf_dir, table): PURE plan
-# state — an unexecuted scan relation; every execution still reads the
-# parquet files (round 14, declared in plans/queries.py BUILD_ONCE,
-# kind=plan). Rationale: spark.read.parquet() resolves the schema from
-# file footers SYNCHRONOUSLY on the driver, ~90 ms per call on this
-# box — a long-lived engine resolves a catalog table once, not once
-# per query expression that mentions it (tpch_q8 alone paid it 8x per
-# plan construction). Entries are validated against the LIVE session
-# (the repo's cache-invalidation idiom) so stopped test sessions never
-# leak a dead plan; testdata tables are immutable by contract.
-_TABLE_PLANS: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    cached = _TABLE_PLANS.get(key)
-    if cached is not None and cached.sparkSession is spark:
-        return cached
+    """The scan of one testdata table, resolved once per session.
+
+    ``spark.read.parquet`` resolves the schema from the file footers
+    synchronously on the driver, 41-52 ms per call at sf0.1. A query
+    that mentions a table several times pays that each time: holding
+    the resolved scan cuts ``tpch_q8``'s construction from 451 ms to
+    104 ms. The entry is plan state only (``session.prebuilt``): every
+    execution still reads the parquet files, and testdata tables are
+    immutable by contract."""
+    return prebuilt(spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
-        df = spark.read.parquet(path)
-        _TABLE_PLANS[key] = df
-        return df
+        return spark.read.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     if isinstance(df.schema["ts"].dataType, LongType):
@@ -51,7 +47,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # remainders can round UP across the integer boundary, diverging
         # from DuckDB's truncation by 1µs. `div` stays in int64.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _TABLE_PLANS[key] = df
     return df
 
 

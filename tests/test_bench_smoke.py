@@ -47,67 +47,50 @@ def test_every_headline_query_executes_at_bench_scale(spark):
     assert not failures, failures
 
 
-def test_build_once_registry_is_exhaustive():
-    """VERDICT r13 #3: the build-once timed-region contract is ONE
-    explicit table. Every module-level mutable cache in plans/queries.py
-    (the per-(process, sf_dir) build-once pattern is an empty dict/set
-    literal at module scope) must be named by a BUILD_ONCE entry — a
-    new per-query hidden cache fails here until it is declared. Every
-    entry must resolve: the gate and its twin exist in QUERIES, the
-    cache object exists."""
+def test_no_module_cache_outside_prebuilt():
+    """session.prebuilt is the one build-once cache, and its docstring
+    the one statement of the timed-region contract. The query and
+    table modules may hold no module-level empty dict/set, the shape a
+    hand-rolled per-query cache takes."""
     import ast
     import inspect
 
-    from s3logs_parquet_spark.plans import queries as qmod
-    from s3logs_parquet_spark.plans.queries import BUILD_ONCE, QUERIES
+    from s3logs_parquet_spark.plans import queries
+    from s3logs_parquet_spark.sources import tables
 
-    tree = ast.parse(inspect.getsource(qmod))
-    caches = set()
-    for node in tree.body:  # top-level statements only
-        target = None
-        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
-            target, value = node.target.id, node.value
-        elif isinstance(node, ast.Assign) and len(node.targets) == 1 and isinstance(
-            node.targets[0], ast.Name
-        ):
-            target, value = node.targets[0].id, node.value
-        if target is None:
-            continue
-        is_empty_dict = isinstance(value, ast.Dict) and not value.keys
-        is_empty_set = (
-            isinstance(value, ast.Call)
-            and isinstance(value.func, ast.Name)
-            and value.func.id == "set"
-            and not value.args
-        )
-        if is_empty_dict or is_empty_set:
-            caches.add(target)
+    for mod in (queries, tables):
+        for node in ast.parse(inspect.getsource(mod)).body:
+            v = getattr(node, "value", None)
+            empty_dict = isinstance(v, ast.Dict) and not v.keys
+            empty_set = isinstance(v, ast.Call) and ast.unparse(v) in ("dict()", "set()")
+            assert not (empty_dict or empty_set), f"{mod.__name__}:{node.lineno} cache"
 
-    declared = {entry["cache"] for entry in BUILD_ONCE.values()}
-    undeclared = caches - declared
-    assert not undeclared, (
-        f"module-level cache(s) {sorted(undeclared)} in plans/queries.py are "
-        "not declared in BUILD_ONCE — add an entry (with the build-included "
-        "twin) or remove the cache"
-    )
-    stale = declared - caches
-    assert not stale, f"BUILD_ONCE names cache(s) that no longer exist: {sorted(stale)}"
 
-    for name, entry in BUILD_ONCE.items():
-        assert name in QUERIES, f"BUILD_ONCE entry {name} not in QUERIES"
-        assert hasattr(qmod, entry["cache"]), entry["cache"]
-        assert entry["kind"] in ("plan", "materialized"), entry
-        twin = entry["build_included_twin"]
-        if twin is not None:
-            assert twin.split(" ")[0] in QUERIES, f"{name}: twin {twin!r} not in QUERIES"
+def test_prebuilt_is_session_scoped(spark):
+    """Same session: the same object, one build. Another session
+    rebuilds. A value bound to a plan_heavy clone still hits, because
+    the caller's session is what is compared."""
+    from s3logs_parquet_spark.operators.ann import plan_heavy
+    from s3logs_parquet_spark.session import prebuilt
 
-    # shared (non-per-query) caches declare module + cache name and
-    # must be plan-only: unexecuted plan objects, nothing materialized
-    import importlib
+    builds = []
 
-    from s3logs_parquet_spark.plans.queries import BUILD_ONCE_SHARED
+    def build():
+        builds.append(1)
+        return spark.range(3)
 
-    for name, entry in BUILD_ONCE_SHARED.items():
-        mod = importlib.import_module(entry["module"])
-        assert hasattr(mod, entry["cache"]), f"{name}: {entry['cache']} missing"
-        assert entry["kind"] == "plan", f"shared cache {name} must be plan-only"
+    key = ("test_prebuilt", "sessions")
+    first = prebuilt(spark, key, build)
+    assert prebuilt(spark, key, build) is first
+    assert len(builds) == 1
+    other = spark.newSession()
+    assert prebuilt(other, key, build) is not first
+    assert len(builds) == 2
+    assert prebuilt(spark, key, build) is not first  # the entry moved to `other`
+    assert len(builds) == 3
+
+    key = ("test_prebuilt", "plan_heavy")
+    df = prebuilt(spark, key, lambda: plan_heavy(build()))
+    assert df.sparkSession is not spark
+    assert prebuilt(spark, key, lambda: plan_heavy(build())) is df
+    assert len(builds) == 4

@@ -13,7 +13,10 @@ from s3logs_parquet_spark.testing import generate_lines
 
 def test_cli_two_stage_equals_fused(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    lines = generate_lines(800, seed=21, dup_fraction=0.1, garbage_fraction=0.02)
+    # wide lines: the staged path must widen (M3) like the fused one
+    lines = generate_lines(
+        800, seed=21, dup_fraction=0.1, garbage_fraction=0.02, extra_fraction=0.05
+    )
     inp = tmp_path / "in.log"
     inp.write_text("\n".join(lines) + "\n")
 
@@ -30,8 +33,9 @@ def test_cli_two_stage_equals_fused(spark, tmp_path, monkeypatch):
     t1 = spark.read.parquet(out_fused)
     t2 = spark.read.parquet(out_2stage)
     assert t1.count() == t2.count()
-    cols = sorted(set(t1.columns) & set(t2.columns))
-    assert t1.select(cols).exceptAll(t2.select(cols)).count() == 0
+    assert t1.columns == t2.columns
+    assert any(c.startswith("ExtraField") for c in t1.columns)
+    assert t1.exceptAll(t2).count() == 0
 
 
 def test_cli_stream(spark, tmp_path):

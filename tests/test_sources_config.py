@@ -145,7 +145,7 @@ def test_sql_layer_over_views_and_output(spark, sf_dir, tmp_path):
     inp = tmp_path / "in.log"
     inp.write_text("\n".join(generate_lines(300, seed=81, span_seconds=7200)) + "\n")
     out = str(tmp_path / "t")
-    run_batch_transform(spark, str(inp), out, EngineConfig(), collect_metrics=False)
+    run_batch_transform(spark, str(inp), out, EngineConfig())
     register_log_table(spark, out)
     agg = spark.sql(
         "SELECT Bucket, count(*) AS n FROM s3_access_logs WHERE hour = 8 GROUP BY Bucket"

@@ -4,6 +4,7 @@ row-count, schema (column names), and an order-insensitive value hash
 (columns sorted by name, rows sorted, values stringified).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+A query name that is not in the registry prints UNKNOWN and exits 1.
 """
 
 from __future__ import annotations
@@ -49,13 +50,18 @@ def frame_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
     only = set(a for a in sys.argv[1:] if not os.path.isdir(a))
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        for name in unknown:
+            print(f"UNKNOWN {name}")
+        return 1
 
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
