@@ -25,7 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.plans.batch import parse_and_dedup
-from s3logs_parquet_spark.plans.queries import QUERIES, _synthetic_log_lines
+from s3logs_parquet_spark.plans.log_pipeline import _synthetic_log_lines
+from s3logs_parquet_spark.plans.queries import QUERIES
 from s3logs_parquet_spark.session import get_spark
 from s3logs_parquet_spark.sources.tables import load_table
 from s3logs_parquet_spark.writer import with_partition_columns, write_partitioned_parquet

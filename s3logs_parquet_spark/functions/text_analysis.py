@@ -5,7 +5,7 @@ All pure column expressions (split/regexp/aggregate lambdas) — JVM-side
 whole-stage codegen, map-only, no shuffle: each scales linearly to any
 corpus size. Every op is designed to be re-expressible in ANSI SQL so
 the DuckDB differential oracle checks exact values (see
-plans/queries.py for the twin SQL).
+plans/docs_text.py for the twin SQL).
 """
 
 from __future__ import annotations

@@ -524,7 +524,7 @@ def ivf_train(
     vector of the i-th smallest id — which makes the TRAINED quantizer
     (not just a fixed codebook) reproducible enough to be differential-
     tested against an oracle that unrolls the same Lloyd iterations
-    (queries.py emb_ivf_trained_topk). Without it, the init samples via
+    (plans/embeddings.py emb_ivf_trained_topk). Without it, the init samples via
     limit() (fine for production, not value-checkable)."""
     if id_col is not None:
         # deterministic branch honors sample_fraction too — via a
@@ -1032,7 +1032,7 @@ def ivfpq_topk(
     ``n_probe/n_cells`` of the CODES (m bytes/vector), not the corpus —
     the only full-width vector reads are the ``n_candidates`` rerank
     rows per query. Deterministic train/codebooks keep the whole chain
-    oracle-checkable (plans/queries.py emb_ivfpq_topk).
+    oracle-checkable (plans/embeddings.py emb_ivfpq_topk).
 
     ``encoded`` short-circuits the write-side precompute: a frame with
     columns (corpus_id, _cv, cell, pq_code) — e.g. the output of
@@ -1345,7 +1345,7 @@ def sq8_topk(
 
     Deterministic end-to-end (floor-based codes, expanded fixed-order
     float arithmetic), so the whole quantize -> score -> rerank chain
-    is oracle-checkable (plans/queries.py emb_sq8_topk)."""
+    is oracle-checkable (plans/embeddings.py emb_sq8_topk)."""
     dim = len(stats)
     if encoded is not None:
         # validate the externally-supplied frame's contract up front —

@@ -26,7 +26,7 @@ No false negatives (build and probe evaluate identical position
 expressions), so ``bloom_probe(fact) ⋈ dim == fact ⋈ dim`` exactly —
 false positives only waste a little shuffle, never change the result.
 That identity is what the DuckDB oracle checks
-(plans/queries.py orders_bloom_customer_revenue).
+(plans/relational.py orders_bloom_customer_revenue).
 
 Sizing: ~1% false positives needs ``n_bits ≈ 10 × n_keys`` with
 ``n_hashes = 7``; the defaults (2^17 bits, 5 hashes) cover ~10^4 keys.

@@ -26,7 +26,7 @@ at 100 TB:
 The shipped example model (`linear_text_model` / `score_documents`) is
 a deterministic linear text classifier over integer text features with
 dyadic weights: every arithmetic step is exact in IEEE double, so a
-SQL oracle reproduces the scores bit-for-bit (plans/queries.py
+SQL oracle reproduces the scores bit-for-bit (plans/docs_text.py
 docs_inference_scores) — the gate proves the plumbing (schema,
 batching, broadcast, column pruning) without needing a real model in
 the container. A real classifier (e.g. a quality model's weight

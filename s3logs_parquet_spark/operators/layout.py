@@ -46,7 +46,7 @@ def zorder_key(cols: Sequence[Column], bits: int = 16) -> Column:
     Pure shift/AND arithmetic summed over disjoint bit positions
     (sum == bitwise-or when positions never collide) — one codegen
     expression, no shuffle, and directly re-expressible in ANSI SQL
-    for the DuckDB oracle (plans/queries.py events_zorder_key)."""
+    for the DuckDB oracle (plans/events.py events_zorder_key)."""
     d = len(cols)
     if d * bits > 63:
         raise ValueError(f"zorder_key: {d} cols × {bits} bits exceeds a long")
@@ -139,7 +139,7 @@ def hilbert_key(x: Column, y: Column, bits: int = 16) -> Column:
     the descending s-value array with a (x, y, d) struct accumulator
     — ``bits`` iterations per row, no Python, no per-level expression
     blowup, and re-expressible verbatim as a DuckDB list_reduce for
-    the oracle (plans/queries.py events_hilbert_key)."""
+    the oracle (plans/events.py events_hilbert_key)."""
     if bits > 30:
         raise ValueError(f"hilbert_key: bits={bits} > 30 overflows a long")
     svals = F.array(*[F.lit(1 << b).cast("long") for b in range(bits - 1, -1, -1)])

@@ -189,8 +189,9 @@ def write_contribution(
 ) -> str:
     """Write one batch's contribution into its own ``batch=<id>``
     partition (dynamic overwrite — replay-idempotent, T4). The first
-    contribution creates the table + spec sidecar; later ones must use
-    the recorded bucket spec (``bucket_cols``/``n_buckets`` passed here
+    contribution writes the spec sidecar, then registers the table from
+    it and inserts like every later one; later ones use the recorded
+    bucket spec (``bucket_cols``/``n_buckets``/``sort_cols`` passed here
     are ignored after creation — the layout is a write-time property).
 
     ``dedup_cols`` (recorded in the spec at creation): a key whose
@@ -200,42 +201,24 @@ def write_contribution(
     heals the fold's documented crash window (insert committed, old
     partitions not yet dropped → history temporarily duplicated).
     """
-    bucket_cols = list(bucket_cols)
     spec = read_spec(spark, store_dir)
     if spec is None:
+        # spec before data: a crash after this point leaves a bucketed
+        # store (possibly empty) that a restart registers and replays
+        # into, never spec-less batch=<id> files
         tbl = table_name(store_dir)
         if spark.catalog.tableExists(tbl):
             # leftover same-path registration from a dropped store
             spark.sql(f"DROP TABLE {tbl}")
-        n = int(n_buckets or spark.conf.get("spark.sql.shuffle.partitions"))
-        sorts = list(sort_cols or bucket_cols)
-        out = df.withColumn("batch", F.lit(int(batch_id)).cast("int"))
-        (
-            out.repartition(n, *[F.col(c) for c in bucket_cols])
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .bucketBy(n, *bucket_cols)
-            .sortBy(*sorts)
-            .option("path", store_dir)
-            .saveAsTable(tbl)
-        )
-        write_text(
-            spark,
-            posixpath.join(store_dir.rstrip("/"), SPEC_FILE),
-            json.dumps(
-                {
-                    "table": tbl,
-                    "n_buckets": n,
-                    "bucket_cols": bucket_cols,
-                    "sort_cols": sorts,
-                    "schema": [
-                        (f.name, f.dataType.simpleString()) for f in df.schema.fields
-                    ],
-                    "dedup_cols": list(dedup_cols) if dedup_cols else None,
-                }
-            ),
-        )
-        return tbl
+        spec = {
+            "table": tbl,
+            "n_buckets": int(n_buckets or spark.conf.get("spark.sql.shuffle.partitions")),
+            "bucket_cols": list(bucket_cols),
+            "sort_cols": list(sort_cols or bucket_cols),
+            "schema": [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            "dedup_cols": list(dedup_cols) if dedup_cols else None,
+        }
+        write_text(spark, posixpath.join(store_dir.rstrip("/"), SPEC_FILE), json.dumps(spec))
     tbl = ensure_table(spark, store_dir)
     cols = spark.table(tbl).columns  # data cols, then `batch` last
     out = df.withColumn("batch", F.lit(int(batch_id)).cast("int")).select(*cols)

@@ -1,4 +1,4 @@
-"""The query inventory: every operator family exposed as a
+"""The query registry: every operator family exposed as a
 (spark_builder, oracle_sql) pair for the driver's differential gate.
 
 Each entry's Spark side is idiomatic DataFrame code built from the
@@ -9,4618 +9,139 @@ name. FP discipline: money sums rounded to 2, ratios/cosines to 6 —
 and where exactness matters (hashes, counts) the arithmetic is
 integer/md5-portable (functions/hashing.py).
 
-Registry shape:  QUERIES[name] = (fn(spark, sf_dir) -> DataFrame,
-                                  oracle_sql: str | None)
-None oracle → driver records a weaker rows-only check (used only for
-ops whose candidate generation depends on engine-native hashing).
+Registry shape:  QUERIES: name -> (fn(spark, sf_dir) -> DataFrame,
+                                  oracle_sql: str)
+
+The builders and their oracles live one module per family:
+relational, tpch_extra, tpch_partsupp, events, log_pipeline,
+docs_text, docs_neardup and embeddings.
+
+The driver's correctness gate records only the first 50 entries, so
+the order is evidence policy: the two fixed 50-query windows swap
+places each round (the next round reads ``_WINDOW_B | _WINDOW_A``),
+giving every gate a driver-recorded row at least every two rounds.
+tests/test_oracles_full.py pins that invariant against the latest
+CORRECTNESS_r*.json record and gates the second window against DuckDB.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from s3logs_parquet_spark.config import EngineConfig
-from s3logs_parquet_spark.functions.hashing import hash32_sql
-from s3logs_parquet_spark.functions.parse import parse_s3_access_log
-from s3logs_parquet_spark.functions.text_analysis import (
-    STOPWORDS,
-    fingerprint,
-    langid,
-    quality_features,
-    quality_score,
-    with_quality_and_lang,
+from s3logs_parquet_spark.plans import (
+    docs_neardup,
+    docs_text,
+    embeddings,
+    events,
+    log_pipeline,
+    relational,
+    tpch_extra,
+    tpch_partsupp,
 )
-from s3logs_parquet_spark.operators.ann import brute_force_topk
-from s3logs_parquet_spark.operators.dedup import (
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-)
-from s3logs_parquet_spark.operators.windows import with_agg_window
-from s3logs_parquet_spark.session import prebuilt
 
-
-from s3logs_parquet_spark.sources.tables import load_table as _t  # noqa: E402
-
-
-# ---------------------------------------------------------------------------
-# Relational / TPC-H-style (the generic query layer over parquet tables)
-# ---------------------------------------------------------------------------
-
-
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan→filter→group→agg. Catalyst pushes the shipdate predicate and
-    prunes to 7 columns at the parquet scan; partial aggregation
-    map-side; one shuffle on (returnflag, linestatus) — 6 groups."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-ORACLE_TPCH_Q1 = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                              AS sum_qty,
-       round(sum(l_extendedprice), 2)                         AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)      AS sum_disc_price,
-       round(avg(l_quantity), 6)                              AS avg_qty,
-       round(avg(l_discount), 6)                              AS avg_disc,
-       count(*)                                               AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join→group→top-k. customer is the small side → broadcast hash
-    join, no shuffle of lineitem for it; top-10 via rounded revenue
-    with orderkey tie-break so ranking is engine-independent."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp"))
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp"))
-    return (
-        l.join(F.broadcast(o), l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-ORACLE_TPCH_Q3 = """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate  > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-join with dimension chain region→nation→(customer,
-    supplier). All dims broadcast; the only big-big join is
-    lineitem⋈orders on the orderkey."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-ORACLE_TPCH_Q5 = """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA' AND c_nationkey = s_nationkey
-GROUP BY n_name
-"""
-
-
-def q_part_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort+limit (O-family; the reference has none — query layer op).
-    Deterministic tie-break on the key. TakeOrderedAndProject physical
-    op: no full sort at scale."""
-    return (
-        _t(spark, sf_dir, "part")
-        .select("p_partkey", "p_name", "p_retailprice")
-        .orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-        .limit(20)
-    )
-
-
-ORACLE_PART_TOPK = """
-SELECT p_partkey, p_name, p_retailprice
-FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 20
-"""
-
-
-def q_orders_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregate per group."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-        )
-    )
-
-
-ORACLE_ORDERS_DISTINCT = """
-SELECT o_orderpriority,
-       count(DISTINCT o_custkey) AS n_customers,
-       count(*)                  AS n_orders,
-       round(sum(o_totalprice), 2) AS total
-FROM orders GROUP BY o_orderpriority
-"""
-
-
-def q_customer_order_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer join: per-customer order counts including order-less
-    customers (broadcast the dim side of the left join)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("total_spent"),
-        )
-    )
-
-
-ORACLE_CUSTOMER_ORDER_LEFT = """
-SELECT c_custkey, c_mktsegment,
-       count(o_orderkey) AS n_orders,
-       round(coalesce(sum(o_totalprice), 0.0), 2) AS total_spent
-FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-GROUP BY c_custkey, c_mktsegment
-"""
-
-
-def q_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join: customers with no URGENT-priority order (subset
-    filter keeps the result non-empty at every scale factor)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
-
-
-ORACLE_CUSTOMERS_NO_ORDERS = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-"""
-
-
-def q_parts_with_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join: parts that appear in any lineitem."""
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem")
-    return p.join(l, p.p_partkey == l.l_partkey, "left_semi").select("p_partkey", "p_brand")
-
-
-ORACLE_PARTS_WITH_LINEITEMS = """
-SELECT p_partkey, p_brand FROM part
-WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-"""
-
-
-def q_orders_rank_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window function: top-3 orders per priority by price
-    (row_number with deterministic orderkey tie-break)."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("o_orderpriority", "o_orderkey", F.round("o_totalprice", 2).alias("price"), "rnk")
-    )
-
-
-ORACLE_ORDERS_RANK = """
-SELECT o_orderpriority, o_orderkey, round(o_totalprice, 2) AS price, rnk FROM (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-  FROM orders
-) WHERE rnk <= 3
-"""
-
-
-def q_union_shipped_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of two disjoint scans re-aggregated (the reference's
-    only merge op — S4 multi-file concat / file_merge — is exactly a
-    union of same-schema row sets)."""
-    l = _t(spark, sf_dir, "lineitem")
-    early = l.filter(F.col("l_shipdate") < F.lit("1995-01-01").cast("timestamp")).withColumn(
-        "era", F.lit("early")
-    )
-    late = l.filter(F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp")).withColumn(
-        "era", F.lit("late")
-    )
-    return (
-        early.unionAll(late)
-        .groupBy("era", "l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-    )
-
-
-ORACLE_UNION_SHIPPED = """
-SELECT era, l_returnflag, count(*) AS n_rows, round(sum(l_quantity), 2) AS qty FROM (
-  SELECT 'early' AS era, l_returnflag, l_quantity FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-01-01'
-  UNION ALL
-  SELECT 'late' AS era, l_returnflag, l_quantity FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-) GROUP BY era, l_returnflag
-"""
-
-
-
-
-def q_lineitem_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (training-data
-    pipelines lean on quantile stats for length/quality cutoffs)."""
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(l_extendedprice, 0.95)"), 4).alias("p95"),
-        F.round(F.expr("percentile(l_quantity, 0.25)"), 4).alias("qty_p25"),
-    )
-
-
-ORACLE_LINEITEM_QUANTILES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.5), 4)  AS p50,
-       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95,
-       round(quantile_cont(l_quantity, 0.25), 4)      AS qty_p25
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def q_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moment statistics + correlation per group."""
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy("l_linestatus").agg(
-        F.round(F.stddev_samp("l_extendedprice"), 4).alias("price_sd"),
-        F.round(F.var_samp("l_quantity"), 4).alias("qty_var"),
-        F.round(F.corr("l_extendedprice", "l_quantity"), 6).alias("price_qty_corr"),
-        F.round(F.covar_samp("l_discount", "l_tax"), 6).alias("disc_tax_cov"),
-    )
-
-
-ORACLE_LINEITEM_STATS = """
-SELECT l_linestatus,
-       round(stddev_samp(l_extendedprice), 4) AS price_sd,
-       round(var_samp(l_quantity), 4)         AS qty_var,
-       round(corr(l_extendedprice, l_quantity), 6) AS price_qty_corr,
-       round(covar_samp(l_discount, l_tax), 6)     AS disc_tax_cov
-FROM lineitem GROUP BY l_linestatus
-"""
-
-
-
-
-def q_lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (flag → flag+status → grand total):
-    grouping-set aggregation, NULL-marked subtotal rows on both
-    engines."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-    )
-
-
-ORACLE_LINEITEM_ROLLUP = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows, round(sum(l_quantity), 2) AS qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-def q_lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets (all 2² combinations of flag/status, NULL
-    subtotal markers): the lattice sibling of the ROLLUP hierarchy —
-    one pass, Spark expands to grouping sets, no re-scan per level."""
-    l = _t(spark, sf_dir, "lineitem")
-    return l.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.round(F.sum("l_quantity"), 2).alias("qty")
-    )
-
-
-ORACLE_LINEITEM_CUBE = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows, round(sum(l_quantity), 2) AS qty
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_events_user_halves_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join (the one join type the inventory lacked):
-    per-user event counts from the month's first vs second half, users
-    present on either side only carried with NULL on the other —
-    USING-style key coalescing on both engines."""
-    e = _t(spark, sf_dir, "events")
-    early = (
-        e.filter(F.dayofmonth("ts") <= 15)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_early"))
-    )
-    late = (
-        e.filter(F.dayofmonth("ts") >= 16)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_late"))
-    )
-    return early.join(late, "user_id", "full")
-
-
-ORACLE_EVENTS_FULL_OUTER = """
-WITH early AS (
-  SELECT user_id, count(*)::BIGINT AS n_early FROM events
-  WHERE date_part('day', ts) <= 15 GROUP BY user_id
-), late AS (
-  SELECT user_id, count(*)::BIGINT AS n_late FROM events
-  WHERE date_part('day', ts) >= 16 GROUP BY user_id
-)
-SELECT coalesce(e.user_id, l.user_id) AS user_id, e.n_early, l.n_late
-FROM early e FULL JOIN late l ON e.user_id = l.user_id
-"""
-
-
-def q_events_pivot_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot-style conditional aggregation: per user-cohort, one column
-    per event type (explicit conditional sums so column naming is
-    engine-independent)."""
-    e = _t(spark, sf_dir, "events")
-    cohort = (F.col("user_id") % 10).alias("cohort")
-    types = ["click", "view", "purchase", "signup", "error"]
-    aggs = [
-        F.round(F.sum(F.when(F.col("event_type") == t, F.col("value")).otherwise(0.0)), 4).alias(f"sum_{t}")
-        for t in types
-    ]
-    return e.groupBy(cohort).agg(*aggs)
-
-
-def _oracle_events_pivot() -> str:
-    types = ["click", "view", "purchase", "signup", "error"]
-    cols = ",\n       ".join(
-        f"round(sum(CASE WHEN event_type = '{t}' THEN value ELSE 0.0 END), 4) AS sum_{t}"
-        for t in types
-    )
-    return f"""
-SELECT user_id % 10 AS cohort,
-       {cols}
-FROM events GROUP BY 1
-"""
-
-
-
-
-def q_orders_lineitem_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array/collection functions: per-order sorted item list rendered
-    as a string (portable multiset compare), plus array stats."""
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
-    return l.groupBy("l_orderkey").agg(
-        F.array_join(F.sort_array(F.collect_list("l_linenumber")), ",").alias("line_numbers"),
-        F.size(F.collect_set("l_partkey")).alias("n_parts"),
-        F.round(F.sum("l_quantity"), 2).alias("qty"),
-    )
-
-
-ORACLE_ORDERS_ARRAYS = """
-SELECT l_orderkey,
-       array_to_string(list_sort(list(l_linenumber)), ',') AS line_numbers,
-       len(list_distinct(list(l_partkey)))::INT AS n_parts,
-       round(sum(l_quantity), 2) AS qty
-FROM lineitem WHERE l_orderkey % 50 = 0
-GROUP BY l_orderkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# Engine-semantics family on the events table (G1/G3/G6/G7/D1/O3)
-# ---------------------------------------------------------------------------
-
-# floor() before the cast: events.ts carries sub-second nanos and
-# DuckDB's double→bigint cast rounds-half-even while Spark's
-# unix_timestamp truncates.
-_EPOCH = "floor(epoch(ts))::BIGINT"
-
-
-def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G1/G2/G6 — 900 s tumbling windows with counts + stats."""
-    e = _t(spark, sf_dir, "events")
-    w = with_agg_window(e, "ts", 900, "w")
-    return w.groupBy("w").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.round(F.avg("value"), 6).alias("avg_value"),
-    )
-
-
-ORACLE_EVENTS_TUMBLING = f"""
-SELECT {_EPOCH} - {_EPOCH} % 900 AS w,
-       count(*) AS n_rows,
-       count(DISTINCT user_id) AS n_users,
-       round(avg(value), 6) AS avg_value
-FROM events GROUP BY 1
-"""
-
-
-def q_events_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D1 analog on events: distinct (window, user, type) per window —
-    the dedup key-space cardinality the reference's HashSet tracks."""
-    e = _t(spark, sf_dir, "events")
-    w = with_agg_window(e, "ts", 900, "w")
-    dd = w.dropDuplicates(["w", "user_id", "event_type"])
-    return dd.groupBy("w").agg(F.count(F.lit(1)).alias("n_dedup"))
-
-
-ORACLE_EVENTS_WINDOW_DEDUP = f"""
-SELECT w, count(*) AS n_dedup FROM (
-  SELECT DISTINCT {_EPOCH} - {_EPOCH} % 900 AS w, user_id, event_type FROM events
-) GROUP BY w
-"""
-
-
-def q_events_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3 — min/max over timestamps (the window-span computation).
-    Emitted as epoch seconds: raw timestamps would compare at micro
-    precision on Spark but nano precision on DuckDB (events.ts carries
-    nanos) and a stringified compare would spuriously mismatch."""
-    return _t(spark, sf_dir, "events").agg(
-        F.unix_timestamp(F.min("ts")).alias("min_epoch"),
-        F.unix_timestamp(F.max("ts")).alias("max_epoch"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-ORACLE_EVENTS_MINMAX = """
-SELECT floor(epoch(min(ts)))::BIGINT AS min_epoch,
-       floor(epoch(max(ts)))::BIGINT AS max_epoch,
-       count(*) AS n_rows
-FROM events
-"""
-
-
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G7 — the monitor's 15-min sliding window (1-min slide) means."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "15 minutes", "1 minute").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.round(F.avg("value"), 6).alias("avg_value"))
-        .select(F.unix_timestamp(F.col("win.start")).alias("ws"), "n_rows", "avg_value")
-    )
-
-
-ORACLE_EVENTS_SLIDING = f"""
-SELECT ({_EPOCH} - {_EPOCH} % 60) - 60 * g AS ws,
-       count(*) AS n_rows,
-       round(avg(value), 6) AS avg_value
-FROM events CROSS JOIN generate_series(0, 14) t(g)
-GROUP BY 1
-"""
-
-
-def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: pull a typed field out of the JSON
-    props column and aggregate on it (JSON path functions on both
-    engines)."""
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        e.select((k % 10).alias("k_bucket"), "value")
-        .groupBy("k_bucket")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-ORACLE_EVENTS_JSON_PROPS = """
-SELECT json_extract(props, '$.k')::BIGINT % 10 AS k_bucket,
-       count(*) AS n_rows,
-       round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1
-"""
-
-
-def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (5-min inactivity gap) per user via the
-    built-in session_window. Timestamps are floored to seconds on BOTH
-    engines so the gap comparison is precision-independent (events.ts
-    carries nanos)."""
-    e = _t(spark, sf_dir, "events")
-    tss = F.timestamp_seconds(F.unix_timestamp("ts"))
-    return (
-        e.select("user_id", tss.alias("tss"), "value")
-        .groupBy("user_id", F.session_window("tss", "5 minutes").alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-ORACLE_EVENTS_SESSIONS = f"""
-WITH e AS (
-  SELECT user_id, {_EPOCH} AS t, value FROM events
-), marked AS (
-  SELECT user_id, t, value,
-         CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) < 300
-              THEN 0 ELSE 1 END AS brk
-  FROM e
-), sess AS (
-  SELECT user_id, t, value,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT user_id, min(t) AS session_start, count(*) AS n_events,
-       round(sum(value), 4) AS sum_value
-FROM sess GROUP BY user_id, sid
-"""
-
-
-# ---------------------------------------------------------------------------
-# The flagship: full log pipeline round-trip (P1-P3, F1, G1, G3, D1, G6)
-# ---------------------------------------------------------------------------
-
-
-def _synthetic_log_line_col(e: DataFrame) -> F.Column:
-    """The log-line Column rendered from an events row (bracketed time,
-    quoted URI/agent). Bucket derives from user_id, RequestID from
-    event_id."""
-    bucket = F.concat(F.lit("bucket-"), (F.col("user_id") % 3).cast("string"))
-    t = F.concat(F.lit("["), F.date_format("ts", "dd/MMM/yyyy:HH:mm:ss"), F.lit(" +0000]"))
-    line = F.concat_ws(
-        " ",
-        F.lit("deadbeefcafe0123"),
-        bucket,
-        t,
-        F.lit("192.0.2.1"),
-        F.lit("deadbeefcafe0123"),
-        F.col("event_id").cast("string"),
-        F.lit("REST.GET.OBJECT"),
-        F.concat(F.lit("/data/"), F.col("event_type"), F.lit("/obj")),
-        F.concat(F.lit('"GET /'), F.col("event_type"), F.lit(' HTTP/1.1"')),
-        F.lit("200"),
-        F.lit("-"),
-        F.col("value").cast("string"),
-        F.lit("-"), F.lit("10"), F.lit("10"),
-        F.lit('"http://example.com/ref"'),
-        F.lit('"agent/1.0 (Linux; x86)"'),
-        F.lit("-"), F.lit("hostid"), F.lit("SigV4"),
-        F.lit("ECDHE-RSA-AES128-GCM-SHA256"), F.lit("AuthHeader"),
-        F.lit("s3.example.com"), F.lit("TLSv1.2"), F.lit("-"), F.lit("-"),
-    )
-    return line
-
-
-def _synthetic_log_lines(e: DataFrame) -> DataFrame:
-    """Render events as S3-access-log lines so the REAL parser runs on
-    realistic text."""
-    return e.select(_synthetic_log_line_col(e).alias("value"))
-
-
-def q_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end engine semantics, oracle-checked: events → log lines
-    (doubled, to simulate at-least-once redelivery) → tokenize/parse →
-    F1 filter → G1 900 s windows → D1 dedup → per-(bucket, window)
-    counts. The oracle never sees the strings: it derives the same
-    aggregate directly from events — an independent derivation that
-    catches any parser/window/dedup defect."""
-    e = _t(spark, sf_dir, "events")
-    # the events table is one small parquet file → 2 input splits; the
-    # line render and the tokenizer are the expensive maps here, so fan
-    # the EVENT ROWS out to all cores first (the r10 exchange moved —
-    # round 14: it used to sit between render and parse, leaving the
-    # render 16×-underparallelized in the scan stage; shuffling the
-    # narrow event columns instead costs the same exchange and puts
-    # BOTH heavy maps at full parallelism). At production scale inputs
-    # are many objects and this exchange is unnecessary; it models the
-    # many-splits layout a real scan gets.
-    fanned = e.repartition(spark.sparkContext.defaultParallelism)
-    lines = _synthetic_log_lines(fanned)
-    # redelivery duplicates: emit each rendered line twice via a 2-row
-    # explode instead of union(lines, lines) — the union executed BOTH
-    # branches, scanning the events table and running the expensive
-    # 26-field line render twice for a row multiset that a single
-    # render pass produces identically (round 14, guide §2.4 — don't
-    # compute what you already have; same multiset, dedup/agg are
-    # content-based so results are unchanged)
-    doubled = lines.select(
-        "value", F.explode(F.array(F.lit(0), F.lit(1))).alias("_copy")
-    ).drop("_copy")
-    cfg = EngineConfig(merge_orig_buckets=False)
-    parsed = parse_s3_access_log(doubled)
-    # project to the three needed columns before the dedup exchange —
-    # the shuffle then carries 3 strings instead of 26 (Catalyst prunes
-    # the aggregate either way, but the early projection also skips the
-    # unused per-column padding expressions at parse time)
-    clean = parsed.filter(F.col("ts").isNotNull()).select("Bucket", "RequestID", "ts")
-    w = with_agg_window(clean, "ts", cfg.aggregate_second, "w")
-    dd = w.dropDuplicates(["Bucket", "w", "RequestID"])
-    return dd.groupBy(F.col("Bucket").alias("bucket"), "w").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("RequestID").alias("n_ids"),
-    )
-
-
-ORACLE_LOG_PIPELINE = f"""
-SELECT 'bucket-' || (user_id % 3)::VARCHAR AS bucket,
-       {_EPOCH} - {_EPOCH} % 900 AS w,
-       count(*) AS n_rows,
-       count(DISTINCT event_id) AS n_ids
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_log_parse_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Field-exact parser check through quoted/bracketed tokens: parse
-    rendered lines, emit individual fields; oracle recomputes each field
-    straight from events columns."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 100)
-    parsed = parse_s3_access_log(_synthetic_log_lines(e))
-    return parsed.select(
-        F.col("RequestID").cast("long").alias("event_id"),
-        F.col("Bucket").alias("bucket"),
-        F.col("RequestURI").alias("uri"),
-        F.col("UserAgent").alias("agent"),
-        F.unix_timestamp("ts").alias("epoch_s"),
-        F.col("n_fields"),
-    )
-
-
-ORACLE_LOG_PARSE_FIELDS = f"""
-SELECT event_id,
-       'bucket-' || (user_id % 3)::VARCHAR AS bucket,
-       'GET /' || event_type || ' HTTP/1.1' AS uri,
-       'agent/1.0 (Linux; x86)' AS agent,
-       {_EPOCH} AS epoch_s,
-       26 AS n_fields
-FROM events WHERE event_id < 100
-"""
-
-
-def q_log_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M3/§1.3 — adaptive ExtraField widening through the oracle gate:
-    lines carry two overflow tokens; the two-pass protocol discovers
-    width 28 and projects nullable ExtraField27/28 (naming per
-    utils.rs:1217-1222). Odd event_ids get the extras, evens exercise
-    the NULL padding of the widened schema."""
-    from s3logs_parquet_spark.functions.parse import max_field_count
-    from s3logs_parquet_spark.schema import NUM_LOG_FIELDS
-
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 200)
-    extra = F.when(
-        F.col("event_id") % 2 == 1,
-        F.concat(F.lit(" x"), F.col("event_id").cast("string"), F.lit(" y")),
-    ).otherwise(F.lit(""))
-    lines = e.select(F.concat(_synthetic_log_line_col(e), extra).alias("value"))
-    parsed0 = parse_s3_access_log(lines)
-    widest = max_field_count(parsed0.filter(F.col("ts").isNotNull()))
-    parsed = parse_s3_access_log(lines, extra_fields=max(0, widest - NUM_LOG_FIELDS))
-    return parsed.select(
-        F.col("RequestID").cast("long").alias("event_id"),
-        F.col("n_fields"),
-        F.col("ExtraField27").alias("extra27"),
-        F.col("ExtraField28").alias("extra28"),
-    )
-
-
-ORACLE_LOG_SCHEMA_WIDENING = """
-SELECT event_id,
-       CASE WHEN event_id % 2 = 1 THEN 28 ELSE 26 END AS n_fields,
-       CASE WHEN event_id % 2 = 1 THEN 'x' || event_id::VARCHAR END AS extra27,
-       CASE WHEN event_id % 2 = 1 THEN 'y' END AS extra28
-FROM events WHERE event_id < 200
-"""
-
-
-def q_partition_prefix_tz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4/W5 — the Hive prefix computation in a non-UTC fixed offset
-    (UTC+8, the reference's transform.sh example), under BOTH sign
-    conventions config.parse_posix_tz_offset resolves: the intuitive
-    east-positive default (prefix) and the POSIX/tzif semantics the
-    reference binary actually computes for that string — UTC−8
-    (prefix_posix; s3logs/src/utils.rs:477-494, SURVEY §7.4.3). Both
-    offsets are resolved through the config parser, not hardcoded, so
-    the gate covers the sign-mode path end-to-end."""
-    from s3logs_parquet_spark.config import parse_posix_tz_offset
-    from s3logs_parquet_spark.functions.timeops import partition_prefix
-
-    fmt = "year=%Y/month=%m/day=%d/hour=%H"
-    east = parse_posix_tz_offset("UTC+8")  # +28800 (intuitive default)
-    west = parse_posix_tz_offset("UTC+8", mode="posix")  # -28800 (tzif parity)
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy(
-        partition_prefix(F.col("ts"), fmt, east).alias("prefix"),
-        partition_prefix(F.col("ts"), fmt, west).alias("prefix_posix"),
-    ).agg(F.count(F.lit(1)).alias("n_rows"))
-
-
-ORACLE_PARTITION_PREFIX_TZ = """
-SELECT strftime(ts + INTERVAL 8 HOUR, 'year=%Y/month=%m/day=%d/hour=%H') AS prefix,
-       strftime(ts - INTERVAL 8 HOUR, 'year=%Y/month=%m/day=%d/hour=%H') AS prefix_posix,
-       count(*) AS n_rows
-FROM events GROUP BY 1, 2
-"""
-
-
-# ---------------------------------------------------------------------------
-# Text-analysis family on documents
-# ---------------------------------------------------------------------------
-
-# SQL twins of functions/text_analysis.py primitives
-_SQL_WORDS = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> w != '')"
-_SQL_BPE = "regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')"
-
-
-def _sql_stop_hits(lang: str) -> str:
-    lst = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-    return f"len(list_filter(ws, w -> list_contains([{lst}], w)))"
-
-
-# (q_docs_token_stats retired round 7 into its two supersets: the
-# whitespace token count is value-checked as n_words inside
-# docs_quality_score, and the BPE segmentation is value-checked
-# token-by-token inside docs_chunk_windows_bpe, which materializes the
-# segment windows the count merely measures. Both counts also remain
-# pytest-covered in tests/test_text_functions.py.)
-
-
-def q_docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    # staged gate (round-10 plan audit): the pure quality_features/
-    # quality_score forms re-derive the words array per feature
-    # (~11 split() copies in the optimized plan); the fused helper
-    # emits bit-identical values from one tokenize pass
-    staged = with_quality_and_lang(
-        d.select("doc_id", "text"), "text", emit=("quality",), keep_features=True
-    )
-    return staged.select(
-        "doc_id",
-        "n_words",
-        F.round(F.col("punct_ratio"), 6).alias("punct_ratio"),
-        F.round(F.col("stopword_ratio"), 6).alias("stopword_ratio"),
-        "quality",
-    )
-
-
-_SQL_QUALITY = f"""
-WITH feat AS (
-  SELECT doc_id,
-         {_SQL_WORDS} AS ws,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         len(ws)::BIGINT AS n_words,
-         CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(ws) > 0 THEN {_sql_stop_hits('en')}::DOUBLE / len(ws) ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN len(ws) > 0
-              THEN list_aggregate(list_transform(ws, w -> length(w)), 'sum')::DOUBLE / len(ws)
-              ELSE 0.0 END AS mean_word_len
-  FROM feat
-)
-SELECT doc_id, n_words,
-       round(punct_ratio, 6) AS punct_ratio,
-       round(stopword_ratio, 6) AS stopword_ratio,
-       round(
-         least(n_words / 20.0, 1.0) * 0.3
-         + least(stopword_ratio * 4.0, 1.0) * 0.3
-         + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.2
-         + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.2
-       , 6) AS quality
-FROM m
-"""
-
-
-def q_docs_inference_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched model inference (operators/inference.py, round 8): the
-    quality-classifier shape — Arrow-batched mapInPandas scoring with
-    broadcast weights. The shipped linear text model uses integer
-    features x dyadic weights, so logit/label are exact in IEEE double
-    and the DuckDB oracle reproduces them bit-for-bit: the gate proves
-    the full plumbing (column pruning into the python boundary, batch
-    contract, broadcast, passthrough ids)."""
-    from s3logs_parquet_spark.operators.inference import score_documents
-
-    d = _t(spark, sf_dir, "documents")
-    return score_documents(d, "doc_id", "text")
-
-
-# exact SQL twin of operators/inference.py linear_text_model: same
-# integer features, same dyadic weights (2^-9, 2^-2, -2^-3, 2^-4).
-# NULL text is coalesced to '' to match the model's fillna('') (a NULL
-# doc scores logit=bias, it doesn't propagate NULL — ADVICE r8).
-# Documented input-domain assumption: word splitting is ASCII-\s+ on
-# both sides for ASCII corpora; pandas str.split() additionally splits
-# on Unicode whitespace (U+00A0 etc.), DuckDB's RE2 \s does not — the
-# documents fixtures are ASCII-whitespace only.
-ORACLE_DOCS_INFERENCE = """
-WITH f AS (
-  SELECT doc_id,
-         length(coalesce(text, '')) AS n_chars,
-         len(list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'), w -> w != '')) AS n_words,
-         length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[0-9]', '', 'g')) AS n_digits,
-         length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[A-Z]', '', 'g')) AS n_upper
-  FROM documents
-)
-SELECT doc_id,
-       -2.0::DOUBLE + 0.001953125::DOUBLE * n_chars + 0.25::DOUBLE * n_words
-            - 0.125::DOUBLE * n_digits + 0.0625::DOUBLE * n_upper AS logit,
-       (-2.0::DOUBLE + 0.001953125::DOUBLE * n_chars + 0.25::DOUBLE * n_words
-            - 0.125::DOUBLE * n_digits + 0.0625::DOUBLE * n_upper) >= 0.0 AS label
-FROM f
-"""
-
-
-def q_docs_inference_mlp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-model inference leg (operators/inference.py mlp_text_model,
-    round 9): a two-layer ReLU MLP whose ndarray weight matrices ride
-    the broadcast and whose scoring is a vectorized numpy matmul per
-    Arrow batch — the payload/compute shape of an actual classifier.
-    Dyadic weights x integer features keep every step exact in IEEE
-    double, so the DuckDB oracle (hidden units as greatest(...,0)
-    expressions) reproduces logit/label bit-for-bit."""
-    from s3logs_parquet_spark.operators.inference import (
-        MLP_TEXT_WEIGHTS,
-        mlp_text_model,
-        score_documents,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    return score_documents(d, "doc_id", "text", weights=MLP_TEXT_WEIGHTS, model_fn=mlp_text_model)
-
-
-# exact SQL twin of operators/inference.py mlp_text_model: the same
-# dyadic W1/b1/W2/b2 constants, hidden relu as greatest(., 0.0);
-# NULL text coalesced to '' matching the model's fillna('').
-ORACLE_DOCS_INFERENCE_MLP = """
-WITH f AS (
-  SELECT doc_id,
-         length(coalesce(text, '')) AS c,
-         len(list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'), w -> w != '')) AS w,
-         length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[0-9]', '', 'g')) AS d,
-         length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[A-Z]', '', 'g')) AS u
-  FROM documents
-), h AS (
-  SELECT doc_id,
-         greatest(-2.0::DOUBLE + 0.001953125::DOUBLE * c + 0.25::DOUBLE * w
-                  - 0.125::DOUBLE * d + 0.0625::DOUBLE * u, 0.0::DOUBLE) AS h1,
-         greatest(1.0::DOUBLE - 0.00390625::DOUBLE * c + 0.5::DOUBLE * w
-                  - 0.125::DOUBLE * u, 0.0::DOUBLE) AS h2,
-         greatest(-0.5::DOUBLE + 0.0009765625::DOUBLE * c - 0.0625::DOUBLE * w
-                  + 0.25::DOUBLE * d, 0.0::DOUBLE) AS h3,
-         greatest(-1.0::DOUBLE + 0.125::DOUBLE * w + 0.0625::DOUBLE * d
-                  - 0.03125::DOUBLE * u, 0.0::DOUBLE) AS h4
-  FROM f
-)
-SELECT doc_id,
-       -0.25::DOUBLE + 0.5::DOUBLE * h1 - 0.25::DOUBLE * h2
-            + 0.375::DOUBLE * h3 + 0.25::DOUBLE * h4 AS logit,
-       (-0.25::DOUBLE + 0.5::DOUBLE * h1 - 0.25::DOUBLE * h2
-            + 0.375::DOUBLE * h3 + 0.25::DOUBLE * h4) >= 0.0 AS label
-FROM h
-"""
-
-
-def q_docs_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    # staged form: langid()'s when-chain duplicates each language's
-    # stopword pass internally — 26 split() copies per row in the
-    # optimized plan (round-10 audit); the fused helper is bit-identical
-    # with ONE tokenize
-    return with_quality_and_lang(
-        d.select("doc_id", "text"), "text", emit=("lang",)
-    ).select("doc_id", "lang_pred")
-
-
-_SQL_LANGID = f"""
-WITH h AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), c AS (
-  SELECT doc_id,
-         {_sql_stop_hits('en')} AS h_en,
-         {_sql_stop_hits('de')} AS h_de,
-         {_sql_stop_hits('fr')} AS h_fr,
-         {_sql_stop_hits('es')} AS h_es
-  FROM h
-)
-SELECT doc_id,
-       CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-            WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-            WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-            WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-            ELSE 'es' END AS lang_pred
-FROM c
-"""
-
-
-def q_docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-ORACLE_DOCS_FINGERPRINT = f"""
-WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents)
-SELECT doc_id,
-       CASE WHEN len(ws) = 0 THEN 0
-            ELSE list_reduce(
-                   list_transform(ws, x -> {hash32_sql('x')}),
-                   (acc, h) -> (acc * 1000003 + h) % 2147483647)
-       END AS fp
-FROM w
-"""
-
-
-def q_docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content digest-groupBy: canonical doc per
-    distinct text + multiplicity. Groups on md5(text) — not text — so
-    the exchange key is 16 bytes regardless of document size (the
-    100 TB posture of operators/dedup.py exact_dedup); md5 is portable
-    so the oracle groups identically."""
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy(F.md5(F.col("text").cast("binary")).alias("_dg")).agg(
-        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
-    ).select("doc_id", "n_copies")
-
-
-ORACLE_DOCS_EXACT_DEDUP = """
-SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM documents GROUP BY md5(text)
-"""
-
-
-# (q_docs_jaccard_pairs retired round 7 into docs_neardup_canonical_keep:
-# the identical candidate-gated exact-Jaccard verify — same operator,
-# same shingle width — runs inside the new gate, its threshold
-# decisions ARE the cluster topology the oracle recomputes edge by
-# edge, and its values surface per-document as max_jaccard in the
-# hashed output. The standalone exact-quadratic form keeps a direct
-# DuckDB differential in tests/test_similarity.py.)
-
-
-def q_docs_neardup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware canonical selection (operators/dedup.py
-    canonical_keep): LSH candidates → exact 3-gram Jaccard verify →
-    connected components over VERIFIED edges → keep the best-quality
-    member per cluster (ties → min doc_id). The DuckDB oracle replays
-    the entire chain — MinHash banding, exact Jaccard, recursive-CTE
-    components, the quality formula, and the argmax — so the keep
-    decision itself is value-checked end to end.
-
-    A ``prebuilt`` index entry (the eager LSH/edge checkpoints and CC
-    collect); docs_minhash_lsh_pairs keeps the build cost measured."""
-    from s3logs_parquet_spark.operators.dedup import canonical_keep
-
-    return prebuilt(
-        spark,
-        ("docs_neardup_canonical_keep", sf_dir),
-        lambda: canonical_keep(_t(spark, sf_dir, "documents"), "doc_id", "text"),
-    )
-
-
-def _oracle_canonical_keep(exact_threshold: float = 0.4) -> str:
-    pair_sql = _oracle_minhash()  # identical candidates: 32 hashes / 8 bands / est >= 0.3
-    return f"""
-WITH RECURSIVE
-pairs AS ({pair_sql}),
-feat AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 3, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 3), ' ')
-         )) AS grams
-  FROM feat
-), ver AS (
-  SELECT p.id_a, p.id_b,
-         len(list_intersect(a.grams, b.grams))::DOUBLE /
-         (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) AS jac
-  FROM pairs p
-  JOIN g a ON a.doc_id = p.id_a
-  JOIN g b ON b.doc_id = p.id_b
-  WHERE len(list_intersect(a.grams, b.grams))::DOUBLE /
-        (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-        >= {exact_threshold}
-), ids(id) AS (SELECT doc_id FROM documents),
-edges(a, b) AS (SELECT id_a, id_b FROM ver UNION SELECT id_b, id_a FROM ver),
-reach(id, r) AS (
-  SELECT id, id FROM ids
-  UNION
-  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.id
-),
-labels AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-qm AS (
-  SELECT doc_id,
-         len(ws)::BIGINT AS n_words,
-         CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(ws) > 0 THEN {_sql_stop_hits('en')}::DOUBLE / len(ws) ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN len(ws) > 0
-              THEN list_aggregate(list_transform(ws, w -> length(w)), 'sum')::DOUBLE / len(ws)
-              ELSE 0.0 END AS mean_word_len
-  FROM feat
-), qual AS (
-  SELECT doc_id,
-         round(
-           least(n_words / 20.0, 1.0) * 0.3
-           + least(stopword_ratio * 4.0, 1.0) * 0.3
-           + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.2
-           + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.2
-         , 6) AS quality
-  FROM qm
-), mj AS (
-  SELECT id AS doc_id, max(jac) AS mj
-  FROM (SELECT id_a AS id, jac FROM ver UNION ALL SELECT id_b AS id, jac FROM ver)
-  GROUP BY 1
-), scored AS (
-  SELECT l.doc_id, l.cluster_id, q.quality, coalesce(m.mj, 0.0) AS mj
-  FROM labels l JOIN qual q USING (doc_id) LEFT JOIN mj m USING (doc_id)
-), best AS (
-  SELECT cluster_id, doc_id AS keep_id,
-         row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, doc_id ASC) AS rn
-  FROM scored
-)
-SELECT s.doc_id, s.cluster_id, s.quality,
-       round(s.mj, 6) AS max_jaccard,
-       CASE WHEN s.doc_id = b.keep_id THEN 1 ELSE 0 END AS keep
-FROM scored s
-JOIN (SELECT cluster_id, keep_id FROM best WHERE rn = 1) b USING (cluster_id)
-"""
-
-
-# (q_docs_simhash retired round 7 — the signature computation lives on
-# inside docs_simhash_pairs' gate, value-checked per-pair; the simhash
-# operator itself keeps direct pytest coverage in test_similarity.)
-
-
-def q_docs_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs (the scale path for jaccard): banded
-    signature join, est_jaccard from signature agreement. Exact values
-    oracle-checkable because shingle hashing is the portable md5-32."""
-    d = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3
-    ).select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-
-
-def _oracle_minhash(num_hashes: int = 32, bands: int = 8) -> str:
-    from s3logs_parquet_spark.functions.hashing import affine_coeffs
-
-    coeffs = affine_coeffs(num_hashes, 42)
-    rows_per_band = num_hashes // bands
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, x -> ({a} * x + {b}) % 2147483647))" for a, b in coeffs
-    )
-    band_eq = " OR ".join(
-        f"a.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}] = b.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}]"
-        for b in range(bands)
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), g AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 3, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 3), ' ')
-         )) AS grams
-  FROM d
-), h AS (
-  SELECT doc_id, list_transform(grams, s -> {hash32_sql('s')} % 2147483647) AS sh FROM g
-), s AS (
-  SELECT doc_id, [{sig_terms}] AS sig FROM h
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_filter(generate_series(1, {num_hashes}), i -> a.sig[i] = b.sig[i]))::DOUBLE / {num_hashes}, 6) AS est_jaccard
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE ({band_eq})
-  AND len(list_filter(generate_series(1, {num_hashes}), i -> a.sig[i] = b.sig[i]))::DOUBLE / {num_hashes} >= 0.3
-"""
-
-
-
-
-def q_docs_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hot-bucket-guarded LSH path: max_bucket_size=2 forces the
-    'star' oversize policy to engage at test scale (oversized buckets
-    emit member→min-id-representative links instead of all pairs). The
-    guard is what makes banded LSH survive boilerplate-heavy corpora —
-    measured on 1M synthetic docs: 8 buckets of 500k-780k docs =
-    1.8e12 candidate pairs without it. Oracle reproduces bucket sizing,
-    representative choice, and the per-pair signature filter in SQL."""
-    d = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d,
-        "doc_id",
-        "text",
-        num_hashes=32,
-        bands=8,
-        shingle_k=3,
-        jaccard_threshold=0.3,
-        max_bucket_size=2,
-        oversize_policy="star",
-    ).select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-
-
-def _oracle_minhash_capped(num_hashes: int = 32, bands: int = 8, cap: int = 2) -> str:
-    from s3logs_parquet_spark.functions.hashing import affine_coeffs
-
-    coeffs = affine_coeffs(num_hashes, 42)
-    rows_per_band = num_hashes // bands
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, x -> ({a} * x + {b}) % 2147483647))" for a, b in coeffs
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), g AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 3, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 3), ' ')
-         )) AS grams
-  FROM d
-), h AS (
-  SELECT doc_id, list_transform(grams, s -> {hash32_sql('s')} % 2147483647) AS sh FROM g
-), s AS (
-  SELECT doc_id, [{sig_terms}] AS sig FROM h
-), bnd AS (
-  SELECT doc_id, sig, t.b AS band,
-         sig[t.b * {rows_per_band} + 1 : (t.b + 1) * {rows_per_band}] AS bkey
-  FROM s, generate_series(0, {bands - 1}) AS t(b)
-), sized AS (
-  SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bsz,
-         min(doc_id) OVER (PARTITION BY band, bkey) AS rep
-  FROM bnd
-), cand AS (
-  SELECT a.doc_id AS id_a, b2.doc_id AS id_b
-  FROM sized a JOIN sized b2
-    ON a.band = b2.band AND a.bkey = b2.bkey
-   AND a.doc_id < b2.doc_id AND a.bsz <= {cap}
-  UNION
-  SELECT rep AS id_a, doc_id AS id_b FROM sized
-  WHERE bsz > {cap} AND doc_id <> rep
-)
-SELECT p.id_a, p.id_b,
-       round(len(list_filter(generate_series(1, {num_hashes}),
-                             i -> sa.sig[i] = sb.sig[i]))::DOUBLE / {num_hashes}, 6)
-         AS est_jaccard
-FROM (SELECT DISTINCT id_a, id_b FROM cand) p
-JOIN s sa ON sa.doc_id = p.id_a
-JOIN s sb ON sb.doc_id = p.id_b
-WHERE len(list_filter(generate_series(1, {num_hashes}),
-                      i -> sa.sig[i] = sb.sig[i]))::DOUBLE / {num_hashes} >= 0.3
-"""
-
-
-def q_docs_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters: MinHash-LSH pairs unioned into connected
-    components (iterative min-label propagation — the one genuinely
-    iterative algorithm in the engine). Deterministic: cluster id = min
-    doc_id of the component; oracle reproduces it with a recursive CTE
-    transitive closure over the same (portably hashed) pair set."""
-    from s3logs_parquet_spark.operators.dedup import (
-        connected_components_clusters,
-        minhash_lsh_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3
-    )
-    labels = connected_components_clusters(pairs, d.select("doc_id"), "doc_id")
-    # report only non-singleton clusters (keeps result focused + small)
-    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        labels.join(sizes.filter(F.col("n") > 1), "cluster_id")
-        .select("doc_id", "cluster_id")
-    )
-
-
-def _oracle_clusters() -> str:
-    pair_sql = _oracle_minhash()  # the exact same pair derivation
-    return f"""
-WITH RECURSIVE
-pairs AS ({pair_sql}),
-ids(id) AS (SELECT doc_id FROM documents),
-edges(a, b) AS (
-  SELECT id_a, id_b FROM pairs UNION SELECT id_b, id_a FROM pairs
-),
-reach(id, r) AS (
-  SELECT id, id FROM ids
-  UNION
-  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.id
-),
-labels AS (
-  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-)
-SELECT doc_id, cluster_id FROM labels
-WHERE cluster_id IN (
-  SELECT cluster_id FROM labels GROUP BY cluster_id HAVING count(*) > 1
-)
-"""
-
-
-
-
-def q_docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split assignment (80/10/10) by
-    content hash — stable across runs, engines, and re-partitioning."""
-    from s3logs_parquet_spark.functions.hashing import hash32
-
-    d = _t(spark, sf_dir, "documents")
-    bucket = F.pmod(hash32(F.col("doc_id").cast("string")), F.lit(100))
-    split = (
-        F.when(bucket < 80, F.lit("train")).when(bucket < 90, F.lit("val")).otherwise(F.lit("test"))
-    )
-    return d.select("doc_id", split.alias("split")).groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_id")
-    )
-
-
-ORACLE_DOCS_SPLIT = f"""
-WITH b AS (
-  SELECT doc_id, {hash32_sql("doc_id::VARCHAR")} % 100 AS bucket FROM documents
-)
-SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-       count(*) AS n_docs, min(doc_id) AS min_id
-FROM b GROUP BY 1
-"""
-
-
-
-
-def q_docs_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-aware train/val/test split: every member of a near-dup
-    cluster gets the SAME split (assignment hashes the cluster id, not
-    the doc id) — the standard guard against train/test contamination
-    through near-duplicates. Composes the clustering operator with the
-    deterministic split."""
-    from s3logs_parquet_spark.functions.hashing import hash32
-    from s3logs_parquet_spark.operators.dedup import (
-        connected_components_clusters,
-        minhash_lsh_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3
-    )
-    labels = connected_components_clusters(pairs, d.select("doc_id"), "doc_id")
-    bucket = F.pmod(hash32(F.col("cluster_id").cast("string")), F.lit(100))
-    split = (
-        F.when(bucket < 80, F.lit("train")).when(bucket < 90, F.lit("val")).otherwise(F.lit("test"))
-    )
-    return labels.select("doc_id", split.alias("split")).groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-def _oracle_leakage_split() -> str:
-    pair_sql = _oracle_minhash()
-    return f"""
-WITH RECURSIVE
-pairs AS ({pair_sql}),
-ids(id) AS (SELECT doc_id FROM documents),
-edges(a, b) AS (
-  SELECT id_a, id_b FROM pairs UNION SELECT id_b, id_a FROM pairs
-),
-reach(id, r) AS (
-  SELECT id, id FROM ids
-  UNION
-  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.id
-),
-labels AS (
-  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-),
-assigned AS (
-  SELECT doc_id, {hash32_sql("cluster_id::VARCHAR")} % 100 AS bucket FROM labels
-)
-SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-       count(*) AS n_docs
-FROM assigned GROUP BY 1
-"""
-
-
-def q_docs_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reporting: exact-duplicate rate per source — docs vs distinct
-    texts vs distinct fingerprints."""
-    from s3logs_parquet_spark.functions.text_analysis import fingerprint
-
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("text").alias("n_distinct_texts"),
-        F.countDistinct(fingerprint(F.col("text"))).alias("n_distinct_fp"),
-    )
-
-
-ORACLE_DOCS_DUP_RATE = f"""
-WITH w AS (
-  SELECT source, text, {_SQL_WORDS} AS ws FROM documents
-), fp AS (
-  SELECT source, text,
-         CASE WHEN len(ws) = 0 THEN 0
-              ELSE list_reduce(list_transform(ws, x -> {hash32_sql('x')}),
-                               (acc, h) -> (acc * 1000003 + h) % 2147483647)
-         END AS f
-  FROM w
-)
-SELECT source, count(*) AS n_docs,
-       count(DISTINCT text) AS n_distinct_texts,
-       count(DISTINCT f)    AS n_distinct_fp
-FROM fp GROUP BY source
-"""
-
-
-def q_docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (functions/text_analysis.py pii_signals): emails,
-    SSNs, IPv4s and phone-shaped digit runs replaced with typed
-    placeholders, with per-rule match counts. The corpus carries no
-    real PII, so each doc is seeded with one deterministic instance of
-    every type (same expression in the oracle) — the gate checks the
-    full redacted TEXT value plus the counts, engine-differentially.
-    Map-only regexp chain: zero shuffles at any scale."""
-    from s3logs_parquet_spark.functions.text_analysis import pii_signals
-
-    d = _t(spark, sf_dir, "documents")
-    seeded = d.withColumn(
-        "_t",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".7 ssn 123-45-6789 call +1 (555) 123-4567"),
-        ),
-    )
-    sig = pii_signals(F.col("_t"))
-    return seeded.select(
-        "doc_id",
-        sig["n_email"].cast("long").alias("n_email"),
-        sig["n_ssn"].cast("long").alias("n_ssn"),
-        sig["n_ipv4"].cast("long").alias("n_ipv4"),
-        sig["n_phone"].cast("long").alias("n_phone"),
-        sig["redacted"].alias("redacted"),
-    )
-
-
-def _oracle_pii_redact() -> str:
-    from s3logs_parquet_spark.functions.text_analysis import PII_RULES
-
-    sql = """
-WITH s0 AS (
-  SELECT doc_id,
-         text || ' contact user' || doc_id::VARCHAR || '@example.com from 10.0.'
-              || (doc_id % 256)::VARCHAR || '.7 ssn 123-45-6789 call +1 (555) 123-4567' AS t
-  FROM documents
-)"""
-    prev = "s0"
-    for i, (name, pat, repl) in enumerate(PII_RULES, 1):
-        counts = ", ".join(f"n_{n}" for n, _, _ in PII_RULES[: i - 1])
-        carry = f"{counts}, " if counts else ""
-        sql += f""", s{i} AS (
-  SELECT doc_id, {carry}len(regexp_extract_all(t, '{pat}'))::BIGINT AS n_{name},
-         regexp_replace(t, '{pat}', '{repl}', 'g') AS t
-  FROM {prev}
-)"""
-        prev = f"s{i}"
-    names = ", ".join(f"n_{n}" for n, _, _ in PII_RULES)
-    sql += f"\nSELECT doc_id, {names}, t AS redacted FROM {prev}"
-    return sql
-
-
-def q_docs_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary statistics: document frequency + IDF for the
-    20 most document-frequent terms (deterministic df-desc/term-asc
-    tie-break). Scale shape: explode distinct per-doc terms → one
-    map-side-combined hash aggregate keyed by term (uniform,
-    high-cardinality) → TakeOrderedAndProject top-k; the corpus total
-    joins in as a broadcast single row. The df table is what
-    frequency-based vocabulary pruning and IDF quality filters read."""
-    from s3logs_parquet_spark.functions.text_analysis import words
-
-    d = _t(spark, sf_dir, "documents")
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    term_df = (
-        d.select(F.explode(F.array_distinct(words(F.col("text")))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    out = term_df.crossJoin(n_docs).select(
-        "term",
-        "df",
-        F.round(F.log(F.col("n_docs").cast("double") / F.col("df")), 6).alias("idf"),
-    )
-    return out.orderBy(F.col("df").desc(), F.col("term")).limit(20)
-
-
-ORACLE_DOCS_DOC_FREQUENCY = f"""
-WITH w AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_WORDS})) AS term FROM documents
-), df AS (
-  SELECT term, count(*)::BIGINT AS df FROM w GROUP BY term
-), n AS (
-  SELECT count(*)::BIGINT AS n_docs FROM documents
-)
-SELECT term, df, round(ln(n_docs::DOUBLE / df), 6) AS idf
-FROM df, n
-ORDER BY df DESC, term ASC
-LIMIT 20
-"""
-
-# (q_docs_doc_frequency retired round 7 for the docs_heavy_hitter_words
-# slot: the identical words()-tokenized df hash-agg runs inside
-# docs_tfidf_similar_pairs, whose integer weights are tf·(idf_scale DIV
-# df) — every df value is value-checked through the pair cosines that
-# gate hash-matches. The function and oracle stay for direct use.)
-
-
-def q_docs_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT per-language vocabulary heavy hitters via a bounded-state
-    Misra–Gries candidate pass + exact recount
-    (operators/sketches.py mg_heavy_hitters): every (lang, word) token
-    with frequency ≥ ⌈1% of the corpus token stream⌉. The gate data
-    keeps ~155 live items against k=128 counters, so the MG decrement
-    path genuinely engages while the exact rejoin keeps the answer a
-    pure function of the data — partition-layout invariant and
-    reproducible by a DuckDB GROUP BY/HAVING oracle. Scale shape: at
-    100 TB the full-vocabulary groupBy this replaces shuffles billions
-    of noise-tail tokens; here executor state is k counters per task
-    and the only vocabulary-keyed exchange carries candidates alone."""
-    from s3logs_parquet_spark.functions.text_analysis import words
-    from s3logs_parquet_spark.operators.sketches import mg_heavy_hitters
-
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.col("lang"), F.explode(words(F.col("text"))).alias("_w")
-    ).select(F.concat(F.col("lang"), F.lit(":"), F.col("_w")).alias("item"))
-    out = mg_heavy_hitters(toks, "item", phi=0.01, k=128)
-    return out.orderBy(F.desc("cnt"), F.asc("item"))
-
-
-ORACLE_DOCS_HEAVY_HITTERS = f"""
-WITH w AS (
-  SELECT lang || ':' || unnest({_SQL_WORDS}) AS item FROM documents
-), nn AS (
-  SELECT item FROM w WHERE item IS NOT NULL
-), t AS (
-  SELECT count(*) AS n FROM nn
-)
-SELECT item, count(*)::BIGINT AS cnt
-FROM nn
-GROUP BY item
-HAVING count(*) >= (SELECT ceil(0.01 * n) FROM t)
-ORDER BY cnt DESC, item ASC
-"""
-
-
-def q_docs_tfidf_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted lexical similarity (operators/dedup.py
-    tfidf_similar_pairs): inverted-index cosine over integer-quantized
-    tf·(2^14 DIV df) term weights — exact BIGINT dots/norms make the
-    cosine bit-reproducible in DuckDB regardless of aggregation
-    order. The frequency-weighted complement to the MinHash/SimHash
-    set-overlap near-dup gates."""
-    from s3logs_parquet_spark.operators.dedup import tfidf_similar_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    out = tfidf_similar_pairs(d, "doc_id", "text", threshold=0.8, max_df=1000)
-    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-ORACLE_DOCS_TFIDF_PAIRS = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_SQL_WORDS}) AS term FROM documents
-), tf AS (
-  SELECT doc_id, term, least(count(*), 255)::BIGINT AS tf
-  FROM toks GROUP BY doc_id, term
-), df AS (
-  SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term
-), w AS (
-  SELECT tf.doc_id, tf.term, tf.tf * (16384 // df.df) AS w
-  FROM tf JOIN df USING (term)
-  WHERE df.df <= 1000 AND (16384 // df.df) > 0
-), n2 AS (
-  SELECT doc_id, sum(w * w)::BIGINT AS n2 FROM w GROUP BY doc_id
-), dots AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, sum(a.w * b.w)::BIGINT AS dot
-  FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) AS cosine
-FROM dots
-JOIN n2 na ON dots.id_a = na.doc_id
-JOIN n2 nb ON dots.id_b = nb.doc_id
-WHERE dot / (sqrt(na.n2) * sqrt(nb.n2)) >= 0.8
-"""
-
-
-def q_docs_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship composition: the full curation pipeline (quality filter
-    → exact dedup → near-dup cluster filter → language filter →
-    leakage-safe split) as one job, oracle-checked end to end."""
-    from s3logs_parquet_spark.plans.curation import curate_documents
-
-    d = _t(spark, sf_dir, "documents")
-    return curate_documents(d)
-
-
-def _oracle_curation(min_quality: float = 0.5) -> str:
-    from s3logs_parquet_spark.functions.hashing import affine_coeffs
-
-    coeffs = affine_coeffs(32, 42)
-    rows_per_band = 32 // 8
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, x -> ({a} * x + {b}) % 2147483647))" for a, b in coeffs
-    )
-    band_eq = " OR ".join(
-        f"a.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}] = b.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}]"
-        for b in range(8)
-    )
-    return f"""
-WITH RECURSIVE
-feat AS (
-  SELECT doc_id, text, {_SQL_WORDS} AS ws,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-), m AS (
-  SELECT doc_id, text, ws,
-         len(ws)::BIGINT AS n_words,
-         CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(ws) > 0 THEN {_sql_stop_hits('en')}::DOUBLE / len(ws) ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN len(ws) > 0
-              THEN list_aggregate(list_transform(ws, w -> length(w)), 'sum')::DOUBLE / len(ws)
-              ELSE 0.0 END AS mean_word_len,
-         {_sql_stop_hits('en')} AS h_en,
-         {_sql_stop_hits('de')} AS h_de,
-         {_sql_stop_hits('fr')} AS h_fr,
-         {_sql_stop_hits('es')} AS h_es
-  FROM feat
-), scored AS (
-  SELECT doc_id, text, ws,
-         round(
-           least(n_words / 20.0, 1.0) * 0.3
-           + least(stopword_ratio * 4.0, 1.0) * 0.3
-           + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.2
-           + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.2
-         , 6) AS quality,
-         CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-              WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-              WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-              WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-              ELSE 'es' END AS lang_pred
-  FROM m
-), kept AS (
-  SELECT * FROM scored WHERE quality >= {min_quality} AND lang_pred IN ('en')
-), exact AS (
-  SELECT min(doc_id) AS doc_id, text, min(ws) AS ws,
-         min(quality) AS quality, min(lang_pred) AS lang_pred
-  FROM kept GROUP BY text
-), g AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 3, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 3), ' ')
-         )) AS grams
-  FROM exact
-), h AS (
-  SELECT doc_id, list_transform(grams, s2 -> {hash32_sql('s2')} % 2147483647) AS sh FROM g
-), sigs AS (
-  SELECT doc_id, [{sig_terms}] AS sig FROM h
-), prs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-  WHERE ({band_eq})
-    AND len(list_filter(generate_series(1, 32), i -> a.sig[i] = b.sig[i]))::DOUBLE / 32 >= 0.3
-), edges(x, y) AS (
-  SELECT id_a, id_b FROM prs UNION SELECT id_b, id_a FROM prs
-), reach(id, r) AS (
-  SELECT doc_id, doc_id FROM exact
-  UNION
-  SELECT e.x, reach.r FROM edges e JOIN reach ON e.y = reach.id
-), labels AS (
-  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-), survivors AS (
-  SELECT e.doc_id, e.lang_pred, e.quality
-  FROM exact e JOIN labels l ON e.doc_id = l.doc_id
-  WHERE l.doc_id = l.cluster_id
-)
-SELECT doc_id, lang_pred, quality,
-       CASE WHEN {hash32_sql("doc_id::VARCHAR")} % 100 < 80 THEN 'train'
-            WHEN {hash32_sql("doc_id::VARCHAR")} % 100 < 90 THEN 'val'
-            ELSE 'test' END AS split
-FROM survivors
-"""
-
-
-
-
-def q_docs_clean_and_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text normalization + within-doc repetition signals (the
-    boilerplate/spam filters of a curation pipeline)."""
-    from s3logs_parquet_spark.functions.text_analysis import (
-        clean_text,
-        with_repetition_signals,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    # staged form (round-10 plan audit): one tokenize + one bigram
-    # build instead of the pure dict form's ~16 split() copies
-    return with_repetition_signals(d.select("doc_id", "text")).select(
-        "doc_id",
-        F.length(clean_text(F.col("text"))).alias("clean_chars"),
-        F.round(F.col("dup_word_ratio"), 6).alias("dup_word_ratio"),
-        F.round(F.col("dup_bigram_ratio"), 6).alias("dup_bigram_ratio"),
-    )
-
-
-ORACLE_DOCS_CLEAN_REP = f"""
-WITH w AS (
-  SELECT doc_id, text, {_SQL_WORDS} AS ws FROM documents
-), b AS (
-  SELECT doc_id, text, ws, len(ws) AS n,
-         CASE WHEN len(ws) > 1
-              THEN list_transform(generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i + 1])
-              ELSE []::VARCHAR[] END AS bigrams
-  FROM w
-)
-SELECT doc_id,
-       length(trim(regexp_replace(regexp_replace(regexp_replace(text, '<[^>]*>', ' ', 'g'),
-              '[\\x00-\\x1f]', ' ', 'g'), '\\s+', ' ', 'g'))) AS clean_chars,
-       round(CASE WHEN n > 0 THEN (n - len(list_distinct(ws)))::DOUBLE / n ELSE 0.0 END, 6) AS dup_word_ratio,
-       round(CASE WHEN len(bigrams) > 0
-                  THEN (len(bigrams) - len(list_distinct(bigrams)))::DOUBLE / len(bigrams)
-                  ELSE 0.0 END, 6) AS dup_bigram_ratio
-FROM b
-"""
-
-
-
-
-def q_docs_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 8-bit-block pigeonhole candidates, exact
-    Hamming filter — the cheap-sketch complement to MinHash-LSH. The
-    32-bit fingerprint here is the DuckDB-oracle-portable
-    configuration; at cluster scale pass ``bits=64`` to the operator
-    (16-bit blocks — the pigeonhole's uniform n^2/2^block_bits
-    candidate term and the 32-bit sketch's saturation at loose
-    thresholds both measured and bounded in PERF.md round 13)."""
-    from s3logs_parquet_spark.operators.dedup import simhash_near_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return simhash_near_pairs(d, "doc_id", "text", max_hamming=8)
-
-
-ORACLE_DOCS_SIMHASH_PAIRS = f"""
-WITH d AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 2, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 2), ' ')
-         )) AS shingles
-  FROM d
-), hs AS (
-  SELECT doc_id, list_transform(shingles, s -> {hash32_sql('s')}) AS hashes FROM sh
-), sims AS (
-  SELECT doc_id,
-         list_aggregate(
-           list_transform(generate_series(0, 31), b ->
-             CASE WHEN 2 * len(list_filter(hashes, h -> (h >> b) & 1 = 1)) >= len(hashes)
-                  THEN (1::BIGINT << b) ELSE 0 END),
-           'sum')::BIGINT AS simhash
-  FROM hs
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         bit_count(xor(a.simhash, b.simhash)) AS hamming
-  FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-  WHERE ((a.simhash >> 0)  & 255 = (b.simhash >> 0)  & 255
-      OR (a.simhash >> 8)  & 255 = (b.simhash >> 8)  & 255
-      OR (a.simhash >> 16) & 255 = (b.simhash >> 16) & 255
-      OR (a.simhash >> 24) & 255 = (b.simhash >> 24) & 255)
-)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 8
-"""
-
-
-# ---------------------------------------------------------------------------
-# Similarity search over embeddings
-# ---------------------------------------------------------------------------
-
-
-def q_emb_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 for the first 5 vectors as queries.
-    Query side broadcast; exact same double arithmetic as the oracle
-    (sequential dot/norm over the array) → values match to the bit,
-    rounded to 6 for safety."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    out = brute_force_topk(emb, queries, "vec_id", "query_id", k=10)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-ORACLE_EMB_TOPK = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5
-), c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
-), scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_reduce(list_prepend(0.0, list_transform(generate_series(1, len(cv)), i -> cv[i] * qv[i])), (x, y) -> x + y)
-         / (sqrt(list_reduce(list_prepend(0.0, list_transform(cv, x -> x * x)), (x, y) -> x + y))
-          * sqrt(list_reduce(list_prepend(0.0, list_transform(qv, x -> x * x)), (x, y) -> x + y))) AS cos_raw
-  FROM c CROSS JOIN q
-), ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 10
-"""
-
-
-# (q_emb_lsh_topk retired round 7 for the emb_sq8_topk slot: the
-# recall gate emb_lsh_recall runs lsh_topk with the IDENTICAL
-# parameters — its per-rank id membership exercises banding + ranking,
-# its oracle literally embeds _oracle_emb_lsh() below, and the
-# exact-cosine arithmetic stays value-checked by emb_cosine_topk.)
-
-
-def _band_keys_sql(
-    planes: list[list[float]], n_bands: int, bits_per_band: int, dim: int
-) -> str:
-    """DuckDB expression for the hyperplane band-key list, computed
-    from a column ``qv`` of integer-quantized components (see
-    hyperplane_band_keys): projection = exact BIGINT sum of ±qv[i]
-    following the ±1 plane signs, band key = packed sign bits."""
-
-    def proj(plane: list[float]) -> str:
-        terms = " + ".join(
-            (f"qv[{i + 1}]" if x > 0 else f"(-qv[{i + 1}])")
-            for i, x in enumerate(plane[:dim])
-        )
-        return f"({terms})"
-
-    band_keys = []
-    for b in range(n_bands):
-        bits = [
-            f"(CASE WHEN {proj(planes[b * bits_per_band + j])} >= 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(bits_per_band)
-        ]
-        band_keys.append(" + ".join(bits))
-    return "[" + ", ".join(band_keys) + "]"
-
-
-def _oracle_emb_lsh(n_bands: int = 12, bits_per_band: int = 4, dim: int = 64, k: int = 10) -> str:
-    """Band keys replicate hyperplane_band_keys' integer-quantized
-    projection exactly: q[i] = floor(v[i]·2^20) per element
-    (order-independent), projection = exact BIGINT sum of ±q[i], so
-    the engine's numpy matmul and this SQL agree bit-for-bit."""
-    from s3logs_parquet_spark.operators.ann import plane_signs
-
-    planes = plane_signs(n_bands * bits_per_band, dim, 42)
-    bks = _band_keys_sql(planes, n_bands, bits_per_band, dim)
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), qz AS (
-  SELECT vec_id, v, list_transform(v, x -> floor(x * 1048576.0)::BIGINT) AS qv FROM c
-), keys AS (
-  SELECT vec_id, v, {bks} AS bks FROM qz
-), q AS (
-  SELECT vec_id AS query_id, v AS qv, bks AS qbks FROM keys WHERE vec_id < 5
-), cand AS (
-  SELECT DISTINCT q.query_id, k.vec_id, k.v, q.qv
-  FROM keys k CROSS JOIN q CROSS JOIN generate_series(1, {n_bands}) t(b)
-  WHERE k.bks[b] = q.qbks[b]
-), scored AS (
-  SELECT query_id, vec_id,
-         list_reduce(list_prepend(0.0, list_transform(generate_series(1, {dim}), i -> v[i] * qv[i])), (x, y) -> x + y)
-         / (sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (x, y) -> x + y))
-          * sqrt(list_reduce(list_prepend(0.0, list_transform(qv, x -> x * x)), (x, y) -> x + y))) AS cos_raw
-  FROM cand
-), ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-
-
-# (q_emb_ivf_topk retired round 7 — a strict subset of
-# q_emb_ivf_trained_topk: identical ivf_topk probe/rerank path, only
-# the centroid source differed; fixed-codebook IVF keeps pytest
-# coverage in test_ann.)
-
-
-_SQL_DOT = (
-    "list_reduce(list_prepend(0.0, list_transform(generate_series(1, len({a})), "
-    "i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-)
-_SQL_NORM = "sqrt(list_reduce(list_prepend(0.0, list_transform({a}, x -> x * x)), (x, y) -> x + y))"
-
-
-def q_emb_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with a TRAINED coarse quantizer: deterministic Lloyd's
-    k-means (init = vectors of the 8 smallest vec_ids, 2 iterations —
-    operators/ann.py ivf_train with id_col), then the same probed
-    search as emb_ivf_topk. The oracle unrolls the identical two Lloyd
-    iterations in SQL (per-dim avg, argmax-cosine assignment, empty
-    cells keep their centroid), so the whole train→assign→probe→rerank
-    chain is value-checked."""
-    from s3logs_parquet_spark.operators.ann import ivf_topk, ivf_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    centroids = ivf_train(emb, "embedding", n_cells=8, iters=2, id_col="vec_id")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    out = ivf_topk(emb, queries, "vec_id", "query_id", centroids, k=10, n_probe=2)
-    return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def _oracle_emb_ivf_trained(
-    n_cells: int = 8, iters: int = 2, n_probe: int = 2, k: int = 10, dim: int = 64
-) -> str:
-    def cos(a: str, b: str) -> str:
-        return f"{_SQL_DOT.format(a=a, b=b)} / ({_SQL_NORM.format(a=a)} * {_SQL_NORM.format(a=b)})"
-
-    sql = f"""
-WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), c0 AS (
-  SELECT vec_id AS cell, v AS cv FROM emb WHERE vec_id < {n_cells}
-)"""
-    prev = "c0"
-    for t in range(1, iters + 1):
-        sql += f""", a{t} AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos('e.v', 'c.cv')} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-), m{t} AS (
-  SELECT cell, list(a ORDER BY i) AS cv FROM (
-    SELECT cell, i, avg(v[i]) AS a
-    FROM a{t} CROSS JOIN generate_series(1, {dim}) t(i)
-    GROUP BY cell, i
-  ) GROUP BY cell
-), c{t} AS (
-  SELECT p.cell, coalesce(m.cv, p.cv) AS cv FROM {prev} p LEFT JOIN m{t} m USING (cell)
-)"""
-        prev = f"c{t}"
-    sql += f""", assign AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos('e.v', 'c.cv')} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5
-), probes AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT q.query_id, q.qv, c.cell,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {cos('q.qv', 'c.cv')} DESC, c.cell) AS rn
-    FROM q CROSS JOIN {prev} c
-  ) WHERE rn <= {n_probe}
-), cand AS (
-  SELECT DISTINCT p.query_id, p.qv, a.vec_id, a.v
-  FROM probes p JOIN assign a ON a.cell = p.cell
-), ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM (SELECT s.query_id, s.vec_id, {cos('s.v', 's.qv')} AS cos_raw FROM cand s)
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
-    return sql
-
-
-def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (operators/ann.py pq_*): deterministic
-    codebooks (subvectors of the 8 smallest vec_ids, the same
-    reproducible-init convention as emb_ivf_trained_topk), argmin
-    encode, ADC candidate scan over the m-byte codes, exact-cosine
-    rerank of the top 50. The oracle recomputes the identical
-    codebooks/codes/ADC in SQL — the whole compressed-ANN pipeline is
-    value-checked, not just shape-checked.
-
-    A ``prebuilt`` plan entry: it saves the 8-row codebook collect and
-    plan construction (sf0.1, 4 cores, median of 10 pairs: 0.79 s per
-    call with it, 1.05 s without); every execution still recomputes."""
-    from s3logs_parquet_spark.operators.ann import pq_codebooks, pq_topk
-
-    def build() -> DataFrame:
-        emb = _t(spark, sf_dir, "embeddings")
-        cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        out = pq_topk(emb, queries, "vec_id", "query_id", cbs, k=10, n_candidates=50)
-        return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-    return prebuilt(spark, ("emb_pq_topk", sf_dir), build)
-
-
-def _oracle_emb_pq(
-    m: int = 4, sub: int = 16, k_sub: int = 8, n_candidates: int = 50, k: int = 10
-) -> str:
-    def sq(a: str, b: str, off: int) -> str:
-        return (
-            f"list_reduce(list_prepend(0.0, list_transform(generate_series(1, {sub}), "
-            f"i -> ({a}[{off} + i] - {b}[{off} + i]) * ({a}[{off} + i] - {b}[{off} + i]))), "
-            "(x, y) -> x + y)"
-        )
-
-    vdists = ", ".join(f"{sq('v.ev', 'c.cv', j * sub)} AS d{j}" for j in range(m))
-    qdists = ", ".join(f"{sq('q.qv', 'c.cv', j * sub)} AS d{j}" for j in range(m))
-    ranks = ", ".join(
-        f"row_number() OVER (PARTITION BY vec_id ORDER BY d{j}, cid) AS r{j}" for j in range(m)
-    )
-    code_pick = ", ".join(f"max(CASE WHEN r{j} = 1 THEN cid END) AS code{j}" for j in range(m))
-    qts = ", ".join(f"list(d{j} ORDER BY cid) AS qt{j}" for j in range(m))
-    adc = " + ".join(f"t.qt{j}[k.code{j} + 1]" for j in range(m))
-    return f"""
-WITH c AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding::DOUBLE[] AS cv
-  FROM embeddings ORDER BY vec_id LIMIT {k_sub}
-), e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5
-), vdist AS (
-  SELECT v.vec_id, c.cid, {vdists} FROM e v CROSS JOIN c
-), vrank AS (
-  SELECT vec_id, cid, {ranks} FROM vdist
-), codes AS (
-  SELECT vec_id, {code_pick} FROM vrank GROUP BY vec_id
-), qdist AS (
-  SELECT q.query_id, c.cid, {qdists} FROM q CROSS JOIN c
-), qt AS (
-  SELECT query_id, {qts} FROM qdist GROUP BY query_id
-), scored AS (
-  SELECT t.query_id, k.vec_id, {adc} AS adc
-  FROM codes k CROSS JOIN qt t
-), cand AS (
-  SELECT query_id, vec_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS crank
-  FROM scored
-), rr AS (
-  SELECT s.query_id, s.vec_id,
-         {_SQL_DOT.format(a='e.ev', b='q.qv')}
-         / ({_SQL_NORM.format(a='e.ev')} * {_SQL_NORM.format(a='q.qv')}) AS cos_raw
-  FROM cand s
-  JOIN e ON e.vec_id = s.vec_id
-  JOIN q ON q.query_id = s.query_id
-  WHERE s.crank <= {n_candidates}
-), ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM rr
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# Multimodal plumbing (binary columns + typed metadata)
-# ---------------------------------------------------------------------------
-
-
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column plumbing: documents' text treated as an opaque
-    binary payload with typed metadata — the schema/partition shape a
-    multimodal (image/audio) table uses. Byte length + a sniffed
-    "format" tag computed JVM-side over the binary column."""
-    d = _t(spark, sf_dir, "documents")
-    payload = F.encode(F.col("text"), "UTF-8")
-    return d.select(
-        "doc_id",
-        F.octet_length(payload).alias("n_bytes"),
-        F.when(F.length(F.col("text")) > 500, F.lit("large"))
-        .otherwise(F.lit("small"))
-        .alias("blob_class"),
-    )
-
-
-ORACLE_MULTIMODAL_META = """
-SELECT doc_id,
-       octet_length(encode(text)) AS n_bytes,
-       CASE WHEN length(text) > 500 THEN 'large' ELSE 'small' END AS blob_class
-FROM documents
-"""
-
-
-def q_manifest_events_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5/F2 round-trip: synthesize S3-notification JSON documents from
-    the events table, then run them through the real manifest parser
-    (sources/manifest_source.parse_s3_events) — construct→parse must be
-    the identity on accepted events and drop rejected ones, which the
-    oracle checks by computing the expected survivors directly."""
-    from s3logs_parquet_spark.sources.manifest_source import parse_s3_events
-
-    e = _t(spark, sf_dir, "events")
-    ename = (
-        F.when(F.col("event_type") == "view", F.lit("ObjectCreated:Put"))
-        .when(F.col("event_type") == "click", F.lit("ObjectCreated:CompleteMultipartUpload"))
-        .otherwise(F.concat(F.lit("ObjectRemoved:"), F.col("event_type")))
-    )
-    doc = F.to_json(
-        F.struct(
-            F.array(
-                F.struct(
-                    ename.alias("eventName"),
-                    F.struct(
-                        F.struct(
-                            F.concat(F.lit("bkt-"), (F.col("user_id") % 10).cast("string")).alias(
-                                "name"
-                            )
-                        ).alias("bucket"),
-                        F.struct(
-                            F.concat(F.lit("logs/obj-"), F.col("event_id").cast("string")).alias(
-                                "key"
-                            ),
-                            F.col("event_id").alias("size"),
-                        ).alias("object"),
-                    ).alias("s3"),
-                )
-            ).alias("Records")
-        )
-    )
-    return parse_s3_events(e.select(doc.alias("value")))
-
-
-ORACLE_MANIFEST_EVENTS_F2 = """
-SELECT CASE WHEN event_type = 'view' THEN 'ObjectCreated:Put'
-            ELSE 'ObjectCreated:CompleteMultipartUpload' END AS event_name,
-       'bkt-' || (user_id % 10)::VARCHAR AS bucket,
-       'logs/obj-' || event_id::VARCHAR AS key,
-       event_id AS size
-FROM events
-WHERE event_type IN ('view', 'click')
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-def q_docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination audit: winnowing-fingerprint overlap
-    between the corpus and a held-out benchmark set (doc_id % 7 == 0
-    here), per-source contamination counts. The corpus never
-    all-pairs: exploded (id, fp) longs semi-join a BROADCAST benchmark
-    fingerprint set (operators/dedup.py:decontaminate)."""
-    from s3logs_parquet_spark.operators.dedup import decontaminate
-
-    d = _t(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 7 == 0)
-    corpus = d.filter(F.col("doc_id") % 7 != 0)
-    flagged = decontaminate(corpus, bench, k=5, window=4)
-    return flagged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("is_contaminated").cast("bigint")).alias("n_contaminated"),
-    )
-
-
-ORACLE_DOCS_DECONTAMINATE = f"""
-WITH w AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), g AS (
-  SELECT doc_id,
-         list_transform(generate_series(0, greatest(len(ws) - 5, 0)),
-                        i -> {hash32_sql("array_to_string(array_slice(ws, i + 1, i + 5), ' ')")}) AS grams
-  FROM w
-), win AS (
-  SELECT doc_id,
-         list_distinct(
-           list_transform(generate_series(0, greatest(len(grams) - 4, 0)),
-                          i -> list_min(array_slice(grams, i + 1, i + 4)))) AS fps
-  FROM g
-), fps AS (
-  SELECT doc_id, unnest(fps) AS fp FROM win
-), bench AS (
-  SELECT DISTINCT fp FROM fps WHERE doc_id % 7 = 0
-), hits AS (
-  SELECT DISTINCT f.doc_id FROM fps f JOIN bench b USING (fp)
-  WHERE f.doc_id % 7 <> 0
-)
-SELECT d.source,
-       count(*)::BIGINT AS n_docs,
-       count(h.doc_id)::BIGINT AS n_contaminated
-FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-WHERE d.doc_id % 7 <> 0
-GROUP BY d.source
-"""
-
-
-def q_docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified deterministic sampling: per-source rates (5-15%,
-    derived from the portable hash of the source name — no config
-    table needed for the differential test) applied via content-hash
-    thresholding. Map-only + one aggregate; identical row selection on
-    any engine/partitioning."""
-    from s3logs_parquet_spark.functions.hashing import hash32
-
-    d = _t(spark, sf_dir, "documents")
-    rate = F.lit(5) + F.pmod(hash32(F.col("source")), F.lit(11))
-    sampled = F.pmod(hash32(F.col("doc_id").cast("string")), F.lit(100)) < rate
-    return d.select("source", "doc_id", sampled.alias("_s")).groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("_s").cast("bigint")).alias("n_sampled"),
-        F.min(F.when(F.col("_s"), F.col("doc_id"))).alias("min_sampled_id"),
-    )
-
-
-ORACLE_DOCS_STRATIFIED = f"""
-WITH s AS (
-  SELECT source, doc_id,
-         ({hash32_sql("doc_id::VARCHAR")} % 100
-            < 5 + ({hash32_sql("source")} % 11)) AS sampled
-  FROM documents
-)
-SELECT source,
-       count(*)::BIGINT AS n_docs,
-       count(*) FILTER (WHERE sampled)::BIGINT AS n_sampled,
-       min(doc_id) FILTER (WHERE sampled) AS min_sampled_id
-FROM s GROUP BY source
-"""
-
-
-# (q_docs_global_shuffle retired round 7 into q_docs_selection_budget
-# below: its (hash32(doc_id), doc_id) total-order rank selection is
-# value-checked per doc as the new gate's within-source cap_rk — the
-# same hash, the same comparator, rank surfaced per row — and the
-# global top-k form keeps a direct DuckDB differential in
-# tests/test_selection.py::test_global_shuffle_duckdb_differential.)
-
-
-def q_docs_selection_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus selection pipeline: per-source frequency cap (at most
-    cap(source) docs per source, deterministic bottom-cap by content
-    hash — the RefinedWeb-style domain cap) followed by greedy
-    token-budget prefix selection over the survivors in (quality DESC,
-    id) order (operators/selection.py). Caps are hash-derived per
-    source (15-34) so BOTH the under-cap map-only passthrough and the
-    over-cap two-level rank path face the driver oracle; quality is
-    the rounded quality_score convention, surfaced per doc for EVERY
-    row (the retired docs_quality_score per-doc values live on here).
-    Budget semantics: running sum of whitespace-token counts of capped
-    survivors ≤ 12,000 in quality order; zero-cost rows inside the
-    prefix select."""
-    from s3logs_parquet_spark.functions.hashing import hash32
-    from s3logs_parquet_spark.operators.selection import (
-        budget_select,
-        cap_per_group,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    cap = F.lit(15) + F.pmod(hash32(F.col("source")), F.lit(20))
-    capped = cap_per_group(d, "source", cap, "doc_id", max_cap=34)
-    # staged gate (round-10 plan audit): one tokenize instead of the
-    # pure forms' ~11 split() copies; values bit-identical
-    scored = (
-        with_quality_and_lang(capped, "text", emit=("quality",), keep_features=True)
-        .select(
-            "doc_id",
-            "source",
-            "cap_rk",
-            "cap_keep",
-            "quality",
-            F.col("n_words").alias("tok"),
-        )
-        .withColumn("_w", F.when(F.col("cap_keep"), F.col("tok")).otherwise(F.lit(0)))
-    )
-    out = budget_select(scored, "quality", "doc_id", "_w", 12_000)
-    return out.select(
-        "doc_id",
-        "source",
-        F.col("cap_rk").cast("long").alias("cap_rk"),
-        F.col("cap_keep").cast("int").alias("cap_keep"),
-        "quality",
-        F.col("tok").cast("long").alias("tok"),
-        (F.col("selected") & F.col("cap_keep")).cast("int").alias("selected"),
-    )
-
-
-ORACLE_DOCS_SELECTION_BUDGET = f"""
-WITH feat AS (
-  SELECT doc_id, source,
-         {_SQL_WORDS} AS ws,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-), m AS (
-  SELECT doc_id, source,
-         len(ws)::BIGINT AS tok,
-         CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(ws) > 0 THEN {_sql_stop_hits('en')}::DOUBLE / len(ws) ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN len(ws) > 0
-              THEN list_aggregate(list_transform(ws, w -> length(w)), 'sum')::DOUBLE / len(ws)
-              ELSE 0.0 END AS mean_word_len
-  FROM feat
-), q AS (
-  SELECT doc_id, source, tok,
-         round(
-           least(tok / 20.0, 1.0) * 0.3
-           + least(stopword_ratio * 4.0, 1.0) * 0.3
-           + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.2
-           + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.2
-         , 6) AS quality
-  FROM m
-), rk AS (
-  SELECT *,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY {hash32_sql("doc_id::VARCHAR")}, doc_id
-         ) AS rn,
-         count(*) OVER (PARTITION BY source) AS cnt,
-         15 + ({hash32_sql("source")} % 20) AS cap
-  FROM q
-), c AS (
-  SELECT doc_id, source, quality, tok,
-         (cnt <= cap OR rn <= cap) AS keep,
-         CASE WHEN cnt > cap AND rn <= cap THEN rn END::BIGINT AS cap_rk
-  FROM rk
-), b AS (
-  SELECT *,
-         sum(CASE WHEN keep THEN tok ELSE 0 END) OVER (
-           ORDER BY quality DESC, doc_id
-         ) AS cum
-  FROM c
-)
-SELECT doc_id, source, cap_rk,
-       keep::INT AS cap_keep, quality, tok,
-       (keep AND cum <= 12000)::INT AS selected
-FROM b
-"""
-
-
-# (q_events_asof_click retired round 7 into q_events_asof_click_chunked
-# below: the identical backward-inclusive as-of query and the identical
-# DuckDB native-ASOF oracle, driver-gated through the skew-chunked path.
-# The plain single-window path stays driver-gated via
-# q_events_asof_next_click / q_events_asof_nearest_click and
-# pytest-covered by tests/test_temporal.py.)
-
-ORACLE_EVENTS_ASOF = """
-SELECT a.event_id, a.user_id,
-       floor(epoch(a.ts))::BIGINT AS err_epoch,
-       b.event_id AS click_id,
-       floor(epoch(b.ts))::BIGINT AS click_epoch
-FROM (SELECT * FROM events WHERE event_type = 'error') a
-ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') b
-  ON a.user_id = b.user_id AND a.ts >= b.ts
-"""
-
-
-def q_events_asof_click_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME as-of query through the skew-safe two-pass path
-    (operators/temporal.py asof_join_chunked, hour chunks): window
-    partitioned by (user, hour-chunk) + boundary carry-forward, so one
-    hot user parallelizes across its hours. Checked against the same
-    DuckDB native ASOF JOIN — proving chunking changes the plan, not
-    the answer."""
-    from s3logs_parquet_spark.operators.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    err = e.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    clk = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    j = asof_join(
-        err, clk, time_col="ts", by=["user_id"], right_cols=["event_id"],
-        skew_chunk_seconds=3600,
-    )
-    return j.select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("err_epoch"),
-        F.col("event_id_r").alias("click_id"),
-        F.unix_timestamp("ts_r").alias("click_epoch"),
-    )
-
-
-def q_events_asof_next_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of with tolerance: for each error, the EARLIEST click
-    by the same user at-or-after it, but only within 30 minutes —
-    beyond-tolerance errors drop (inner semantics). Same union → one
-    keyed window plan as backward; the oracle is a DuckDB lateral
-    top-1 probe with the identical tie/tolerance rules."""
-    from s3logs_parquet_spark.operators.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    err = e.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    clk = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    j = asof_join(
-        err, clk, time_col="ts", by=["user_id"], right_cols=["event_id"],
-        direction="forward", tolerance_seconds=1800,
-    )
-    return j.select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("err_epoch"),
-        F.col("event_id_r").alias("click_id"),
-        F.unix_timestamp("ts_r").alias("click_epoch"),
-    )
-
-
-ORACLE_EVENTS_ASOF_NEXT = """
-SELECT a.event_id, a.user_id,
-       floor(epoch(a.ts))::BIGINT AS err_epoch,
-       m.event_id AS click_id,
-       floor(epoch(m.ts))::BIGINT AS click_epoch
-FROM (SELECT * FROM events WHERE event_type = 'error') a
-JOIN LATERAL (
-  SELECT b.event_id, b.ts
-  FROM (SELECT * FROM events WHERE event_type = 'click') b
-  WHERE b.user_id = a.user_id AND b.ts >= a.ts
-    AND b.ts <= a.ts + INTERVAL 1800 SECOND
-  ORDER BY b.ts LIMIT 1
-) m ON true
-"""
-
-
-def q_events_asof_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAREST as-of: for each error, the click by the same user with
-    the smallest absolute time gap, ties to the backward (at-or-before)
-    side — pandas merge_asof(direction='nearest') semantics. One keyed
-    exchange; both direction frames evaluate over the same sort
-    partition."""
-    from s3logs_parquet_spark.operators.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    err = e.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    clk = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    j = asof_join(
-        err, clk, time_col="ts", by=["user_id"], right_cols=["event_id"],
-        direction="nearest",
-    )
-    return j.select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("err_epoch"),
-        F.col("event_id_r").alias("click_id"),
-        F.unix_timestamp("ts_r").alias("click_epoch"),
-    )
-
-
-ORACLE_EVENTS_ASOF_NEAREST = """
-SELECT a.event_id, a.user_id,
-       floor(epoch(a.ts))::BIGINT AS err_epoch,
-       m.event_id AS click_id,
-       floor(epoch(m.ts))::BIGINT AS click_epoch
-FROM (SELECT * FROM events WHERE event_type = 'error') a
-JOIN LATERAL (
-  SELECT b.event_id, b.ts
-  FROM (SELECT * FROM events WHERE event_type = 'click') b
-  WHERE b.user_id = a.user_id
-  ORDER BY abs(epoch_us(b.ts) - epoch_us(a.ts)), (b.ts > a.ts) LIMIT 1
-) m ON true
-"""
-
-
-def q_events_range_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join: per-user pairs of events within a 7200 s window
-    (l.ts < r.ts <= l.ts + 7200). A raw inequality join would be
-    nested-loop at scale; operators/temporal.py bins time to
-    window-width buckets and equi-joins adjacent bins, bounding
-    candidates by per-window density."""
-    from s3logs_parquet_spark.operators.temporal import range_join_binned
-
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    p = range_join_binned(e, e, time_col="ts", by=["user_id"], window_seconds=7200)
-    return p.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(
-            F.unix_timestamp("ts_r") - F.unix_timestamp("ts")
-        ).alias("total_gap_s"),
-    )
-
-
-ORACLE_EVENTS_RANGE_PAIRS = """
-SELECT a.user_id, count(*) AS n_pairs,
-       sum(floor(epoch(b.ts))::BIGINT - floor(epoch(a.ts))::BIGINT)::BIGINT AS total_gap_s
-FROM events a JOIN events b
-  ON a.user_id = b.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 7200 SECOND
-GROUP BY a.user_id
-"""
-
-
-# (q_events_kmv_distinct retired round 7 into events_kmv_set_ops: the
-# new gate's per-pair output carries each group's n_seen and KMV
-# estimate — computed by the identical per-group sketch stage with the
-# same k — next to the set-operation estimates, so every value the old
-# gate checked is still driver-value-checked. kmv_distinct also keeps
-# its direct accuracy/small-set/null pytests in test_scale_ops.)
-
-
-def q_events_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV set algebra between event types (operators/sketches.py
-    kmv_set_ops): merged-sketch union / intersection / Jaccard
-    estimates of the user populations, per unordered type pair, next
-    to the exact values. Like the per-group KMV gate it absorbs, the
-    portable hash makes even the ESTIMATES deterministic functions of
-    the data, so DuckDB replays the whole sketch-merge chain and the
-    hash compare covers the estimator itself (Beyer et al. SIGMOD'07
-    bottom-k Jaccard; Bar-Yossef et al. RANDOM'02 estimator)."""
-    from s3logs_parquet_spark.operators.sketches import kmv_set_ops
-
-    e = _t(spark, sf_dir, "events")
-    sk = kmv_set_ops(e, "event_type", "user_id", k=64)
-    # exact legs via ONE user-keyed aggregation (round 14, guide §2.4):
-    # the former (type,user)-DISTINCT + self-join on user_id shuffled
-    # the distinct pair table twice more (join re-key + pair agg) and
-    # paid an SMJ; collecting each user's distinct type set map-side
-    # (collect_set partial agg — bounded by the type universe, a few
-    # entries per user) and expanding the sorted set's ordered pairs
-    # map-side replaces all of it with one exchange + two tiny
-    # hash-aggs. Values identical: exact = distinct users per type
-    # (one exploded row per (user, type)); exact_intersection counts
-    # users holding both types, enumerated as x < y pairs exactly like
-    # the old join condition (array_sort orders strings the same way
-    # `<` compares them); collect_set drops NULL types, which the old
-    # shape's `<` comparison and the inner sk-join made unreachable
-    # in the output anyway.
-    sets = (
-        e.filter(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.array_sort(F.collect_set("event_type")).alias("_ts"))
-    )
-    ex = (
-        sets.select(F.explode("_ts").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("exact"))
-    )
-    inter = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_ts, (x, i) -> "
-                    "transform(slice(_ts, i + 2, size(_ts) - i - 1), "
-                    "y -> struct(x AS g_a, y AS g_b))))"
-                )
-            ).alias("_pr")
-        )
-        .select("_pr.g_a", "_pr.g_b")
-        .groupBy("g_a", "g_b")
-        .agg(F.count(F.lit(1)).alias("exact_intersection"))
-    )
-    out = (
-        sk.join(
-            F.broadcast(ex.select(F.col("event_type").alias("g_a"), F.col("exact").alias("exact_a"))),
-            "g_a",
-        )
-        .join(
-            F.broadcast(ex.select(F.col("event_type").alias("g_b"), F.col("exact").alias("exact_b"))),
-            "g_b",
-        )
-        .join(F.broadcast(inter), ["g_a", "g_b"], "left")
-        .withColumn("exact_intersection", F.coalesce(F.col("exact_intersection"), F.lit(0)))
-        .withColumn(
-            "exact_union", F.col("exact_a") + F.col("exact_b") - F.col("exact_intersection")
-        )
-    )
-    return out.select(
-        "g_a",
-        "g_b",
-        "n_seen_a",
-        "est_a",
-        "n_seen_b",
-        "est_b",
-        "est_union",
-        "est_jaccard",
-        "est_intersection",
-        "exact_a",
-        "exact_b",
-        "exact_union",
-        F.round(
-            F.col("exact_intersection").cast("double") / F.col("exact_union").cast("double"), 6
-        ).alias("exact_jaccard"),
-        "exact_intersection",
-    )
-
-
-ORACLE_EVENTS_KMV_SET_OPS = f"""
-WITH hashed AS (
-  SELECT DISTINCT event_type AS g, {hash32_sql("user_id::VARCHAR")} AS h FROM events
-  WHERE user_id IS NOT NULL
-), ranked AS (
-  SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h) AS rn FROM hashed
-), kmins AS (
-  SELECT g, h FROM ranked WHERE rn <= 64
-), per_group AS (
-  SELECT g, count(*)::BIGINT AS n_seen, max(h) AS hk FROM kmins GROUP BY g
-), pg AS (
-  SELECT g, n_seen,
-         round(CASE WHEN n_seen < 64 THEN n_seen::DOUBLE
-                    ELSE 63.0 / ((hk::DOUBLE + 1.0) / 4294967296.0) END, 4) AS est
-  FROM per_group
-), prs AS (
-  SELECT a.g AS g_a, a.n_seen AS n_seen_a, a.est AS est_a,
-         b.g AS g_b, b.n_seen AS n_seen_b, b.est AS est_b
-  FROM pg a JOIN pg b ON a.g < b.g
-), cand AS (
-  SELECT p.g_a, p.g_b, k.h, 1 AS in_a, 0 AS in_b
-  FROM prs p JOIN kmins k ON k.g = p.g_a
-  UNION ALL
-  SELECT p.g_a, p.g_b, k.h, 0, 1
-  FROM prs p JOIN kmins k ON k.g = p.g_b
-), mh AS (
-  SELECT g_a, g_b, h, max(in_a) AS in_a, max(in_b) AS in_b
-  FROM cand GROUP BY 1, 2, 3
-), mr AS (
-  SELECT *, row_number() OVER (PARTITION BY g_a, g_b ORDER BY h) AS rn FROM mh
-), mk AS (
-  SELECT g_a, g_b, count(*)::BIGINT AS k2, max(h) AS mhk,
-         sum(in_a * in_b)::BIGINT AS n_both
-  FROM mr WHERE rn <= 64 GROUP BY 1, 2
-), u2t AS (
-  SELECT DISTINCT event_type AS g, user_id AS v FROM events WHERE user_id IS NOT NULL
-), ex AS (
-  SELECT g, count(*)::BIGINT AS exact FROM u2t GROUP BY g
-), exi AS (
-  SELECT a.g AS g_a, b.g AS g_b, count(*)::BIGINT AS exact_intersection
-  FROM u2t a JOIN u2t b ON a.v = b.v AND a.g < b.g GROUP BY 1, 2
-)
-SELECT p.g_a, p.g_b, p.n_seen_a, p.est_a, p.n_seen_b, p.est_b,
-       round(CASE WHEN m.k2 < 64 THEN m.k2::DOUBLE
-                  ELSE 63.0 / ((m.mhk::DOUBLE + 1.0) / 4294967296.0) END, 4) AS est_union,
-       round(m.n_both::DOUBLE / m.k2::DOUBLE, 6) AS est_jaccard,
-       round((m.n_both::DOUBLE / m.k2::DOUBLE)
-             * (CASE WHEN m.k2 < 64 THEN m.k2::DOUBLE
-                     ELSE 63.0 / ((m.mhk::DOUBLE + 1.0) / 4294967296.0) END), 4) AS est_intersection,
-       ea.exact AS exact_a, eb.exact AS exact_b,
-       (ea.exact + eb.exact - coalesce(i.exact_intersection, 0))::BIGINT AS exact_union,
-       round(coalesce(i.exact_intersection, 0)::DOUBLE
-             / (ea.exact + eb.exact - coalesce(i.exact_intersection, 0))::DOUBLE, 6) AS exact_jaccard,
-       coalesce(i.exact_intersection, 0)::BIGINT AS exact_intersection
-FROM prs p
-JOIN mk m USING (g_a, g_b)
-JOIN ex ea ON ea.g = p.g_a
-JOIN ex eb ON eb.g = p.g_b
-LEFT JOIN exi i USING (g_a, g_b)
-"""
-
-
-def q_events_kmv_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global (single-group) KMV via the two-level mergeable
-    formulation (operators/sketches.py kmv_distinct_global): distinct
-    hashes → TakeOrderedAndProject k-min merge — the full domain never
-    funnels through one task, unlike a single-group rank window.
-    Checked against the exact global distinct AND the oracle's
-    identical deterministic computation."""
-    from s3logs_parquet_spark.operators.sketches import kmv_distinct_global
-
-    e = _t(spark, sf_dir, "events")
-    sk = kmv_distinct_global(e, "user_id", k=64)
-    exact = e.agg(F.count_distinct("user_id").alias("exact_distinct"))
-    return sk.crossJoin(exact)
-
-
-ORACLE_EVENTS_KMV_GLOBAL = f"""
-WITH hashed AS (
-  SELECT DISTINCT {hash32_sql("user_id::VARCHAR")} AS h FROM events
-  WHERE user_id IS NOT NULL
-), kmin AS (
-  SELECT h FROM hashed ORDER BY h LIMIT 64
-), agg AS (
-  SELECT count(*)::BIGINT AS n_seen, max(h) AS hk FROM kmin
-)
-SELECT n_seen,
-       round(CASE WHEN n_seen < 64 THEN n_seen::DOUBLE
-                  ELSE 63.0 / ((hk::DOUBLE + 1.0) / 4294967296.0) END,
-             4) AS est_distinct,
-       (SELECT count(DISTINCT user_id)::BIGINT FROM events) AS exact_distinct
-FROM agg
-"""
-
-
-def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecasting-revenue-change shape: pure scan→filter→agg with all
-    three predicates pushed to the parquet scan; no shuffle beyond the
-    single-row final aggregate."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-ORACLE_TPCH_Q6 = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-       count(*) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-"""
-
-
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Returned-item reporting: fact ⋈ three broadcast dims, group on
-    customer attributes, engine-independent top-20 (revenue desc,
-    custkey tie-break). Revenue is summed as per-item rounded CENTS —
-    an integer sum is order-independent, where round(float-sum, 2)
-    diverged between engines by one cent on a half-ulp boundary."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        l.join(F.broadcast(o), l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                ).cast("long")
-            ).alias("revenue_cents")
-        )
-        .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-ORACLE_TPCH_Q10 = """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS revenue_cents
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
-  AND l_returnflag = 'R'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue_cents DESC, c_custkey
-LIMIT 20
-"""
-
-
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Promotion-effect shape: fact ⋈ broadcast part, conditional
-    aggregate ratio in one pass (no second scan for the numerator)."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    p = _t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0)))
-                / F.sum(rev),
-                6,
-            ).alias("promo_revenue_pct"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-ORACLE_TPCH_Q14 = """
-SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                              THEN l_extendedprice * (1 - l_discount)
-                              ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_revenue_pct,
-       count(*) AS n_rows
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-09-01' AND l_shipdate < TIMESTAMP '1996-10-01'
-"""
-
-
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-volume-customer shape: aggregate-then-join — the HAVING
-    filter reduces lineitem to qualifying orderkeys BEFORE the joins
-    (semi-join reduction by hand), so only large orders' rows reach
-    the customer/orders join."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-        .filter(F.col("sum_qty") > 300)
-    )
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("o_orderkey"),
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("totalprice"),
-            "sum_qty",
-        )
-        .orderBy(F.desc("totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
-
-
-ORACLE_TPCH_Q18 = """
-WITH big AS (
-  SELECT l_orderkey, round(sum(l_quantity), 2) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING round(sum(l_quantity), 2) > 300
-)
-SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-       round(o_totalprice, 2) AS totalprice, sum_qty
-FROM big
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY totalprice DESC, o_orderkey
-LIMIT 20
-"""
-
-
-def q_events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized-rollup aggregate shape (plans/rollup.py):
-    hourly window × event_type with mergeable aggregates. Value sums
-    are per-item integer cents so the differential is order-independent
-    (same discipline as tpch_q10); the incremental-maintenance path
-    (partition-scoped merge) is pytest-gated in test_rollup.py."""
-    e = _t(spark, sf_dir, "events")
-    epoch = F.unix_timestamp("ts")
-    w = (epoch - F.pmod(epoch, F.lit(3600))).alias("w")
-    cents = F.round(F.col("value") * 100).cast("long")
-    return (
-        e.select(w, "event_type", F.col("value"), cents.alias("_c"))
-        .groupBy("w", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("_c").alias("sum_cents"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-    )
-
-
-ORACLE_EVENTS_HOURLY_ROLLUP = """
-SELECT floor(epoch(ts))::BIGINT - floor(epoch(ts))::BIGINT % 3600 AS w,
-       event_type,
-       count(*) AS n_rows,
-       sum(round(value * 100)::BIGINT)::BIGINT AS sum_cents,
-       min(value) AS min_value,
-       max(value) AS max_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-ingest dedup: a NEW batch (doc_id % 5 == 0) checked
-    against the EXISTING corpus's persisted LSH index (doc_id % 5 != 0)
-    — pairs only across the two sides, never a corpus self-join. The
-    incremental cost is O(batch + bucket candidates), independent of
-    corpus size (operators/dedup.py:incremental_neardup_pairs).
-
-    The corpus index is a ``prebuilt`` index entry, as the operator's
-    contract has it (read back from a table, not recomputed);
-    docs_minhash_lsh_pairs keeps the build cost measured."""
-    from s3logs_parquet_spark.operators.dedup import (
-        incremental_neardup_pairs,
-        minhash_banded,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    batch = d.filter(F.col("doc_id") % 5 == 0)
-    index = prebuilt(
-        spark,
-        ("docs_incremental_neardup", sf_dir),
-        lambda: minhash_banded(
-            d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", num_hashes=32, bands=8
-        ),
-    )
-    pairs = incremental_neardup_pairs(
-        batch,
-        index,
-        num_hashes=32,
-        bands=8,
-        shingle_k=3,
-        jaccard_threshold=0.3,
-    )
-    return pairs.select(
-        "batch_id", "corpus_id", F.round("est_jaccard", 6).alias("est_jaccard")
-    )
-
-
-def _oracle_incremental_neardup(num_hashes: int = 32, bands: int = 8) -> str:
-    from s3logs_parquet_spark.functions.hashing import affine_coeffs
-
-    coeffs = affine_coeffs(num_hashes, 42)
-    rows_per_band = num_hashes // bands
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, x -> ({a} * x + {b}) % 2147483647))" for a, b in coeffs
-    )
-    band_eq = " OR ".join(
-        f"a.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}] = b.sig[{b * rows_per_band + 1}:{(b + 1) * rows_per_band}]"
-        for b in range(bands)
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), g AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(ws) - 3, 0)),
-           i -> array_to_string(array_slice(ws, i + 1, i + 3), ' ')
-         )) AS grams
-  FROM d
-), h AS (
-  SELECT doc_id, list_transform(grams, s -> {hash32_sql('s')} % 2147483647) AS sh FROM g
-), s AS (
-  SELECT doc_id, [{sig_terms}] AS sig FROM h
-)
-SELECT a.doc_id AS batch_id, b.doc_id AS corpus_id,
-       round(len(list_filter(generate_series(1, {num_hashes}), i -> a.sig[i] = b.sig[i]))::DOUBLE / {num_hashes}, 6) AS est_jaccard
-FROM s a JOIN s b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-WHERE ({band_eq})
-  AND len(list_filter(generate_series(1, {num_hashes}), i -> a.sig[i] = b.sig[i]))::DOUBLE / {num_hashes} >= 0.3
-"""
-
-
-def q_emb_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality evaluation: recall@10 of the hyperplane-LSH path
-    against exact brute-force top-10, per query. The standard metric a
-    production ANN deployment monitors; both sides are deterministic
-    here, so even the recall VALUE differential-tests."""
-    from s3logs_parquet_spark.operators.ann import brute_force_topk, lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    exact = brute_force_topk(emb, queries, "vec_id", "query_id", k=10).select(
-        "query_id", "vec_id"
-    )
-    approx = lsh_topk(
-        emb, queries, "vec_id", "query_id", k=10, n_bands=12, bits_per_band=4
-    ).select("query_id", F.col("vec_id").alias("_lv"))
-    # broadcast: both sides are ≤ k·|queries| rows BY CONSTRUCTION
-    # (top-k per query), but post-window size estimates push the join
-    # to SortMergeJoin with its exchanges+sorts — the same
-    # provably-tiny-side case as events_kmv_set_ops (round 13, §3.1)
-    j = exact.join(
-        F.broadcast(approx),
-        (exact.query_id == approx.query_id) & (exact.vec_id == approx._lv),
-        "left",
-    ).select(exact.query_id, "vec_id", "_lv")
-    return j.groupBy("query_id").agg(
-        F.count("_lv").alias("n_overlap"),
-        F.round(F.count("_lv") / F.lit(10.0), 6).alias("recall_at_10"),
-    )
-
-
-def _oracle_emb_lsh_recall() -> str:
-    return f"""
-SELECT e.query_id,
-       count(l.vec_id)::BIGINT AS n_overlap,
-       round(count(l.vec_id)::DOUBLE / 10.0, 6) AS recall_at_10
-FROM ({ORACLE_EMB_TOPK}) e
-LEFT JOIN ({_oracle_emb_lsh()}) l
-  ON e.query_id = l.query_id AND e.vec_id = l.vec_id
-GROUP BY e.query_id
-"""
-
-
-def q_orders_bloom_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter runtime join prefilter (operators/bloom.py): a
-    selective customer cut builds a 16 KiB bloom over its keys; the
-    orders scan probes it MAP-ONLY (no exchange, no broadcast join)
-    before the real join, so at 100 TB the join's shuffle only ever
-    sees fact rows that can match (plus a ~1% false-positive tail).
-    The exact join after the probe makes false positives harmless —
-    the oracle is the PLAIN join, which the probed plan must equal
-    row-for-row."""
-    from s3logs_parquet_spark.operators.bloom import bloom_build, bloom_probe
-
-    c = _t(spark, sf_dir, "customer").filter(
-        (F.col("c_mktsegment") == "BUILDING") & (F.col("c_acctbal") > 5000)
-    )
-    o = _t(spark, sf_dir, "orders")
-    bits = bloom_build(c, "c_custkey")
-    probed = bloom_probe(o, "o_custkey", bits)
-    return (
-        probed.join(F.broadcast(c), probed.o_custkey == c.c_custkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-ORACLE_ORDERS_BLOOM = """
-SELECT o_orderpriority,
-       count(*)::BIGINT AS n_orders,
-       sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 5000
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composite ANN (operators/ann.py ivfpq_topk): trained
-    coarse quantizer (same deterministic 2-iteration Lloyd as
-    emb_ivf_trained_topk) prunes to each query's 2 nearest cells, ADC
-    over 4-byte PQ codes ranks candidates inside those cells, exact
-    cosine reranks the top 50. The oracle unrolls train + assign +
-    probe + codebooks + codes + ADC + rerank in SQL — the full FAISS
-    `IVF8,PQ4` pipeline value-checked end to end.
-
-    A ``prebuilt`` index entry: the deterministic centroids, codebooks
-    and encoded corpus; emb_ivf_trained_topk keeps the train-included
-    cost measured."""
-    from s3logs_parquet_spark.operators.ann import (
-        build_flat,
-        ivf_train,
-        ivfpq_encode_corpus,
-        ivfpq_topk,
-        pq_codebooks,
-        rebind_onto,
-    )
-    from s3logs_parquet_spark.session import materialize
-
-    emb = _t(spark, sf_dir, "embeddings")
-
-    def build():
-        cents = ivf_train(emb, "embedding", n_cells=8, iters=2, id_col="vec_id")
-        cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
-        # the write-side precompute, checkpointed once per session:
-        # repeat calls (the bench's timed runs, production query
-        # batches) pay probe+ADC+rerank only — and skip re-generating
-        # + re-compiling the encode kernel per call. build_flat: the
-        # fused assign+PQ-tables span cannot compile (64 KB method
-        # limit) — skip the doomed whole-stage compile for this one-off
-        # build; rebind_onto returns the checkpointed frame to the
-        # caller's session so the probe keeps whole-stage codegen
-        enc = rebind_onto(
-            materialize(build_flat(ivfpq_encode_corpus(emb, "vec_id", cents, cbs))),
-            spark,
-        )
-        return cents, cbs, enc
-
-    cents, cbs, enc = prebuilt(spark, ("emb_ivfpq_topk", sf_dir), build)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    out = ivfpq_topk(
-        emb,
-        queries,
-        "vec_id",
-        "query_id",
-        cents,
-        cbs,
-        k=10,
-        n_probe=2,
-        n_candidates=50,
-        encoded=enc,
-    )
-    return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def _oracle_emb_ivfpq(
-    n_cells: int = 8,
-    iters: int = 2,
-    n_probe: int = 2,
-    m: int = 4,
-    sub: int = 16,
-    k_sub: int = 8,
-    n_candidates: int = 50,
-    k: int = 10,
-    dim: int = 64,
-) -> str:
-    """Train/assign/probe CTEs from _oracle_emb_ivf_trained composed
-    with the codebook/code/ADC CTEs from _oracle_emb_pq, candidates
-    restricted to probed cells."""
-
-    def cos(a: str, b: str) -> str:
-        return f"{_SQL_DOT.format(a=a, b=b)} / ({_SQL_NORM.format(a=a)} * {_SQL_NORM.format(a=b)})"
-
-    def sq(a: str, b: str, off: int) -> str:
-        return (
-            f"list_reduce(list_prepend(0.0, list_transform(generate_series(1, {sub}), "
-            f"i -> ({a}[{off} + i] - {b}[{off} + i]) * ({a}[{off} + i] - {b}[{off} + i]))), "
-            "(x, y) -> x + y)"
-        )
-
-    sql = f"""
-WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), c0 AS (
-  SELECT vec_id AS cell, v AS cv FROM emb WHERE vec_id < {n_cells}
-)"""
-    prev = "c0"
-    for t in range(1, iters + 1):
-        sql += f""", a{t} AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos('e.v', 'c.cv')} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-), m{t} AS (
-  SELECT cell, list(a ORDER BY i) AS cv FROM (
-    SELECT cell, i, avg(v[i]) AS a
-    FROM a{t} CROSS JOIN generate_series(1, {dim}) t(i)
-    GROUP BY cell, i
-  ) GROUP BY cell
-), c{t} AS (
-  SELECT p.cell, coalesce(m.cv, p.cv) AS cv FROM {prev} p LEFT JOIN m{t} m USING (cell)
-)"""
-        prev = f"c{t}"
-
-    vdists = ", ".join(f"{sq('v.ev', 'c.cv', j * sub)} AS d{j}" for j in range(m))
-    qdists = ", ".join(f"{sq('q.qv', 'c.cv', j * sub)} AS d{j}" for j in range(m))
-    ranks = ", ".join(
-        f"row_number() OVER (PARTITION BY vec_id ORDER BY d{j}, cid) AS r{j}" for j in range(m)
-    )
-    code_pick = ", ".join(f"max(CASE WHEN r{j} = 1 THEN cid END) AS code{j}" for j in range(m))
-    qts = ", ".join(f"list(d{j} ORDER BY cid) AS qt{j}" for j in range(m))
-    adc = " + ".join(f"t.qt{j}[kk.code{j} + 1]" for j in range(m))
-    sql += f""", assign AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos('e.v', 'c.cv')} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5
-), probes AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT q.query_id, q.qv, c.cell,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {cos('q.qv', 'c.cv')} DESC, c.cell) AS rn
-    FROM q CROSS JOIN {prev} c
-  ) WHERE rn <= {n_probe}
-), cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding::DOUBLE[] AS cv
-  FROM embeddings ORDER BY vec_id LIMIT {k_sub}
-), e2 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-), vdist AS (
-  SELECT v.vec_id, c.cid, {vdists} FROM e2 v CROSS JOIN cb c
-), vrank AS (
-  SELECT vec_id, cid, {ranks} FROM vdist
-), codes AS (
-  SELECT vec_id, {code_pick} FROM vrank GROUP BY vec_id
-), qdist AS (
-  SELECT q.query_id, c.cid, {qdists} FROM (SELECT query_id, qv FROM q) q CROSS JOIN cb c
-), qt AS (
-  SELECT query_id, {qts} FROM qdist GROUP BY query_id
-), cellcand AS (
-  SELECT p.query_id, a.vec_id
-  FROM probes p JOIN assign a ON a.cell = p.cell
-), scored AS (
-  SELECT cc.query_id, cc.vec_id, {adc} AS adc
-  FROM cellcand cc
-  JOIN codes kk ON kk.vec_id = cc.vec_id
-  JOIN qt t ON t.query_id = cc.query_id
-), cand AS (
-  SELECT query_id, vec_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS crank
-  FROM scored
-), rr AS (
-  SELECT s.query_id, s.vec_id,
-         {_SQL_DOT.format(a='e.ev', b='q.qv')}
-         / ({_SQL_NORM.format(a='e.ev')} * {_SQL_NORM.format(a='q.qv')}) AS cos_raw
-  FROM cand s
-  JOIN e2 e ON e.vec_id = s.vec_id
-  JOIN q ON q.query_id = s.query_id
-  WHERE s.crank <= {n_candidates}
-), ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM rr
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
-    return sql
-
-
-def q_docs_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document duplicate-trigram fraction
-    (operators/dedup.py dup_ngram_fraction): the Gopher/RefinedWeb-style
-    boilerplate signal — per doc, the share of its trigram occurrences
-    whose trigram appears in ≥2 distinct docs."""
-    from s3logs_parquet_spark.operators.dedup import dup_ngram_fraction
-
-    d = _t(spark, sf_dir, "documents")
-    return dup_ngram_fraction(d, "doc_id", "text", n=3, min_docs=2)
-
-
-ORACLE_DOCS_DUP_NGRAM = f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), ngr AS (
-  SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS ng
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i FROM toks)
-), pairs AS (
-  SELECT doc_id, ng, count(*) AS cnt FROM ngr GROUP BY 1, 2
-), nd AS (
-  SELECT ng, count(*) AS n_docs FROM pairs GROUP BY 1
-)
-SELECT p.doc_id,
-       sum(p.cnt)::BIGINT AS n_ngrams,
-       round(sum(CASE WHEN d.n_docs >= 2 THEN p.cnt ELSE 0 END)::DOUBLE
-             / sum(p.cnt), 6) AS dup_fraction
-FROM pairs p JOIN nd d USING (ng)
-GROUP BY p.doc_id
-"""
-
-
-# the span-gate DataFrame, built once per (gate, session, sf_dir) — a
-# prepared statement (session.prebuilt plan entry): execution still
-# re-runs every stage; the entry saves only plan construction
-# (measured for docs_remove_dup_spans at sf0.1, 4 cores, median of 10
-# pairs: 0.89 s per call with it, 1.02 s without).
-def _span_gate(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
-    from s3logs_parquet_spark.operators.dedup import (
-        duplicated_spans,
-        remove_duplicated_spans,
-    )
-
-    fn = duplicated_spans if which == "report" else remove_duplicated_spans
-    return prebuilt(
-        spark,
-        ("_span_gate", which, sf_dir),
-        lambda: fn(_t(spark, sf_dir, "documents"), "doc_id", "text", n=13, min_docs=2),
-    )
-
-
-def q_docs_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr-style duplicated-span coverage
-    (operators/dedup.py duplicated_spans): per document, the MERGED
-    token spans covered by 13-grams occurring in >=2 distinct docs —
-    which stretches an exact-substring dedup pass would cut, and the
-    covered-token fraction. The oracle replays the identical
-    gaps-and-islands window SQL (lag + running break-sum) in DuckDB."""
-    return _span_gate(spark, sf_dir, "report")
-
-
-def _oracle_docs_dup_spans(n: int = 13, min_docs: int = 2) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), starts AS (
-  SELECT doc_id, i AS pos, array_to_string(ws[i:i+{n - 1}], ' ') AS ng
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - {n - 1})) AS i FROM toks)
-), pairs AS (
-  SELECT DISTINCT doc_id, ng FROM starts
-), freq AS (
-  SELECT ng FROM pairs GROUP BY ng HAVING count(*) >= {min_docs}
-), dup_starts AS (
-  SELECT s.doc_id, s.pos FROM starts s JOIN freq f USING (ng)
-), flagged AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - lag(pos) OVER w <= {n} THEN 0 ELSE 1 END AS brk
-  FROM dup_starts WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), islands AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS isl
-  FROM flagged
-), spans AS (
-  SELECT doc_id, isl, max(pos) - min(pos) + {n} AS cov
-  FROM islands GROUP BY doc_id, isl
-), per_doc AS (
-  SELECT doc_id, count(*) AS n_spans, sum(cov) AS dup_tokens
-  FROM spans GROUP BY doc_id
-)
-SELECT t.doc_id,
-       len(t.ws)::BIGINT AS n_tokens,
-       coalesce(p.n_spans, 0)::BIGINT AS n_spans,
-       coalesce(p.dup_tokens, 0)::BIGINT AS dup_tokens,
-       CASE WHEN len(t.ws) > 0
-            THEN round(coalesce(p.dup_tokens, 0)::DOUBLE / len(t.ws), 6)
-       END AS dup_coverage
-FROM toks t LEFT JOIN per_doc p USING (doc_id)
-"""
-
-
-ORACLE_DOCS_DUP_SPANS = _oracle_docs_dup_spans()
-
-
-def q_docs_remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr excision (operators/dedup.py remove_duplicated_spans):
-    the APPLY half of docs_duplicated_spans — cut every merged
-    cross-document 13-gram span and emit the cleaned token stream. The
-    oracle replays the same island SQL, re-expands covered positions
-    with generate_series, anti-joins the posexploded token stream, and
-    rebuilds with string_agg ORDER BY pos — value-checking the whole
-    reconstruction including token order."""
-    return _span_gate(spark, sf_dir, "remove")
-
-
-def _oracle_docs_remove_spans(n: int = 13, min_docs: int = 2) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), starts AS (
-  SELECT doc_id, i AS pos, array_to_string(ws[i:i+{n - 1}], ' ') AS ng
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - {n - 1})) AS i FROM toks)
-), pairs AS (
-  SELECT DISTINCT doc_id, ng FROM starts
-), freq AS (
-  SELECT ng FROM pairs GROUP BY ng HAVING count(*) >= {min_docs}
-), dup_starts AS (
-  SELECT s.doc_id, s.pos FROM starts s JOIN freq f USING (ng)
-), flagged AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - lag(pos) OVER w <= {n} THEN 0 ELSE 1 END AS brk
-  FROM dup_starts WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), islands AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS isl
-  FROM flagged
-), spans AS (
-  SELECT doc_id, isl, min(pos) AS s, max(pos) + {n - 1} AS e
-  FROM islands GROUP BY doc_id, isl
-), covered AS (
-  SELECT doc_id, unnest(generate_series(s, e)) AS pos FROM spans
-), stream AS (
-  SELECT doc_id, pos, ws[pos] AS tok
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS pos FROM toks)
-), kept AS (
-  SELECT st.doc_id, st.pos, st.tok
-  FROM stream st LEFT JOIN covered c
-    ON st.doc_id = c.doc_id AND st.pos = c.pos
-  WHERE c.pos IS NULL
-), rebuilt AS (
-  SELECT doc_id, count(*) AS kept,
-         string_agg(tok, ' ' ORDER BY pos) AS clean_text
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       len(t.ws)::BIGINT AS n_tokens,
-       (len(t.ws) - coalesce(r.kept, 0))::BIGINT AS removed_tokens,
-       coalesce(r.clean_text, '') AS clean_text
-FROM toks t LEFT JOIN rebuilt r USING (doc_id)
-"""
-
-
-ORACLE_DOCS_REMOVE_SPANS = _oracle_docs_remove_spans()
-
-
-def q_events_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) interleave key (operators/layout.py
-    zorder_key): 10 bits each of a user bucket and a time bucket — the
-    clustering key write_zordered range-partitions on so parquet
-    min/max stats prune files on EITHER dimension. The oracle unrolls
-    the identical shift/AND interleave in SQL, value-checking every
-    bit position."""
-    from s3logs_parquet_spark.operators.layout import zorder_key
-
-    e = _t(spark, sf_dir, "events")
-    x = F.pmod(F.col("user_id"), F.lit(1024))
-    y = F.pmod(F.unix_timestamp("ts"), F.lit(1024))
-    return e.select("event_id", zorder_key([x, y], bits=10).alias("zkey"))
-
-
-def _oracle_events_zorder(bits: int = 10) -> str:
-    terms = []
-    for b in range(bits):
-        terms.append(f"(((x >> {b}) & 1) << {2 * b})")
-        terms.append(f"(((y >> {b}) & 1) << {2 * b + 1})")
-    z = " + ".join(terms)
-    return f"""
-SELECT event_id, ({z})::BIGINT AS zkey
-FROM (
-  SELECT event_id,
-         user_id % 1024 AS x,
-         floor(epoch(ts))::BIGINT % 1024 AS y
-  FROM events
-)
-"""
-
-
-def q_events_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve clustering key (operators/layout.py hilbert_key):
-    10 bits each of a user bucket and a time bucket — the
-    locality-preserving alternative write_hilbert_clustered
-    range-partitions on (every curve step is unit Manhattan distance,
-    so clustered files cover tighter rectangles than the Z curve's
-    seam-jumping ranges). Spark runs the xy2d walk as ONE JVM-side
-    higher-order fold over the descending s-value array with a
-    (x, y, d) struct accumulator; the oracle replays the identical
-    per-level rotate-and-accumulate as a DuckDB recursive CTE
-    (DuckDB 1.0's list_reduce mis-vectorizes branching struct lambdas
-    across rows, so the fold form is Spark-side only), value-checking
-    every level's rotation arithmetic."""
-    from s3logs_parquet_spark.operators.layout import hilbert_key
-
-    e = _t(spark, sf_dir, "events")
-    x = F.pmod(F.col("user_id"), F.lit(1024))
-    y = F.pmod(F.unix_timestamp("ts"), F.lit(1024))
-    return e.select("event_id", hilbert_key(x, y, bits=10).alias("hkey"))
-
-
-def _oracle_events_hilbert(bits: int = 10) -> str:
-    return f"""
-WITH RECURSIVE src AS (
-  SELECT event_id,
-         (user_id % 1024)::BIGINT AS x0,
-         (floor(epoch(ts))::BIGINT % 1024)::BIGINT AS y0
-  FROM events
-), h AS (
-  SELECT event_id, x0 AS x, y0 AS y, {1 << (bits - 1)}::BIGINT AS s, 0::BIGINT AS d
-  FROM src
-  UNION ALL
-  SELECT event_id,
-    CASE WHEN (y & s) > 0 THEN x WHEN (x & s) > 0 THEN s - 1 - y ELSE y END,
-    CASE WHEN (y & s) > 0 THEN y WHEN (x & s) > 0 THEN s - 1 - x ELSE x END,
-    s // 2,
-    d + s * s * xor(3 * (CASE WHEN (x & s) > 0 THEN 1 ELSE 0 END)::BIGINT,
-                    (CASE WHEN (y & s) > 0 THEN 1 ELSE 0 END)::BIGINT)
-  FROM h WHERE s > 0
-)
-SELECT event_id, d AS hkey FROM h WHERE s = 0
-"""
-
-
-def q_docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPS systematic sampling (operators/sampling.py): ~50 docs drawn
-    with probability proportional to n_chars — the deterministic
-    quality/length-weighted corpus draw. Selection is pure integer
-    arithmetic over the portable hash (binned prefix sum, no global
-    window), so the oracle replicates it bit-for-bit with a SQL window
-    cumsum."""
-    from s3logs_parquet_spark.operators.sampling import weighted_systematic_sample
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    out = weighted_systematic_sample(d, "n_chars", k=50, id_col="doc_id")
-    return out.select(
-        "doc_id", "source", F.col("n_chars").alias("weight"), "n_copies"
-    )
-
-
-ORACLE_DOCS_WEIGHTED_SAMPLE = f"""
-WITH w AS (
-  SELECT doc_id, source, n_chars::BIGINT AS w,
-         {hash32_sql("doc_id::VARCHAR")} AS h
-  FROM documents
-), tot AS (
-  SELECT sum(w)::BIGINT AS tw FROM w
-), par AS (
-  SELECT greatest(tw // 50, 1)::BIGINT AS step,
-         (greatest(tw // 50, 1) // 2)::BIGINT AS off
-  FROM tot
-), c AS (
-  SELECT doc_id, source, w,
-         coalesce(sum(w) OVER (ORDER BY h, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cs
-  FROM w
-), sel AS (
-  SELECT doc_id, source, w,
-         (least(50, greatest(0, (cs + w - off + step - 1) // step))
-        - least(50, greatest(0, (cs - off + step - 1) // step)))::BIGINT AS n_copies
-  FROM c CROSS JOIN par
-)
-SELECT doc_id, source, w AS weight, n_copies FROM sel WHERE n_copies >= 1
-"""
-
-
-def q_docs_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-balanced mixture sampling (operators/sampling.py):
-    per-source quotas ∝ sqrt(count) (alpha = 0.5 — the multilingual
-    corpus-mixing rule), filled by hash-of-id rank. sqrt is IEEE
-    correctly-rounded, so the integer quota math is engine-exact."""
-    from s3logs_parquet_spark.operators.sampling import mixture_sample
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    out = mixture_sample(d, "source", "doc_id", k_total=60, alpha=0.5)
-    return out.select("source", "doc_id", "sample_rank", "quota")
-
-
-ORACLE_DOCS_MIXTURE_SAMPLE = f"""
-WITH n AS (
-  SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY source
-), w AS (
-  SELECT source, floor(sqrt(n::DOUBLE))::BIGINT AS w FROM n
-), t AS (
-  SELECT sum(w)::BIGINT AS tw FROM w
-), q AS (
-  SELECT source, greatest(1, (60 * w) // tw)::BIGINT AS quota
-  FROM w CROSS JOIN t
-), r AS (
-  SELECT d.source, d.doc_id,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY {hash32_sql("d.doc_id::VARCHAR")}, d.doc_id)::INT AS sample_rank
-  FROM documents d
-)
-SELECT r.source, r.doc_id, r.sample_rank, q.quota
-FROM r JOIN q USING (source)
-WHERE r.sample_rank <= q.quota
-"""
-
-
-def q_events_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable quantile estimation (operators/sketches.py): exact
-    order statistics of a deterministic 256-row bottom-k-hash sample —
-    percentile_approx's job, but as a pure function of the data the
-    oracle reproduces exactly (the estimates are raw value
-    passthroughs, so no float arithmetic at all crosses engines)."""
-    from s3logs_parquet_spark.operators.sketches import sampled_quantiles
-
-    e = _t(spark, sf_dir, "events")
-    return sampled_quantiles(
-        e, "value", "event_id", k=256, probs=(0.25, 0.5, 0.9, 0.99)
-    )
-
-
-ORACLE_EVENTS_SAMPLED_QUANTILES = f"""
-WITH s AS (
-  SELECT value AS v FROM (
-    SELECT value, {hash32_sql("event_id::VARCHAR")} AS h, event_id
-    FROM events WHERE value IS NOT NULL
-    ORDER BY h, event_id LIMIT 256
-  )
-), r AS (
-  SELECT v, row_number() OVER (ORDER BY v) AS rn, count(*) OVER () AS n FROM s
-)
-SELECT pr.p, r.v AS est_value
-FROM (VALUES (0.25::DOUBLE), (0.5::DOUBLE), (0.9::DOUBLE), (0.99::DOUBLE)) pr(p)
-JOIN r ON r.rn = 1 + floor(pr.p * (r.n - 1))::BIGINT
-"""
-
-# (q_events_sampled_quantiles retired round 7 for the
-# events_quantiles_by_type slot: its exact computation — same k=256
-# bottom-k-hash sample, same probs, same order-statistic index — runs
-# verbatim as the gate's ALL leg below, value-checked row for row.
-# Function and oracle stay for direct use.)
-
-
-def q_events_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped mergeable quantile estimation
-    (operators/sketches.py group_sampled_quantiles): per-event-type
-    exact order statistics of each group's deterministic 256-row
-    bottom-k-hash sample, plus an ALL row computed by the global
-    sampled_quantiles — the grouped percentile_approx report, as a
-    pure function of the data. Scale shape: the per-group sample is
-    two-level (partition-local bottom-k first, so a hot group's sort
-    spreads across the cluster; the final per-group rank sees
-    ≤ k·partitions rows), and every estimate is a raw value
-    passthrough, so no float arithmetic crosses engines."""
-    from s3logs_parquet_spark.operators.sketches import (
-        group_sampled_quantiles,
-        sampled_quantiles,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    probs = (0.25, 0.5, 0.9, 0.99)
-    per = group_sampled_quantiles(
-        e, ["event_type"], "value", "event_id", k=256, probs=probs
-    )
-    allq = sampled_quantiles(e, "value", "event_id", k=256, probs=probs).select(
-        F.lit("ALL").alias("event_type"), "p", "est_value"
-    )
-    return per.unionByName(allq).orderBy("event_type", "p")
-
-
-ORACLE_EVENTS_QUANTILES_BY_TYPE = f"""
-WITH s AS (
-  SELECT event_type AS g, value AS v,
-         row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY {hash32_sql("event_id::VARCHAR")}, event_id
-         ) AS srn
-  FROM events WHERE value IS NOT NULL
-), sk AS (
-  SELECT g, v FROM s WHERE srn <= 256
-), ga AS (
-  SELECT 'ALL' AS g, value AS v FROM (
-    SELECT value, {hash32_sql("event_id::VARCHAR")} AS h, event_id
-    FROM events WHERE value IS NOT NULL
-    ORDER BY h, event_id LIMIT 256
-  )
-), u AS (
-  SELECT g, v FROM sk UNION ALL SELECT g, v FROM ga
-), r AS (
-  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-         count(*) OVER (PARTITION BY g) AS n
-  FROM u
-)
-SELECT r.g AS event_type, pr.p, r.v AS est_value
-FROM (VALUES (0.25::DOUBLE), (0.5::DOUBLE), (0.9::DOUBLE), (0.99::DOUBLE)) pr(p)
-JOIN r ON r.rn = 1 + floor(pr.p * (r.n - 1))::BIGINT
-ORDER BY event_type, p
-"""
-
-
-def q_emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (operators/dedup.py
-    embedding_neardup_pairs): hyperplane-LSH banded candidates (12
-    bands × 6 bits — shaped for the 0.45 threshold per the
-    (1-θ/π)^bits band-collision rule), exact cosine on candidates. The
-    oracle regenerates the same ±1 planes and unit-vector arithmetic,
-    value-checking candidate generation AND verification end-to-end."""
-    from s3logs_parquet_spark.operators.dedup import embedding_neardup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # materialize stays at the operator default (localCheckpoint of the
-    # banded frame): the self-join then scans cached blocks instead of
-    # embedding the generated banding kernel in BOTH join children —
-    # whole-stage codegen of two fused 4,608-term expressions measured
-    # 90+ s of janino compile at sf0.01 (vs 6 s with codegen off)
-    out = embedding_neardup_pairs(
-        emb,
-        "vec_id",
-        "embedding",
-        threshold=0.45,
-        n_bands=12,
-        bits_per_band=6,
-    )
-    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def _oracle_emb_neardup(
-    threshold: float = 0.45, n_bands: int = 12, bits_per_band: int = 6, dim: int = 64
-) -> str:
-    """Replicates embedding_neardup_pairs exactly: bands from the RAW
-    vector via the same integer-quantized projection as the engine
-    kernel (sign bits are scale-invariant, so banding raw equals
-    banding normalized mathematically; quantized integer sums make the
-    two engines agree bit-for-bit), unit vectors for the exact cosine
-    verification, plane literals from the same seeded LCG."""
-    from s3logs_parquet_spark.operators.ann import plane_signs
-
-    planes = plane_signs(n_bands * bits_per_band, dim, 42)
-    bks = _band_keys_sql(planes, n_bands, bits_per_band, dim)
-    norm_u = "sqrt(list_reduce(list_prepend(0.0, list_transform({a}, x -> x * x)), (x, y) -> x + y))"
-    dot_uu = (
-        f"list_reduce(list_prepend(0.0, list_transform(generate_series(1, {dim}), "
-        "i -> ua[i] * ub[i])), (x, y) -> x + y)"
-    )
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), u0 AS (
-  SELECT vec_id, v, list_transform(v, x -> floor(x * 1048576.0)::BIGINT) AS qv,
-         list_transform(v, x -> x / sqrt(list_reduce(list_prepend(0.0,
-           list_transform(v, y -> y * y)), (a, b) -> a + b))) AS u
-  FROM c
-), keys AS (
-  SELECT vec_id, u, {bks} AS bks FROM u0
-), cand AS (
-  SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b, l.u AS ua, r.u AS ub
-  FROM keys l JOIN keys r ON l.vec_id < r.vec_id
-  CROSS JOIN generate_series(1, {n_bands}) t(b)
-  WHERE l.bks[b] = r.bks[b]
-), scored AS (
-  SELECT id_a, id_b,
-         {dot_uu} / ({norm_u.format(a="ua")} * {norm_u.format(a="ub")}) AS cos_raw
-  FROM cand
-)
-SELECT id_a, id_b, round(cos_raw, 6) AS cosine
-FROM scored WHERE cos_raw >= {threshold}
-"""
-
-
-def q_events_interval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap join (operators/temporal.py interval_join):
-    each click opens an attribution window [ts, ts + min(floor(value),
-    480)·60 s] — capped at 8 h, the declared span bound, so the query
-    is well-defined at ANY scale factor (`value` is unbounded in the
-    testdata; an uncapped window breached the bound at sf0.1 and
-    tripped the operator's span guard — exactly what the guard is
-    for). Pair each window with every same-user error inside it
-    (point-in-interval, the degenerate right side). Binned equi-join
-    candidates with the exact predicate as post-filter — the oracle is
-    DuckDB's plain inequality join, which the binned plan must equal
-    row-for-row."""
-    from s3logs_parquet_spark.operators.temporal import interval_join
-
-    e = _t(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts").alias("c_start"),
-        F.timestamp_add(
-            "SECOND",
-            (F.least(F.floor("value"), F.lit(480)) * 60).cast("int"),
-            F.col("ts"),
-        ).alias("c_end"),
-    )
-    errs = e.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id", F.col("ts").alias("e_ts")
-    )
-    j = interval_join(
-        clicks,
-        errs,
-        by=["user_id"],
-        left_start="c_start",
-        left_end="c_end",
-        right_start="e_ts",
-        right_end="e_ts",
-        max_span_seconds=480 * 60,
-    )
-    return j.select(
-        "user_id",
-        "click_id",
-        F.col("err_id_r").alias("err_id"),
-        F.unix_timestamp("c_start").alias("click_epoch"),
-        F.unix_timestamp("e_ts_r").alias("err_epoch"),
-    )
-
-
-ORACLE_EVENTS_INTERVAL_PAIRS = """
-WITH c AS (
-  SELECT event_id AS click_id, user_id, ts AS cs,
-         ts + least(floor(value)::BIGINT, 480) * 60 * INTERVAL 1 SECOND AS ce
-  FROM events WHERE event_type = 'click'
-), e AS (
-  SELECT event_id AS err_id, user_id, ts AS es
-  FROM events WHERE event_type = 'error'
-)
-SELECT c.user_id, c.click_id, e.err_id,
-       floor(epoch(c.cs))::BIGINT AS click_epoch,
-       floor(epoch(e.es))::BIGINT AS err_epoch
-FROM c JOIN e
-  ON c.user_id = e.user_id AND c.cs <= e.es AND e.es <= c.ce
-"""
-
-
-# Registry ORDER is part of the delivery contract: the driver's
-# correctness gate records only the FIRST 50 entries. The literal order
-# below is historical (round-3 window); the ACTUAL driver window is set
-# by the `_DRIVER_WINDOW_R04` reorder at the bottom of this module,
-# which rotates entries so every gate lands a driver-recorded row at
-# least every two rounds. tools/check_oracles.py (run in CI,
-# tests/test_oracles_full.py) still gates ALL entries.
-QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "tpch_q1_pricing_summary": (q_tpch_q1, ORACLE_TPCH_Q1),
-    "tpch_q5_local_supplier_volume": (q_tpch_q5, ORACLE_TPCH_Q5),
-    "tpch_q18_large_volume": (q_tpch_q18, ORACLE_TPCH_Q18),
-    "customer_orders_left_join": (q_customer_order_left, ORACLE_CUSTOMER_ORDER_LEFT),
-    "customers_without_orders_anti": (q_customers_no_orders, ORACLE_CUSTOMERS_NO_ORDERS),
-    "parts_with_lineitems_semi": (q_parts_with_lineitems, ORACLE_PARTS_WITH_LINEITEMS),
-    "orders_rank_window": (q_orders_rank_window, ORACLE_ORDERS_RANK),
-    "union_shipped_split": (q_union_shipped_split, ORACLE_UNION_SHIPPED),
-    "lineitem_quantiles": (q_lineitem_quantiles, ORACLE_LINEITEM_QUANTILES),
-    "lineitem_stats": (q_lineitem_stats, ORACLE_LINEITEM_STATS),
-    "events_pivot_by_type": (q_events_pivot_by_type, _oracle_events_pivot()),
-    "orders_lineitem_arrays": (q_orders_lineitem_arrays, ORACLE_ORDERS_ARRAYS),
-    "events_tumbling_window": (q_events_tumbling, ORACLE_EVENTS_TUMBLING),
-    "events_sliding_means": (q_events_sliding, ORACLE_EVENTS_SLIDING),
-    "events_session_windows": (q_events_sessions, ORACLE_EVENTS_SESSIONS),
-    "events_json_props": (q_events_json_props, ORACLE_EVENTS_JSON_PROPS),
-    # events_asof_click retired round 7 into its superset
-    # events_asof_click_chunked: the SAME query and the SAME DuckDB
-    # native-ASOF oracle, driver-gated through the skew-chunked path
-    # (which reduces to the plain path per the boundary-carry pytest);
-    # the plain path itself stays driver-gated via events_asof_next_click
-    # and events_asof_nearest_click below.
-    "events_asof_click_chunked": (q_events_asof_click_chunked, ORACLE_EVENTS_ASOF),
-    "events_asof_next_click": (q_events_asof_next_click, ORACLE_EVENTS_ASOF_NEXT),
-    "events_asof_nearest_click": (q_events_asof_nearest_click, ORACLE_EVENTS_ASOF_NEAREST),
-    "events_range_pairs": (q_events_range_pairs, ORACLE_EVENTS_RANGE_PAIRS),
-    "events_kmv_set_ops": (q_events_kmv_set_ops, ORACLE_EVENTS_KMV_SET_OPS),
-    "events_kmv_global": (q_events_kmv_global, ORACLE_EVENTS_KMV_GLOBAL),
-    "events_hourly_rollup": (q_events_hourly_rollup, ORACLE_EVENTS_HOURLY_ROLLUP),
-    "log_schema_widening": (q_log_schema_widening, ORACLE_LOG_SCHEMA_WIDENING),
-    "partition_prefix_tz": (q_partition_prefix_tz, ORACLE_PARTITION_PREFIX_TZ),
-    "s3log_pipeline_roundtrip": (q_log_pipeline, ORACLE_LOG_PIPELINE),
-    "s3log_parse_fields": (q_log_parse_fields, ORACLE_LOG_PARSE_FIELDS),
-    # docs_token_stats retired round 7 into its supersets (n_words in
-    # docs_quality_score; BPE segments materialized in
-    # docs_chunk_windows_bpe) — its window slot went to the new
-    # docs_remove_dup_spans gate
-    # docs_winnowing retired round 7 into its superset docs_decontaminate
-    # (the winnowing fingerprint pipeline is recomputed and hash-matched
-    # inside the decontamination overlap oracle — the docs_simhash ->
-    # docs_simhash_pairs retirement precedent); the function itself stays
-    # pytest-covered (test_text_functions).
-    "docs_exact_dedup": (q_docs_exact_dedup, ORACLE_DOCS_EXACT_DEDUP),
-    "docs_neardup_canonical_keep": (
-        q_docs_neardup_canonical_keep,
-        _oracle_canonical_keep(),
-    ),
-    # docs_simhash retired round 7: the signature computation is fully
-    # embedded (and value-checked per-pair) inside docs_simhash_pairs —
-    # retire-and-replace keeps the registry at 100 = 2x window
-    "docs_simhash_pairs": (q_docs_simhash_pairs, ORACLE_DOCS_SIMHASH_PAIRS),
-    "docs_minhash_lsh_pairs": (q_docs_minhash_pairs, _oracle_minhash()),
-    "docs_incremental_neardup": (q_docs_incremental_neardup, _oracle_incremental_neardup()),
-    "docs_neardup_clusters": (q_docs_neardup_clusters, _oracle_clusters()),
-    "docs_leakage_safe_split": (q_docs_leakage_safe_split, _oracle_leakage_split()),
-    "docs_curation_pipeline": (q_docs_curation_pipeline, _oracle_curation()),
-    "docs_decontaminate": (q_docs_decontaminate, ORACLE_DOCS_DECONTAMINATE),
-    "docs_stratified_sample": (q_docs_stratified_sample, ORACLE_DOCS_STRATIFIED),
-    "docs_selection_budget": (q_docs_selection_budget, ORACLE_DOCS_SELECTION_BUDGET),
-    "docs_clean_and_repetition": (q_docs_clean_and_repetition, ORACLE_DOCS_CLEAN_REP),
-    "docs_pii_redact": (q_docs_pii_redact, _oracle_pii_redact()),
-    # docs_doc_frequency retired round 7: the identical words()-df
-    # hash-agg is value-checked through docs_tfidf_similar_pairs'
-    # integer tf·(idf_scale DIV df) weights (the docs_simhash ->
-    # docs_simhash_pairs precedent); function + oracle stay above.
-    "docs_heavy_hitter_words": (q_docs_heavy_hitters, ORACLE_DOCS_HEAVY_HITTERS),
-    "emb_cosine_topk": (q_emb_topk, ORACLE_EMB_TOPK),
-    # emb_lsh_topk retired round 7 (see the comment at its former
-    # definition); its oracle builder lives on inside emb_lsh_recall's
-    "emb_lsh_recall": (q_emb_lsh_recall, _oracle_emb_lsh_recall()),
-    # emb_ivf_topk retired round 7: a strict subset of
-    # emb_ivf_trained_topk (identical ivf_topk probe/rerank path; only
-    # the centroid source differs, and the trained gate value-checks
-    # train -> assign -> probe -> rerank end-to-end)
-    "emb_ivf_trained_topk": (q_emb_ivf_trained_topk, _oracle_emb_ivf_trained()),
-    "multimodal_binary_meta": (q_multimodal_meta, ORACLE_MULTIMODAL_META),
-    "manifest_events_f2": (q_manifest_events_f2, ORACLE_MANIFEST_EVENTS_F2),
-    # --- 51+: variants of families already represented above ---
-    "orders_distinct_agg": (q_orders_distinct, ORACLE_ORDERS_DISTINCT),
-    "events_window_dedup": (q_events_window_dedup, ORACLE_EVENTS_WINDOW_DEDUP),
-    "tpch_q3_shipping_priority": (q_tpch_q3, ORACLE_TPCH_Q3),
-    "tpch_q6_forecast_revenue": (q_tpch_q6, ORACLE_TPCH_Q6),
-    "tpch_q10_returned_items": (q_tpch_q10, ORACLE_TPCH_Q10),
-    "tpch_q14_promo_effect": (q_tpch_q14, ORACLE_TPCH_Q14),
-    "part_topk_price": (q_part_topk, ORACLE_PART_TOPK),
-    "events_minmax_ts": (q_events_minmax, ORACLE_EVENTS_MINMAX),
-    "lineitem_rollup": (q_lineitem_rollup, ORACLE_LINEITEM_ROLLUP),
-    # (docs_quality_score retired round 8 into docs_selection_budget,
-    # which surfaces the identical per-doc quality values as its
-    # selection key — the strict-superset relation recorded at the r07
-    # window comment; the feature columns keep a direct DuckDB
-    # differential in tests/test_text_functions.py. Its registry slot
-    # goes to the round-8 batched-inference gate.)
-    "docs_inference_scores": (q_docs_inference_scores, ORACLE_DOCS_INFERENCE),
-    "docs_inference_mlp": (q_docs_inference_mlp, ORACLE_DOCS_INFERENCE_MLP),
-    "docs_langid": (q_docs_langid, _SQL_LANGID),
-    "docs_fingerprint": (q_docs_fingerprint, ORACLE_DOCS_FINGERPRINT),
-    "docs_split_assign": (q_docs_split_assign, ORACLE_DOCS_SPLIT),
-    "docs_dup_rate_by_source": (q_docs_dup_rate_by_source, ORACLE_DOCS_DUP_RATE),
-    "docs_lsh_pairs_capped": (q_docs_lsh_pairs_capped, _oracle_minhash_capped()),
-    "emb_pq_topk": (q_emb_pq_topk, _oracle_emb_pq()),
-    "lineitem_cube": (q_lineitem_cube, ORACLE_LINEITEM_CUBE),
-    "events_user_halves_full_outer": (q_events_user_halves_full_outer, ORACLE_EVENTS_FULL_OUTER),
-    # round 5: deterministic sampling family + embedding near-dup gate
-    "docs_weighted_sample": (q_docs_weighted_sample, ORACLE_DOCS_WEIGHTED_SAMPLE),
-    "docs_mixture_sample": (q_docs_mixture_sample, ORACLE_DOCS_MIXTURE_SAMPLE),
-    # events_sampled_quantiles retired round 7: its exact computation
-    # (same k/probs/hash/order-statistic index) runs verbatim as the
-    # ALL leg of events_quantiles_by_type, value-checked row for row.
-    "events_quantiles_by_type": (
-        q_events_quantiles_by_type,
-        ORACLE_EVENTS_QUANTILES_BY_TYPE,
-    ),
-    "emb_neardup_pairs": (q_emb_neardup_pairs, _oracle_emb_neardup()),
-    "events_interval_pairs": (q_events_interval_pairs, ORACLE_EVENTS_INTERVAL_PAIRS),
+_WINDOW_A = {
+    "events_kmv_global": (events.q_events_kmv_global, events.ORACLE_EVENTS_KMV_GLOBAL),
+    "s3log_parse_fields": (log_pipeline.q_log_parse_fields, log_pipeline.ORACLE_LOG_PARSE_FIELDS),
+    "docs_exact_dedup": (docs_neardup.q_docs_exact_dedup, docs_neardup.ORACLE_DOCS_EXACT_DEDUP),
+    "docs_minhash_lsh_pairs": (docs_neardup.q_docs_minhash_pairs, docs_neardup.ORACLE_DOCS_MINHASH),
+    "docs_incremental_neardup": (docs_neardup.q_docs_incremental_neardup, docs_neardup.ORACLE_DOCS_INCREMENTAL_NEARDUP),
+    "docs_neardup_clusters": (docs_neardup.q_docs_neardup_clusters, docs_neardup.ORACLE_DOCS_CLUSTERS),
+    "docs_curation_pipeline": (docs_neardup.q_docs_curation_pipeline, docs_neardup.ORACLE_DOCS_CURATION),
+    "emb_cosine_topk": (embeddings.q_emb_topk, embeddings.ORACLE_EMB_TOPK),
+    "emb_lsh_recall": (embeddings.q_emb_lsh_recall, embeddings.ORACLE_EMB_LSH_RECALL),
+    "emb_ivf_trained_topk": (embeddings.q_emb_ivf_trained_topk, embeddings.ORACLE_EMB_IVF_TRAINED),
+    "multimodal_binary_meta": (docs_text.q_multimodal_meta, docs_text.ORACLE_MULTIMODAL_META),
+    "orders_distinct_agg": (relational.q_orders_distinct, relational.ORACLE_ORDERS_DISTINCT),
+    "events_window_dedup": (events.q_events_window_dedup, events.ORACLE_EVENTS_WINDOW_DEDUP),
+    "tpch_q3_shipping_priority": (relational.q_tpch_q3, relational.ORACLE_TPCH_Q3),
+    "tpch_q6_forecast_revenue": (relational.q_tpch_q6, relational.ORACLE_TPCH_Q6),
+    "tpch_q10_returned_items": (relational.q_tpch_q10, relational.ORACLE_TPCH_Q10),
+    "tpch_q14_promo_effect": (relational.q_tpch_q14, relational.ORACLE_TPCH_Q14),
+    "part_topk_price": (relational.q_part_topk, relational.ORACLE_PART_TOPK),
+    "events_minmax_ts": (events.q_events_minmax, events.ORACLE_EVENTS_MINMAX),
+    "emb_semantic_dedup": (embeddings.q_emb_semantic_dedup, embeddings.ORACLE_EMB_SEMANTIC_DEDUP),
+    "lineitem_rollup": (relational.q_lineitem_rollup, relational.ORACLE_LINEITEM_ROLLUP),
+    "docs_inference_scores": (docs_text.q_docs_inference_scores, docs_text.ORACLE_DOCS_INFERENCE),
+    "docs_langid": (docs_text.q_docs_langid, docs_text.ORACLE_DOCS_LANGID),
+    "docs_fingerprint": (docs_text.q_docs_fingerprint, docs_text.ORACLE_DOCS_FINGERPRINT),
+    "docs_chunk_windows": (docs_text.q_docs_chunk_windows, docs_text.ORACLE_DOCS_CHUNKS),
+    "docs_split_assign": (docs_text.q_docs_split_assign, docs_text.ORACLE_DOCS_SPLIT),
+    "docs_dup_rate_by_source": (docs_neardup.q_docs_dup_rate_by_source, docs_neardup.ORACLE_DOCS_DUP_RATE),
+    "docs_lsh_pairs_capped": (docs_neardup.q_docs_lsh_pairs_capped, docs_neardup.ORACLE_DOCS_LSH_CAPPED),
+    "emb_pq_topk": (embeddings.q_emb_pq_topk, embeddings.ORACLE_EMB_PQ),
+    "lineitem_cube": (relational.q_lineitem_cube, relational.ORACLE_LINEITEM_CUBE),
+    "events_user_halves_full_outer": (events.q_events_user_halves_full_outer, events.ORACLE_EVENTS_FULL_OUTER),
+    "tpch_q4_order_priority": (tpch_extra.q_tpch_q4, tpch_extra.ORACLE_TPCH_Q4),
+    "tpch_q7_nation_volume": (tpch_extra.q_tpch_q7, tpch_extra.ORACLE_TPCH_Q7),
+    "tpch_q8_market_share": (tpch_extra.q_tpch_q8, tpch_extra.ORACLE_TPCH_Q8),
+    "tpch_q12_late_shipment": (tpch_extra.q_tpch_q12, tpch_extra.ORACLE_TPCH_Q12),
+    "tpch_q13_order_distribution": (tpch_extra.q_tpch_q13, tpch_extra.ORACLE_TPCH_Q13),
+    "tpch_q15_top_supplier": (tpch_extra.q_tpch_q15, tpch_extra.ORACLE_TPCH_Q15),
+    "tpch_q17_small_qty_revenue": (tpch_extra.q_tpch_q17, tpch_extra.ORACLE_TPCH_Q17),
+    "tpch_q19_disjunctive_filter": (tpch_extra.q_tpch_q19, tpch_extra.ORACLE_TPCH_Q19),
+    "tpch_q21_waiting_supplier": (tpch_extra.q_tpch_q21, tpch_extra.ORACLE_TPCH_Q21),
+    "tpch_q22_sales_opportunity": (tpch_extra.q_tpch_q22, tpch_extra.ORACLE_TPCH_Q22),
+    "emb_ivf_indexed_topk": (embeddings.q_emb_ivf_indexed_topk, embeddings.ORACLE_EMB_IVF_TRAINED),
+    "tpch_q2_min_cost_supplier": (tpch_partsupp.q_tpch_q2, tpch_partsupp.ORACLE_TPCH_Q2),
+    "tpch_q9_product_profit": (tpch_partsupp.q_tpch_q9, tpch_partsupp.ORACLE_TPCH_Q9),
+    "tpch_q11_important_stock": (tpch_partsupp.q_tpch_q11, tpch_partsupp.ORACLE_TPCH_Q11),
+    "tpch_q16_parts_suppliers": (tpch_partsupp.q_tpch_q16, tpch_partsupp.ORACLE_TPCH_Q16),
+    "tpch_q20_promotion_parts": (tpch_partsupp.q_tpch_q20, tpch_partsupp.ORACLE_TPCH_Q20),
+    "docs_tfidf_similar_pairs": (docs_neardup.q_docs_tfidf_similar_pairs, docs_neardup.ORACLE_DOCS_TFIDF_PAIRS),
+    "lineitem_salted_skew_agg": (relational.q_lineitem_salted_skew_agg, relational.ORACLE_LINEITEM_SALTED),
+    "docs_top_ngrams": (docs_text.q_docs_top_ngrams, docs_text.ORACLE_DOCS_TOP_NGRAMS),
 }
 
-# The remaining TPC-H shapes (q4/q7/q8/q12/q13/q15/q17/q19/q21/q22,
-# faithful-or-adapted per plans/tpch_extra.py's header; q2/q9/q11/q16/
-# q20 need the absent partsupp table). Registered after the driver
-# window — the TPC-H family is already represented in positions 1-50.
-from s3logs_parquet_spark.plans.tpch_extra import TPCH_EXTRA_QUERIES  # noqa: E402
-
-QUERIES.update(TPCH_EXTRA_QUERIES)
-
-
-def q_emb_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted-index ANN path: ivf_index_write materializes the
-    corpus partitioned by cell + trained centroids on disk; the query
-    side reads ONLY the probed cell partitions (static partition
-    pruning — tests/test_ann.py asserts PartitionFilters). Same
-    deterministic training as emb_ivf_trained_topk, so the identical
-    oracle value-checks the whole build→persist→prune→rerank chain.
-
-    The on-disk index is a ``prebuilt`` index entry: repeat calls
-    probe it; emb_ivf_trained_topk keeps the build cost measured. A
-    new session always rebuilds, so a stale index from an earlier run
-    can't leak in."""
-    import os
-    import tempfile
-
-    from s3logs_parquet_spark.operators.ann import ivf_index_topk, ivf_index_write
-
-    emb = _t(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_index_{tag}")
-    prebuilt(
-        spark,
-        ("emb_ivf_indexed_topk", path),
-        lambda: ivf_index_write(emb, path, "vec_id", n_cells=8, iters=2),
-    )
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    out = ivf_index_topk(spark, path, queries, "vec_id", "query_id", k=10, n_probe=2)
-    return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-QUERIES["emb_ivf_indexed_topk"] = (q_emb_ivf_indexed_topk, _oracle_emb_ivf_trained())
-
-# The five partsupp-dependent TPC-H shapes (derived fixture — see
-# plans/tpch_partsupp.py). Closes the suite to 22/22.
-from s3logs_parquet_spark.plans.tpch_partsupp import TPCH_PARTSUPP_QUERIES  # noqa: E402
-
-QUERIES.update(TPCH_PARTSUPP_QUERIES)
-
-QUERIES["orders_bloom_customer_revenue"] = (
-    q_orders_bloom_customer_revenue,
-    ORACLE_ORDERS_BLOOM,
-)
-QUERIES["emb_ivfpq_topk"] = (q_emb_ivfpq_topk, _oracle_emb_ivfpq())
-QUERIES["docs_dup_ngram_fraction"] = (q_docs_dup_ngram_fraction, ORACLE_DOCS_DUP_NGRAM)
-# docs_duplicated_spans RETIRED round 9 (registry stays at exactly 100;
-# its slot admits docs_inference_mlp): the identical _span_gate
-# computation runs verbatim inside docs_remove_dup_spans, whose oracle
-# re-derives the same gaps-and-islands spans and value-checks them
-# through the token-ordered reconstruction of every cleaned document —
-# a wrong span boundary there corrupts the rebuilt stream and fails the
-# hash. The report-mode aggregates (n_spans/dup_tokens/coverage) keep a
-# DIRECT full-corpus DuckDB differential in
-# tests/test_similarity.py::test_duplicated_spans_direct_duckdb_differential,
-# and the plan-shape budget stays pinned in tests/test_plans.py.
-QUERIES["docs_remove_dup_spans"] = (q_docs_remove_dup_spans, ORACLE_DOCS_REMOVE_SPANS)
-QUERIES["docs_tfidf_similar_pairs"] = (q_docs_tfidf_similar_pairs, ORACLE_DOCS_TFIDF_PAIRS)
-QUERIES["events_zorder_key"] = (q_events_zorder_key, _oracle_events_zorder())
-QUERIES["events_hilbert_key"] = (q_events_hilbert_key, _oracle_events_hilbert())
-
-
-def q_lineitem_salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted aggregation (operators/skew.py salted_agg): group by
-    l_returnflag — THREE values over all of lineitem, the pathological
-    few-hot-keys shape where a plain groupBy funnels the whole table
-    through 3 reducers. The salted plan fans each key over 16
-    deterministic salts (partial agg) then merges 48 tiny rows (final
-    agg). Aggregates are chosen integer-exact (count, sum of integral
-    quantities, min/max) so the two-phase merge is bit-identical to
-    DuckDB's single-phase answer regardless of combine order."""
-    from s3logs_parquet_spark.operators.skew import salted_agg
-
-    l = _t(spark, sf_dir, "lineitem")
-    out = salted_agg(
-        l,
-        ["l_returnflag"],
-        {
-            "n_items": ("*", "count"),
-            "sum_qty": ("l_quantity", "sum"),
-            "min_price": ("l_extendedprice", "min"),
-            "max_price": ("l_extendedprice", "max"),
-        },
-        n_salt=16,
-    )
-    return out.select(
-        "l_returnflag",
-        "n_items",
-        F.round("sum_qty", 2).alias("sum_qty"),
-        F.round("min_price", 2).alias("min_price"),
-        F.round("max_price", 2).alias("max_price"),
-    )
-
-
-ORACLE_LINEITEM_SALTED = """
-SELECT l_returnflag,
-       count(*)                      AS n_items,
-       round(sum(l_quantity), 2)     AS sum_qty,
-       round(min(l_extendedprice), 2) AS min_price,
-       round(max(l_extendedprice), 2) AS max_price
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-
-def q_docs_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level top-20 trigrams (functions/text_analysis.py
-    top_ngrams): total occurrences + distinct-doc frequency per gram,
-    one ngram-keyed hash-agg then TakeOrdered — the boilerplate
-    DISCOVERY query that feeds dup_ngram_fraction's thresholds."""
-    from s3logs_parquet_spark.functions.text_analysis import top_ngrams
-
-    d = _t(spark, sf_dir, "documents")
-    return top_ngrams(d, "doc_id", "text", n=3, k=20)
-
-
-ORACLE_DOCS_TOP_NGRAMS = f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), ngr AS (
-  SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS ngram
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i FROM toks)
-)
-SELECT ngram,
-       count(*)::BIGINT          AS n_occurrences,
-       count(DISTINCT doc_id)::BIGINT AS n_docs
-FROM ngr
-GROUP BY ngram
-ORDER BY n_occurrences DESC, ngram
-LIMIT 20
-"""
-
-
-QUERIES["lineitem_salted_skew_agg"] = (q_lineitem_salted_skew_agg, ORACLE_LINEITEM_SALTED)
-QUERIES["docs_top_ngrams"] = (q_docs_top_ngrams, ORACLE_DOCS_TOP_NGRAMS)
-
-
-def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dedup (operators/dedup.py
-    semantic_dedup, Abbas et al. 2023): assign every embedding to its
-    argmax-cosine cell of a fixed 8-centroid quantizer (the embeddings
-    of vec_id < 8 — deterministic and table-derived so the oracle is
-    exact; production trains via ivf_train), then within each cell
-    mark any vector with a lower-id neighbor at cosine >= 0.4 as a
-    semantic duplicate. Per-cell summary: members, dups, and the
-    min-id kept representative. The only shuffle is the cell-keyed
-    self-join; the pair-budget guards raise instead of running an
-    unbounded quadratic pair stage.
-
-    A ``prebuilt`` entry holds the built DataFrame: semantic_assign's
-    cell + norm (stored corpus columns in production) and the pair
-    plan, whose rebuild would recompile the codegen (PERF.md round 7).
-    Every execution still re-runs the pair stage."""
-    from s3logs_parquet_spark.operators.dedup import semantic_assign, semantic_dedup
-
-    def build() -> DataFrame:
-        emb = _t(spark, sf_dir, "embeddings")
-        centroids = _fixed_centroids(emb)
-        assigned = semantic_assign(emb, "vec_id", "embedding", centroids)
-        return semantic_dedup(
-            emb, "vec_id", "embedding", centroids, threshold=0.4, assigned=assigned
-        ).groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(F.col("is_semdup").cast("bigint")).alias("n_dups"),
-            F.min(F.when(~F.col("is_semdup"), F.col("vec_id"))).alias("min_kept_id"),
-        )
-
-    return prebuilt(spark, ("emb_semantic_dedup", sf_dir), build)
-
-
-def _fixed_centroids(emb: DataFrame) -> list[list[float]]:
-    """The semantic-dedup gates' fixed 8-centroid quantizer: the
-    embeddings of vec_id < 8, in id order (one 8-row collect)."""
-    rows = emb.filter(F.col("vec_id") < 8).orderBy("vec_id").select("embedding").collect()
-    return [[float(x) for x in r["embedding"]] for r in rows]
-
-
-def _oracle_emb_semantic_dedup(n_cells: int = 8, threshold: float = 0.4) -> str:
-    cos_vc = f"{_SQL_DOT.format(a='e.v', b='c.cv')} / ({_SQL_NORM.format(a='e.v')} * {_SQL_NORM.format(a='c.cv')})"
-    cos_ab = f"{_SQL_DOT.format(a='a.v', b='b.v')} / ({_SQL_NORM.format(a='a.v')} * {_SQL_NORM.format(a='b.v')})"
-    return f"""
-WITH cents AS (
-  SELECT vec_id AS cell, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < {n_cells}
-), emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), assign AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos_vc} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN cents c
-  ) WHERE rn = 1
-), dup AS (
-  SELECT DISTINCT a.vec_id
-  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id > b.vec_id
-  WHERE {cos_ab} >= {threshold}
-), flag AS (
-  SELECT s.vec_id, s.cell, (d.vec_id IS NOT NULL) AS is_semdup
-  FROM assign s LEFT JOIN dup d ON s.vec_id = d.vec_id
-)
-SELECT cell, count(*) AS n_members,
-       CAST(sum(CASE WHEN is_semdup THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
-       min(CASE WHEN NOT is_semdup THEN vec_id END) AS min_kept_id
-FROM flag GROUP BY cell
-"""
-
-
-def q_docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking (operators/chunking.py
-    chunk_documents): 40-token windows every 30 tokens (overlap 10) —
-    the curation→packing prep step. Emits one row per window with its
-    token count and the md5 of the whitespace-normalized window text,
-    so boundary placement, overlap, short-final-window clipping AND
-    the exact chunk contents are all value-checked. Map-only: split +
-    per-row sequence explode + slice; no shuffle, no UDF."""
-    from s3logs_parquet_spark.operators.chunking import chunk_documents
-
-    d = _t(spark, sf_dir, "documents")
-    out = chunk_documents(d, "text", "doc_id", chunk_size=40, stride=30)
-    return out.select(
-        "doc_id",
-        "chunk_idx",
-        F.col("chunk_tokens").alias("n_tokens"),
-        F.md5(F.col("chunk_text")).alias("chunk_md5"),
-    )
-
-
-ORACLE_DOCS_CHUNKS = r"""
-WITH d AS (
-  SELECT doc_id, list_filter(str_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-  FROM documents
-), n AS (
-  SELECT doc_id, toks,
-    CASE WHEN len(toks) <= 40 THEN 1
-         ELSE 1 + CAST(ceil((len(toks) - 40) / 30.0) AS BIGINT) END AS n_chunks
-  FROM d
-), e AS (
-  SELECT doc_id, toks, unnest(generate_series(0, n_chunks - 1)) AS ci FROM n
-)
-SELECT doc_id, ci AS chunk_idx,
-       len(toks[ci*30+1 : ci*30+40]) AS n_tokens,
-       md5(array_to_string(toks[ci*30+1 : ci*30+40], ' ')) AS chunk_md5
-FROM e
-"""
-
-
-QUERIES["emb_semantic_dedup"] = (q_emb_semantic_dedup, _oracle_emb_semantic_dedup())
-QUERIES["docs_chunk_windows"] = (q_docs_chunk_windows, ORACLE_DOCS_CHUNKS)
-
-
-def q_emb_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-ingest semantic dedup (operators/dedup.py
-    semantic_dedup_incremental — VERDICT r6 #1): the corpus is split
-    into an EXISTING index (vec_id % 5 != 0, 80%) whose
-    semantic_assign precompute is persisted once per session (the
-    production shape: cell + norm are stored corpus columns), and a
-    NEW batch (vec_id % 5 == 0) that assigns with the SAME fixed
-    8-centroid quantizer as emb_semantic_dedup, probes only its
-    matching cells of the index, and flags any batch vector with a
-    corpus member at cosine >= 0.4 as a duplicate of history. Emits
-    one row per batch vector: (vec_id, cell, is_semdup). Incremental
-    cost is O(batch + cell-matched candidates) — the corpus is never
-    rescanned; the batch x corpus candidate volume is budgeted by the
-    same pre-aggregate guard as the batch op's pair stage."""
-    from s3logs_parquet_spark.operators.dedup import (
-        semantic_assign,
-        semantic_dedup_incremental,
-    )
-
-    def build() -> DataFrame:
-        emb = _t(spark, sf_dir, "embeddings")
-        centroids = _fixed_centroids(emb)
-        corpus = emb.filter(F.col("vec_id") % 5 != 0)
-        index = semantic_assign(corpus, "vec_id", "embedding", centroids)
-        batch = emb.filter(F.col("vec_id") % 5 == 0)
-        return semantic_dedup_incremental(
-            batch, index, "vec_id", "embedding", centroids, threshold=0.4
-        )
-
-    return prebuilt(spark, ("emb_semantic_dedup_incremental", sf_dir), build)
-
-
-def _oracle_emb_semantic_dedup_incremental(
-    n_cells: int = 8, threshold: float = 0.4
-) -> str:
-    cos_vc = f"{_SQL_DOT.format(a='e.v', b='c.cv')} / ({_SQL_NORM.format(a='e.v')} * {_SQL_NORM.format(a='c.cv')})"
-    cos_bc = f"{_SQL_DOT.format(a='b.v', b='c.v')} / ({_SQL_NORM.format(a='b.v')} * {_SQL_NORM.format(a='c.v')})"
-    return f"""
-WITH cents AS (
-  SELECT vec_id AS cell, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < {n_cells}
-), emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), assign AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos_vc} DESC, c.cell) AS rn
-    FROM emb e CROSS JOIN cents c
-  ) WHERE rn = 1
-), corpus AS (
-  SELECT * FROM assign WHERE vec_id % 5 <> 0
-), batch AS (
-  SELECT * FROM assign WHERE vec_id % 5 = 0
-), dup AS (
-  SELECT DISTINCT b.vec_id
-  FROM batch b JOIN corpus c ON b.cell = c.cell
-  WHERE {cos_bc} >= {threshold}
-)
-SELECT b.vec_id, b.cell, (d.vec_id IS NOT NULL) AS is_semdup
-FROM batch b LEFT JOIN dup d ON b.vec_id = d.vec_id
-"""
-
-
-def q_docs_chunk_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-segmentation context-window chunking (operators/chunking.py
-    tokenizer='bpe' — VERDICT r6 #7): windows counted over the BPE-ish
-    pre-tokenizer segmentation (letter runs / digit runs / single
-    punctuation — the same _BPE_TOKEN regex bpe_token_count reports),
-    so window sizes align with what a subword tokenizer later sees.
-    Same 40/30 window/stride as the whitespace gate; chunk text is the
-    tokens space-joined (deterministic token view, documented
-    non-byte-faithful), value-checked via md5. Same map-only shape:
-    one regexp_extract_all + per-row sequence explode + slice.
-
-    The synthetic documents table contains NO punctuation (verified:
-    0/500 docs at sf0.01), under which BPE and whitespace segmentation
-    coincide and the gate would be vacuous — so the gate chunks a
-    DERIVED text with punctuation injected deterministically
-    (replace 'o' -> '.o': every 'o' splits its letter run and adds a
-    '.' token), making the BPE-specific token boundaries load-bearing
-    in the checked values."""
-    from s3logs_parquet_spark.operators.chunking import chunk_documents
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "punct_text", F.regexp_replace(F.col("text"), "o", ".o")
-    )
-    out = chunk_documents(
-        d, "punct_text", "doc_id", chunk_size=40, stride=30, tokenizer="bpe"
-    )
-    return out.select(
-        "doc_id",
-        "chunk_idx",
-        F.col("chunk_tokens").alias("n_tokens"),
-        F.md5(F.col("chunk_text")).alias("chunk_md5"),
-    )
-
-
-_SQL_BPE_PUNCT = _SQL_BPE.replace(
-    "regexp_extract_all(text,", "regexp_extract_all(replace(text, 'o', '.o'),"
-)
-ORACLE_DOCS_CHUNKS_BPE = f"""
-WITH d AS (
-  SELECT doc_id, {_SQL_BPE_PUNCT} AS toks FROM documents
-), n AS (
-  SELECT doc_id, toks,
-    CASE WHEN len(toks) <= 40 THEN 1
-         ELSE 1 + CAST(ceil((len(toks) - 40) / 30.0) AS BIGINT) END AS n_chunks
-  FROM d
-), e AS (
-  SELECT doc_id, toks, unnest(generate_series(0, n_chunks - 1)) AS ci FROM n
-)
-SELECT doc_id, ci AS chunk_idx,
-       len(toks[ci*30+1 : ci*30+40]) AS n_tokens,
-       md5(array_to_string(toks[ci*30+1 : ci*30+40], ' ')) AS chunk_md5
-FROM e
-"""
-
-
-QUERIES["emb_semantic_dedup_incremental"] = (
-    q_emb_semantic_dedup_incremental,
-    _oracle_emb_semantic_dedup_incremental(),
-)
-QUERIES["docs_chunk_windows_bpe"] = (q_docs_chunk_windows_bpe, ORACLE_DOCS_CHUNKS_BPE)
-
-
-def q_emb_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-bit scalar-quantized ANN (operators/ann.py sq8_topk, the
-    FAISS SQ8 layout): per-dim min/max 'training' (one aggregate,
-    2*dim scalars), floor-based int8 codes (1/8th the read bytes of
-    the float64 column), asymmetric search — full-precision query
-    against bucket-center dequantized corpus codes — then exact
-    rerank of the top-50 candidates. floor (not round) quantization
-    and expanded fixed-order float arithmetic keep the whole
-    train -> quantize -> score -> rerank chain bit-reproducible in
-    SQL, so even the quantization ERROR is value-checked.
-
-    Stats + codes are a ``prebuilt`` index entry (write-side table
-    properties/columns in production); repeat calls run the probe."""
-    from s3logs_parquet_spark.operators.ann import sq8_topk, sq_encode, sq_stats
-    from s3logs_parquet_spark.session import materialize
-
-    def build() -> DataFrame:
-        emb = _t(spark, sf_dir, "embeddings")
-        dim = int(emb.select(F.size("embedding")).first()[0])
-        stats = sq_stats(emb, "embedding", dim)
-        enc = materialize(
-            sq_encode(
-                emb.select(F.col("vec_id"), F.col("embedding").alias("_cv")),
-                "_cv",
-                stats,
-            )
-        )
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        return sq8_topk(
-            emb, queries, "vec_id", "query_id", stats, k=10, n_candidates=50,
-            encoded=enc,
-        ).select(
-            "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-
-    return prebuilt(spark, ("emb_sq8_topk", sf_dir), build)
-
-
-def _oracle_emb_sq8(dim: int = 64, n_cand: int = 50, k: int = 10) -> str:
-    cos_cq = f"{_SQL_DOT.format(a='s.cv', b='s.qv')} / ({_SQL_NORM.format(a='s.cv')} * {_SQL_NORM.format(a='s.qv')})"
-    acos = (
-        f"{_SQL_DOT.format(a='e.dq', b='q.qv')} / "
-        f"({_SQL_NORM.format(a='e.dq')} * {_SQL_NORM.format(a='q.qv')})"
-    )
-    return f"""
-WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), st AS (
-  SELECT d, min(v[d]) AS mn, max(v[d]) AS mx
-  FROM emb, generate_series(1, {dim}) AS g(d)
-  GROUP BY d
-), enc AS (
-  -- floor-quantize then bucket-center dequantize, exactly the Spark
-  -- expression shapes: (v-mn)*(256/(mx-mn)) and mn+(q+0.5)*((mx-mn)/256)
-  SELECT e.vec_id,
-         list(CASE WHEN s.mx > s.mn
-              THEN s.mn + (least(greatest(floor((e.v[s.d] - s.mn) * (256.0 / (s.mx - s.mn))), 0), 255) + 0.5) * ((s.mx - s.mn) / 256.0)
-              ELSE s.mn END ORDER BY s.d) AS dq
-  FROM emb e CROSS JOIN st s
-  GROUP BY e.vec_id
-), q AS (
-  SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5
-), cand AS (
-  SELECT query_id, vec_id, qv FROM (
-    SELECT q.query_id, e.vec_id, q.qv,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {acos} DESC, e.vec_id) AS crank
-    FROM enc e CROSS JOIN q
-  ) WHERE crank <= {n_cand}
-), rer AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-  FROM (
-    SELECT s.query_id, s.vec_id, {cos_cq} AS cos_raw
-    FROM (SELECT c.query_id, c.vec_id, c.qv, m.v AS cv
-          FROM cand c JOIN emb m ON m.vec_id = c.vec_id) s
-  )
-)
-SELECT query_id, vec_id, cosine, rank FROM rer WHERE rank <= {k}
-"""
-
-
-QUERIES["emb_sq8_topk"] = (q_emb_sq8_topk, _oracle_emb_sq8())
-
-# ---------------------------------------------------------------------------
-# Driver-window rotation (VERDICT r3 next-round #1). The driver's
-# correctness gate records the FIRST 50 registry entries per round, so
-# ordering is evidence policy: every gate must land a driver-recorded
-# row at least every two rounds (tests/test_oracles_full.py pins the
-# invariant, walking past the current round's own end-of-round
-# snapshot). Round-7 window = the r05-recorded half (every r06-window
-# entry holds a green CORRECTNESS_r06 row and rotates out), minus two
-# round-7 retirements whose semantics live on in supersets
-# (docs_simhash -> docs_simhash_pairs; emb_ivf_topk ->
-# emb_ivf_trained_topk), plus the two NEW round-7 gates
-# (emb_semantic_dedup_incremental — VERDICT r6 #1, the one previously
-# ungated first-class operator — and docs_chunk_windows_bpe, VERDICT
-# r6 #7), which enter inside the window for their first driver row.
-# At 100 registry entries the two-round invariant stays exactly
-# saturated: steady state alternates the two 50-entry halves.
-_DRIVER_WINDOW_R07 = [
-    "tpch_q1_pricing_summary",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q18_large_volume",
-    "customer_orders_left_join",
-    "customers_without_orders_anti",
-    "parts_with_lineitems_semi",
-    "orders_rank_window",
-    "union_shipped_split",
-    "lineitem_quantiles",
-    "lineitem_stats",
-    "events_pivot_by_type",
-    "orders_lineitem_arrays",
-    "events_tumbling_window",
-    "events_sliding_means",
-    "events_session_windows",
-    "events_json_props",
-    # NEW round-7 gate: slot of retired events_asof_click (the SAME
-    # query + oracle stays driver-gated through the chunked twin; the
-    # plain path through the next/nearest as-of gates below)
-    "docs_duplicated_spans",
-    "events_range_pairs",
-    # NEW round-7 gate: slot of retired events_kmv_distinct (its
-    # per-group sketch stage runs identically inside, n_seen/estimate
-    # surfaced per pair side; direct pytests retained)
-    "events_kmv_set_ops",
-    "events_hourly_rollup",
-    "log_schema_widening",
-    "partition_prefix_tz",
-    # NEW round-7 gate: slot of retired docs_token_stats (counts
-    # value-checked inside docs_quality_score / docs_chunk_windows_bpe)
-    "docs_remove_dup_spans",
-    # NEW round-7 gate: slot of retired docs_winnowing (fingerprints
-    # value-checked inside docs_decontaminate)
-    "events_hilbert_key",
-    # NEW round-7 gate: slot of retired docs_ngram_jaccard_pairs (the
-    # identical candidate-gated exact-Jaccard verify runs inside and
-    # its values surface as max_jaccard; standalone quadratic form
-    # keeps a direct DuckDB differential in tests/test_similarity.py)
-    "docs_neardup_canonical_keep",
-    # NEW round-7 gate (VERDICT r6 #1): slot of retired docs_simhash
-    # (signature computation value-checked per-pair inside
-    # docs_simhash_pairs, below)
-    "emb_semantic_dedup_incremental",
-    "docs_simhash_pairs",
-    "docs_leakage_safe_split",
-    "docs_decontaminate",
-    "docs_stratified_sample",
-    # NEW round-7 gate (fourth session): slot of retired
-    # docs_global_shuffle (its hash-total-order rank selection is
-    # value-checked per doc as cap_rk inside; direct DuckDB
-    # differential kept in tests/test_selection.py). Per-source
-    # frequency cap + token-budget prefix selection — also a strict
-    # per-doc superset of docs_quality_score's quality values, which
-    # stays registered and rotates normally.
-    "docs_selection_budget",
-    "docs_clean_and_repetition",
-    "docs_pii_redact",
-    # NEW round-7 gate: slot of retired docs_doc_frequency (its df
-    # hash-agg is value-checked inside docs_tfidf_similar_pairs; see
-    # the registry comment). Misra–Gries exact heavy hitters.
-    "docs_heavy_hitter_words",
-    # NEW round-7 gate: slot of retired emb_lsh_topk (emb_lsh_recall
-    # runs lsh_topk with identical parameters and embeds its oracle)
-    "emb_sq8_topk",
-    # NEW round-7 gate (VERDICT r6 #7): slot of retired emb_ivf_topk
-    # (strict subset of emb_ivf_trained_topk — identical probe/rerank
-    # path, value-checked train->assign->probe->rerank)
-    "docs_chunk_windows_bpe",
-    "events_asof_click_chunked",
-    "events_asof_next_click",
-    "events_asof_nearest_click",
-    "orders_bloom_customer_revenue",
-    "emb_ivfpq_topk",
-    "docs_dup_ngram_fraction",
-    "events_zorder_key",
-    "docs_weighted_sample",
-    "docs_mixture_sample",
-    # NEW round-7 gate: slot of retired events_sampled_quantiles (its
-    # computation runs verbatim as this gate's ALL leg). Grouped
-    # two-level bottom-k quantiles.
-    "events_quantiles_by_type",
-    "emb_neardup_pairs",
-    "events_interval_pairs",
-    "s3log_pipeline_roundtrip",
-    "manifest_events_f2",
-]
-
-assert len(_DRIVER_WINDOW_R07) == 50, len(_DRIVER_WINDOW_R07)
-# (docs_duplicated_spans held an r07 slot; retired round 9 — see its
-# retirement comment at the registration site)
-assert set(_DRIVER_WINDOW_R07) <= set(QUERIES) | {"docs_duplicated_spans"}, sorted(
-    set(_DRIVER_WINDOW_R07) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R07 if name in QUERIES} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R07
+_WINDOW_B = {
+    "tpch_q1_pricing_summary": (relational.q_tpch_q1, relational.ORACLE_TPCH_Q1),
+    "tpch_q5_local_supplier_volume": (relational.q_tpch_q5, relational.ORACLE_TPCH_Q5),
+    "tpch_q18_large_volume": (relational.q_tpch_q18, relational.ORACLE_TPCH_Q18),
+    "customer_orders_left_join": (relational.q_customer_order_left, relational.ORACLE_CUSTOMER_ORDER_LEFT),
+    "customers_without_orders_anti": (relational.q_customers_no_orders, relational.ORACLE_CUSTOMERS_NO_ORDERS),
+    "parts_with_lineitems_semi": (relational.q_parts_with_lineitems, relational.ORACLE_PARTS_WITH_LINEITEMS),
+    "orders_rank_window": (relational.q_orders_rank_window, relational.ORACLE_ORDERS_RANK),
+    "union_shipped_split": (relational.q_union_shipped_split, relational.ORACLE_UNION_SHIPPED),
+    "lineitem_quantiles": (relational.q_lineitem_quantiles, relational.ORACLE_LINEITEM_QUANTILES),
+    "lineitem_stats": (relational.q_lineitem_stats, relational.ORACLE_LINEITEM_STATS),
+    "events_pivot_by_type": (events.q_events_pivot_by_type, events.ORACLE_EVENTS_PIVOT),
+    "orders_lineitem_arrays": (relational.q_orders_lineitem_arrays, relational.ORACLE_ORDERS_ARRAYS),
+    "events_tumbling_window": (events.q_events_tumbling, events.ORACLE_EVENTS_TUMBLING),
+    "events_sliding_means": (events.q_events_sliding, events.ORACLE_EVENTS_SLIDING),
+    "events_session_windows": (events.q_events_sessions, events.ORACLE_EVENTS_SESSIONS),
+    "events_json_props": (events.q_events_json_props, events.ORACLE_EVENTS_JSON_PROPS),
+    "docs_inference_mlp": (docs_text.q_docs_inference_mlp, docs_text.ORACLE_DOCS_INFERENCE_MLP),
+    "events_range_pairs": (events.q_events_range_pairs, events.ORACLE_EVENTS_RANGE_PAIRS),
+    "events_kmv_set_ops": (events.q_events_kmv_set_ops, events.ORACLE_EVENTS_KMV_SET_OPS),
+    "events_hourly_rollup": (events.q_events_hourly_rollup, events.ORACLE_EVENTS_HOURLY_ROLLUP),
+    "log_schema_widening": (log_pipeline.q_log_schema_widening, log_pipeline.ORACLE_LOG_SCHEMA_WIDENING),
+    "partition_prefix_tz": (log_pipeline.q_partition_prefix_tz, log_pipeline.ORACLE_PARTITION_PREFIX_TZ),
+    "docs_remove_dup_spans": (docs_neardup.q_docs_remove_dup_spans, docs_neardup.ORACLE_DOCS_REMOVE_SPANS),
+    "events_hilbert_key": (events.q_events_hilbert_key, events.ORACLE_EVENTS_HILBERT),
+    "docs_neardup_canonical_keep": (docs_neardup.q_docs_neardup_canonical_keep, docs_neardup.ORACLE_DOCS_CANONICAL_KEEP),
+    "emb_semantic_dedup_incremental": (embeddings.q_emb_semantic_dedup_incremental, embeddings.ORACLE_EMB_SEMANTIC_DEDUP_INCREMENTAL),
+    "docs_simhash_pairs": (docs_neardup.q_docs_simhash_pairs, docs_neardup.ORACLE_DOCS_SIMHASH_PAIRS),
+    "docs_leakage_safe_split": (docs_neardup.q_docs_leakage_safe_split, docs_neardup.ORACLE_DOCS_LEAKAGE_SPLIT),
+    "docs_decontaminate": (docs_neardup.q_docs_decontaminate, docs_neardup.ORACLE_DOCS_DECONTAMINATE),
+    "docs_stratified_sample": (docs_text.q_docs_stratified_sample, docs_text.ORACLE_DOCS_STRATIFIED),
+    "docs_selection_budget": (docs_text.q_docs_selection_budget, docs_text.ORACLE_DOCS_SELECTION_BUDGET),
+    "docs_clean_and_repetition": (docs_text.q_docs_clean_and_repetition, docs_text.ORACLE_DOCS_CLEAN_REP),
+    "docs_pii_redact": (docs_text.q_docs_pii_redact, docs_text.ORACLE_DOCS_PII_REDACT),
+    "docs_heavy_hitter_words": (docs_text.q_docs_heavy_hitters, docs_text.ORACLE_DOCS_HEAVY_HITTERS),
+    "emb_sq8_topk": (embeddings.q_emb_sq8_topk, embeddings.ORACLE_EMB_SQ8),
+    "docs_chunk_windows_bpe": (docs_text.q_docs_chunk_windows_bpe, docs_text.ORACLE_DOCS_CHUNKS_BPE),
+    "events_asof_click_chunked": (events.q_events_asof_click_chunked, events.ORACLE_EVENTS_ASOF),
+    "events_asof_next_click": (events.q_events_asof_next_click, events.ORACLE_EVENTS_ASOF_NEXT),
+    "events_asof_nearest_click": (events.q_events_asof_nearest_click, events.ORACLE_EVENTS_ASOF_NEAREST),
+    "orders_bloom_customer_revenue": (relational.q_orders_bloom_customer_revenue, relational.ORACLE_ORDERS_BLOOM),
+    "emb_ivfpq_topk": (embeddings.q_emb_ivfpq_topk, embeddings.ORACLE_EMB_IVFPQ),
+    "docs_dup_ngram_fraction": (docs_text.q_docs_dup_ngram_fraction, docs_text.ORACLE_DOCS_DUP_NGRAM),
+    "events_zorder_key": (events.q_events_zorder_key, events.ORACLE_EVENTS_ZORDER),
+    "docs_weighted_sample": (docs_text.q_docs_weighted_sample, docs_text.ORACLE_DOCS_WEIGHTED_SAMPLE),
+    "docs_mixture_sample": (docs_text.q_docs_mixture_sample, docs_text.ORACLE_DOCS_MIXTURE_SAMPLE),
+    "events_quantiles_by_type": (events.q_events_quantiles_by_type, events.ORACLE_EVENTS_QUANTILES_BY_TYPE),
+    "emb_neardup_pairs": (embeddings.q_emb_neardup_pairs, embeddings.ORACLE_EMB_NEARDUP),
+    "events_interval_pairs": (events.q_events_interval_pairs, events.ORACLE_EVENTS_INTERVAL_PAIRS),
+    "s3log_pipeline_roundtrip": (log_pipeline.q_log_pipeline, log_pipeline.ORACLE_LOG_PIPELINE),
+    "manifest_events_f2": (log_pipeline.q_manifest_events_f2, log_pipeline.ORACLE_MANIFEST_EVENTS_F2),
 }
 
-# Round-8 rotation (VERDICT r7 #5): the r06-recorded half returns to
-# the window (every r07-window entry holds a green CORRECTNESS_r07 row
-# and rotates out), with ONE substitution: docs_quality_score is
-# retired (its per-doc quality values are value-checked inside
-# docs_selection_budget — the strict-superset relation recorded at the
-# r07 window comment — and its full-corpus DuckDB differential lives in
-# tests/test_text_functions.py); its slot admits the NEW round-8 gate
-# docs_inference_scores (batched-inference hook, VERDICT r7 #9) for its
-# first driver row. Registry stays at exactly 100.
-_DRIVER_WINDOW_R08 = [
-    "events_kmv_global",
-    "s3log_parse_fields",
-    "docs_exact_dedup",
-    "docs_minhash_lsh_pairs",
-    "docs_incremental_neardup",
-    "docs_neardup_clusters",
-    "docs_curation_pipeline",
-    "emb_cosine_topk",
-    "emb_lsh_recall",
-    "emb_ivf_trained_topk",
-    "multimodal_binary_meta",
-    "orders_distinct_agg",
-    "events_window_dedup",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_effect",
-    "part_topk_price",
-    "events_minmax_ts",
-    "emb_semantic_dedup",
-    "lineitem_rollup",
-    # NEW round-8 gate in the retired docs_quality_score slot
-    "docs_inference_scores",
-    "docs_langid",
-    "docs_fingerprint",
-    "docs_chunk_windows",
-    "docs_split_assign",
-    "docs_dup_rate_by_source",
-    "docs_lsh_pairs_capped",
-    "emb_pq_topk",
-    "lineitem_cube",
-    "events_user_halves_full_outer",
-    "tpch_q4_order_priority",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q12_late_shipment",
-    "tpch_q13_order_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive_filter",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_sales_opportunity",
-    "emb_ivf_indexed_topk",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q16_parts_suppliers",
-    "tpch_q20_promotion_parts",
-    "docs_tfidf_similar_pairs",
-    "lineitem_salted_skew_agg",
-    "docs_top_ngrams",
-]
-
-assert len(_DRIVER_WINDOW_R08) == 50, len(_DRIVER_WINDOW_R08)
-assert set(_DRIVER_WINDOW_R08) <= set(QUERIES) | {"docs_duplicated_spans"}, sorted(
-    set(_DRIVER_WINDOW_R08) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R08 if name in QUERIES} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R08
-}
-
-# Round-9 rotation (VERDICT r8 #5): the r07-recorded half returns to
-# the window (every r08-window entry holds a green CORRECTNESS_r08 row
-# and rotates out), with ONE substitution: docs_duplicated_spans is
-# retired (see its retirement comment above — values checked inside
-# docs_remove_dup_spans' full-chain reconstruction oracle, which stays
-# in this window; direct DuckDB differential kept in
-# tests/test_similarity.py); its slot admits the NEW round-9 gate
-# docs_inference_mlp (real-model inference leg, VERDICT r8 #8) for its
-# first driver row. Registry stays at exactly 100.
-_DRIVER_WINDOW_R09 = [
-    name if name != "docs_duplicated_spans" else "docs_inference_mlp"
-    for name in _DRIVER_WINDOW_R07
-]
-
-assert len(_DRIVER_WINDOW_R09) == 50, len(_DRIVER_WINDOW_R09)
-assert set(_DRIVER_WINDOW_R09) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R09) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R09} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R09
-}
-
-# Round-10 rotation (VERDICT r9 #2): the r08-recorded half returns to
-# the window unchanged — every r09-window entry holds a green
-# CORRECTNESS_r09 row (50/50) and rotates out. No substitutions this
-# round: round 10's new work is the bucketed band-index layout for
-# streaming curation (non-SQL-expressible; pinned by the stream↔batch
-# equality + plan-shape suites in tests/test_streaming.py). Registry
-# stays at exactly 100.
-_DRIVER_WINDOW_R10 = list(_DRIVER_WINDOW_R08)
-
-assert len(_DRIVER_WINDOW_R10) == 50, len(_DRIVER_WINDOW_R10)
-assert set(_DRIVER_WINDOW_R10) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R10) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R10} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R10
-}
-
-# Round-11 rotation (VERDICT r10 #2): the r09-recorded half returns to
-# the window unchanged — every r10-window entry holds a green
-# CORRECTNESS_r10 row (50/50) and rotates out. No substitutions this
-# round: round 11's new work is the bucketed semantic-index store,
-# the in-stream auto-fold cadence and the plan-budget regression gate
-# (non-SQL-expressible; pinned by the layout-parity, plan-shape and
-# fold-invisibility suites in tests/test_streaming.py /
-# tests/test_band_index.py / tests/test_plan_budgets.py). Registry
-# stays at exactly 100.
-_DRIVER_WINDOW_R11 = list(_DRIVER_WINDOW_R09)
-
-assert len(_DRIVER_WINDOW_R11) == 50, len(_DRIVER_WINDOW_R11)
-assert set(_DRIVER_WINDOW_R11) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R11) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R11} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R11
-}
-
-# Round-12 rotation (VERDICT r11 #2): the r10-recorded half returns to
-# the window unchanged — every r11-window entry holds a green
-# CORRECTNESS_r11 row (50/50) and rotates out. No substitutions this
-# round: round 12's new work is measurement/hardening (shuffle-count
-# plan budgets, long-horizon fold + 10x semantic-index curves,
-# trigger-floor probe skip, README recipe smoke test — all
-# non-SQL-expressible, pinned by tests/test_plan_budgets.py /
-# tests/test_band_index.py / tests/test_cli.py). Registry stays at
-# exactly 100.
-_DRIVER_WINDOW_R12 = list(_DRIVER_WINDOW_R10)
-
-assert len(_DRIVER_WINDOW_R12) == 50, len(_DRIVER_WINDOW_R12)
-assert set(_DRIVER_WINDOW_R12) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R12) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R12} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R12
-}
-
-# Round-13 rotation (VERDICT r12 #6): the r11-recorded half returns to
-# the window unchanged — every r12-window entry holds a green
-# CORRECTNESS_r12 row (50/50) and rotates out. No substitutions this
-# round: round 13's new work is hardening/measurement (atomic fold
-# sidecar state, band_index_max_bucket horizon record, per-trigger
-# sink-job floor, streaming plan budgets — all non-SQL-expressible,
-# pinned by tests/test_band_index.py / tests/test_plan_budgets.py /
-# tests/test_session.py). Registry stays at exactly 100.
-_DRIVER_WINDOW_R13 = list(_DRIVER_WINDOW_R11)
-
-assert len(_DRIVER_WINDOW_R13) == 50, len(_DRIVER_WINDOW_R13)
-assert set(_DRIVER_WINDOW_R13) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R13) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R13} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R13
-}
-
-# Round-14 rotation (the standing alternation — VERDICT r13 confirmed
-# the two windows union to exactly the 100-query registry): the
-# r12/r10-recorded half returns to the window unchanged — every
-# r13-window entry holds a green CORRECTNESS_r13 row (50/50) and
-# rotates out. No substitutions: round 14 is optimization 2/2
-# (no new features). Registry stays at exactly 100.
-_DRIVER_WINDOW_R14 = list(_DRIVER_WINDOW_R12)
-
-assert len(_DRIVER_WINDOW_R14) == 50, len(_DRIVER_WINDOW_R14)
-assert set(_DRIVER_WINDOW_R14) <= set(QUERIES), sorted(
-    set(_DRIVER_WINDOW_R14) - set(QUERIES)
-)
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_R14} | {
-    name: fn_sql for name, fn_sql in QUERIES.items() if name not in _DRIVER_WINDOW_R14
-}
-
+assert len(_WINDOW_A) == len(_WINDOW_B) == 50 and not _WINDOW_A.keys() & _WINDOW_B.keys()
+QUERIES = _WINDOW_A | _WINDOW_B

@@ -1,5 +1,5 @@
 """The rest of the TPC-H query shapes expressible over the slim test
-schema, completing the relational query layer (plans/queries.py holds
+schema, completing the relational query layer (plans/relational.py holds
 q1/q3/q5/q6/q10/q14/q18).
 
 The test tables are a slimmed TPC-H: there is NO partsupp table, and
@@ -470,17 +470,3 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM sel WHERE c_acctbal > 0)
                     AND o_orderdate >= TIMESTAMP '2000-01-01')
 GROUP BY c_nationkey
 """
-
-
-TPCH_EXTRA_QUERIES = {
-    "tpch_q4_order_priority": (q_tpch_q4, ORACLE_TPCH_Q4),
-    "tpch_q7_nation_volume": (q_tpch_q7, ORACLE_TPCH_Q7),
-    "tpch_q8_market_share": (q_tpch_q8, ORACLE_TPCH_Q8),
-    "tpch_q12_late_shipment": (q_tpch_q12, ORACLE_TPCH_Q12),
-    "tpch_q13_order_distribution": (q_tpch_q13, ORACLE_TPCH_Q13),
-    "tpch_q15_top_supplier": (q_tpch_q15, ORACLE_TPCH_Q15),
-    "tpch_q17_small_qty_revenue": (q_tpch_q17, ORACLE_TPCH_Q17),
-    "tpch_q19_disjunctive_filter": (q_tpch_q19, ORACLE_TPCH_Q19),
-    "tpch_q21_waiting_supplier": (q_tpch_q21, ORACLE_TPCH_Q21),
-    "tpch_q22_sales_opportunity": (q_tpch_q22, ORACLE_TPCH_Q22),
-}

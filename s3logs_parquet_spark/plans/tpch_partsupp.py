@@ -1,5 +1,5 @@
 """TPC-H q2/q9/q11/q16/q20 — the five shapes that need ``partsupp``,
-closing the suite to 22/22 (plans/queries.py + plans/tpch_extra.py
+closing the suite to 22/22 (plans/relational.py + plans/tpch_extra.py
 hold the other 17).
 
 The driver's test schema has no partsupp table (TESTDATA.md), so the
@@ -403,12 +403,3 @@ WHERE n_name = 'NATION_9' AND s_suppkey IN (
   WHERE ps_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
     AND ps_availqty > 0.5 * qty)
 """
-
-
-TPCH_PARTSUPP_QUERIES = {
-    "tpch_q2_min_cost_supplier": (q_tpch_q2, ORACLE_TPCH_Q2),
-    "tpch_q9_product_profit": (q_tpch_q9, ORACLE_TPCH_Q9),
-    "tpch_q11_important_stock": (q_tpch_q11, ORACLE_TPCH_Q11),
-    "tpch_q16_parts_suppliers": (q_tpch_q16, ORACLE_TPCH_Q16),
-    "tpch_q20_promotion_parts": (q_tpch_q20, ORACLE_TPCH_Q20),
-}

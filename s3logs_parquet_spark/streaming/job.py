@@ -38,6 +38,8 @@ not applying an offset in passthrough mode.
 from __future__ import annotations
 
 import json
+import logging
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +50,8 @@ from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.functions.parse import parse_s3_access_log
 from s3logs_parquet_spark.functions.timeops import shifted
 from s3logs_parquet_spark.sources.text_source import KEY_DATE_PATTERN
+
+_log = logging.getLogger(__name__)
 
 # Streaming plan probe (round 13, VERDICT r12 #4): the batch-query
 # shuffle budgets (tests/plan_budgets.json) gate all 100 registry
@@ -1239,25 +1243,19 @@ def run_stream_curation(
     # collect job per batch for nothing (round-10 job-count audit)
     _idx_checked = {"done": False}
 
-    # S3LPS_CURATION_TRACE=1: per-stage driver-side wall times printed
-    # per micro-batch — the job-count/floor profiling knob (PERF.md
-    # round 10). foreachBatch runs on the driver, so timing the eager
-    # actions IS the per-stage breakdown; lazy sections read ~0.
-    import os as _os
-    import time as _time
-
-    _trace = _os.environ.get("S3LPS_CURATION_TRACE") == "1"
-
+    # per-stage driver-side wall times, logged at DEBUG once per
+    # micro-batch (the job-count/floor profile, PERF.md round 10).
+    # foreachBatch runs on the driver, so timing the eager actions IS
+    # the per-stage breakdown; lazy sections read ~0.
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         _marks: list[tuple[str, float]] = []
-        _t0 = _time.time()
+        _t0 = time.perf_counter()
 
         def _mark(label: str) -> None:
             nonlocal _t0
-            if _trace:
-                now = _time.time()
-                _marks.append((label, now - _t0))
-                _t0 = now
+            now = time.perf_counter()
+            _marks.append((label, now - _t0))
+            _t0 = now
 
         if (
             fold_every_n_batches is not None
@@ -1550,12 +1548,11 @@ def run_stream_curation(
         release(fresh)
         if band_ckpt is not None:
             release(band_ckpt)
-        if _trace:
-            print(
-                f"CURATION_TRACE batch={batch_id} "
-                + json.dumps({k: round(v, 2) for k, v in _marks}),
-                flush=True,
-            )
+        _log.debug(
+            "curation batch=%d stage_s=%s",
+            batch_id,
+            json.dumps({k: round(v, 2) for k, v in _marks}),
+        )
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

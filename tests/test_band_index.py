@@ -204,6 +204,63 @@ def test_stream_curation_layouts_produce_identical_survivors(spark, tmp_path):
     assert ids == {0, 1, 3, 5, 7}  # family members 2,4,6 + exact dup 100 drop
 
 
+def test_crash_in_first_contribution_restarts_cleanly(spark, tmp_path, monkeypatch):
+    """A one-shot failure inside the first contribution, at its spec
+    write or between the spec write and the insert, must not brick the
+    store: rerunning the same stream over the same checkpoint finishes,
+    with the survivors of an uninjected run."""
+    from s3logs_parquet_spark.streaming.job import (
+        StreamingJobConfig,
+        run_stream_curation,
+    )
+
+    fam = f"{EN} alpha beta gamma delta epsilon zeta eta theta"
+    inp = str(tmp_path / "in")
+    for b in range(3):
+        rows = [(2 * b, f"{fam} tail{b}"), (2 * b + 1, f"{EN} w{b}a w{b}b w{b}c w{b}d")]
+        spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
+
+    def run(tag):
+        out, idx, ck = (str(tmp_path / f"{d}-{tag}") for d in ("out", "idx", "ck"))
+        q = run_stream_curation(
+            spark, inp, DOC_SCHEMA, out, idx, ck,
+            min_quality=0.3, jaccard_threshold=0.3,
+            scfg=StreamingJobConfig(available_now=True, max_files_per_trigger=1),
+        )
+        drain(q)
+        return {r["doc_id"] for r in spark.read.parquet(out).collect()}
+
+    want = run("clean")
+    real_write_text, real_ensure_table = bi.write_text, bi.ensure_table
+    fired = []
+
+    def failing_spec_write(spark_, path, content):
+        if path.endswith(bi.SPEC_FILE) and not fired:
+            fired.append(path)
+            raise OSError("injected spec-write failure")
+        return real_write_text(spark_, path, content)
+
+    def failing_register(spark_, store_dir):
+        if not fired:
+            fired.append(store_dir)
+            raise OSError("injected failure before the first insert")
+        return real_ensure_table(spark_, store_dir)
+
+    for tag, attr, fail in [
+        ("spec", "write_text", failing_spec_write),
+        ("insert", "ensure_table", failing_register),
+    ]:
+        fired.clear()
+        with monkeypatch.context() as m:
+            m.setattr(bi, attr, fail)
+            with pytest.raises(Exception, match="injected"):
+                run(tag)
+        assert fired, tag
+        assert run(tag) == want, tag
+
+
 def test_layout_mismatch_fails_loud(spark, tmp_path):
     """A store keeps the layout it was created with — probing a
     bucketed store as dirs (or vice versa) must refuse, not silently

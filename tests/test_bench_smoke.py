@@ -49,16 +49,20 @@ def test_every_headline_query_executes_at_bench_scale(spark):
 
 def test_no_module_cache_outside_prebuilt():
     """session.prebuilt is the one build-once cache, and its docstring
-    the one statement of the timed-region contract. The query and
-    table modules may hold no module-level empty dict/set, the shape a
-    hand-rolled per-query cache takes."""
+    the one statement of the timed-region contract. Every module that
+    defines a registry builder, and the table module, may hold no
+    module-level empty dict/set, the shape a hand-rolled per-query
+    cache takes."""
     import ast
     import inspect
+    import sys
 
-    from s3logs_parquet_spark.plans import queries
+    from s3logs_parquet_spark.plans.queries import QUERIES
     from s3logs_parquet_spark.sources import tables
 
-    for mod in (queries, tables):
+    mods = {sys.modules[fn.__module__] for fn, _ in QUERIES.values()} | {tables}
+    assert len(mods) > 2, sorted(m.__name__ for m in mods)
+    for mod in mods:
         for node in ast.parse(inspect.getsource(mod)).body:
             v = getattr(node, "value", None)
             empty_dict = isinstance(v, ast.Dict) and not v.keys

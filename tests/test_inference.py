@@ -100,7 +100,7 @@ def test_inference_matches_sql_twin_via_duckdb(spark, sf_dir):
     makes the python and SQL sides bit-identical."""
     import duckdb
 
-    from s3logs_parquet_spark.plans.queries import (
+    from s3logs_parquet_spark.plans.docs_text import (
         ORACLE_DOCS_INFERENCE,
         q_docs_inference_scores,
     )
@@ -158,7 +158,7 @@ def test_mlp_matches_sql_twin_via_duckdb(spark, sf_dir):
     semantics (the driver re-runs this at sf0.01)."""
     import duckdb
 
-    from s3logs_parquet_spark.plans.queries import (
+    from s3logs_parquet_spark.plans.docs_text import (
         ORACLE_DOCS_INFERENCE_MLP,
         q_docs_inference_mlp,
     )
@@ -186,7 +186,7 @@ def test_inference_oracle_null_text_matches_model(spark, tmp_path):
     (the sf fixtures have none, so this pins the latent divergence)."""
     import duckdb
 
-    from s3logs_parquet_spark.plans.queries import (
+    from s3logs_parquet_spark.plans.docs_text import (
         ORACLE_DOCS_INFERENCE,
         q_docs_inference_scores,
     )

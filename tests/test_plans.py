@@ -88,7 +88,7 @@ def test_duplicated_spans_shuffle_budget(spark, sf_dir):
     """Static (AQE initial) plan: the span budget, with the shared
     shuffle printed on both of its branches. Read from the Initial Plan
     section whether or not the cached gate frame has run yet."""
-    from s3logs_parquet_spark.plans.queries import q_docs_duplicated_spans
+    from s3logs_parquet_spark.plans.docs_neardup import q_docs_duplicated_spans
 
     df = q_docs_duplicated_spans(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -109,7 +109,7 @@ def test_duplicated_spans_shuffle_budget_after_execution(spark, sf_dir):
     that state deliberately — execute the cached frame, then assert
     the same shuffle budget on the final-plan section — so the
     doubled-text trap can never silently return."""
-    from s3logs_parquet_spark.plans.queries import q_docs_duplicated_spans
+    from s3logs_parquet_spark.plans.docs_neardup import q_docs_duplicated_spans
 
     df = q_docs_duplicated_spans(spark, sf_dir)
     df.collect()  # drive THIS frame's queryExecution to its AQE final plan
@@ -231,9 +231,9 @@ def test_tpch_extra_join_strategies(spark, sf_dir):
     """The 10 round-3 TPC-H shapes must stay free of cartesian /
     nested-loop joins, and the dims must broadcast — the invariant
     that survives a 100× scale-up (the fact side is never replicated)."""
-    from s3logs_parquet_spark.plans.tpch_extra import TPCH_EXTRA_QUERIES
-
-    for name, (fn, _) in TPCH_EXTRA_QUERIES.items():
+    family = {n: fn for n, (fn, _) in QUERIES.items() if fn.__module__.endswith(".tpch_extra")}
+    assert len(family) == 10, sorted(family)
+    for name, fn in family.items():
         plan = _plan(spark, fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, name
         # q22's scalar-avg broadcast is the one legitimate nested-loop
@@ -259,18 +259,16 @@ def test_tpch_partsupp_join_strategies(spark, sf_dir):
     — q11's 1-row scalar-total crossJoin broadcasts (the q22 pattern)
     — dims broadcast, and the q16 supplier exclusion is a broadcast
     anti join, not a shuffled NOT IN."""
-    from s3logs_parquet_spark.plans.tpch_partsupp import TPCH_PARTSUPP_QUERIES
-
-    for name, (fn, _) in TPCH_PARTSUPP_QUERIES.items():
+    family = {n: fn for n, (fn, _) in QUERIES.items() if fn.__module__.endswith(".tpch_partsupp")}
+    assert len(family) == 5, sorted(family)
+    for name, fn in family.items():
         plan = _plan(spark, fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, name
         if name != "tpch_q11_important_stock":
             assert "BroadcastNestedLoopJoin" not in plan, name
         assert "BroadcastHashJoin" in plan, name
 
-    q16_plan = _plan(
-        spark, TPCH_PARTSUPP_QUERIES["tpch_q16_parts_suppliers"][0](spark, sf_dir)
-    )
+    q16_plan = _plan(spark, QUERIES["tpch_q16_parts_suppliers"][0](spark, sf_dir))
     assert "LeftAnti" in q16_plan
 
 

@@ -881,7 +881,7 @@ def test_duplicated_spans_direct_duckdb_differential(spark, sf_dir):
     full-corpus DuckDB check with the driver's hash semantics."""
     import duckdb
 
-    from s3logs_parquet_spark.plans.queries import (
+    from s3logs_parquet_spark.plans.docs_neardup import (
         ORACLE_DOCS_DUP_SPANS,
         q_docs_duplicated_spans,
     )

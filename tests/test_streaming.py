@@ -796,6 +796,44 @@ def _curation_fixture_docs():
     return files
 
 
+def test_curation_logs_stage_times_once_per_trigger(spark, tmp_path, caplog):
+    """The per-stage wall times of run_stream_curation go to the job
+    module's logger at DEBUG: one record per trigger, carrying the
+    stage labels."""
+    import logging
+
+    from pyspark.sql import types as T
+
+    from s3logs_parquet_spark.streaming.job import (
+        StreamingJobConfig,
+        run_stream_curation,
+    )
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    inp, out, idx, ck = (str(tmp_path / d) for d in ("in", "out", "idx", "ck"))
+    for rows in _curation_fixture_docs()[:2]:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inp)
+    logger = "s3logs_parquet_spark.streaming.job"
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        drain(
+            run_stream_curation(
+                spark, inp, schema, out, idx, ck, min_quality=0.3,
+                scfg=StreamingJobConfig(available_now=True, max_files_per_trigger=1),
+            )
+        )
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == logger and r.getMessage().startswith("curation batch=")
+    ]
+    assert [m.split()[1] for m in msgs] == ["batch=0", "batch=1"], msgs
+    for m in msgs:
+        for label in ("gate+dedup", "signatures", "lsh+cc"):
+            assert f'"{label}"' in m, m
+
+
 def test_stream_curation_invariants_and_single_batch_equality(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

@@ -106,7 +106,7 @@ def test_quality_score_direct_duckdb_differential(spark, sf_dir):
     the driver's semantics."""
     import duckdb
 
-    from s3logs_parquet_spark.plans.queries import _SQL_QUALITY, q_docs_quality
+    from s3logs_parquet_spark.plans.docs_text import _SQL_QUALITY, q_docs_quality
     from tools.check_oracles import frame_hash
 
     sdf = q_docs_quality(spark, sf_dir)
