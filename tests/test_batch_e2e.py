@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.config import EngineConfig
@@ -118,41 +119,6 @@ def test_corrupt_side_channel_and_archive(spark, tmp_path):
     assert res.rows_out == len(lines) - n_garbage
 
 
-def test_overwrite_partitions_idempotent(spark, tmp_path):
-    """overwrite_partitions mode: re-running the same input replaces
-    the affected partitions instead of duplicating rows (append mode's
-    at-least-once behavior), and leaves other partitions alone."""
-    from s3logs_parquet_spark.plans.batch import parse_and_dedup
-    from s3logs_parquet_spark.writer import with_partition_columns, write_partitioned_parquet
-
-    cfg = EngineConfig()
-    out = str(tmp_path / "t")
-
-    def run(lines):
-        inp = _write_lines(tmp_path, "in.log", lines)
-        ldf = spark.read.text(inp)
-        res = with_partition_columns(parse_and_dedup(ldf, cfg), cfg).drop(
-            "n_fields", "ts", "agg_window", "bucket_key"
-        )
-        write_partitioned_parquet(res, out, cfg, mode="overwrite_partitions")
-
-    hour0 = generate_lines(200, seed=41, dup_fraction=0.0, garbage_fraction=0.0, span_seconds=3000)
-    run(hour0)
-    assert spark.read.parquet(out).count() == 200
-    run(hour0)  # identical re-run: no duplication
-    assert spark.read.parquet(out).count() == 200
-
-    # a later-hour batch must not clobber the hour=08 partition
-    hour2 = generate_lines(
-        100, seed=42, dup_fraction=0.0, garbage_fraction=0.0,
-        base_ts=1715500800 + 2 * 3600, span_seconds=1800,
-    )
-    run(hour2)
-    table = spark.read.parquet(out)
-    assert table.count() == 300
-    assert table.filter(F.col("hour") == 8).count() == 200
-
-
 def test_gzip_compressed_input(spark, tmp_path):
     """S3 access logs are commonly delivered gzip-compressed; the text
     source must read .gz transparently (Hadoop codec discovery)."""
@@ -183,11 +149,9 @@ def test_metrics_count_this_batch_not_the_table(spark, tmp_path):
 
 
 def test_widening_append_preserves_existing_rows(spark, tmp_path):
-    # Batch 1 populates the table; batch 2 carries >26-field lines.
-    # The optimistic single-pass path is only legal on an empty table
-    # (its widen-rerun uses dynamic partition overwrite); on a
-    # populated one the probe pass must be used so batch 1's rows
-    # survive even when both batches share event-hour partitions.
+    # Batch 1 populates the table; batch 2 carries >26-field lines and
+    # shares its event-hour partitions. The wide batch is appended once
+    # at its own width, so batch 1's rows survive beside it.
     lines1 = generate_lines(200, seed=5, dup_fraction=0.0, garbage_fraction=0.0)
     lines2 = generate_lines(
         200, seed=6, dup_fraction=0.0, garbage_fraction=0.0, extra_fraction=0.2
@@ -201,9 +165,8 @@ def test_widening_append_preserves_existing_rows(spark, tmp_path):
 
 
 def test_widening_rerun_does_not_duplicate(spark, tmp_path):
-    # Fresh-table wide batch: pass 1 writes truncated, the widen-rerun
-    # replaces it under dynamic overwrite — net row count must be the
-    # batch's own, not 2x.
+    # Fresh-table wide batch: written once at the learned width — the
+    # net row count is the batch's own, not 2x.
     lines = generate_lines(
         250, seed=7, dup_fraction=0.0, garbage_fraction=0.0, extra_fraction=0.15
     )
@@ -211,3 +174,96 @@ def test_widening_rerun_does_not_duplicate(spark, tmp_path):
     res = run_batch_transform(spark, _write_lines(tmp_path, "b.txt", lines), out, EngineConfig())
     assert res.extra_fields >= 1
     assert spark.read.parquet(out).count() == res.rows_out == 250
+
+
+def _wide_lines(seed: int) -> list[str]:
+    return generate_lines(
+        300, seed=seed, dup_fraction=0.05, garbage_fraction=0.02, extra_fraction=0.05
+    )
+
+
+@pytest.mark.parametrize("dest", ["fresh", "append"])
+def test_wide_batch_scans_and_writes_once(spark, tmp_path, monkeypatch, dest):
+    # M3 learns the width from the one materialized pass: a wide batch
+    # parses its input once and writes once, whether the destination
+    # is empty or already holds a batch (no probe pass, no rewrite).
+    from s3logs_parquet_spark.plans import batch
+
+    out = str(tmp_path / "out")
+    if dest == "append":
+        run_batch_transform(spark, _write_lines(tmp_path, "b0.txt", _wide_lines(20)), out)
+    calls = {"parse": 0, "write": 0}
+
+    def counted(key, fn):
+        def wrapper(*args, **kwargs):
+            calls[key] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(batch, "parse_s3_access_log", counted("parse", batch.parse_s3_access_log))
+    monkeypatch.setattr(
+        batch, "write_partitioned_parquet", counted("write", batch.write_partitioned_parquet)
+    )
+    res = run_batch_transform(spark, _write_lines(tmp_path, "b1.txt", _wide_lines(21)), out)
+    assert res.extra_fields >= 1
+    assert calls == {"parse": 1, "write": 1}
+
+
+def test_batch_leaves_no_persistent_blocks(spark, tmp_path, monkeypatch):
+    # The materialized batch is released after the write, and also when
+    # the write raises.
+    from s3logs_parquet_spark.plans import batch
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    inp = _write_lines(tmp_path, "b.txt", _wide_lines(22))
+    before = persistent()
+    run_batch_transform(spark, inp, str(tmp_path / "ok"))
+    assert persistent() == before
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(batch, "write_partitioned_parquet", failing_write)
+    with pytest.raises(RuntimeError, match="write failed"):
+        run_batch_transform(spark, inp, str(tmp_path / "failed"))
+    assert persistent() == before
+
+
+def test_writer_exchange_files_per_hive_partition(spark, tmp_path):
+    # The writer exchange routes each Hive partition to one task per
+    # salt value: salt 1 writes exactly one file per hour= directory,
+    # salt 3 at most three, with the same rows.
+    from s3logs_parquet_spark.plans.batch import _transform_lines
+    from s3logs_parquet_spark.sources.text_source import read_log_lines
+
+    inp = _write_lines(
+        tmp_path,
+        "b.txt",
+        generate_lines(1500, seed=23, dup_fraction=0.05, garbage_fraction=0.0, span_seconds=4 * 3600),
+    )
+
+    def files_per_hour(path):
+        counts = {}
+        for root, _d, names in os.walk(path):
+            n = sum(1 for f in names if f.endswith(".parquet"))
+            if os.path.basename(root).startswith("hour="):
+                counts[root] = n
+        return counts
+
+    tables = {}
+    for salt in (1, 3):
+        out = str(tmp_path / f"salt{salt}")
+        _transform_lines(spark, read_log_lines(spark, inp), out, EngineConfig(), salt)
+        counts = files_per_hour(out)
+        assert len(counts) == 4
+        if salt == 1:
+            assert set(counts.values()) == {1}
+        else:
+            assert all(1 <= n <= 3 for n in counts.values()) and max(counts.values()) > 1
+        tables[salt] = spark.read.parquet(out)
+    one, three = tables[1], tables[3].select(tables[1].columns)
+    assert one.count() == three.count() > 0
+    assert one.exceptAll(three).count() == 0 and three.exceptAll(one).count() == 0

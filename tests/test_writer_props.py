@@ -48,7 +48,11 @@ def test_writer_version_reaches_footer(spark, tmp_path):
     emits DELTA_* codings, PARQUET_1_0 the classic PLAIN/BIT_PACKED
     set. created_by is parquet-mr's own stamp either way (the
     documented divergence from parquet-rs)."""
-    from s3logs_parquet_spark.writer import with_partition_columns, write_partitioned_parquet
+    from s3logs_parquet_spark.writer import (
+        with_partition_columns,
+        write_partitioned_parquet,
+        writer_exchange,
+    )
     from s3logs_parquet_spark.functions.parse import parse_s3_access_log
     from s3logs_parquet_spark.testing import generate_lines
 
@@ -61,7 +65,9 @@ def test_writer_version_reaches_footer(spark, tmp_path):
         parsed = parse_s3_access_log(lines).filter("ts IS NOT NULL")
         out = with_partition_columns(parsed, cfg).drop("n_fields", "ts")
         dest = str(tmp_path / f"t{ver}")
-        write_partitioned_parquet(out, dest, cfg, mode="overwrite")
+        # through the writer exchange, as the batch ETL writes: one file
+        # per Hive partition, not a sliver per input partition
+        write_partitioned_parquet(writer_exchange(out), dest, cfg, mode="overwrite")
         md = _one_footer(dest)
         encodings[ver] = {
             e for i in range(md.num_columns) for e in md.row_group(0).column(i).encodings
