@@ -25,18 +25,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Per parent session, one conf-isolated clone with constraint
-# propagation disabled (see plan_heavy). WeakKey so a stopped/GC'd
-# parent does not pin its clone alive.
-_PLAN_HEAVY_CLONES: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Per parent session, one conf-isolated clone with whole-stage codegen
-# off (see build_flat). Same lifetime rules as _PLAN_HEAVY_CLONES.
-_BUILD_FLAT_CLONES: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
+# Per parent session, its conf-isolated clones keyed by the one
+# (conf key, value) each changes (see _conf_clone). WeakKey so a
+# stopped/GC'd parent does not pin its clones alive.
+_CONF_CLONES: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def rebind_onto(df: DataFrame, sess: SparkSession) -> DataFrame:
@@ -51,6 +43,25 @@ def rebind_onto(df: DataFrame, sess: SparkSession) -> DataFrame:
         sess._jsparkSession, df._jdf.logicalPlan()
     )
     return _CDataFrame(jdf, sess)
+
+
+def _conf_clone(df: DataFrame, conf_key: str, value: str) -> DataFrame:
+    """Rebind ``df`` onto the clone of its session (same context, shared
+    catalog, isolated SQLConf) whose conf differs only in ``conf_key =
+    value``. One clone per (parent session, conf), cached; a frame
+    already bound to that clone is returned as is."""
+    sess = df.sparkSession
+    if getattr(sess, "_s3lps_conf", None) == (conf_key, value):
+        return df
+    clones = _CONF_CLONES.setdefault(sess, {})
+    clone = clones.get((conf_key, value))
+    if clone is None:
+        jclone = df._jdf.sparkSession().cloneSession()
+        jclone.conf().set(conf_key, value)
+        clone = SparkSession(sess.sparkContext, jclone)
+        clone._s3lps_conf = (conf_key, value)
+        clones[(conf_key, value)] = clone
+    return rebind_onto(df, clone)
 
 
 def build_flat(df: DataFrame) -> DataFrame:
@@ -74,17 +85,7 @@ def build_flat(df: DataFrame) -> DataFrame:
     Scoped: ONLY the one-off build runs here. Callers rebind the
     materialized result back onto their own session (rebind_onto) so
     the hot probe path keeps full whole-stage codegen."""
-    sess = df.sparkSession
-    if getattr(sess, "_s3lps_build_flat", False):
-        return df
-    clone = _BUILD_FLAT_CLONES.get(sess)
-    if clone is None:
-        jclone = df._jdf.sparkSession().cloneSession()
-        jclone.conf().set("spark.sql.codegen.wholeStage", "false")
-        clone = SparkSession(sess.sparkContext, jclone)
-        clone._s3lps_build_flat = True
-        _BUILD_FLAT_CLONES[sess] = clone
-    return rebind_onto(df, clone)
+    return _conf_clone(df, "spark.sql.codegen.wholeStage", "false")
 
 
 def plan_heavy(df: DataFrame) -> DataFrame:
@@ -128,17 +129,7 @@ def plan_heavy(df: DataFrame) -> DataFrame:
     checks comparing session identity ('cached.sparkSession is not
     spark') over a plan_heavy-derived frame would thrash — compare
     ``sparkContext`` or rebind_onto the caller's session first."""
-    sess = df.sparkSession
-    if getattr(sess, "_s3lps_plan_heavy", False):
-        return df
-    clone = _PLAN_HEAVY_CLONES.get(sess)
-    if clone is None:
-        jclone = df._jdf.sparkSession().cloneSession()
-        jclone.conf().set("spark.sql.constraintPropagation.enabled", "false")
-        clone = SparkSession(sess.sparkContext, jclone)
-        clone._s3lps_plan_heavy = True
-        _PLAN_HEAVY_CLONES[sess] = clone
-    return rebind_onto(df, clone)
+    return _conf_clone(df, "spark.sql.constraintPropagation.enabled", "false")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -208,6 +199,31 @@ def with_unit_vector(df: DataFrame, vec_col: str, out_col: str = "unit_vec") -> 
     )
 
 
+def _top_per_query(
+    df: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    order: Column,
+    n: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The per-query top-``n`` cut every ANN operator ends with (and a
+    rerank starts with): ``row_number()`` over ``partitionBy(query_id)``
+    ordered by ``order`` then ``corpus_id`` ascending (the tie-break
+    that keeps results deterministic and oracle-checkable), kept where
+    ``rank_col <= n``.
+
+    The bound stays a LITERAL: Spark 4 then plans the cut as a
+    partition-local ``WindowGroupLimit`` ahead of the query-keyed
+    exchange plus the final window (prune locally, merge globally —
+    the REPOSE top-k shape), so the shuffle carries at most ``n`` rows
+    per query per partition. A column-valued bound loses that plan."""
+    w = Window.partitionBy(query_id).orderBy(order, F.asc(corpus_id))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= n
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -221,9 +237,8 @@ def brute_force_topk(
     corpus row, rank with a per-query window.
 
     Plan shape at scale: corpus scan is embarrassingly parallel; the
-    only shuffle is the per-query top-k (rank window keyed by query id
-    — and the partial sort is bounded by k per partition since Spark
-    pushes TopK through the window when followed by the rank filter).
+    only shuffle is the per-query top-k, bounded by k rows per query
+    per partition (see _top_per_query).
     Returns (query_id, corpus_id, cosine, rank).
     """
     q = F.broadcast(queries.select(F.col(query_id), F.col(query_vec).alias("_qv")))
@@ -233,11 +248,7 @@ def brute_force_topk(
         corpus_id,
         cosine_sim(F.col("_cv"), F.col("_qv")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k)
 
 
 def plane_signs(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -369,8 +380,7 @@ def lsh_topk(
     scored = cand.select(
         query_id, corpus_id, cosine_sim(F.col("_cv"), F.col("_qv")).alias("cosine")
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k)
 
 
 def _dlit(x: float) -> str:
@@ -598,14 +608,9 @@ def ivf_train(
     return centroids
 
 
-def probe_cells_driver(
-    queries: DataFrame,
-    query_id: str,
-    query_vec: str,
-    centroids: list[list[float]],
-    n_probe: int,
-) -> list[tuple[object, list[int]]]:
-    """Per-query top-``n_probe`` nearest cells, computed DRIVER-side.
+def _probe_cells_py(rows, centroids: list[list[float]], n_probe: int):
+    """Per-query top-``n_probe`` nearest cells of the collected
+    (``_qid``, ``_qv``) query rows, computed DRIVER-side.
 
     The query batch is broadcast-small by contract (every IVF caller
     broadcasts it into the candidate join), so collecting it is the
@@ -618,20 +623,6 @@ def probe_cells_driver(
     (PERF.md round 5). Arithmetic is the same fixed left-to-right
     summation as the SQL kernel (IEEE doubles both sides), ties broken
     toward the lower cell id — probe choices are bit-identical."""
-    rows = _collect_query_rows(queries, query_id, query_vec)
-    return _probe_cells_py(rows, centroids, n_probe)
-
-
-def _collect_query_rows(queries: DataFrame, query_id: str, query_vec: str):
-    """The bounded query-batch collect — (qid, vector) rows. One job;
-    every per-call driver-side probe artifact derives from it."""
-    return queries.select(
-        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
-    ).collect()
-
-
-def _probe_cells_py(rows, centroids: list[list[float]], n_probe: int):
-    """probe_cells_driver's scoring over already-collected rows."""
     cns = []
     for c in centroids:
         s = 0.0
@@ -670,12 +661,14 @@ def _probe_plan(
     Until round 14 the qp frame was built by re-scanning the query
     source and joining a (qid, cell) local frame onto it — a parquet
     scan + broadcast join PER CALL inside the broadcast build, when
-    probe_cells_driver had already collected the very (qid, vector)
+    the probe scoring had already collected the very (qid, vector)
     rows the join re-derived (guide §2.4: an exchange/scan you already
     have the answer to). Building the frame locally from that collect
     is value-identical (same rows, same vectors) and turns the probe
     side into a LocalTableScan."""
-    rows = _collect_query_rows(queries, query_id, query_vec)
+    rows = queries.select(
+        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
+    ).collect()
     probes = _probe_cells_py(rows, centroids, n_probe)
     spark = queries.sparkSession
     id_field = queries.schema[query_id]
@@ -698,33 +691,13 @@ def _probe_plan(
     return probes, qp
 
 
-def _probe_frame(
-    queries: DataFrame,
-    query_id: str,
-    query_vec: str,
-    centroids: list[list[float]],
-    n_probe: int,
-    probes: list[tuple[object, list[int]]] | None = None,
+def _assign_corpus(
+    corpus: DataFrame, corpus_id: str, corpus_vec: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """(query_id, _qv, cell) — one row per probed cell per query, the
-    broadcast side of the candidate join. Kept for callers that carry
-    their own ``probes``; new code should use :func:`_probe_plan`
-    (one collect, local frame, no per-call query re-scan)."""
-    if probes is None:
-        return _probe_plan(queries, query_id, query_vec, centroids, n_probe)[1]
-    spark = queries.sparkSession
-    id_field = queries.schema[query_id]
-    pf = spark.createDataFrame(
-        [(qid, c) for qid, cells in probes for c in cells],
-        T.StructType(
-            [
-                T.StructField(query_id, id_field.dataType),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        ),
+    """(corpus_id, _cv, cell): the corpus side of every IVF operator."""
+    return ivf_assign(
+        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")), "_cv", centroids
     )
-    q = queries.select(F.col(query_id), F.col(query_vec).alias("_qv"))
-    return q.join(F.broadcast(pf), on=query_id).select(query_id, "_qv", "cell")
 
 
 def ivf_topk(
@@ -746,7 +719,7 @@ def ivf_topk(
     SparkContext IS shared, and execution semantics are identical).
     Callers caching the result behind a session-identity check should
     compare ``sparkContext`` or rebind_onto their own session."""
-    c = ivf_assign(corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")), "_cv", centroids, "cell")
+    c = _assign_corpus(corpus, corpus_id, corpus_vec, centroids)
     _probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
     cand = c.join(F.broadcast(qp), on="cell").select(query_id, corpus_id, "_cv", "_qv")
     scored = cand.select(
@@ -754,14 +727,13 @@ def ivf_topk(
         corpus_id,
         cosine_sim_expanded("_cv", "_qv", len(centroids[0])).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     # plan_heavy: the WindowGroupLimit pushdown fuses a map-side Sort
     # with the sims+cosine projections; with constraint propagation on,
     # the inferred IsNotNull(kernel) filter doubles that stage past the
     # 64 KB codegen limit (round 13 — measured interpreted fallback on
     # every execution of this plan)
     return plan_heavy(
-        scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k)
     )
 
 
@@ -790,7 +762,8 @@ def pq_codebooks(
             "for the deterministic init; lower k_sub or use a larger corpus"
         )
     dim = len(vecs[0])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     return [[v[j * sub : (j + 1) * sub] for v in vecs] for j in range(m)]
 
@@ -817,6 +790,27 @@ def _sub_dists_sql(vec_col: str, j: int, sub: int, cents: list[list[float]]) -> 
     return (
         "array(" + ", ".join(f"({_sub_sq_l2_sql(vec_col, j * sub, c)})" for c in cents) + ")"
     )
+
+
+def _adc_tables(vec_col: str, codebooks: list[list[list[float]]]) -> list[Column]:
+    """The query side of asymmetric distance computation (ADC): one
+    lookup table ``_qt{j}`` per subspace, the squared L2 distances
+    from ``vec_col``'s j-th subvector to each sub-centroid."""
+    sub = len(codebooks[0][0])
+    return [
+        F.expr(_sub_dists_sql(vec_col, j, sub, cents)).alias(f"_qt{j}")
+        for j, cents in enumerate(codebooks)
+    ]
+
+
+def _adc_score(m: int) -> Column:
+    """A candidate's ADC distance: the sum over the ``m`` subspaces of
+    its table entry ``_qt{j}[pq_code[j]]`` — m lookups and adds, the
+    full corpus vector never read."""
+    adc = F.get(F.col("_qt0"), F.get(F.col("pq_code"), 0))
+    for j in range(1, m):
+        adc = adc + F.get(F.col(f"_qt{j}"), F.get(F.col("pq_code"), j))
+    return adc
 
 
 def pq_encode(
@@ -866,34 +860,17 @@ def pq_topk(
     query table broadcasts, the ADC scan is map-only over (id, codes),
     and only candidate rows' full vectors feed the exact rerank —
     the classic IVF-less PQ pipeline (Jégou et al., TPAMI'11)."""
-    sub = len(codebooks[0][0])
     enc = pq_encode(corpus, corpus_vec, codebooks)
-
     q = queries.select(
-        F.col(query_id),
-        F.col(query_vec).alias("_qv"),
-        *[
-            F.expr(_sub_dists_sql(query_vec, j, sub, cents)).alias(f"_qt{j}")
-            for j, cents in enumerate(codebooks)
-        ],
+        F.col(query_id), F.col(query_vec).alias("_qv"), *_adc_tables(query_vec, codebooks)
     )
-    joined = enc.crossJoin(F.broadcast(q))
-    adc = None
-    for j in range(len(codebooks)):
-        term = F.get(F.col(f"_qt{j}"), F.get(F.col("pq_code"), j))
-        adc = term if adc is None else adc + term
-    cand_w = Window.partitionBy(query_id).orderBy(F.col("_adc"), F.col(corpus_id))
-    cand = (
-        joined.withColumn("_adc", adc)
-        .withColumn("_crank", F.row_number().over(cand_w))
-        .filter(F.col("_crank") <= n_candidates)
+    joined = enc.crossJoin(F.broadcast(q)).withColumn("_adc", _adc_score(len(codebooks)))
+    cand = _top_per_query(
+        joined, query_id, corpus_id, F.asc("_adc"), n_candidates, "_crank"
     )
-    rerank_w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        cand.withColumn("cosine", cosine_sim(F.col(corpus_vec), F.col("_qv")))
-        .withColumn("rank", F.row_number().over(rerank_w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    scored = cand.withColumn("cosine", cosine_sim(F.col(corpus_vec), F.col("_qv")))
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k).select(
+        query_id, corpus_id, "cosine", "rank"
     )
 
 
@@ -925,18 +902,35 @@ def ivf_index_write(
     centroids = ivf_train(
         corpus, corpus_vec, n_cells=n_cells, iters=iters, id_col=corpus_id
     )
-    assigned = ivf_assign(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")),
-        "_cv",
-        centroids,
-        "cell",
-    )
+    assigned = _assign_corpus(corpus, corpus_id, corpus_vec, centroids)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(cent_rows, "cell INT, centroid ARRAY<DOUBLE>").coalesce(
+    _write_centroids(spark, path, centroids)
+    return centroids
+
+
+def _write_centroids(spark: SparkSession, path: str, centroids: list[list[float]]) -> None:
+    """The persisted indexes' coarse quantizer: ``<path>/centroids`` as
+    one tiny (cell, centroid) parquet file."""
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+    spark.createDataFrame(rows, "cell INT, centroid ARRAY<DOUBLE>").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return centroids
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list[list[float]]:
+    """Inverse of _write_centroids: the centroid list in cell order."""
+    rows = spark.read.parquet(f"{path}/centroids").collect()
+    return [
+        [float(x) for x in r["centroid"]] for r in sorted(rows, key=lambda r: r["cell"])
+    ]
+
+
+def _probed_corpus(spark: SparkSession, path: str, probes) -> DataFrame:
+    """A fresh scan of the persisted corpus with a literal IN filter on
+    the probed cells — static partition pruning, visible as
+    PartitionFilters in the plan."""
+    probed = sorted({c for _qid, cells in probes for c in cells})
+    return spark.read.parquet(f"{path}/corpus").filter(F.col("cell").isin(probed))
 
 
 def ivf_index_topk(
@@ -957,14 +951,9 @@ def ivf_index_topk(
 
     The probe-cell collect is bounded by n_queries × n_probe ints —
     the same tiny-model discipline as the centroid literals."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    centroids = [
-        [float(x) for x in r["centroid"]]
-        for r in sorted(cent_rows, key=lambda r: r["cell"])
-    ]
+    centroids = _read_centroids(spark, path)
     probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
-    probed = sorted({c for _qid, cells in probes for c in cells})
-    corpus = spark.read.parquet(f"{path}/corpus").filter(F.col("cell").isin(probed))
+    corpus = _probed_corpus(spark, path, probes)
     cand = corpus.join(F.broadcast(qp), on="cell").select(
         query_id, corpus_id, "_cv", "_qv"
     )
@@ -973,8 +962,7 @@ def ivf_index_topk(
         corpus_id,
         cosine_sim_expanded("_cv", "_qv", len(centroids[0])).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -995,12 +983,7 @@ def ivfpq_encode_corpus(
     (see ivfpq_index_write for the on-disk form); callers that query
     repeatedly should checkpoint/persist the result and pass it to
     ivfpq_topk(encoded=...)."""
-    assigned = ivf_assign(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")),
-        "_cv",
-        centroids,
-        "cell",
-    )
+    assigned = _assign_corpus(corpus, corpus_id, corpus_vec, centroids)
     return pq_encode(assigned, "_cv", codebooks, "pq_code")
 
 
@@ -1039,43 +1022,20 @@ def ivfpq_topk(
     ivfpq_encode_corpus, computed once and checkpointed/persisted —
     so repeated query batches pay only the probe+ADC+rerank path, the
     production cost model."""
-    sub = len(codebooks[0][0])
-    m = len(codebooks)
-    if encoded is not None:
-        enc = encoded
-    else:
-        enc = ivfpq_encode_corpus(
-            corpus, corpus_id, centroids, codebooks, corpus_vec
-        )
-
-    probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
-    qt = qp.select(
-        F.col(query_id),
-        "cell",
-        "_qv",
-        *[
-            F.expr(_sub_dists_sql("_qv", j, sub, cents)).alias(f"_qt{j}")
-            for j, cents in enumerate(codebooks)
-        ],
+    enc = encoded if encoded is not None else ivfpq_encode_corpus(
+        corpus, corpus_id, centroids, codebooks, corpus_vec
     )
-
-    cand = enc.join(F.broadcast(qt), on="cell")
-    adc = None
-    for j in range(m):
-        term = F.get(F.col(f"_qt{j}"), F.get(F.col("pq_code"), j))
-        adc = term if adc is None else adc + term
-    cand_w = Window.partitionBy(query_id).orderBy(F.col("_adc"), F.col(corpus_id))
-    cand = (
-        cand.withColumn("_adc", adc)
-        .withColumn("_crank", F.row_number().over(cand_w))
-        .filter(F.col("_crank") <= n_candidates)
+    _probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
+    qt = qp.select(F.col(query_id), "cell", "_qv", *_adc_tables("_qv", codebooks))
+    joined = enc.join(F.broadcast(qt), on="cell").withColumn(
+        "_adc", _adc_score(len(codebooks))
     )
-    rerank_w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        cand.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
-        .withColumn("rank", F.row_number().over(rerank_w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    cand = _top_per_query(
+        joined, query_id, corpus_id, F.asc("_adc"), n_candidates, "_crank"
+    )
+    scored = cand.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k).select(
+        query_id, corpus_id, "cosine", "rank"
     )
 
 
@@ -1103,21 +1063,14 @@ def ivfpq_index_write(
     spark = corpus.sparkSession
     centroids = ivf_train(corpus, corpus_vec, n_cells=n_cells, iters=iters, id_col=corpus_id)
     codebooks = pq_codebooks(corpus, corpus_vec, m=m, k_sub=k_sub, id_col=corpus_id)
-    assigned = ivf_assign(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")),
-        "_cv",
-        centroids,
-        "cell",
-    )
     # build_flat: the fused assign+PQ-tables span cannot compile
     # (64 KB method limit); skip the doomed whole-stage compile for
     # this one-off write — nothing downstream rides this frame
-    enc = build_flat(pq_encode(assigned, "_cv", codebooks, "pq_code"))
+    enc = build_flat(
+        ivfpq_encode_corpus(corpus, corpus_id, centroids, codebooks, corpus_vec)
+    )
     enc.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(cent_rows, "cell INT, centroid ARRAY<DOUBLE>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, centroids)
     cb_rows = [
         (j, ci, [float(x) for x in c])
         for j, cents in enumerate(codebooks)
@@ -1152,67 +1105,36 @@ def ivfpq_index_topk(
        probed partitions reading (id, vector), exact cosine, top-k.
 
     Centroid/codebook loads and the probe-cell computation are the
-    bounded driver-side model discipline (ann.py probe_cells_driver)."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    centroids = [
-        [float(x) for x in r["centroid"]]
-        for r in sorted(cent_rows, key=lambda r: r["cell"])
-    ]
+    bounded driver-side model discipline (ann.py _probe_cells_py)."""
+    centroids = _read_centroids(spark, path)
     cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["subspace"] for r in cb_rows)
     k_sub = 1 + max(r["cid"] for r in cb_rows)
     codebooks: list[list[list[float]]] = [[None] * k_sub for _ in range(m)]
     for r in cb_rows:
         codebooks[r["subspace"]][r["cid"]] = [float(x) for x in r["centroid"]]
-    sub = len(codebooks[0][0])
 
     probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
-    qt = qp.select(
-        F.col(query_id),
-        "cell",
-        "_qv",
-        *[
-            F.expr(_sub_dists_sql("_qv", j, sub, cents)).alias(f"_qt{j}")
-            for j, cents in enumerate(codebooks)
-        ],
-    )
-    probed = sorted({c for _qid, cells in probes for c in cells})
+    qt = qp.select(F.col(query_id), "cell", *_adc_tables("_qv", codebooks))
 
     # scan 1 — codes only (column pruning: no _cv in ReadSchema)
-    codes = (
-        spark.read.parquet(f"{path}/corpus")
-        .filter(F.col("cell").isin(probed))
-        .select(corpus_id, "cell", "pq_code")
+    codes = _probed_corpus(spark, path, probes).select(corpus_id, "cell", "pq_code")
+    joined = codes.join(F.broadcast(qt), on="cell").withColumn(
+        "_adc", _adc_score(m)
     )
-    cand = codes.join(F.broadcast(qt.drop("_qv")), on="cell")
-    adc = None
-    for j in range(m):
-        term = F.get(F.col(f"_qt{j}"), F.get(F.col("pq_code"), j))
-        adc = term if adc is None else adc + term
-    cand_w = Window.partitionBy(query_id).orderBy(F.col("_adc"), F.col(corpus_id))
-    cand = (
-        cand.withColumn("_adc", adc)
-        .withColumn("_crank", F.row_number().over(cand_w))
-        .filter(F.col("_crank") <= n_candidates)
-        .select(query_id, corpus_id)
-    )
+    cand = _top_per_query(
+        joined, query_id, corpus_id, F.asc("_adc"), n_candidates, "_crank"
+    ).select(query_id, corpus_id)
 
     # scan 2 — fetch candidate vectors from the same probed partitions
-    vecs = (
-        spark.read.parquet(f"{path}/corpus")
-        .filter(F.col("cell").isin(probed))
-        .select(corpus_id, "_cv")
-    )
+    vecs = _probed_corpus(spark, path, probes).select(corpus_id, "_cv")
     qv = queries.select(F.col(query_id), F.col(query_vec).alias("_qv"))
     fetched = vecs.join(F.broadcast(cand), on=corpus_id).join(
         F.broadcast(qv), on=query_id
     )
-    rerank_w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        fetched.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
-        .withColumn("rank", F.row_number().over(rerank_w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    scored = fetched.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
+    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k).select(
+        query_id, corpus_id, "cosine", "rank"
     )
 
 
@@ -1290,10 +1212,14 @@ def sq_encode(
             terms.append("CAST(0 AS INT)")
     out = df.withColumn(out_col, F.expr("array(" + ", ".join(terms) + ")"))
     if with_norm:
-        dq = _sq_dequant_sqls(out_col, stats)
-        sqsum = " + ".join(f"({c} * {c})" for c in dq)
-        out = out.withColumn("sq_norm", F.expr(f"SQRT({sqsum})"))
+        out = out.withColumn("sq_norm", F.expr(_sq_norm_sql(out_col, stats)))
     return out
+
+
+def _sq_norm_sql(code_col: str, stats: list[tuple[float, float]]) -> str:
+    """L2 norm of the dequantized codes, fixed-order expanded SQL."""
+    sqsum = " + ".join(f"({c} * {c})" for c in _sq_dequant_sqls(code_col, stats))
+    return f"SQRT({sqsum})"
 
 
 def _sq_dequant_sqls(code_col: str, stats: list[tuple[float, float]]) -> list[str]:
@@ -1369,16 +1295,15 @@ def sq8_topk(
                 + f". Got columns: {encoded.columns}"
             )
     enc = encoded if encoded is not None else sq_encode(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")), "_cv", stats
+        corpus.select(F.col(corpus_id), F.col(corpus_vec).alias("_cv")),
+        "_cv",
+        stats,
+        code_col,
     )
-    if encoded is None:
-        code_col = "sq_code"  # sq_encode's default out_col
     if "sq_norm" not in enc.columns:
         # older/minimal encodes: derive the norm from the codes (same
         # fixed-order arithmetic sq_encode stores)
-        dqn = _sq_dequant_sqls(code_col, stats)
-        sqsum = " + ".join(f"({c} * {c})" for c in dqn)
-        enc = enc.withColumn("sq_norm", F.expr(f"SQRT({sqsum})"))
+        enc = enc.withColumn("sq_norm", F.expr(_sq_norm_sql(code_col, stats)))
     q = F.broadcast(queries.select(F.col(query_id), F.col(query_vec).alias("_qv")))
     dq = _sq_dequant_sqls(code_col, stats)
     qn = " + ".join(
@@ -1396,21 +1321,13 @@ def sq8_topk(
     approx_cos = F.expr(f"(({approx_dot}) / (sq_norm * SQRT({qn})))")
     scored = enc.crossJoin(q).withColumn("_acos", approx_cos)
     if n_candidates is None:
-        w = Window.partitionBy(query_id).orderBy(F.desc("_acos"), F.asc(corpus_id))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, F.col("_acos").alias("cosine"), "rank")
+        return _top_per_query(scored, query_id, corpus_id, F.desc("_acos"), k).select(
+            query_id, corpus_id, F.col("_acos").alias("cosine"), "rank"
         )
-    cw = Window.partitionBy(query_id).orderBy(F.desc("_acos"), F.asc(corpus_id))
-    cand = (
-        scored.withColumn("_crank", F.row_number().over(cw))
-        .filter(F.col("_crank") <= n_candidates)
+    cand = _top_per_query(
+        scored, query_id, corpus_id, F.desc("_acos"), n_candidates, "_crank"
     )
-    rw = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        cand.withColumn("cosine", cosine_sim_expanded("_cv", "_qv", dim))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    rescored = cand.withColumn("cosine", cosine_sim_expanded("_cv", "_qv", dim))
+    return _top_per_query(rescored, query_id, corpus_id, F.desc("cosine"), k).select(
+        query_id, corpus_id, "cosine", "rank"
     )

@@ -44,7 +44,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import (
+    DataStreamWriter,
+    StreamingQuery,
+    StreamingQueryListener,
+)
 
 from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.functions.parse import parse_s3_access_log
@@ -137,6 +141,20 @@ def _event_date_col(cfg: EngineConfig, scfg: StreamingJobConfig) -> F.Column:
         base = shifted(F.col("ts"), cfg.tz_offset_seconds)
     fmt = "yyyyMMdd" if scfg.partition_granularity == "day" else "yyyyMMddHH"
     return F.date_format(base, fmt)
+
+
+def _start(
+    writer: DataStreamWriter, checkpoint_dir: str, scfg: StreamingJobConfig
+) -> StreamingQuery:
+    """Start every streaming job the same way: checkpointed at
+    ``checkpoint_dir``, triggered availableNow (drain what is there,
+    then stop) or every ``scfg.processing_time``."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if scfg.available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=scfg.processing_time)
+    return writer.start()
 
 
 def build_stream(
@@ -240,14 +258,7 @@ def run_manifest_stream(
             "maxRecordsPerFile", cfg.threshold_lines
         ).partitionBy("dt").parquet(f"{output_dir}/batch={batch_id}")
 
-    writer = events.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(events.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def run_streaming_transform(
@@ -266,17 +277,12 @@ def run_streaming_transform(
     writer = (
         df.writeStream.format("parquet")
         .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .option("compression", cfg.compression)
         .option("maxRecordsPerFile", cfg.threshold_lines)  # T3 count rotation
         .partitionBy("dt")
         .outputMode("append")
     )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(writer, checkpoint_dir, scfg)
 
 
 def run_stream_asof_enrich(
@@ -320,14 +326,7 @@ def run_stream_asof_enrich(
         )
         enriched.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def run_stream_semantic_dedup(
@@ -594,14 +593,7 @@ def run_stream_semantic_dedup(
         release(out)
         release(assigned)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def run_stream_inference(
@@ -662,14 +654,7 @@ def run_stream_inference(
         _probe_plan("stream:inference/scored", scored)
         scored.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    query = writer.start()
+    query = _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
     if bc is not None:
         # per-run broadcast, per-run CLEANUP (ADVICE round 10): without
         # this, repeated run/stop cycles in one long-lived driver leak
@@ -758,14 +743,7 @@ def run_stream_kmv(
         _probe_plan("stream:kmv/contribution", contrib)
         contrib.write.mode("overwrite").parquet(f"{sketch_path}/batch={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def read_kmv_sketch(
@@ -844,14 +822,7 @@ def run_stream_mg(
         _probe_plan("stream:mg/contribution", contrib)
         contrib.write.mode("overwrite").parquet(f"{sketch_path}/batch={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def run_stream_rollup(
@@ -912,14 +883,7 @@ def run_stream_rollup(
         _probe_plan("stream:rollup/contribution", contrib)
         contrib.write.mode("overwrite").parquet(f"{rollup_path}/batch={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def read_stream_rollup(
@@ -1554,14 +1518,7 @@ def run_stream_curation(
             json.dumps({k: round(v, 2) for k, v in _marks}),
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if scfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=scfg.processing_time)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
 
 
 def graceful_drain(query: StreamingQuery, timeout_sec: float | None = None) -> None:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.operators.ann import (
@@ -157,6 +158,10 @@ def test_ivf_train_and_pq_codebooks_validate_corpus_size(spark):
 
     with pytest.raises(ValueError, match="k_sub"):
         pq_codebooks(tiny, "embedding", m=4, k_sub=8)
+
+    # a dim that m does not divide must raise, also under python -O
+    with pytest.raises(ValueError, match="divisible"):
+        pq_codebooks(emb_df(8, dim=10), "embedding", m=4, k_sub=8)
 
     with pytest.raises(ValueError, match="n_cells"):
         ivf_train(tiny, "embedding", n_cells=8, iters=1, id_col="vec_id")
@@ -504,3 +509,91 @@ def test_build_flat_scoped_and_rebind_onto_round_trips(spark, sf_dir):
     got = sorted(map(tuple, flat.select("vec_id", "cell", "pq_code").collect()))
     want = sorted(map(tuple, back.select("vec_id", "cell", "pq_code").collect()))
     assert got == want and len(got) > 0
+
+
+def _topk_exact(spark, emb, q, tmp_path):
+    return brute_force_topk(emb, q, "vec_id", "query_id", k=5)
+
+
+def _topk_lsh(spark, emb, q, tmp_path):
+    return lsh_topk(emb, q, "vec_id", "query_id", k=5, n_bands=16, bits_per_band=4)
+
+
+def _topk_ivf(spark, emb, q, tmp_path):
+    cents = ivf_train(emb, "embedding", n_cells=4, iters=1, id_col="vec_id")
+    return ivf_topk(emb, q, "vec_id", "query_id", cents, k=5, n_probe=2)
+
+
+def _topk_ivf_index(spark, emb, q, tmp_path):
+    from s3logs_parquet_spark.operators.ann import ivf_index_topk, ivf_index_write
+
+    path = str(tmp_path / "ivf_index")
+    ivf_index_write(emb, path, "vec_id", n_cells=4, iters=1)
+    return ivf_index_topk(spark, path, q, "vec_id", "query_id", k=5, n_probe=2)
+
+
+def _topk_pq(spark, emb, q, tmp_path):
+    from s3logs_parquet_spark.operators.ann import pq_codebooks, pq_topk
+
+    cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
+    return pq_topk(emb, q, "vec_id", "query_id", cbs, k=5, n_candidates=20)
+
+
+def _topk_ivfpq(spark, emb, q, tmp_path):
+    from s3logs_parquet_spark.operators.ann import ivfpq_topk, pq_codebooks
+
+    cents = ivf_train(emb, "embedding", n_cells=4, iters=1, id_col="vec_id")
+    cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
+    return ivfpq_topk(
+        emb, q, "vec_id", "query_id", cents, cbs, k=5, n_probe=2, n_candidates=20
+    )
+
+
+def _topk_ivfpq_index(spark, emb, q, tmp_path):
+    from s3logs_parquet_spark.operators.ann import ivfpq_index_topk, ivfpq_index_write
+
+    path = str(tmp_path / "ivfpq_index")
+    ivfpq_index_write(emb, path, "vec_id", n_cells=4, iters=1, m=4, k_sub=8)
+    return ivfpq_index_topk(
+        spark, path, q, "vec_id", "query_id", k=5, n_probe=2, n_candidates=20
+    )
+
+
+def _topk_sq8(spark, emb, q, tmp_path):
+    from s3logs_parquet_spark.operators.ann import sq8_topk, sq_stats
+
+    stats = sq_stats(emb, "embedding", 64)
+    return sq8_topk(emb, q, "vec_id", "query_id", stats, k=5, n_candidates=20)
+
+
+@pytest.mark.parametrize(
+    "build, limits",
+    [
+        (_topk_exact, [5]),
+        (_topk_lsh, [5]),
+        (_topk_ivf, [5]),
+        (_topk_ivf_index, [5]),
+        (_topk_pq, [5, 20]),
+        (_topk_ivfpq, [5, 20]),
+        (_topk_ivfpq_index, [5, 20]),
+        (_topk_sq8, [5, 20]),
+    ],
+    ids=["exact", "lsh", "ivf", "ivf_index", "pq", "ivfpq", "ivfpq_index", "sq8"],
+)
+def test_topk_cuts_plan_as_window_group_limit(spark, sf_dir, tmp_path, build, limits):
+    """Every per-query cut (the final top-k, and the candidate cut ahead
+    of a rerank) must execute as a partition-local WindowGroupLimit
+    before the query-keyed shuffle. The AQE final plan holds one
+    ``WindowGroupLimit …, <n>, Final`` node per cut, so single-cut
+    operators show the k cut and candidate + rerank operators show the
+    n_candidates cut as well. A non-literal rank bound plans as a plain
+    Window + Filter and fails here."""
+    import re
+
+    emb = _emb(spark, sf_dir)
+    out = build(spark, emb, _queries(emb), tmp_path)
+    rows = out.collect()
+    assert rows and out.columns[-1] == "rank"
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    cuts = [int(n) for n in re.findall(r"WindowGroupLimit .*, (\d+), Final", plan)]
+    assert len(cuts) >= len(limits) and set(limits) <= set(cuts), plan
