@@ -1,15 +1,21 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Usage: python bench.py [QUERY...]
+
 Prints ONE JSON line:
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "extra": {...}}
 
-Each query is forced through the noop sink (full materialization, no
-collect/sink cost). The log_etl entry measures the fused
-parse→dedup→partitioned-parquet batch job end-to-end and reports
-lines/s in extra — the reference's primary operating metric
-(BASELINE.md "observed-throughput").
+Each query gets one warm count(), then the best of two timed runs
+forced through the noop sink (full materialization, no collect/sink
+cost). With no arguments it times every HEADLINE query plus the log_etl
+legs, which measure the fused parse→dedup→partitioned-parquet batch job
+end-to-end and report lines/s in extra — the reference's primary
+operating metric (BASELINE.md "observed-throughput"). Named queries are
+timed alone, without the ETL legs, and extra.cold_first_run holds each
+one's first timed run. A name not in the registry prints UNKNOWN and
+exits 1 before Spark starts.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from s3logs_parquet_spark.plans.queries import QUERIES
 from s3logs_parquet_spark.session import get_spark
 from s3logs_parquet_spark.sources.tables import load_table
 
+# The timed queries: one per operator family and plan shape tracked.
 HEADLINE = [
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
@@ -37,97 +44,40 @@ HEADLINE = [
     "events_tumbling_window",
     "events_sliding_means",
     "s3log_pipeline_roundtrip",
-    # round 7: docs_token_stats retired into docs_quality_score /
-    # docs_chunk_windows_bpe (and docs_quality_score itself retired
-    # round 8 into docs_selection_budget); its bench slot tracks the
-    # ExactSubstr excision (spans + position anti-join + ordered
-    # rebuild)
     "docs_remove_dup_spans",
     "docs_minhash_lsh_pairs",
-    # round 7: docs_simhash retired into its superset gate — track the
-    # pigeonhole pair join (signatures + banded self-join) instead
     "docs_simhash_pairs",
     "events_hilbert_key",
     "events_session_windows",
     "customer_orders_left_join",
     "emb_cosine_topk",
-    # round-2 operator family, tracked since round 3 (VERDICT r2 #7);
-    # round 7: plain events_asof_click retired into the chunked twin;
-    # round 9: docs_duplicated_spans retired into docs_remove_dup_spans
-    # (tracked above) — its bench slot goes to the real-model MLP
-    # inference leg (ndarray broadcast + numpy matmul per Arrow batch)
     "docs_inference_mlp",
     "events_asof_click_chunked",
     "events_range_pairs",
-    # round 7: events_kmv_distinct retired into the set-algebra gate,
-    # tracked below with the other round-7 additions
     "events_kmv_global",
     "events_hourly_rollup",
     "docs_incremental_neardup",
-    # round-3: the two heaviest new TPC-H shapes (8-way broadcast
-    # chain; double-correlated semi/anti probes)
     "tpch_q8_market_share",
     "tpch_q21_waiting_supplier",
-    # round-4 (VERDICT r3 #5): the heavy ANN paths — persisted
-    # cell-partitioned IVF (build once per process, probe thereafter —
-    # the timed runs measure the PROBE, the production semantic;
-    # emb_ivf_trained_topk keeps the build-included cost measured) and
-    # PQ (codebooks → ADC → rerank) — and the heaviest partsupp TPC-H
-    # shape (two big equi-joins: pair-keyed partsupp and orderkey)
     "emb_ivf_indexed_topk",
     "emb_pq_topk",
     "tpch_q9_product_profit",
-    # round-5 additions: bloom runtime prefilter (map-only probe ahead
-    # of the join shuffle), IVF-PQ composite ANN, corpus-wide
-    # duplicate-trigram fraction (explode + 3 hash aggs)
     "orders_bloom_customer_revenue",
     "emb_ivfpq_topk",
     "docs_dup_ngram_fraction",
-    # round-5 second session: the new plan shapes worth tracking — the
-    # interval-overlap join (≤3× exploded equi-join), PPS weighted
-    # sampling (binned prefix sum, two-pass), embedding near-dup
-    # (hyperplane-LSH band self-join)
     "events_interval_pairs",
     "docs_weighted_sample",
     "emb_neardup_pairs",
-    # round-5 third session: inverted-index tf-idf cosine (term-keyed
-    # self-join, df-pruned fan-out, integer-exact weights)
     "docs_tfidf_similar_pairs",
-    # round 6: SemDeDup cell-keyed pairing (materialized assignment,
-    # one self-join) and map-only context-window chunking
     "emb_semantic_dedup",
     "docs_chunk_windows",
-    # round 7: incremental semantic dedup — persisted-index probe
-    # (cell-keyed batch x corpus join; the index build is cached per
-    # process, so the timed runs measure the PROBE, the production
-    # continuous-ingest semantic) — and SQ8 quantized search (codes
-    # scan + top-candidate exact rerank)
     "emb_semantic_dedup_incremental",
     "emb_sq8_topk",
-    # round 7 second session: KMV set algebra (timed runs re-execute
-    # the pair merge + both exact legs from the checkpointed k-min
-    # sketch — the mergeable-sketch production semantic: set ops never
-    # re-read raw data) and the fuzzy-dedup keep decision (LSH
-    # candidates / exact-Jaccard verify / CC are checkpoint-barriered
-    # at build, so the timed runs measure the keep-decision assembly;
-    # the end-to-end cost is the 1M-doc record in PERF.md, same
-    # convention as emb_ivf_indexed_topk's probe-only timing)
     "events_kmv_set_ops",
     "docs_neardup_canonical_keep",
-    # round 7 third session: Misra–Gries exact heavy hitters (bounded
-    # sketch state: one mapInPandas pass -> candidate broadcast ->
-    # exact recount keyed by candidates only) and grouped two-level
-    # bottom-k quantiles (per-type windows + the global ALL leg)
     "docs_heavy_hitter_words",
     "events_quantiles_by_type",
-    # round 7 fourth session: corpus selection — per-source hash-rank
-    # cap (count-aware: under-cap groups map-only, over-cap through
-    # the two-level rank) + token-budget boundary-find prefix (binned
-    # aggregate -> driver boundary -> one bin-keyed window)
     "docs_selection_budget",
-    # round 8: batched-inference hook (Arrow-batched mapInPandas with
-    # broadcast weights — the python-boundary cost is the point of
-    # tracking it; the scorer itself is a cheap linear model)
     "docs_inference_scores",
 ]
 
@@ -147,27 +97,62 @@ def _loadavg() -> list[float] | None:
         return None
 
 
-def main() -> None:
+def main(names: list[str]) -> int:
+    unknown = [n for n in names if n not in QUERIES]
+    for name in unknown:
+        print(f"UNKNOWN {name}")
+    if unknown:
+        return 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     loadavg_start = _loadavg()
     spark = get_spark(app_name="s3logs-bench")
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn, _sql = QUERIES[name]
-        df = fn(spark, sf_dir)
-        df.count()  # warm: plan + scan caches (file listing, parquet footers)
-        # best of 2 timed runs: this host shows ±20% run-to-run noise
-        # (PERF.md), and min-of-2 halves the variance of the recorded
-        # number without changing what is measured
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            force(fn(spark, sf_dir))
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+    first: dict[str, float] = {}
+    for name in names or HEADLINE:
+        timings[name], first[name] = _time_query(spark, QUERIES[name][0], sf_dir)
+    # named queries: the first timed run alone is what a cold driver
+    # process pays after the warm count
+    extra = {"cold_first_run": first} if names else _log_etl(spark, sf_dir, timings)
 
+    total = round(sum(timings.values()), 3)
+    print(
+        json.dumps(
+            {
+                "metric": "headline_total",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+                "extra": {
+                    **extra,
+                    "loadavg_start": loadavg_start,
+                    "loadavg_end": _loadavg(),
+                },
+            }
+        )
+    )
+    return 0
+
+
+def _time_query(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """(best, first) of two timed noop-sink runs after one warm count()."""
+    fn(spark, sf_dir).count()  # warm: plan + scan caches (file listing, parquet footers)
+    # best of 2 timed runs: this host shows ±20% run-to-run noise
+    # (PERF.md), and min-of-2 halves the variance of the recorded
+    # number without changing what is measured
+    runs = []
+    for _ in range(2):
+        t0 = time.time()
+        force(fn(spark, sf_dir))
+        runs.append(time.time() - t0)
+    return round(min(runs), 3), round(runs[0], 3)
+
+
+def _log_etl(spark, sf_dir: str, timings: dict[str, float]) -> dict:
+    """Time the two log ETL legs into ``timings``; return their
+    lines/s and line count for ``extra``."""
     # end-to-end log ETL throughput: events rows rendered as raw log
     # lines on disk, then the full fused batch job (parse → window →
     # dedup → partitioned parquet write). Two workload shapes:
@@ -207,29 +192,11 @@ def main() -> None:
                 etl_sec = min(etl_sec, time.time() - t0)
             timings[shape] = round(etl_sec, 3)
             etl_stats[f"{shape}_lines_per_sec"] = round(n_lines / etl_sec, 1)
-        n_lines_total = n_lines
+        etl_stats["log_etl_n_lines"] = n_lines
     finally:
         shutil.rmtree(work, ignore_errors=True)
-
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "extra": {
-                    **etl_stats,
-                    "log_etl_n_lines": n_lines_total,
-                    "loadavg_start": loadavg_start,
-                    "loadavg_end": _loadavg(),
-                },
-            }
-        )
-    )
+    return etl_stats
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

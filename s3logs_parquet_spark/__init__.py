@@ -14,7 +14,7 @@ Layout:
     session.py    — SparkSession builder with scale-ready defaults
     sources/      — batch text scan, manifest/streaming sources (S1-S6)
     functions/    — parser (P1-P7), time ops (G1/P4), text analysis, similarity
-    operators/    — windowing (G1-G5), dedup family (D1 + extensions), ANN, multimodal
+    operators/    — windowing (G1-G5), dedup family (D1 + extensions), ANN, sketches
     plans/        — fused batch job (§3.1+§3.2) and the query layer
     streaming/    — Structured Streaming job (T1-T6)
     writer.py     — partitioned parquet sink options (W3-W5)

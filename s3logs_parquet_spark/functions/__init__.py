@@ -7,11 +7,8 @@ from s3logs_parquet_spark.functions.parse import (  # noqa: F401
     tokenize,
 )
 from s3logs_parquet_spark.functions.text_analysis import (  # noqa: F401
-    bpe_token_count,
     fingerprint,
     langid,
     quality_features,
     quality_score,
-    whitespace_token_count,
-    winnowing_stats,
 )

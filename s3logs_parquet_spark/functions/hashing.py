@@ -10,46 +10,24 @@ within signed-64 arithmetic in any engine.
 Spark:   conv(substring(md5(s), 1, 8), 16, 10)::long
 DuckDB:  ('0x' || substr(md5(s), 1, 8))::bigint
 
-MD5 is slower than xxhash64 (crypto rounds vs 3 multiplies); at 100 TB
-flip HASH_IMPL to 'xxhash64' (set_hash_impl / SPARK_GRAFT_HASH_IMPL):
-the entire sketch family (MinHash, SimHash, fingerprints, winnowing,
-splits, sharding) routes through hash32(), so one switch moves it all.
-Structure (which pairs/clusters are found) is hash-impl-invariant —
-regression-tested in tests/test_similarity.py — but values differ, so
-DuckDB oracles only run in 'portable' mode.
+The entire sketch family (MinHash, SimHash, fingerprints, winnowing,
+splits, sharding) routes through hash32(), so every value it produces
+is checkable against a DuckDB oracle. MD5 costs ~1.4x xxhash64 on the
+hash stage alone and ~9% of an end-to-end MinHash job (PERF.md
+"HASH_IMPL"); an engine-native hash would give up the oracle parity.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MERSENNE_31 = (1 << 31) - 1
 
-# 'portable' (md5-derived, oracle-checkable cross-engine) or 'xxhash64'
-# (native JVM hash, the 100 TB fast path).
-HASH_IMPL = os.environ.get("SPARK_GRAFT_HASH_IMPL", "portable")
-
-_IMPLS = ("portable", "xxhash64")
-
-
-def set_hash_impl(impl: str) -> None:
-    """Flip the sketch family's hash at runtime ('portable'|'xxhash64')."""
-    global HASH_IMPL
-    if impl not in _IMPLS:
-        raise ValueError(f"hash impl must be one of {_IMPLS}, got {impl!r}")
-    HASH_IMPL = impl
-
 
 def hash32(c: Column) -> Column:
-    """32-bit hash of a string column (non-negative long), per HASH_IMPL."""
-    if HASH_IMPL == "xxhash64":
-        # low 32 bits of xxhash64 — same [0, 2^32) range as the
-        # portable path, so every downstream mod/bit-slice behaves
-        # identically; ~3x cheaper per row than md5.
-        return F.xxhash64(c).bitwiseAND(F.lit((1 << 32) - 1))
+    """32-bit hash of a string column (non-negative long): the first
+    8 hex chars of md5."""
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 

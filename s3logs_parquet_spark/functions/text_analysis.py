@@ -25,18 +25,10 @@ def words(text: Column) -> Column:
     return F.filter(F.split(t, _WS), lambda w: w != "")
 
 
-def whitespace_token_count(text: Column) -> Column:
-    return F.size(words(text))
-
-
 # BPE-ish subword segmentation: letter-runs, digit-runs, and single
 # punctuation marks each count as one token — the classic pre-tokenizer
 # shape (GPT-2-style contractions omitted for SQL portability).
 _BPE_TOKEN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def bpe_token_count(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_TOKEN), 0))
 
 
 # --- quality scoring -------------------------------------------------------
@@ -182,8 +174,7 @@ def with_quality_and_lang(
     expression, no filter needed) — those callers route here instead.
     ``keep_features=True`` additionally emits the raw feature columns
     ``n_words``/``punct_ratio``/``stopword_ratio`` (unrounded doubles,
-    exactly :func:`quality_features`' values) for scoring surfaces
-    like q_docs_quality.
+    exactly :func:`quality_features`' values) for scoring surfaces.
     """
     bad = set(emit) - {"quality", "lang"}
     if bad or not emit:
@@ -296,31 +287,6 @@ def fingerprint(text: Column, base: int = 1_000_003) -> Column:
     )
 
 
-def winnowing_fingerprints(text: Column, k: int = 5, window: int = 4) -> Column:
-    """Winnowing (Schleimer et al., SIGMOD'03): the set of minimum
-    k-gram hashes over each sliding window — the standard local
-    fingerprint for plagiarism/near-copy detection. Returns
-    array<long> (distinct, sorted).
-
-    NOTE: this column-expression form is convenient for small frames
-    but nested higher-order functions are interpreted (not codegen'd)
-    — profiling showed 19 s for 500 docs. The scale path is
-    ``winnowing_stats`` below (explode + window function, 0.6 s on the
-    same input, 34x faster)."""
-    ws = words(text)
-    n = F.size(ws)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0))),
-        lambda i: hash32(F.array_join(F.slice(ws, i + 1, k), " ")),
-    )
-    m = F.size(grams)
-    wins = F.transform(
-        F.sequence(F.lit(0), F.greatest(m - F.lit(window), F.lit(0))),
-        lambda i: F.array_min(F.slice(grams, i + 1, window)),
-    )
-    return F.array_sort(F.array_distinct(wins))
-
-
 def _winnowing_wins(df, id_col: str, text_col: str, k: int, window: int):
     """Shared winnowing pipeline: (id, _i, _m) rows where _m is the
     window-min k-gram hash at gram index _i (pre-dedup)."""
@@ -350,29 +316,6 @@ def _winnowing_wins(df, id_col: str, text_col: str, k: int, window: int):
     ).filter(F.col("_i") <= F.greatest(F.col("_last") - F.lit(window - 1), F.lit(0)))
 
 
-def winnowing_stats(df, id_col: str, text_col: str, k: int = 5, window: int = 4):
-    """Winnowing fingerprints, Spark-first: posexplode k-grams → rolling
-    min via a rows-window over the gram index → per-doc aggregate of
-    the distinct selected hashes. Whole-stage codegen end to end; the
-    only shuffle is the per-doc sort the analytic window needs (at 100
-    TB, that shuffle is keyed by doc — uniform, high-cardinality).
-
-    Returns (id, n_fp distinct-count, min_fp, max_fp) — the scalar
-    summary used for cross-engine comparison.
-
-    Fully windowed formulation: words posexplode → k-gram via `lead`
-    (concat_ws skips the NULL leads at the tail, reproducing the
-    truncated-slice single gram of short docs) → rolling min → agg.
-    No array lambdas anywhere — 4.6x faster than building grams with
-    transform/slice (3.4 s → 0.7 s at 5000 docs)."""
-    wins = _winnowing_wins(df, id_col, text_col, k, window)
-    return wins.groupBy(id_col).agg(
-        F.countDistinct("_m").cast("int").alias("n_fp"),
-        F.min("_m").alias("min_fp"),
-        F.max("_m").alias("max_fp"),
-    )
-
-
 def winnowing_fingerprint_rows(
     df, id_col: str, text_col: str, k: int = 5, window: int = 4
 ):
@@ -397,36 +340,20 @@ def clean_text(text: Column) -> Column:
     return F.trim(collapsed)
 
 
-def repetition_signals(text: Column) -> dict[str, Column]:
-    """Gopher-style within-document repetition signals: the fraction of
-    duplicate words and duplicate word-bigrams. High values flag
-    boilerplate/spam for quality filtering."""
-    ws = words(text)
-    n = F.size(ws)
-    uniq = F.size(F.array_distinct(ws))
-    bigrams = F.zip_with(ws, F.slice(ws, 2, 2_000_000_000), lambda a, b: F.concat_ws(" ", a, b))
-    bigrams = F.slice(bigrams, 1, F.greatest(n - F.lit(1), F.lit(0)))
-    nb = F.size(bigrams)
-    uniqb = F.size(F.array_distinct(bigrams))
-    return {
-        "dup_word_ratio": F.when(n > 0, (n - uniq).cast("double") / n).otherwise(0.0),
-        "dup_bigram_ratio": F.when(nb > 0, (nb - uniqb).cast("double") / nb).otherwise(0.0),
-    }
-
-
 def with_repetition_signals(
     df,
     text_col: str = "text",
     word_col: str = "dup_word_ratio",
     bigram_col: str = "dup_bigram_ratio",
 ):
-    """:func:`repetition_signals` as a staged plan (the
-    with_quality_and_lang pattern): the pure dict-of-Columns form
-    re-derives the words array per reference (~16 ``split()`` copies in
-    q_docs_clean_and_repetition's optimized plan, round-10 audit) —
-    here the words array and the bigram array are pinned staging
-    columns evaluated once, values bit-identical (the oracle
-    differential covers them)."""
+    """Gopher-style within-document repetition signals as a staged plan
+    (the with_quality_and_lang pattern): the fraction of duplicate words
+    and of duplicate word-bigrams, whose high values flag boilerplate
+    and spam. A dict-of-Columns form re-derives the words array per
+    reference (~16 ``split()`` copies in q_docs_clean_and_repetition's
+    optimized plan, round-10 audit); here the words array and the bigram
+    array are pinned staging columns evaluated once (the oracle
+    differential covers the values)."""
     staging = ["_rs_ws", "_rs_bg"]
     clash = sorted(set(staging + [word_col, bigram_col]) & set(df.columns))
     if clash:
@@ -473,17 +400,6 @@ PII_RULES: tuple[tuple[str, str, str], ...] = (
     ("ipv4", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
     ("phone", r"\+?\d[\d\s().-]{7,}\d", "<PHONE>"),
 )
-
-
-def pii_redact(text: Column) -> Column:
-    """Replace emails, SSNs, IPv4 addresses and phone-shaped digit runs
-    with typed placeholder tokens — the standard scrubbing pass before
-    a web corpus reaches training. Map-only regexp chain, whole-stage
-    codegen; at 100 TB this adds zero shuffles to a curation plan."""
-    out = text
-    for _name, pat, repl in PII_RULES:
-        out = F.regexp_replace(out, pat, repl)
-    return out
 
 
 def pii_signals(text: Column) -> dict[str, Column]:

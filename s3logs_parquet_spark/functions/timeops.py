@@ -91,11 +91,6 @@ def align_left(epoch: Column, align_seconds: int) -> Column:
     return epoch - epoch % F.lit(align_seconds)
 
 
-def align_right(epoch: Column, align_seconds: int) -> Column:
-    """G1 — right boundary variant (s3logs/src/utils.rs:233-235)."""
-    return align_left(epoch, align_seconds) + F.lit(align_seconds)
-
-
 def window_start(ts: Column, align_seconds: int) -> Column:
     """Window-start epoch seconds for a timestamp column."""
     return align_left(F.unix_timestamp(ts), align_seconds)
@@ -107,14 +102,6 @@ def shifted(ts: Column, tz_offset_seconds: int) -> Column:
     if tz_offset_seconds == 0:
         return ts
     return F.timestamp_add("SECOND", F.lit(tz_offset_seconds), ts)
-
-
-def format_epoch(epoch: Column, strftime_fmt: str, tz_offset_seconds: int = 0) -> Column:
-    """P4 — epoch seconds → strftime-formatted string in the configured
-    fixed TZ (timestamp_to_fmt, s3logs/src/utils.rs:238-247)."""
-    java_fmt = strftime_to_java(strftime_fmt)
-    ts = F.timestamp_seconds(epoch + F.lit(tz_offset_seconds))
-    return F.date_format(ts, java_fmt)
 
 
 def partition_prefix(ts: Column, prefix_fmt: str, tz_offset_seconds: int = 0) -> Column:

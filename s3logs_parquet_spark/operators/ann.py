@@ -979,10 +979,9 @@ def ivfpq_encode_corpus(
 ) -> DataFrame:
     """The IVF-PQ write-side precompute: (id, _cv, cell, pq_code) for
     every corpus row — cell from the coarse quantizer, code from the
-    PQ codebooks. In production this is materialized once per corpus
-    (see ivfpq_index_write for the on-disk form); callers that query
-    repeatedly should checkpoint/persist the result and pass it to
-    ivfpq_topk(encoded=...)."""
+    PQ codebooks. In production this is materialized once per corpus;
+    callers that query repeatedly should checkpoint/persist the result
+    and pass it to ivfpq_topk(encoded=...)."""
     assigned = _assign_corpus(corpus, corpus_id, corpus_vec, centroids)
     return pq_encode(assigned, "_cv", codebooks, "pq_code")
 
@@ -1034,105 +1033,6 @@ def ivfpq_topk(
         joined, query_id, corpus_id, F.asc("_adc"), n_candidates, "_crank"
     )
     scored = cand.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
-    return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k).select(
-        query_id, corpus_id, "cosine", "rank"
-    )
-
-
-def ivfpq_index_write(
-    corpus: DataFrame,
-    path: str,
-    corpus_id: str,
-    corpus_vec: str = "embedding",
-    n_cells: int = 16,
-    iters: int = 3,
-    m: int = 4,
-    k_sub: int = 8,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Materialize the IVF-PQ index: the corpus cell-partitioned on
-    disk with BOTH its pq codes and its full vector per row, plus
-    centroids and codebooks as tiny companion tables.
-
-    Keeping codes and vector in the same cell-partitioned files lets
-    parquet column pruning split the two read paths: the ADC candidate
-    scan reads (id, pq_code) only — m bytes of code instead of the
-    full embedding — and the rerank fetch reads (id, vector) for just
-    the candidate ids. Same directory-tree-as-index trick as
-    ivf_index_write: probing n_probe of n_cells cells is static
-    partition pruning, no index structure needed."""
-    spark = corpus.sparkSession
-    centroids = ivf_train(corpus, corpus_vec, n_cells=n_cells, iters=iters, id_col=corpus_id)
-    codebooks = pq_codebooks(corpus, corpus_vec, m=m, k_sub=k_sub, id_col=corpus_id)
-    # build_flat: the fused assign+PQ-tables span cannot compile
-    # (64 KB method limit); skip the doomed whole-stage compile for
-    # this one-off write — nothing downstream rides this frame
-    enc = build_flat(
-        ivfpq_encode_corpus(corpus, corpus_id, centroids, codebooks, corpus_vec)
-    )
-    enc.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
-    _write_centroids(spark, path, centroids)
-    cb_rows = [
-        (j, ci, [float(x) for x in c])
-        for j, cents in enumerate(codebooks)
-        for ci, c in enumerate(cents)
-    ]
-    spark.createDataFrame(
-        cb_rows, "subspace INT, cid INT, centroid ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    return centroids, codebooks
-
-
-def ivfpq_index_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    corpus_id: str,
-    query_id: str,
-    query_vec: str = "embedding",
-    k: int = 10,
-    n_probe: int = 2,
-    n_candidates: int = 50,
-) -> DataFrame:
-    """Query a persisted IVF-PQ index in the two-scan shape that scales:
-
-    1. **ADC scan** over probed cell partitions reading ONLY
-       (id, pq_code) — parquet column pruning keeps the full vectors on
-       disk (the plan's ReadSchema is the proof; tests assert it), so
-       candidate generation costs m bytes/row over n_probe/n_cells of
-       the corpus.
-    2. **rerank fetch**: the tiny candidate set (n_queries ×
-       n_candidates ids) broadcasts into a second scan of the same
-       probed partitions reading (id, vector), exact cosine, top-k.
-
-    Centroid/codebook loads and the probe-cell computation are the
-    bounded driver-side model discipline (ann.py _probe_cells_py)."""
-    centroids = _read_centroids(spark, path)
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in cb_rows)
-    k_sub = 1 + max(r["cid"] for r in cb_rows)
-    codebooks: list[list[list[float]]] = [[None] * k_sub for _ in range(m)]
-    for r in cb_rows:
-        codebooks[r["subspace"]][r["cid"]] = [float(x) for x in r["centroid"]]
-
-    probes, qp = _probe_plan(queries, query_id, query_vec, centroids, n_probe)
-    qt = qp.select(F.col(query_id), "cell", *_adc_tables("_qv", codebooks))
-
-    # scan 1 — codes only (column pruning: no _cv in ReadSchema)
-    codes = _probed_corpus(spark, path, probes).select(corpus_id, "cell", "pq_code")
-    joined = codes.join(F.broadcast(qt), on="cell").withColumn(
-        "_adc", _adc_score(m)
-    )
-    cand = _top_per_query(
-        joined, query_id, corpus_id, F.asc("_adc"), n_candidates, "_crank"
-    ).select(query_id, corpus_id)
-
-    # scan 2 — fetch candidate vectors from the same probed partitions
-    vecs = _probed_corpus(spark, path, probes).select(corpus_id, "_cv")
-    qv = queries.select(F.col(query_id), F.col(query_vec).alias("_qv"))
-    fetched = vecs.join(F.broadcast(cand), on=corpus_id).join(
-        F.broadcast(qv), on=query_id
-    )
-    scored = fetched.withColumn("cosine", cosine_sim(F.col("_cv"), F.col("_qv")))
     return _top_per_query(scored, query_id, corpus_id, F.desc("cosine"), k).select(
         query_id, corpus_id, "cosine", "rank"
     )

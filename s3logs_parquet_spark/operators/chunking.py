@@ -1,7 +1,7 @@
 """Context-window document chunking: fixed token windows with overlap.
 
-The training-data prep step between curation and sequence packing
-(`operators/packing.py`): long documents are cut into model-context
+The training-data prep step between curation and tokenization, where
+long documents are cut into model-context
 sized windows (e.g. 2048 tokens with a 256-token overlap) so no span
 is lost at a window boundary. Out of reference scope — the reference
 (`/root/reference`, a log ETL daemon) never re-shapes documents; this
@@ -40,11 +40,10 @@ def chunk_documents(
     whitespace-delimited words and the chunk text round-trips the
     corpus modulo whitespace normalization; ``"bpe"`` windows over the
     BPE-ish pre-tokenizer segmentation (letter runs / digit runs /
-    single punctuation — functions/text_analysis._BPE_TOKEN, the same
-    segmentation bpe_token_count reports), so window sizes align with
-    what a subword tokenizer will later see. BPE-mode chunk text is
-    the tokens space-joined — a deterministic token view, NOT a
-    byte-faithful slice of the original ("don't" → "don ' t").
+    single punctuation — functions/text_analysis._BPE_TOKEN), so window
+    sizes align with what a subword tokenizer will later see. BPE-mode
+    chunk text is the tokens space-joined — a deterministic token view,
+    NOT a byte-faithful slice of the original ("don't" → "don ' t").
 
     Output: the ``id_col`` plus ``{out_prefix}_idx`` (0-based window
     index), ``{out_prefix}_text`` (the window's tokens re-joined with

@@ -287,7 +287,8 @@ def band_signatures(
     pass once (the dominant cost: shingling + num_hashes hashes per
     doc) and re-derive the cheap per-band explode for several
     consumers, releasing the blocks itself (run_stream_curation)."""
-    assert num_hashes % bands == 0
+    if num_hashes % bands:
+        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     rows_per_band = num_hashes // bands
     return sigs.select(
         F.col(id_col),
@@ -1791,7 +1792,7 @@ def dup_ngram_fraction(
     in at least ``min_docs`` distinct documents (counting this one) —
     the corpus-level boilerplate signal behind Gopher/RefinedWeb-style
     filtering rules (within-document repetition lives in
-    functions/text_analysis.repetition_signals; this is the
+    functions/text_analysis.with_repetition_signals; this is the
     across-document complement).
 
     Plan, in scan order: map-only n-gram expansion (tokens →

@@ -97,8 +97,8 @@ def cap_per_group(
     # full frame FIRST, and that join's by-group exchange put the hot
     # group's entire mass into one reducer task before the prune could
     # run (measured: the straggler was the whole cost at 50M rows /
-    # 80% hot, tools/bench_selection_scale.py). NOTE the rewrite fires
-    # only for literal limits ≤ spark.sql.optimizer.
+    # 80% hot, PERF.md "Corpus selection at 50M rows"). NOTE the
+    # rewrite fires only for literal limits ≤ spark.sql.optimizer.
     # windowGroupLimitThreshold (default 1000); pass ``max_cap`` when
     # ``cap`` is a Column, and raise the threshold conf for caps
     # beyond it.

@@ -555,95 +555,3 @@ def group_sampled_quantiles(
     return ranked.join(F.broadcast(probs_df), target == F.col("_sq_rn")).select(
         *group_cols, "p", F.col("_sq_v").alias("est_value")
     )
-
-
-def cm_heavy_hitters(
-    df: DataFrame,
-    item_col: str,
-    phi: float,
-    n_buckets: int = 1 << 16,
-    depth: int = 2,
-) -> DataFrame:
-    """EXACT heavy hitters via a Count-Min-style candidate pass — the
-    all-JVM alternative to :func:`mg_heavy_hitters` (Cormode &
-    Muthukrishnan, "An improved data stream summary: the count-min
-    sketch", J. Algorithms 2005).
-
-    Pass 1 hash-aggregates the stream into ``depth`` independent
-    bucketings of ``n_buckets`` counters each — the exchange is keyed
-    by (depth, bucket), a FIXED key space regardless of item
-    cardinality, and map-side combine caps what each task ships at
-    depth·n_buckets partial rows. A bucket's count upper-bounds every
-    item hashing into it, so an item with frequency ≥ ⌈phi·N⌉ has ALL
-    its buckets heavy; the candidate filter (per-depth broadcast
-    ``isin`` over the ≤ 1/phi heavy bucket ids — pure codegen, applied
-    map-side) therefore never drops a true heavy hitter, and the exact
-    recount in pass 2 removes every false positive. Output is exact,
-    deterministic, and partition-layout invariant (bucket sums are
-    exact integers — unlike MG, even the CANDIDATE set is layout
-    invariant).
-
-    Trade-off vs MG: no Python pass at all (the 50M-row record in
-    PERF.md measures MG's Arrow string transfer as its entire wall
-    cost), at the price of a larger candidate-pass exchange
-    (depth·n_buckets·partitions vs (k+1)·partitions rows) and a
-    false-positive set that grows as ``n_buckets·phi`` falls — with
-    ``n_buckets·phi < 1`` every bucket can go heavy and pass 2
-    degenerates to the full-vocab recount (still correct, no longer
-    bounded; keep n_buckets ≥ ~4/phi).
-    """
-    stream = df.select(F.col(item_col).cast("string").alias("item")).filter(
-        F.col("item").isNotNull()
-    )
-    buckets = (
-        stream.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.pmod(
-                                F.xxhash64(F.col("item"), F.lit(j)),
-                                F.lit(n_buckets),
-                            ).alias("b"),
-                        )
-                        for j in range(depth)
-                    ]
-                )
-            ).alias("jb")
-        )
-        .select("jb.j", "jb.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # one corpus pass builds the bucket table (≤ depth·n_buckets rows,
-    # executor-resident); only the ≤ depth/phi HEAVY bucket ids ever
-    # reach the driver
-    buckets = _materialize(buckets)
-    n_total = (
-        buckets.filter(F.col("j") == 0).agg(F.sum("cnt").alias("n")).collect()[0]["n"]
-    )
-    spark = df.sparkSession
-    if not n_total:
-        return spark.createDataFrame([], "item string, cnt long")
-    import math
-
-    thresh = int(math.ceil(phi * float(n_total)))
-    heavy_rows = buckets.filter(F.col("cnt") >= F.lit(thresh)).collect()
-    heavy = [
-        [r["b"] for r in heavy_rows if r["j"] == j] for j in range(depth)
-    ]
-    if any(not h for h in heavy):
-        return spark.createDataFrame([], "item string, cnt long")
-    cond = None
-    for j in range(depth):
-        c = F.pmod(F.xxhash64(F.col("item"), F.lit(j)), F.lit(n_buckets)).isin(
-            heavy[j]
-        )
-        cond = c if cond is None else (cond & c)
-    return (
-        stream.filter(cond)
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= F.lit(thresh))
-    )

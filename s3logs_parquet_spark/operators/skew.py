@@ -64,21 +64,3 @@ def salted_agg(
             for name, (c, fn) in aggs.items()
         ]
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skewed equi-join: salt the big side, replicate the small side
-    n_salt times, join on (key, salt). Use when one key dominates the
-    big side badly enough that AQE's split-by-size isn't sufficient
-    (or is disabled). Small side must be... small (it's multiplied)."""
-    big_s = big.withColumn("_salt", _salt(big, n_salt))
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("_salt")
-    small_r = small.select("*", salts)
-    joined = big_s.join(small_r, on=[on, "_salt"], how=how)
-    return joined.drop("_salt")

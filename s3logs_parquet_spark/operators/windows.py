@@ -46,36 +46,3 @@ def bucket_key(cfg: EngineConfig, bucket_col: str | None = None) -> Column:
 
 def with_bucket_key(df: DataFrame, cfg: EngineConfig, out_col: str = "bucket_key") -> DataFrame:
     return df.withColumn(out_col, bucket_key(cfg))
-
-
-def group_counts(df: DataFrame, *keys: str) -> DataFrame:
-    """G6 — the reference's count-consistency invariant
-    (utils.rs:641-643) as an aggregate: rows per group; total equals
-    input count by construction (map-side combined)."""
-    return df.groupBy(*[F.col(k) for k in keys]).agg(F.count(F.lit(1)).alias("n_rows"))
-
-
-def sliding_means(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    window: str = "15 minutes",
-    slide: str = "1 minute",
-) -> DataFrame:
-    """G7 — the monitor task's sliding-window means
-    (s3logd-stream/src/mon.rs:40-129) as a built-in sliding window agg."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), window, slide).alias("w"))
-        .agg(
-            F.avg(value_col).alias("avg_value"),
-            F.sum(value_col).alias("sum_value"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "avg_value",
-            "sum_value",
-            "n_rows",
-        )
-    )

@@ -43,8 +43,8 @@ spec — bucket count is a write-time property and must never drift.
 
 The reference has no counterpart (its dedup window is in-memory
 per-window state, s3logs/src/transform.rs); this is the Spark-native
-storage lever, same idea as plans/bucketing.py applied to the
-streaming index stores.
+storage lever: Spark bucketing applied to the streaming index
+stores.
 """
 
 from __future__ import annotations
@@ -196,7 +196,7 @@ def write_contribution(
 
     ``dedup_cols`` (recorded in the spec at creation): a key whose
     duplicates are SEMANTICALLY redundant in this store (a digest set,
-    one row per doc per band). compact_curation_index's bucketed fold
+    one row per doc per band). compact_index_store's bucketed fold
     dropDuplicates on it, which both keeps refolds idempotent and
     heals the fold's documented crash window (insert committed, old
     partitions not yet dropped → history temporarily duplicated).
@@ -244,9 +244,9 @@ def write_contribution(
     # coalesce or re-plan it (the bucket count is a hard layout
     # requirement) but DOES materialize the repartition exchange as
     # its own query-stage job, doubling every contribution insert's
-    # job count (measured: 2 jobs -> 1, tools/exp_sink_insert_jobs.py,
-    # wall-neutral at 20k rows). Per-trigger scheduler load halves on
-    # the sink path of a forever-stream.
+    # job count (measured: 2 jobs -> 1, wall-neutral at 20k rows;
+    # PERF.md "Per-trigger sink-job floor"). Per-trigger scheduler load
+    # halves on the sink path of a forever-stream.
     jsess = out._jdf.sparkSession().cloneSession()
     jsess.conf().set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     jsess.conf().set("spark.sql.adaptive.enabled", "false")

@@ -51,7 +51,7 @@ def _max_committed(spark: SparkSession, checkpoint_dir: str) -> int:
 
 def recover_fold_siblings(spark: SparkSession, root: str) -> str | None:
     """Heal the non-atomic two-rename fold swap after a crash (ADVICE
-    round 9): ``fold_stream_batches`` / ``compact_curation_index``
+    round 9): ``fold_stream_batches`` / ``compact_index_store``
     commit by ``write tmp → rename(root, old) → rename(tmp, root) →
     delete(old)``. A crash between the renames leaves ``root`` MISSING
     while the complete fold sits in the ``.folding-*`` sibling — and
@@ -278,7 +278,7 @@ def _fold_bucketed_store(
     only_ids: list[int] | None = None,
     fold_mode: str = "all",
 ) -> dict[str, int]:
-    """compact_curation_index for a BUCKETED store (plans/band_index.py):
+    """compact_index_store for a BUCKETED store (plans/band_index.py):
     fold every ``batch=<id>`` partition into ``batch=<max id>`` with one
     dynamic-partition-overwrite insert, then drop the emptied
     partitions — the store stays the same registered table with the
@@ -386,7 +386,7 @@ def _fold_bucketed_store(
         uncommitted = sorted(i for i in ids if i > maxc)
         if uncommitted:
             raise ValueError(
-                f"compact_curation_index: {root} batch partitions "
+                f"compact_index_store: {root} batch partitions "
                 f"{uncommitted} have no commit marker — the stream did not "
                 "drain cleanly; a resumed stream would replay and overwrite "
                 "the folded store. Drain with availableNow, then fold."
@@ -451,58 +451,6 @@ def _bandidx_partition_ids(spark: SparkSession, tbl: str) -> list[int]:
     return partition_ids(spark, tbl)
 
 
-def compact_curation_index(
-    spark: SparkSession,
-    index_dir: str,
-    checkpoint_dir: str | None = None,
-    files_per_store: int | None = None,
-    compression: str = "zstd",
-) -> dict[str, dict[str, int]]:
-    """Maintenance companion of ``streaming/job.py run_stream_curation``:
-    fold each index store's accumulated ``batch=<id>`` contribution
-    dirs (``digests/``, ``bands/``) into the single highest id, so a
-    long-running curation stream's probe doesn't list and open one
-    directory per micro-batch forever (the directory/file-count growth
-    the round-9 hotprobe measurements charge to the probe's
-    index-side scan).
-
-    Run ONLY against a DRAINED/STOPPED stream; pass ``checkpoint_dir``
-    (the stream's checkpointLocation) to ENFORCE it: every batch id
-    above the highest surviving ``commits/<id>`` marker is uncommitted
-    and makes the fold refuse — a crashed batch would otherwise be
-    replayed by the resumed stream and ``mode('overwrite')`` the one
-    directory now holding all history (the :func:`fold_stream_batches`
-    failure mode, same guard). Ids at or below the highest marker are
-    committed by the sequential-commit rule even when their own marker
-    was purged by ``minBatchesToRetain`` (see :func:`_max_committed`);
-    negative ids (the ``batch=-1`` pre-stream seeding convention) are
-    always exempt: they are not stream commits and can never be
-    replayed. Crash-interrupted prior folds are healed first
-    (:func:`recover_fold_siblings`).
-
-    Replay/visibility contract preserved exactly: ``_prior_batch_dirs``
-    reads ids < the probing batch, resumed streams continue at
-    ``max+1``, so folding everything into ``batch=<max committed>``
-    keeps all history visible to every future batch. Band rows are
-    written clustered by (band, band_hash) — contiguous row groups per
-    bucket. Commit is the whole-store hidden-sibling swap (write +
-    two renames), atomic on HDFS/local, copy+delete on object stores —
-    schedule folds in the drain window on S3.
-    """
-    out: dict[str, dict[str, int]] = {}
-    for store, sort_cols in (("digests", None), ("bands", ("band", "band_hash"))):
-        root = posixpath.join(index_dir.rstrip("/"), store)
-        out[store] = compact_index_store(
-            spark,
-            root,
-            checkpoint_dir=checkpoint_dir,
-            files_per_store=files_per_store,
-            compression=compression,
-            sort_cols=sort_cols,
-        )
-    return out
-
-
 def compact_index_store(
     spark: SparkSession,
     root: str,
@@ -516,15 +464,28 @@ def compact_index_store(
 ) -> dict[str, int]:
     """Fold ONE per-batch index store (``root/batch=<id>`` dirs or a
     plans/band_index.py bucketed table — layout auto-detected from the
-    spec sidecar) into its highest batch id. The single-store
-    generalization of :func:`compact_curation_index`, factored out in
-    round 11 so OTHER per-batch stores — ``run_stream_semantic_dedup``'s
-    persisted semantic index foremost — share the exact same fold,
-    commit-marker guard, dedup-on-fold and crash-recovery semantics.
+    spec sidecar) into its highest batch id, so a long-running stream's
+    probe doesn't list and open one directory per micro-batch forever.
+    Every per-batch store shares this fold: the curation index's
+    ``digests/`` and ``bands/`` stores (fold ``bands`` with
+    ``sort_cols=("band", "band_hash")`` for contiguous row groups per
+    bucket) and ``run_stream_semantic_dedup``'s persisted semantic
+    index. ``maintenance fold-index`` runs it on one store.
 
     ``checkpoint_dir``: the owning stream's checkpointLocation —
-    enforces drained-stream safety via the sequential-commit rule (see
-    :func:`compact_curation_index`). ``only_below`` (bucketed stores
+    enforces drained-stream safety. Every batch id above the highest
+    surviving ``commits/<id>`` marker is uncommitted and makes the fold
+    refuse: a crashed batch would otherwise be replayed by the resumed
+    stream and overwrite the one directory now holding all history.
+    Ids at or below the highest marker are committed by the
+    sequential-commit rule even when their own marker was purged by
+    ``minBatchesToRetain`` (see :func:`_max_committed`); negative ids
+    (the ``batch=-1`` pre-stream seeding convention) are always exempt.
+    Crash-interrupted prior folds are healed first
+    (:func:`recover_fold_siblings`). Replay contract: ``_prior_batch_dirs``
+    reads ids < the probing batch and resumed streams continue at
+    ``max+1``, so folding into ``batch=<max committed>`` keeps all
+    history visible to every future batch. ``only_below`` (bucketed stores
     only): fold just the partitions with id < the value, leaving later
     ones untouched — the in-stream auto-fold mode where foreachBatch
     sequencing replaces the commit-marker check for ids below the
@@ -588,7 +549,7 @@ def _fold_dirs_store(
 ) -> dict[str, int]:
     """Dirs-layout fold: whole-store rewrite + two-rename sibling swap
     (atomic on HDFS/local; copy+delete on object stores — fold in the
-    drain window on S3). See :func:`compact_curation_index`."""
+    drain window on S3). See :func:`compact_index_store`."""
     files = [
         f
         for f in list_files(spark, root, recursive=True)

@@ -7,9 +7,8 @@ into one job — what a user actually runs over 100 TB of raw documents.
 
 Every stage is one of the engine's tested operators; the composition is
 still a single lazy plan (plus the materialized signature checkpoint
-inside the LSH stage). Packing (operators/packing.py) typically follows
-per split; it stays out of this function so the curated frame remains
-fully SQL-expressible for the differential oracle.
+inside the LSH stage). The curated frame stays fully SQL-expressible
+for the differential oracle.
 """
 
 from __future__ import annotations

@@ -665,87 +665,27 @@ WHERE ({_sql_band_eq(num_hashes, bands)})
 ORACLE_DOCS_INCREMENTAL_NEARDUP = _oracle_incremental_neardup()
 
 
-# the span-gate DataFrame, built once per (gate, session, sf_dir) — a
-# prepared statement (session.prebuilt plan entry): execution still
-# re-runs every stage; the entry saves only plan construction
-# (measured for docs_remove_dup_spans at sf0.1, 4 cores, median of 10
-# pairs: 0.89 s per call with it, 1.02 s without).
-def _span_gate(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
-    from s3logs_parquet_spark.operators.dedup import (
-        duplicated_spans,
-        remove_duplicated_spans,
-    )
-
-    fn = duplicated_spans if which == "report" else remove_duplicated_spans
-    return prebuilt(
-        spark,
-        ("_span_gate", which, sf_dir),
-        lambda: fn(_t(spark, sf_dir, "documents"), "doc_id", "text", n=13, min_docs=2),
-    )
-
-
-def q_docs_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr-style duplicated-span coverage
-    (operators/dedup.py duplicated_spans): per document, the MERGED
-    token spans covered by 13-grams occurring in >=2 distinct docs —
-    which stretches an exact-substring dedup pass would cut, and the
-    covered-token fraction. The oracle replays the identical
-    gaps-and-islands window SQL (lag + running break-sum) in DuckDB."""
-    return _span_gate(spark, sf_dir, "report")
-
-
-def _oracle_docs_dup_spans(n: int = 13, min_docs: int = 2) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
-), starts AS (
-  SELECT doc_id, i AS pos, array_to_string(ws[i:i+{n - 1}], ' ') AS ng
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - {n - 1})) AS i FROM toks)
-), pairs AS (
-  SELECT DISTINCT doc_id, ng FROM starts
-), freq AS (
-  SELECT ng FROM pairs GROUP BY ng HAVING count(*) >= {min_docs}
-), dup_starts AS (
-  SELECT s.doc_id, s.pos FROM starts s JOIN freq f USING (ng)
-), flagged AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - lag(pos) OVER w <= {n} THEN 0 ELSE 1 END AS brk
-  FROM dup_starts WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), islands AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS isl
-  FROM flagged
-), spans AS (
-  SELECT doc_id, isl, max(pos) - min(pos) + {n} AS cov
-  FROM islands GROUP BY doc_id, isl
-), per_doc AS (
-  SELECT doc_id, count(*) AS n_spans, sum(cov) AS dup_tokens
-  FROM spans GROUP BY doc_id
-)
-SELECT t.doc_id,
-       len(t.ws)::BIGINT AS n_tokens,
-       coalesce(p.n_spans, 0)::BIGINT AS n_spans,
-       coalesce(p.dup_tokens, 0)::BIGINT AS dup_tokens,
-       CASE WHEN len(t.ws) > 0
-            THEN round(coalesce(p.dup_tokens, 0)::DOUBLE / len(t.ws), 6)
-       END AS dup_coverage
-FROM toks t LEFT JOIN per_doc p USING (doc_id)
-"""
-
-
-ORACLE_DOCS_DUP_SPANS = _oracle_docs_dup_spans()
-
-
 def q_docs_remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr excision (operators/dedup.py remove_duplicated_spans):
-    the APPLY half of docs_duplicated_spans — cut every merged
-    cross-document 13-gram span and emit the cleaned token stream. The
-    oracle replays the same island SQL, re-expands covered positions
-    with generate_series, anti-joins the posexploded token stream, and
-    rebuilds with string_agg ORDER BY pos — value-checking the whole
-    reconstruction including token order."""
-    return _span_gate(spark, sf_dir, "remove")
+    cut every merged cross-document 13-gram span and emit the cleaned
+    token stream. The oracle replays the same island SQL, re-expands
+    covered positions with generate_series, anti-joins the posexploded
+    token stream, and rebuilds with string_agg ORDER BY pos —
+    value-checking the whole reconstruction including token order."""
+    from s3logs_parquet_spark.operators.dedup import remove_duplicated_spans
+
+    # built once per (session, sf_dir) — a prepared statement
+    # (session.prebuilt plan entry): execution still re-runs every
+    # stage; the entry saves only plan construction (measured at sf0.1,
+    # 4 cores, median of 10 pairs: 0.89 s per call with it, 1.02 s
+    # without).
+    return prebuilt(
+        spark,
+        ("docs_remove_dup_spans", sf_dir),
+        lambda: remove_duplicated_spans(
+            _t(spark, sf_dir, "documents"), "doc_id", "text", n=13, min_docs=2
+        ),
+    )
 
 
 def _oracle_docs_remove_spans(n: int = 13, min_docs: int = 2) -> str:

@@ -30,54 +30,6 @@ def _sql_stop_hits(lang: str) -> str:
     return f"len(list_filter(ws, w -> list_contains([{lst}], w)))"
 
 
-def q_docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    # staged gate (round-10 plan audit): the pure quality_features/
-    # quality_score forms re-derive the words array per feature
-    # (~11 split() copies in the optimized plan); the fused helper
-    # emits bit-identical values from one tokenize pass
-    staged = with_quality_and_lang(
-        d.select("doc_id", "text"), "text", emit=("quality",), keep_features=True
-    )
-    return staged.select(
-        "doc_id",
-        "n_words",
-        F.round(F.col("punct_ratio"), 6).alias("punct_ratio"),
-        F.round(F.col("stopword_ratio"), 6).alias("stopword_ratio"),
-        "quality",
-    )
-
-
-_SQL_QUALITY = f"""
-WITH feat AS (
-  SELECT doc_id,
-         {_SQL_WORDS} AS ws,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         len(ws)::BIGINT AS n_words,
-         CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(ws) > 0 THEN {_sql_stop_hits('en')}::DOUBLE / len(ws) ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN len(ws) > 0
-              THEN list_aggregate(list_transform(ws, w -> length(w)), 'sum')::DOUBLE / len(ws)
-              ELSE 0.0 END AS mean_word_len
-  FROM feat
-)
-SELECT doc_id, n_words,
-       round(punct_ratio, 6) AS punct_ratio,
-       round(stopword_ratio, 6) AS stopword_ratio,
-       round(
-         least(n_words / 20.0, 1.0) * 0.3
-         + least(stopword_ratio * 4.0, 1.0) * 0.3
-         + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.2
-         + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.2
-       , 6) AS quality
-FROM m
-"""
-
-
 def q_docs_inference_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched model inference (operators/inference.py, round 8): the
     quality-classifier shape — Arrow-batched mapInPandas scoring with
@@ -718,7 +670,7 @@ def q_docs_chunk_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-segmentation context-window chunking (operators/chunking.py
     tokenizer='bpe' — VERDICT r6 #7): windows counted over the BPE-ish
     pre-tokenizer segmentation (letter runs / digit runs / single
-    punctuation — the same _BPE_TOKEN regex bpe_token_count reports),
+    punctuation — functions/text_analysis._BPE_TOKEN),
     so window sizes align with what a subword tokenizer later sees.
     Same 40/30 window/stride as the whitespace gate; chunk text is the
     tokens space-joined (deterministic token view, documented

@@ -577,7 +577,7 @@ FROM events GROUP BY 1, 2
 def q_events_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) interleave key (operators/layout.py
     zorder_key): 10 bits each of a user bucket and a time bucket — the
-    clustering key write_zordered range-partitions on so parquet
+    clustering key a range-partitioned write sorts on so parquet
     min/max stats prune files on EITHER dimension. The oracle unrolls
     the identical shift/AND interleave in SQL, value-checking every
     bit position."""
@@ -612,8 +612,8 @@ ORACLE_EVENTS_ZORDER = _oracle_events_zorder()
 def q_events_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve clustering key (operators/layout.py hilbert_key):
     10 bits each of a user bucket and a time bucket — the
-    locality-preserving alternative write_hilbert_clustered
-    range-partitions on (every curve step is unit Manhattan distance,
+    locality-preserving alternative to the Z key for a
+    range-partitioned write (every curve step is unit Manhattan distance,
     so clustered files cover tighter rectangles than the Z curve's
     seam-jumping ranges). Spark runs the xy2d walk as ONE JVM-side
     higher-order fold over the descending s-value array with a

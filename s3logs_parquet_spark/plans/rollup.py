@@ -1,31 +1,21 @@
-"""Materialized time-rollup: the hypertable continuous-aggregate
-analog, maintained incrementally with partition-scoped rewrites.
+"""Time-rollup rows: the hypertable continuous-aggregate analog.
 
 The reference materializes exactly one derived layout (the
 partitioned log table). A query layer usually also wants pre-aggregated
-rollups (per-hour/day counters) kept current as batches land. The
-Spark-first formulation:
-
-- a rollup row holds MERGEABLE aggregates only (count, sum, min, max —
-  avg is derived at read time as sum/count), so updating a partition
-  is `re-aggregate(union(existing_rows, new_batch_agg))` — no
-  reprocessing of raw history;
-- rows are Hive-partitioned by the date of the window, so an
-  incremental batch touches ONLY the `dt=` partitions its windows fall
-  in: the update reads those partitions back (partition-pruned scan),
-  merges, and commits with dynamic partition overwrite — the same
-  idempotent per-partition atomicity the main writer uses (W4/T4).
-
-At 100 TB of raw events the rollup is smaller by the windowing factor;
-the update cost is O(batch + affected-partition rollup rows),
-independent of table history.
+rollups (per-hour/day counters) kept current as batches land. A rollup
+row holds MERGEABLE aggregates only (count, sum, min, max — avg is
+derived at read time as sum/count), so the rollup of a union is the
+re-aggregation of the parts' rollups: ``run_stream_rollup`` writes one
+contribution per micro-batch with :func:`rollup_events`, and
+``read_stream_rollup`` merges them with :func:`_merge` — no
+reprocessing of raw history. Rows carry the window's date as ``dt``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ROLLUP_AGGS = ("n_rows", "sum_value", "min_value", "max_value")
@@ -66,71 +56,3 @@ def _merge(rollup_rows: DataFrame, by: Sequence[str]) -> DataFrame:
         F.min("min_value").alias("min_value"),
         F.max("max_value").alias("max_value"),
     )
-
-
-def _write(rollup: DataFrame, out_path: str) -> None:
-    (
-        rollup.repartition("dt")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dt")
-        .parquet(out_path)
-    )
-
-
-def materialize_rollup(
-    df: DataFrame,
-    out_path: str,
-    window_seconds: int = 3600,
-    by: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> None:
-    """Full build of the rollup table (first run / backfill)."""
-    _write(rollup_events(df, window_seconds, by, ts_col, value_col), out_path)
-
-
-def update_rollup(
-    spark: SparkSession,
-    batch: DataFrame,
-    out_path: str,
-    window_seconds: int = 3600,
-    by: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> list[str]:
-    """Incrementally fold a new raw batch into the rollup table.
-
-    Aggregates the batch, reads back ONLY the affected dt partitions
-    (partition-pruned scan), merges, and dynamic-overwrites those
-    partitions. Returns the affected dt values. Cost is
-    O(batch + rollup rows of affected partitions) — never the table.
-
-    Delivery contract: each batch must be folded in EXACTLY once —
-    re-running the same update double-counts (the fold is additive,
-    unlike the raw table's idempotent partition overwrite). Under
-    at-least-once ingestion, dedup batches upstream (the engine's D1
-    path already does) or rebuild affected days from the raw table
-    with materialize_rollup, which IS idempotent.
-    """
-    by = list(by)
-    delta = rollup_events(batch, window_seconds, by, ts_col, value_col)
-    # affected partitions: distinct dt of the batch — small by
-    # construction (a batch spans hours/days, not the table's history)
-    dts = [r["dt"] for r in delta.select("dt").distinct().collect()]
-
-    from s3logs_parquet_spark.writer import output_has_data
-
-    if output_has_data(spark, out_path):
-        from s3logs_parquet_spark.session import materialize
-
-        existing = spark.read.parquet(out_path).filter(F.col("dt").isin(dts))
-        # the merge reads the same partitions the write replaces:
-        # materialize first so the write plan no longer references the
-        # files it overwrites (durable checkpoint on a cluster if the
-        # affected slice is large — see session.materialize)
-        merged = materialize(_merge(existing.unionByName(delta), by))
-    else:
-        merged = _merge(delta, by)  # idempotent first write
-    _write(merged, out_path)
-    return sorted(dts)

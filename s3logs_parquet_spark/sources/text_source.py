@@ -5,7 +5,8 @@ transfer.rs:226-250), local buffered file read (S2, utils.rs:573-582),
 a validity/quiescence-filtered directory listing (S3, utils.rs:911-980)
 and multi-file concat (S4, utils.rs:1195-1198). In Spark S1/S2/S4 are
 all the same `spark.read.text` over one-or-many paths/globs (s3a:// or
-file://); S3's filtering is driver-side path selection.
+file://). S3's quiescence-filtered listing has no counterpart: the
+staging tier is Parquet, which `transform --staged` reads directly.
 
 `input_file_name()` is exposed so P5 (key-date passthrough) and
 filename-derived grouping remain possible without any custom source.
@@ -13,18 +14,10 @@ filename-derived grouping remain possible without any custom source.
 
 from __future__ import annotations
 
-import os
-import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Filename shape of a staging file:  {bucket}_{%Y-%m-%d-%H-%M-%S%z}.s3logs
-# optionally + .processing (regex semantics per s3logs/src/utils.rs:60).
-STAGGING_FILE_PATTERN = (
-    r"([^_/]+)_(\d{4}-\d{2}-\d{2}-\d{2}-\d{2}-\d{2}\+\d{4})(\.[0-9a-zA-Z]+)(\.[0-9a-zA-Z]+)?$"
-)
 
 # Event-time-carrying object key suffix used by streaming passthrough
 # mode (P5): ...YYYY-MM-DD-HH-MM-SS-{16 uppercase hex}
@@ -41,56 +34,3 @@ def read_log_lines(spark: SparkSession, paths: str | Sequence[str], with_filenam
     if with_filename:
         df = df.withColumn("input_file", F.input_file_name())
     return df
-
-
-def key_date_from_filename(df: DataFrame, filename_col: str = "input_file") -> DataFrame:
-    """P5 — derive the event date from the object key instead of
-    per-line parsing (passthrough mode, output.rs:747-756). Pushes the
-    timestamp computation from row granularity to file granularity."""
-    date = F.regexp_extract(F.col(filename_col), KEY_DATE_PATTERN, 1)
-    return df.withColumn(
-        "key_date_ts", F.try_to_timestamp(F.nullif(date, F.lit("")), F.lit("yyyy-MM-dd"))
-    )
-
-
-def scan_stagging_dir(
-    root: str,
-    quiescence_seconds: int = 600,
-    suffix: str = ".s3logs",
-    now: float | None = None,
-    spark: SparkSession | None = None,
-) -> list[str]:
-    """S3/F3/F4 — the transform stage's input selection: files under
-    ``root`` with a valid staging name, not mid-processing, whose mtime
-    is older than the quiescence interval (is_process_target,
-    utils.rs:896-909). Driver-side listing (cheap: file *names*, not
-    data); the data read stays distributed via read_log_lines.
-
-    With ``spark`` given, the listing goes through Hadoop
-    ``FileSystem`` so a staging tier on s3a://hdfs:// is scanned
-    correctly; plain ``os.listdir`` is the no-session local fallback."""
-    import re
-
-    now = now if now is not None else time.time()
-    pat = re.compile(STAGGING_FILE_PATTERN)
-
-    if spark is not None:
-        from s3logs_parquet_spark.fsutil import list_files
-
-        candidates = [(f.path, f.name, f.mtime) for f in list_files(spark, root)]
-    else:
-        candidates = []
-        for name in sorted(os.listdir(root)):
-            full = os.path.join(root, name)
-            candidates.append((full, name, os.path.getmtime(full)))
-
-    out: list[str] = []
-    for full, name, mtime in candidates:
-        if not pat.search(name):
-            continue
-        if not name.endswith(suffix):  # e.g. .processing files excluded
-            continue
-        if mtime > now - quiescence_seconds:
-            continue
-        out.append(full)
-    return out

@@ -846,12 +846,10 @@ def run_stream_rollup(
     count/sum/min/max rows) to ``{rollup_path}/batch=<id>`` with
     mode=overwrite — the per-batch commit shape of run_manifest_stream
     (T4): a replayed batch rewrites its directory bit-identically, so
-    crash/replay cannot corrupt the table. This is deliberately NOT
-    plans/rollup.update_rollup's in-place additive fold, whose
-    delivery contract (docstring) forbids replays: under streaming
-    retry semantics the fold would double-count, while per-batch
-    contribution dirs make replays idempotent with no cross-batch
-    mutation.
+    crash/replay cannot corrupt the table. This is deliberately NOT an
+    in-place additive fold: under streaming retry semantics a fold
+    would double-count a replayed batch, while per-batch contribution
+    dirs make replays idempotent with no cross-batch mutation.
 
     The CURRENT rollup is derived on read (:func:`read_stream_rollup`)
     by re-aggregating contributions with the same (window, by..., dt)
@@ -986,7 +984,7 @@ def run_stream_curation(
     column-pruned SCAN of the index (sequential parquet read, no
     network) — bound it with ``band_index_max_bucket`` /
     ``index_dropped=False`` on flood corpora and fold the per-batch
-    files with compact_curation_index. ``"dirs"`` keeps the round-9
+    files with ``maintenance fold-index``. ``"dirs"`` keeps the round-9
     plain-directory layout (portable, catalog-free); a store created
     under one layout must keep it — mixing fails loud at start.
     ``index_buckets`` sets the bucket count at store CREATION (default
@@ -1025,7 +1023,7 @@ def run_stream_curation(
     bounding the per-trigger directory/file growth the round-10
     hotprobe measured (+10% per-trigger per 2x history from the index
     scan term) without an operator remembering to run
-    compact_curation_index in drain windows. Bucketed layout only.
+    ``maintenance fold-index`` in drain windows. Bucketed layout only.
     Replay-safe: only ids < the current batch fold (committed by
     foreachBatch sequencing), a crashed attempt's own partition is
     left for its retry, and folded history keeps ids < every future
@@ -1040,8 +1038,8 @@ def run_stream_curation(
     growing to 67 s at 12M — cumulative O(H²/N), though survivors stay
     fingerprint-identical and file counts drop 1280 -> 352 either way.
     Pick the cadence for the file-count bound (object-store listing is
-    where unfolded stores hurt); run drain-window
-    compact_curation_index for the occasional everything-fold.
+    where unfolded stores hurt); run a drain-window
+    ``maintenance fold-index`` for the occasional everything-fold.
 
     ``band_index_max_bucket`` (round 9) bounds the warned O(history)
     probe blowup that ``index_dropped=False`` alone cannot: when a
@@ -1129,8 +1127,8 @@ def run_stream_curation(
         raise ValueError(
             "run_stream_curation: fold_every_n_batches requires "
             "band_index_layout='bucketed' (the dirs fold is a whole-store "
-            "rename swap — run compact_curation_index in a drain window "
-            "instead)"
+            "rename swap — run `maintenance fold-index` on each index store "
+            "in a drain window instead)"
         )
     if fold_mode not in ("window", "all"):
         raise ValueError(

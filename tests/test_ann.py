@@ -177,67 +177,6 @@ def test_ivf_train_and_pq_codebooks_validate_corpus_size(spark):
         )
 
 
-def test_ivfpq_parity_recall_and_column_pruning(spark, sf_dir, tmp_path):
-    """IVF-PQ: (a) the persisted index returns exactly the in-memory
-    composite's results; (b) the ADC candidate scan reads ONLY
-    (id, pq_code) — parquet column pruning keeps full vectors out of
-    the candidate path (the 100 TB cost model: m bytes/vector scanned,
-    vectors only for reranked candidates); (c) probed cells show up as
-    a partition filter; (d) recall@10 vs brute force doesn't collapse."""
-    from s3logs_parquet_spark.operators.ann import (
-        brute_force_topk,
-        ivf_train,
-        ivfpq_index_topk,
-        ivfpq_index_write,
-        ivfpq_topk,
-        pq_codebooks,
-    )
-
-    emb = _emb(spark, sf_dir)
-    q = _queries(emb)
-    cents = ivf_train(emb, "embedding", n_cells=8, iters=2, id_col="vec_id")
-    cbs = pq_codebooks(emb, "embedding", m=4, k_sub=8, id_col="vec_id")
-    mem = ivfpq_topk(
-        emb, q, "vec_id", "query_id", cents, cbs, k=10, n_probe=2, n_candidates=50
-    )
-
-    path = str(tmp_path / "ivfpq_index")
-    w_cents, w_cbs = ivfpq_index_write(
-        emb, path, "vec_id", n_cells=8, iters=2, m=4, k_sub=8
-    )
-    assert w_cents == cents and w_cbs == cbs
-    idx = ivfpq_index_topk(
-        spark, path, q, "vec_id", "query_id", k=10, n_probe=2, n_candidates=50
-    )
-    got = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in idx.collect())
-    want = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in mem.collect())
-    assert got == want and len(got) > 0
-
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    # two scans over the index: the ADC scan must NOT read _cv, the
-    # rerank fetch must NOT read pq_code
-    import re
-
-    schemas = re.findall(r"ReadSchema: (\S+)", plan)
-    idx_schemas = [s for s in schemas if "pq_code" in s or "_cv" in s]
-    assert any("pq_code" in s and "_cv" not in s for s in idx_schemas), schemas
-    assert any("_cv" in s and "pq_code" not in s for s in idx_schemas), schemas
-    pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "cell" in pf
-
-    exact = brute_force_topk(emb, q, "vec_id", "query_id", k=10).collect()
-    exact_sets: dict = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    got_sets: dict = {}
-    for qid, _rank, vid in got:
-        got_sets.setdefault(qid, set()).add(vid)
-    recall = sum(len(exact_sets[k0] & got_sets.get(k0, set())) for k0 in exact_sets) / sum(
-        len(s) for s in exact_sets.values()
-    )
-    assert recall >= 0.4, f"IVF-PQ recall@10 collapsed: {recall}"
-
-
 def test_ivf_assign_kernel_parity_and_auto_switch(spark):
     """The Arrow matmul kernel and the expanded-arithmetic kernel agree
     on margin-separated vectors, and 'auto' picks by the codegen term
@@ -549,16 +488,6 @@ def _topk_ivfpq(spark, emb, q, tmp_path):
     )
 
 
-def _topk_ivfpq_index(spark, emb, q, tmp_path):
-    from s3logs_parquet_spark.operators.ann import ivfpq_index_topk, ivfpq_index_write
-
-    path = str(tmp_path / "ivfpq_index")
-    ivfpq_index_write(emb, path, "vec_id", n_cells=4, iters=1, m=4, k_sub=8)
-    return ivfpq_index_topk(
-        spark, path, q, "vec_id", "query_id", k=5, n_probe=2, n_candidates=20
-    )
-
-
 def _topk_sq8(spark, emb, q, tmp_path):
     from s3logs_parquet_spark.operators.ann import sq8_topk, sq_stats
 
@@ -575,10 +504,9 @@ def _topk_sq8(spark, emb, q, tmp_path):
         (_topk_ivf_index, [5]),
         (_topk_pq, [5, 20]),
         (_topk_ivfpq, [5, 20]),
-        (_topk_ivfpq_index, [5, 20]),
         (_topk_sq8, [5, 20]),
     ],
-    ids=["exact", "lsh", "ivf", "ivf_index", "pq", "ivfpq", "ivfpq_index", "sq8"],
+    ids=["exact", "lsh", "ivf", "ivf_index", "pq", "ivfpq", "sq8"],
 )
 def test_topk_cuts_plan_as_window_group_limit(spark, sf_dir, tmp_path, build, limits):
     """Every per-query cut (the final top-k, and the candidate cut ahead

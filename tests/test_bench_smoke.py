@@ -98,3 +98,185 @@ def test_prebuilt_is_session_scoped(spark):
     assert df.sparkSession is not spark
     assert prebuilt(spark, key, lambda: plan_heavy(build())) is df
     assert len(builds) == 4
+
+
+# Top-level definitions that no entry point reaches but that stay, each
+# with its reason. Everything else in the package must be reached.
+KEPT = {
+    "functions.text_analysis.quality_score": (
+        "pure-Column reference that test_with_quality_and_lang_matches_expressions "
+        "checks the staged with_quality_and_lang against"
+    ),
+    "functions.text_analysis.langid": (
+        "pure-Column reference that test_with_quality_and_lang_matches_expressions "
+        "checks the staged with_quality_and_lang against"
+    ),
+    "operators.dedup.duplicated_spans": (
+        "span report that test_remove_duplicated_spans_matches_span_report and "
+        "test_span_family_matches_python_model check remove_duplicated_spans against"
+    ),
+    "operators.sketches.kmv_distinct": (
+        "batch sketch that test_stream_kmv_equals_batch_sketch checks the "
+        "streamed KMV sketch against"
+    ),
+    "schema.log_schema": (
+        "built-in schema that test_parse_message_type_shipped_file_matches_builtin "
+        "checks the shipped parquet.schema file against"
+    ),
+    "session.release_tracked": (
+        "the only release for frames operators register with session.track; "
+        "without it a long-lived driver can only leak them"
+    ),
+    "sources.tables.register_views": "the README's library example",
+    "streaming.job.capture_stream_plans": "used by tools/stream_plan_scenarios.py",
+    "writer.s3a_committer_profile": "the README's s3a deployment profile",
+}
+
+
+def _unreached(root: str, kept) -> tuple[set[str], set[str]]:
+    """(every top-level def/class in the package, the ones that no root
+    reaches), both as "module.name" without the package prefix.
+
+    A definition is reached when reached code names it: a Name, an
+    Attribute on a module, or an import alias, resolved through each
+    module's imports to the defining module. Docstrings and comments
+    are not code, and a module-level import (an ``__init__.py``
+    re-export) is not a use. Roots: the CLI, the Lambda handlers and
+    the SQS / manifest sources (every definition), the registry's
+    QUERIES, the streaming ``run_*`` jobs and ``read_*`` readers,
+    ``__spark_entry__.py``, ``bench.py`` and ``perfbench/``, plus
+    ``kept``."""
+    import ast
+    from collections import deque
+
+    pkg = "s3logs_parquet_spark"
+    files = {}
+    for d, _, names in os.walk(os.path.join(root, pkg)):
+        for f in names:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(d, f), root)[:-3]
+                files[rel.replace(os.sep, ".").removesuffix(".__init__")] = os.path.join(d, f)
+    outside = ["__spark_entry__", "bench"] + [
+        "perfbench." + f[:-3] for f in os.listdir(os.path.join(root, "perfbench")) if f.endswith(".py")
+    ]
+    for mod in outside:
+        files[mod] = os.path.join(root, *mod.split(".")) + ".py"
+    packages = {m for m, p in files.items() if p.endswith("__init__.py")}
+
+    def absolute(mod: str, level: int, name: str | None) -> str:
+        if not level:
+            return name
+        parts = mod.split(".") if mod in packages else mod.split(".")[:-1]
+        return ".".join(parts[: len(parts) - level + 1] + ([name] if name else []))
+
+    defs, aliases, units = {}, {}, {}
+    for mod, path in files.items():
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        defs[mod], aliases[mod], units[(mod, None)] = {}, {}, []
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[mod][node.name] = True
+                units[(mod, node.name)] = [node]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            defs[mod].setdefault(n.id, False)
+                            units.setdefault((mod, n.id), []).append(node)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    aliases[mod][bound] = ("mod", a.name if a.asname else bound)
+            elif isinstance(node, ast.ImportFrom):
+                src = absolute(mod, node.level, node.module)
+                for a in node.names:
+                    aliases[mod][a.asname or a.name] = ("from", src, a.name)
+            else:  # module-level code runs whenever the module is imported
+                units[(mod, None)].append(node)
+
+    def resolve(mod, name, seen=()):
+        if mod not in files:
+            return None
+        if name in defs[mod]:
+            return (mod, name)
+        if name in aliases[mod] and (mod, name) not in seen:
+            return follow(aliases[mod][name], seen + ((mod, name),))
+        if f"{mod}.{name}" in files:
+            return ("mod", f"{mod}.{name}")
+        return None
+
+    def follow(alias, seen=()):
+        return ("mod", alias[1]) if alias[0] == "mod" else resolve(alias[1], alias[2], seen)
+
+    def uses(mod, nodes):
+        local = {}
+        for sub in (s for n in nodes for s in ast.walk(n)):
+            if isinstance(sub, ast.Import):
+                for a in sub.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    local[bound] = ("mod", a.name if a.asname else bound)
+                    yield ("mod", a.name)
+            elif isinstance(sub, ast.ImportFrom):
+                src = absolute(mod, sub.level, sub.module)
+                for a in sub.names:
+                    local[a.asname or a.name] = ("from", src, a.name)
+                    yield resolve(src, a.name)
+
+        def target(e):
+            if isinstance(e, ast.Name):
+                return follow(local[e.id]) if e.id in local else resolve(mod, e.id)
+            if isinstance(e, ast.Attribute):
+                owner = target(e.value)
+                if owner and owner[0] == "mod":
+                    return resolve(owner[1], e.attr)
+            return None
+
+        for sub in (s for n in nodes for s in ast.walk(n)):
+            if isinstance(sub, (ast.Name, ast.Attribute)):
+                yield target(sub)
+
+    roots = [(f"{pkg}.plans.queries", "QUERIES")]
+    for mod in files:
+        short = mod.removeprefix(pkg + ".")
+        if mod in outside or short in ("cli", "lambda_handlers", "sources.sqs_bridge", "sources.manifest_source"):
+            roots += [(mod, None)] + [(mod, n) for n in defs[mod]]
+        elif short.startswith("streaming."):
+            roots += [(mod, n) for n in defs[mod] if n.startswith(("run_", "read_"))]
+    roots += [tuple(f"{pkg}.{k}".rsplit(".", 1)) for k in kept]
+
+    reached, queue = set(), deque(roots)
+    while queue:
+        key = queue.popleft()
+        if key is None or key in reached:
+            continue
+        reached.add(key)
+        if key[0] == "mod":
+            parts = key[1].split(".")
+            queue.extend(("mod", ".".join(parts[:i])) for i in range(1, len(parts)))
+            queue.append((key[1], None))
+        else:
+            queue.append(("mod", key[0]))
+            queue.extend(uses(key[0], units.get(key, [])))
+
+    every = {
+        f"{m.removeprefix(pkg + '.')}.{n}"
+        for m in files if m.startswith(pkg) for n, is_def in defs[m].items() if is_def
+    }
+    return every, {q for q in every if tuple(f"{pkg}.{q}".rsplit(".", 1)) not in reached}
+
+
+def test_every_definition_is_reachable():
+    """Every top-level def/class in the package is reached from an entry
+    point, or named in KEPT with a reason. A definition only tests,
+    docs or another unreached definition use counts as unreached:
+    delete it with its tests, or keep it in KEPT. A KEPT entry must
+    exist and must not be reached already."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    every, dead = _unreached(root, KEPT)
+    assert not dead, f"unreached definitions (delete, or add to KEPT): {sorted(dead)}"
+    _, dead_without_kept = _unreached(root, ())
+    stale = sorted(k for k in KEPT if k not in every or k not in dead_without_kept)
+    assert not stale, f"KEPT entries that are missing or reached anyway: {stale}"
+    assert all(reason.strip() for reason in KEPT.values())

@@ -1,7 +1,5 @@
-"""Z-order layout (operators/layout.py): bit-exact key construction,
-quantization edges, and the MEASURED pruning claim — a z-ordered
-layout lets parquet min/max statistics skip files on a dimension a
-linear sort cannot prune at all.
+"""Z-order and Hilbert keys (operators/layout.py): bit-exact key
+construction against Python models, locality and width validation.
 """
 
 from __future__ import annotations
@@ -9,12 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from s3logs_parquet_spark.operators.layout import (
-    quantize,
-    rowgroup_prune_fraction,
-    write_zordered,
-    zorder_key,
-)
+from s3logs_parquet_spark.operators.layout import zorder_key
 
 
 def _interleave_py(x: int, y: int, bits: int) -> int:
@@ -50,49 +43,6 @@ def test_zorder_key_locality(spark):
 def test_zorder_key_validates_width():
     with pytest.raises(ValueError, match="exceeds a long"):
         zorder_key([F.lit(0), F.lit(0), F.lit(0), F.lit(0)], bits=16)
-
-
-def test_quantize_clamps_edges(spark):
-    df = spark.createDataFrame(
-        [(-5.0,), (0.0,), (49.9,), (100.0,), (250.0,)], "v double"
-    )
-    got = [r["q"] for r in df.select(quantize(F.col("v"), 0.0, 100.0, 4).alias("q")).collect()]
-    assert got == [0, 0, 7, 15, 15]
-
-
-def test_zorder_layout_prunes_where_linear_sort_cannot(spark, tmp_path):
-    """The measured claim: 200k rows over a 1024×1024 (x, y) grid in 16
-    files. A y-band predicate prunes (almost) nothing under an x-sorted
-    layout — every x-range file spans all of y — but skips most files
-    under z-order, where each file covers a compact rectangle. Checked
-    against real parquet footer min/max stats (pyarrow), the same
-    decision a reader's row-group skipping makes."""
-    n = 200_000
-    df = spark.range(0, n).select(
-        F.col("id"),
-        F.pmod(F.col("id") * 7919, F.lit(1024)).alias("x"),
-        F.pmod(F.col("id") * 104729, F.lit(1024)).alias("y"),
-    )
-
-    linear = str(tmp_path / "linear")
-    df.repartitionByRange(16, F.col("x")).sortWithinPartitions("x").write.mode(
-        "overwrite"
-    ).parquet(linear)
-
-    zpath = str(tmp_path / "zordered")
-    write_zordered(df, zpath, [F.col("x"), F.col("y")], bits=10, n_files=16)
-
-    pred = {"y": (0.0, 99.0)}  # ~10% band of y
-    skip_lin, tot_lin = rowgroup_prune_fraction(linear, pred)
-    skip_z, tot_z = rowgroup_prune_fraction(zpath, pred)
-    assert tot_lin > 0 and tot_z > 0
-    assert skip_lin / tot_lin <= 0.2, (skip_lin, tot_lin)
-    assert skip_z / tot_z >= 0.5, (skip_z, tot_z)
-
-    # and the layouts hold identical data
-    a = spark.read.parquet(linear).groupBy().agg(F.sum("x"), F.sum("y"), F.count("*")).collect()
-    b = spark.read.parquet(zpath).groupBy().agg(F.sum("x"), F.sum("y"), F.count("*")).collect()
-    assert a == b
 
 
 def _xy2d(n: int, x: int, y: int) -> int:
@@ -169,36 +119,3 @@ def test_hilbert_key_validates_width():
 
     with pytest.raises(ValueError, match="bits"):
         hilbert_key(F.lit(0), F.lit(0), bits=31)
-
-
-def test_hilbert_layout_prunes_like_zorder(spark, tmp_path):
-    """write_hilbert_clustered prunes a 2-D box at least as well as
-    z-order on the same data (unit-step locality => every file covers
-    a rectangle at least as tight), and holds identical data."""
-    from s3logs_parquet_spark.operators.layout import (
-        rowgroup_prune_fraction,
-        write_hilbert_clustered,
-        write_zordered,
-    )
-
-    n = 200_000
-    df = spark.range(0, n).select(
-        F.col("id"),
-        F.pmod(F.col("id") * 7919, F.lit(1024)).alias("x"),
-        F.pmod(F.col("id") * 104729, F.lit(1024)).alias("y"),
-    )
-    zpath = str(tmp_path / "z")
-    hpath = str(tmp_path / "h")
-    write_zordered(df, zpath, [F.col("x"), F.col("y")], bits=10, n_files=16)
-    write_hilbert_clustered(df, hpath, F.col("x"), F.col("y"), bits=10, n_files=16)
-
-    pred = {"x": (0.0, 127.0), "y": (0.0, 127.0)}  # 1/64 box
-    skip_z, tot_z = rowgroup_prune_fraction(zpath, pred)
-    skip_h, tot_h = rowgroup_prune_fraction(hpath, pred)
-    assert tot_z > 0 and tot_h > 0
-    assert skip_h / tot_h >= skip_z / tot_z - 1e-9, (skip_h, tot_h, skip_z, tot_z)
-    assert skip_h / tot_h >= 0.5
-
-    a = spark.read.parquet(zpath).groupBy().agg(F.sum("x"), F.sum("y"), F.count("*")).collect()
-    b = spark.read.parquet(hpath).groupBy().agg(F.sum("x"), F.sum("y"), F.count("*")).collect()
-    assert a == b

@@ -73,14 +73,17 @@ def test_dedup_single_exchange(spark):
     assert _count_nodes(plan, "Exchange") == 1
 
 
-# docs_duplicated_spans' plan budget, shared by both span tests. The
+# docs_remove_dup_spans' plan budget, shared by both span tests. The
 # gaps-and-islands merge must reuse ONE doc-keyed exchange for the lag
 # window, the break-sum window AND both downstream (doc,island)/(doc)
-# hash-aggs: three shuffles — (doc,ngram) distinct, ngram doc-frequency,
-# doc windows — over ONE sort. A further Exchange or second Sort means
-# the doc clustering was lost between the windows and the island
-# aggregation. One shuffle feeds two branches, so the static plan prints
-# it twice; AQE's final plan runs it once and reuses it.
+# span-array aggs: three shuffles — (doc,ngram) distinct, ngram
+# doc-frequency, doc windows — over ONE sort. A further Exchange or
+# second Sort means the doc clustering was lost between the windows and
+# the span aggregation. The (doc,ngram) shuffle feeds two branches, so
+# the static plan prints it twice; AQE's final plan runs it once and
+# reuses it. Measured on this query at sf0.001: 2 Window and 1 Sort in
+# both plans, 4 Exchange in the initial plan, 3 Exchange + 1
+# ReusedExchange in the final one.
 SPANS_WINDOWS, SPANS_SORTS, SPANS_SHUFFLES = 2, 1, 3
 
 
@@ -88,9 +91,7 @@ def test_duplicated_spans_shuffle_budget(spark, sf_dir):
     """Static (AQE initial) plan: the span budget, with the shared
     shuffle printed on both of its branches. Read from the Initial Plan
     section whether or not the cached gate frame has run yet."""
-    from s3logs_parquet_spark.plans.docs_neardup import q_docs_duplicated_spans
-
-    df = q_docs_duplicated_spans(spark, sf_dir)
+    df = QUERIES["docs_remove_dup_spans"][0](spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     ).split("== Initial Plan ==", 1)[-1]
@@ -109,9 +110,7 @@ def test_duplicated_spans_shuffle_budget_after_execution(spark, sf_dir):
     that state deliberately — execute the cached frame, then assert
     the same shuffle budget on the final-plan section — so the
     doubled-text trap can never silently return."""
-    from s3logs_parquet_spark.plans.docs_neardup import q_docs_duplicated_spans
-
-    df = q_docs_duplicated_spans(spark, sf_dir)
+    df = QUERIES["docs_remove_dup_spans"][0](spark, sf_dir)
     df.collect()  # drive THIS frame's queryExecution to its AQE final plan
     raw = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -1,15 +1,13 @@
-"""Scale utilities: salted aggregation/join equivalence, compaction,
-custom stateful streaming operator."""
+"""Scale utilities: salted aggregation equivalence, compaction,
+sketches and decontamination."""
 
 from __future__ import annotations
 
 import os
 
-from conftest import drain
-
 from pyspark.sql import functions as F
 
-from s3logs_parquet_spark.operators.skew import salted_agg, salted_join
+from s3logs_parquet_spark.operators.skew import salted_agg
 from s3logs_parquet_spark.plans.compact import compact_partitions
 
 
@@ -42,18 +40,6 @@ def test_salted_agg_matches_plain(spark):
     assert plain == salted
 
 
-def test_salted_join_matches_plain(spark):
-    big = spark.range(0, 5000).select(
-        F.when(F.col("id") % 5 < 4, F.lit(1)).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(100)], ["k", "name"])
-    plain = big.join(small, "k").select("k", "payload", "name")
-    salted = salted_join(big, small, "k", n_salt=8).select("k", "payload", "name")
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).count() == 0
-
-
 def test_compaction_reduces_files(spark, tmp_path):
     out = str(tmp_path / "t")
     df = spark.range(0, 10_000).select(
@@ -83,54 +69,6 @@ def test_compaction_reduces_files(spark, tmp_path):
         (r["p"], r["v"]) for r in spark.read.parquet(out).select("p", "v").collect()
     )
     assert after_rows == before_rows
-
-
-def test_stateful_rotation_counts(spark, tmp_path):
-    """applyInPandasWithState keeps per-group counts across micro-batches."""
-    from s3logs_parquet_spark.functions.parse import parse_s3_access_log
-    from s3logs_parquet_spark.streaming.stateful import running_counts_with_rotation
-    from s3logs_parquet_spark.testing import generate_lines
-
-    ind = tmp_path / "in"
-    ind.mkdir()
-    (ind / "f1.log").write_text(
-        "\n".join(generate_lines(40, seed=31, garbage_fraction=0.0, dup_fraction=0.0)) + "\n"
-    )
-
-    lines = spark.readStream.option("maxFilesPerTrigger", 1).text(str(ind))
-    parsed = parse_s3_access_log(lines).filter(F.col("ts").isNotNull())
-    counted = running_counts_with_rotation(parsed.groupBy("Bucket"), threshold_lines=25)
-
-    q = (
-        counted.writeStream.format("memory")
-        .queryName("rot1")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
-    batch1 = {r["group_key"]: r for r in spark.sql("SELECT * FROM rot1").collect()}
-    assert sum(r["total_rows"] for r in batch1.values()) == 40
-
-    # second batch: state carries over, rotations trip past threshold
-    (ind / "f2.log").write_text(
-        "\n".join(generate_lines(40, seed=32, garbage_fraction=0.0, dup_fraction=0.0)) + "\n"
-    )
-    q2 = (
-        counted.writeStream.format("memory")
-        .queryName("rot2")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q2)
-    rows = spark.sql("SELECT * FROM rot2").collect()
-    total = {}
-    for r in rows:
-        total[r["group_key"]] = max(total.get(r["group_key"], 0), r["total_rows"])
-    assert sum(total.values()) == 80
-    assert any(r["rotations"] >= 1 for r in rows)  # 80 rows over 3 buckets, threshold 25
 
 
 def test_auto_salt_sizes_via_hadoop_fs(spark, tmp_path):
@@ -177,31 +115,6 @@ def test_decontaminate_benchmark_side_broadcasts(spark):
     bench = docs.limit(2)
     plan = decontaminate(docs, bench)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_winnowing_rows_agree_with_stats(spark):
-    from pyspark.sql import functions as F
-
-    from s3logs_parquet_spark.functions.text_analysis import (
-        winnowing_fingerprint_rows,
-        winnowing_stats,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"t{(i * 7 + j) % 13}" for j in range(30))) for i in range(40)],
-        "doc_id long, text string",
-    )
-    stats = winnowing_stats(docs, "doc_id", "text")
-    from_rows = (
-        winnowing_fingerprint_rows(docs, "doc_id", "text")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_fp"),
-            F.min("fp").alias("min_fp"),
-            F.max("fp").alias("max_fp"),
-        )
-    )
-    assert sorted(stats.collect()) == sorted(from_rows.collect())
 
 
 def test_kmv_estimate_accuracy_and_small_set_rule(spark):
@@ -325,52 +238,6 @@ def test_kmv_global_two_level(spark):
     )
     assert "TakeOrderedAndProject" in plan
     assert "windowspecdefinition" not in plan  # no rank-window funnel
-
-
-def test_bucketed_join_and_agg_have_no_exchange(spark, sf_dir, tmp_path):
-    """plans/bucketing.py: co-bucketed tables join with ZERO exchanges
-    (storage paid the shuffle once at write), and an aggregate keyed by
-    the bucket column also plans exchange-free; a path read (bucket
-    metadata lost) re-introduces the exchange — proving the catalog
-    read path is what carries the layout."""
-    from pyspark.sql import functions as F
-
-    from s3logs_parquet_spark.plans.bucketing import read_bucketed, write_bucketed
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spark.sql("DROP TABLE IF EXISTS t_bdocs")
-    spark.sql("DROP TABLE IF EXISTS t_bstats")
-    write_bucketed(d, "t_bdocs", ["doc_id"], 4, path=str(tmp_path / "bdocs"))
-    write_bucketed(
-        d.select("doc_id", F.length("text").alias("n_chars")),
-        "t_bstats",
-        ["doc_id"],
-        4,
-        path=str(tmp_path / "bstats"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = read_bucketed(spark, "t_bdocs").join(read_bucketed(spark, "t_bstats"), "doc_id")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0
-        assert "SortMergeJoin" in plan
-        assert j.count() == d.count()
-
-        agg = read_bucketed(spark, "t_bdocs").groupBy("doc_id").count()
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert aplan.count("Exchange") == 0
-
-        # path read loses the bucket layout -> the exchange comes back
-        raw = spark.read.parquet(str(tmp_path / "bdocs")).join(
-            read_bucketed(spark, "t_bstats"), "doc_id"
-        )
-        rplan = raw._jdf.queryExecution().executedPlan().toString()
-        assert rplan.count("Exchange") >= 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bdocs")
-        spark.sql("DROP TABLE IF EXISTS t_bstats")
 
 
 # --- Misra–Gries heavy hitters ---------------------------------------------
@@ -550,49 +417,3 @@ def test_group_sampled_quantiles_all_leg_matches_global(spark):
         for r in sampled_quantiles(df, "v", "id", k=64, probs=(0.25, 0.5, 0.99)).collect()
     }
     assert grouped == glob
-
-
-def test_cm_heavy_hitters_matches_mg_and_brute_force(spark):
-    """The Count-Min candidate variant shares mg_heavy_hitters' exact
-    output contract: bucket counts upper-bound member items, so true
-    heavy hitters always survive the per-depth isin filter and the
-    exact recount drops every false positive — including in the
-    degenerate tiny-bucket regime where every bucket goes heavy."""
-    import collections
-    import math
-
-    from s3logs_parquet_spark.operators.sketches import (
-        cm_heavy_hitters,
-        mg_heavy_hitters,
-    )
-
-    items = _zipf_items(n=20_000, vocab=1_000, seed=23)
-    exact = collections.Counter(items)
-    phi = 1.0 / 50.0
-    thresh = math.ceil(phi * len(items))
-    truth = sorted((i, c) for i, c in exact.items() if c >= thresh)
-    assert truth
-
-    df = spark.createDataFrame([(x,) for x in items], "item string")
-    for parts in (1, 11):
-        got = sorted(
-            (r["item"], r["cnt"])
-            for r in cm_heavy_hitters(df.repartition(parts), "item", phi).collect()
-        )
-        assert got == truth, f"parts={parts}"
-    mg = sorted(
-        (r["item"], r["cnt"])
-        for r in mg_heavy_hitters(df, "item", phi=phi, k=64).collect()
-    )
-    assert mg == truth
-
-    # tiny bucket space: correct (unbounded-candidates regime, documented)
-    tiny = sorted(
-        (r["item"], r["cnt"])
-        for r in cm_heavy_hitters(df, "item", phi, n_buckets=8).collect()
-    )
-    assert tiny == truth
-
-    # empty input
-    empty = cm_heavy_hitters(spark.createDataFrame([], "item string"), "item", 0.1)
-    assert empty.columns == ["item", "cnt"] and empty.count() == 0

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.operators.dedup import dedup_log_rows
-from s3logs_parquet_spark.operators.windows import group_counts, with_agg_window
+from s3logs_parquet_spark.operators.windows import with_agg_window
 
 epochs = st.integers(min_value=0, max_value=2_000_000_000)
 aligns = st.sampled_from([60, 300, 900, 3600, 86400])
@@ -24,8 +24,8 @@ def test_window_counts_match_python_model(spark, ts, align):
         F.timestamp_seconds("e").alias("ts")
     )
     got = {
-        r["agg_window"]: r["n_rows"]
-        for r in group_counts(with_agg_window(df, align_seconds=align), "agg_window").collect()
+        r["agg_window"]: r["count"]
+        for r in with_agg_window(df, align_seconds=align).groupBy("agg_window").count().collect()
     }
     expected = Counter(t - t % align for t in ts)
     assert got == dict(expected)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from s3logs_parquet_spark.operators.dedup import (
     connected_components_clusters,
     exact_dedup,
+    minhash_banded,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -64,6 +65,8 @@ def test_minhash_lsh_finds_planted_pairs(spark):
     assert (1, 4) in pairs  # exact dup always found
     assert (1, 2) in pairs and (2, 4) in pairs  # near dup found
     assert all(3 not in p for p in pairs)  # unrelated doc excluded
+    with pytest.raises(ValueError, match="divisible"):
+        minhash_banded(d, "doc_id", "text", num_hashes=10, bands=3)
 
 
 def test_simhash_hamming_structure(spark):
@@ -225,46 +228,6 @@ def test_ngram_jaccard_requires_candidates(spark):
     d = spark.createDataFrame([(1, "a b"), (2, "a c")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="allow_quadratic"):
         ngram_jaccard_pairs(d, "doc_id", "text")
-
-
-def test_hash_impl_structure_invariant(spark):
-    """Planted near-dup structure must not depend on the hash impl:
-    'portable' (md5, oracle mode) and 'xxhash64' (scale mode) find the
-    same pairs and clusters."""
-    from s3logs_parquet_spark.functions import hashing
-
-    # Each group has a disjoint vocabulary: within-group jaccard ~0.95,
-    # cross-group ~0 — decisively away from the threshold, so the pair
-    # STRUCTURE is impl-independent even though estimates jitter.
-    rows = []
-    for i in range(10):
-        words = " ".join(f"w{i}x{j}" for j in range(40))
-        rows.append((i, words))
-        rows.append((100 + i, words + f" tail{i}"))  # near-dup of i
-    rows.append((500, "a completely different short document"))
-    d = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    results = {}
-    for impl in ("portable", "xxhash64"):
-        hashing.set_hash_impl(impl)
-        try:
-            pairs = minhash_lsh_pairs(
-                d, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3
-            )
-            results[impl] = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-        finally:
-            hashing.set_hash_impl("portable")
-    assert results["portable"] == results["xxhash64"]
-    assert {(i, 100 + i) for i in range(10)} <= results["portable"]
-
-
-def test_set_hash_impl_validates(spark):
-    import pytest
-
-    from s3logs_parquet_spark.functions.hashing import set_hash_impl
-
-    with pytest.raises(ValueError):
-        set_hash_impl("murmur3")
 
 
 def test_incremental_neardup_equals_cross_side_of_full(spark):
@@ -871,33 +834,6 @@ def test_remove_duplicated_spans_hand_corpus(spark):
     # doc4 == a duplicated 3-gram with docs 1/2 -> everything removed
     assert out[4]["clean_text"] == "" and out[4]["removed_tokens"] == 3
     assert out[5]["clean_text"] == "" and out[5]["n_tokens"] == 0
-
-
-def test_duplicated_spans_direct_duckdb_differential(spark, sf_dir):
-    """Retirement differential (round 9): docs_duplicated_spans left the
-    driver registry (its spans are value-checked inside
-    docs_remove_dup_spans' reconstruction oracle), so the report-mode
-    aggregates (n_spans/dup_tokens/dup_coverage) keep this DIRECT
-    full-corpus DuckDB check with the driver's hash semantics."""
-    import duckdb
-
-    from s3logs_parquet_spark.plans.docs_neardup import (
-        ORACLE_DOCS_DUP_SPANS,
-        q_docs_duplicated_spans,
-    )
-    from tools.check_oracles import frame_hash
-
-    sdf = q_docs_duplicated_spans(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    drel = con.sql(ORACLE_DOCS_DUP_SPANS)
-    drows = drel.fetchall()
-    assert len(srows) == len(drows) > 0
-    assert frame_hash(sdf.columns, srows) == frame_hash(list(drel.columns), drows)
-    con.close()
 
 
 def test_remove_duplicated_spans_matches_span_report(spark, sf_dir):

@@ -1,36 +1,12 @@
-"""Staging-dir scan predicates (S3/F3/F4), config surface, composition."""
+"""Config surface (env, INI, TZ), the SQL view layer and schema files."""
 
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
 from s3logs_parquet_spark.config import EngineConfig, parse_posix_tz_offset
-from s3logs_parquet_spark.sources.text_source import scan_stagging_dir
-
-
-def test_scan_stagging_predicates(tmp_path):
-    now = time.time()
-    old = now - 1200  # past the 600 s quiescence interval
-
-    def mk(name, mtime):
-        p = tmp_path / name
-        p.write_text("x\n")
-        os.utime(p, (mtime, mtime))
-
-    mk("bucket-a_2024-05-12-08-00-00+0000.s3logs", old)          # valid, quiescent
-    mk("bucket-b_2024-05-12-08-15-00+0000.s3logs", now)          # too fresh (F3)
-    mk("bucket-c_2024-05-12-08-30-00+0000.s3logs.processing", old)  # mid-processing (F4)
-    mk("random-file.txt", old)                                    # invalid name (F4)
-    mk("bucket-d_2024-05-12-08-45-00+0000.s3logs", old)          # valid, quiescent
-
-    got = [os.path.basename(p) for p in scan_stagging_dir(str(tmp_path), quiescence_seconds=600)]
-    assert got == [
-        "bucket-a_2024-05-12-08-00-00+0000.s3logs",
-        "bucket-d_2024-05-12-08-45-00+0000.s3logs",
-    ]
 
 
 def test_config_validation_and_tz():
@@ -102,30 +78,6 @@ def test_config_from_env(monkeypatch):
     assert cfg.merge_orig_buckets is False
     assert cfg.deduplication is True
     assert cfg.tz_offset_seconds == 8 * 3600
-
-
-def test_pack_after_curation(spark, sf_dir):
-    """Composition: curated corpus → per-split sequence packing."""
-    from pyspark.sql import functions as F
-
-    from s3logs_parquet_spark.functions.text_analysis import whitespace_token_count
-    from s3logs_parquet_spark.operators.packing import pack_documents
-    from s3logs_parquet_spark.plans.curation import curate_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    curated = curate_documents(docs)
-    with_tokens = curated.join(docs.select("doc_id", "text"), "doc_id").select(
-        "doc_id", "split", whitespace_token_count(F.col("text")).alias("n_tokens")
-    )
-    train = with_tokens.filter(F.col("split") == "train")
-    packed = pack_documents(train, "doc_id", "n_tokens", max_tokens=96, n_shards=4)
-    assert packed.count() == train.count()
-    over = (
-        packed.groupBy("pack_id")
-        .agg(F.sum("n_tokens").alias("t"), F.count(F.lit(1)).alias("n"))
-        .filter((F.col("t") > 96) & (F.col("n") > 1))
-    )
-    assert over.count() == 0
 
 
 def test_sql_layer_over_views_and_output(spark, sf_dir, tmp_path):
@@ -221,32 +173,6 @@ def test_ini_stream_daemon_verbatim(tmp_path):
     ecfg = EngineConfig.from_ini(stream_ini_path=str(p))
     assert ecfg.tz_offset_seconds == 8 * 3600
     assert ecfg.threshold_lines == 1234
-
-
-def test_scan_stagging_via_hadoop_fs(spark, tmp_path):
-    # same predicates through the Hadoop FileSystem listing (the
-    # cluster path for an s3a:// staging tier) — identical selection.
-    now = time.time()
-    old = now - 1200
-
-    def mk(name, mtime):
-        p = tmp_path / name
-        p.write_text("x\n")
-        os.utime(p, (mtime, mtime))
-
-    mk("bucket-a_2024-05-12-08-00-00+0000.s3logs", old)
-    mk("bucket-b_2024-05-12-08-15-00+0000.s3logs", now)
-    mk("bucket-c_2024-05-12-08-30-00+0000.s3logs.processing", old)
-    mk("bucket-d_2024-05-12-08-45-00+0000.s3logs", old)
-
-    got = [
-        os.path.basename(p)
-        for p in scan_stagging_dir(str(tmp_path), quiescence_seconds=600, spark=spark)
-    ]
-    assert got == [
-        "bucket-a_2024-05-12-08-00-00+0000.s3logs",
-        "bucket-d_2024-05-12-08-45-00+0000.s3logs",
-    ]
 
 
 # ---------------------------------------------------------------------------

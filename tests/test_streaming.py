@@ -1087,7 +1087,7 @@ def test_compact_curation_index_preserves_dedup_across_resume(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from s3logs_parquet_spark.plans.compact import compact_curation_index
+    from s3logs_parquet_spark.plans.compact import compact_index_store
     from s3logs_parquet_spark.streaming.job import (
         StreamingJobConfig,
         run_stream_curation,
@@ -1119,10 +1119,13 @@ def test_compact_curation_index_preserves_dedup_across_resume(spark, tmp_path):
         q = run_stream_curation(spark, inp, schema, out, idx, ck, **kw)
         drain(q)
         if fold:
-            stats = compact_curation_index(spark, idx, checkpoint_dir=ck)
-            assert stats["bands"]["batches_before"] == 3
-            assert stats["bands"]["batches_after"] == 1
-            assert stats["digests"]["batches_after"] == 1
+            digests = compact_index_store(spark, f"{idx}/digests", checkpoint_dir=ck)
+            bands = compact_index_store(
+                spark, f"{idx}/bands", checkpoint_dir=ck, sort_cols=("band", "band_hash")
+            )
+            assert bands["batches_before"] == 3
+            assert bands["batches_after"] == 1
+            assert digests["batches_after"] == 1
         for rows in [
             [(100, f"{fam} tailX"), (101, uniq[3])],
             [(102, uniq[0]), (103, uniq[4])],
@@ -1149,7 +1152,7 @@ def test_compact_curation_index_preserves_dedup_across_resume(spark, tmp_path):
         f"{idx_f}/digests/batch=99"
     )
     with pytest.raises(ValueError, match="no commit marker"):
-        compact_curation_index(spark, idx_f, checkpoint_dir=ck_f)
+        compact_index_store(spark, f"{idx_f}/digests", checkpoint_dir=ck_f)
 
 
 def test_stream_rollup_equals_batch_rollup(spark, tmp_path):
@@ -1296,7 +1299,7 @@ def test_fold_tolerates_purged_commit_log(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from s3logs_parquet_spark.plans.compact import (
-        compact_curation_index,
+        compact_index_store,
         fold_stream_batches,
     )
 
@@ -1331,11 +1334,13 @@ def test_fold_tolerates_purged_commit_log(spark, tmp_path):
                     F.array(F.lit(1), F.lit(2)).alias("signature"),
                 )
             d.write.parquet(str(idx / store / f"batch={b}"))
-    stats = compact_curation_index(
-        spark, str(idx), checkpoint_dir=str(tmp_path / "ckpt")
+    ckpt = str(tmp_path / "ckpt")
+    digests = compact_index_store(spark, str(idx / "digests"), checkpoint_dir=ckpt)
+    bands = compact_index_store(
+        spark, str(idx / "bands"), checkpoint_dir=ckpt, sort_cols=("band", "band_hash")
     )
-    assert stats["bands"]["batches_after"] == 1
-    assert stats["digests"]["batches_after"] == 1
+    assert bands["batches_after"] == 1
+    assert digests["batches_after"] == 1
 
 
 def test_recover_fold_siblings_heals_crashed_swap(spark, tmp_path):

@@ -5,24 +5,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.functions.text_analysis import (
-    bpe_token_count,
     clean_text,
     fingerprint,
     langid,
-    repetition_signals,
-    whitespace_token_count,
+    with_repetition_signals,
 )
 
 
 def _one(spark, col):
     return spark.range(1).select(col.alias("v")).collect()[0]["v"]
-
-
-def test_token_counts(spark):
-    assert _one(spark, whitespace_token_count(F.lit("  a  b   c "))) == 3
-    assert _one(spark, whitespace_token_count(F.lit(""))) == 0
-    # BPE-ish: letters / digits / single punct
-    assert _one(spark, bpe_token_count(F.lit("ab12 cd!"))) == 4  # ab, 12, cd, !
 
 
 def test_clean_text(spark):
@@ -31,9 +22,9 @@ def test_clean_text(spark):
 
 
 def test_repetition_signals(spark):
-    sig = repetition_signals(F.lit("a a a b"))
-    row = spark.range(1).select(
-        sig["dup_word_ratio"].alias("w"), sig["dup_bigram_ratio"].alias("b")
+    df = spark.createDataFrame([("a a a b",)], "text string")
+    row = with_repetition_signals(df).select(
+        F.col("dup_word_ratio").alias("w"), F.col("dup_bigram_ratio").alias("b")
     ).collect()[0]
     assert abs(row["w"] - 0.5) < 1e-9       # 4 words, 2 distinct
     assert abs(row["b"] - 1 / 3) < 1e-9     # bigrams: aa,aa,ab → 2 distinct of 3
@@ -95,32 +86,6 @@ def test_top_ngrams_counts_and_ties(spark):
     assert rows[2][1] == 1 and rows[2][0] == min(x for x, n, _ in [
         ("b c a", 1, 1), ("c a b", 1, 1), ("b c a", 1, 1)
     ])
-
-
-def test_quality_score_direct_duckdb_differential(spark, sf_dir):
-    """docs_quality_score was retired from the driver registry in
-    round 8 (its per-doc quality values are the selection key of
-    docs_selection_budget, which surfaces them for every capped
-    survivor) — this keeps the retiree's FULL-corpus differential: the
-    builder and its SQL twin over every document, hash-compared with
-    the driver's semantics."""
-    import duckdb
-
-    from s3logs_parquet_spark.plans.docs_text import _SQL_QUALITY, q_docs_quality
-    from tools.check_oracles import frame_hash
-
-    sdf = q_docs_quality(spark, sf_dir)
-    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    drel = con.sql(_SQL_QUALITY)
-    dcols, drows = list(drel.columns), drel.fetchall()
-    assert sorted(scols) == sorted(dcols)
-    assert len(srows) == len(drows) > 0
-    assert frame_hash(scols, srows) == frame_hash(dcols, drows)
-    con.close()
 
 
 def test_with_quality_and_lang_matches_expressions(spark, sf_dir):

@@ -7,13 +7,11 @@ from pyspark.sql import functions as F
 from s3logs_parquet_spark.config import ALLBUCKETS, EngineConfig
 from s3logs_parquet_spark.functions.timeops import (
     align_left,
-    align_right,
-    format_epoch,
     partition_prefix,
     strftime_to_java,
 )
 from s3logs_parquet_spark.operators.dedup import dedup_log_rows
-from s3logs_parquet_spark.operators.windows import group_counts, with_agg_window, with_bucket_key
+from s3logs_parquet_spark.operators.windows import with_agg_window, with_bucket_key
 
 
 def test_align_boundaries(spark):
@@ -22,19 +20,16 @@ def test_align_boundaries(spark):
     df = spark.createDataFrame(
         [(k * 900 - 1,), (k * 900,), (k * 900 + 1,)], ["e"]
     )
-    rows = df.select(
-        align_left(F.col("e"), 900).alias("l"), align_right(F.col("e"), 900).alias("r")
-    ).collect()
+    rows = df.select(align_left(F.col("e"), 900).alias("l")).collect()
     assert [r["l"] for r in rows] == [(k - 1) * 900, k * 900, k * 900]
-    assert [r["r"] for r in rows] == [k * 900, (k + 1) * 900, (k + 1) * 900]
 
 
 def test_strftime_translation(spark):
     assert strftime_to_java("%Y-%m-%d-%H-%M-%S") == "yyyy'-'MM'-'dd'-'HH'-'mm'-'ss"
-    df = spark.range(1)
-    row = df.select(
-        format_epoch(F.lit(1715500800), "%Y-%m-%d-%H-%M-%S").alias("s"),
-        format_epoch(F.lit(1715500800), "year=%Y/month=%m/day=%d/hour=%H").alias("p"),
+    ts = F.timestamp_seconds(F.lit(1715500800))
+    row = spark.range(1).select(
+        partition_prefix(ts, "%Y-%m-%d-%H-%M-%S").alias("s"),
+        partition_prefix(ts, "year=%Y/month=%m/day=%d/hour=%H").alias("p"),
     ).collect()[0]
     assert row["s"] == "2024-05-12-08-00-00"
     assert row["p"] == "year=2024/month=05/day=12/hour=08"
@@ -59,7 +54,7 @@ def test_window_assignment_unordered_input(spark):
     )
     w = with_agg_window(df, align_seconds=900)
     counts = {
-        r["agg_window"]: r["n_rows"] for r in group_counts(w, "agg_window").collect()
+        r["agg_window"]: r["count"] for r in w.groupBy("agg_window").count().collect()
     }
     base = 1715500800
     assert counts == {base: 2, base + 900: 1, base + 1800: 1, base + 2700: 2}
