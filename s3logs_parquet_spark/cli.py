@@ -37,6 +37,19 @@ from s3logs_parquet_spark.sources.text_source import read_log_lines
 from s3logs_parquet_spark.streaming.job import StreamingJobConfig, run_streaming_transform
 
 
+def _band_sort_cols(spark, store: str) -> tuple[str, str] | None:
+    """``("band", "band_hash")`` for a curation ``bands/`` store, whose
+    fold keeps each band bucket's rows in contiguous row groups for the
+    probe's bucket lookups; None for any other store."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        cols = spark.read.parquet(store).columns
+    except AnalysisException:  # an empty store has no schema to read
+        return None
+    return ("band", "band_hash") if {"band", "band_hash"} <= set(cols) else None
+
+
 def run_aggregate(spark, inputs: list[str], staging: str, cfg: EngineConfig) -> int:
     """Stage 1 (W6 parity): raw lines → staging dataset partitioned by
     (bucket_key, stag_window). The reference appends to flocked files
@@ -189,7 +202,10 @@ def main(argv: list[str] | None = None) -> int:
             from s3logs_parquet_spark.plans.compact import compact_index_store
 
             res = compact_index_store(
-                spark, args.table, checkpoint_dir=args.checkpoint
+                spark,
+                args.table,
+                checkpoint_dir=args.checkpoint,
+                sort_cols=_band_sort_cols(spark, args.table),
             )
             print(
                 f"batches={res['batches_before']}->{res['batches_after']} "

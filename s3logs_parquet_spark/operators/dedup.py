@@ -10,8 +10,11 @@ RequestID)` under scan order. Our `dropDuplicates` is the deterministic
 order-insensitive superset (documented divergence, SURVEY.md §7.4.2).
 Purpose: at-least-once redelivery can duplicate rows (FAQ.md:16-22).
 
-Scale posture: dropDuplicates is a hash aggregate on the key — one
-shuffle, map-side partial dedup first, AQE-coalesced. The near-dup
+Scale posture: dropDuplicates is one shuffle on the key, map-side
+partial dedup first, AQE-coalesced. It plans as a SortAggregate, not a
+hash aggregate: every non-key column rides it as a ``first()``, and
+``first`` over a string or array has no fixed-width buffer, so both
+sides of the shuffle sort the full rows. The near-dup
 family below is designed so the pairwise stage only ever happens within
 LSH buckets (self-join on band signature), never all-pairs.
 """
@@ -49,6 +52,11 @@ def dedup_log_rows(
     The id column is POSITIONAL like the reference's (token index 5,
     utils.rs:1076): under a config-file schema with custom names the
     6th loaded field is the dedup key, whatever it is called.
+
+    Every column of ``df`` besides the three keys rides the aggregate
+    as a ``first()``, is sorted on both sides of its shuffle and
+    crosses it, so pass a narrow frame: the batch ETL passes its token
+    array and timestamp (plans/batch.py), not the 26 parsed fields.
     """
     if not cfg.deduplication:
         return df

@@ -32,17 +32,21 @@ def with_agg_window(
     return df.withColumn(out_col, window_start(F.col(ts_col), align_seconds))
 
 
-def bucket_key(cfg: EngineConfig, bucket_col: str | None = None) -> Column:
+def bucket_key(cfg: EngineConfig, bucket: Column | None = None) -> Column:
     """G3 — grouping bucket: the row's source bucket, or the ALLBUCKETS
     sentinel when merge is on (default true; s3logs/src/utils.rs:693-700,
     README.md:54). Positional under a config-file schema: the source
-    bucket is the 2nd loaded field (utils.rs:44), whatever its name."""
+    bucket is the 2nd loaded field (utils.rs:44), whatever its name;
+    ``bucket`` overrides that column (the batch ETL reads it straight
+    from the token array)."""
     if cfg.merge_orig_buckets:
         return F.lit(ALLBUCKETS)
-    if bucket_col is None:
-        bucket_col = cfg.schema_fields[1] if cfg.schema_fields else BUCKET_FIELD
-    return F.col(bucket_col)
+    if bucket is None:
+        bucket = F.col(cfg.schema_fields[1] if cfg.schema_fields else BUCKET_FIELD)
+    return bucket
 
 
-def with_bucket_key(df: DataFrame, cfg: EngineConfig, out_col: str = "bucket_key") -> DataFrame:
-    return df.withColumn(out_col, bucket_key(cfg))
+def with_bucket_key(
+    df: DataFrame, cfg: EngineConfig, out_col: str = "bucket_key", bucket: Column | None = None
+) -> DataFrame:
+    return df.withColumn(out_col, bucket_key(cfg, bucket))

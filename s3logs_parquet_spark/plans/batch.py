@@ -11,13 +11,23 @@ of two, no disk staging, no file locks, no rename/recovery protocol
 (Spark's committer + task retry subsume W4/W6 and the crash-recovery
 machinery at utils.rs:1298-1394).
 
-M3 (schema widening, SURVEY §1.3) costs no extra pass: the tokens past
-the base schema ride the dedup shuffle as one array column (``_tail``,
-empty on normal lines), and the batch is materialized once behind the
-writer exchange while that same job observes max(n_fields). The write
-job then projects exactly the learned number of ``ExtraField{N}``
-columns from the materialized blocks — one read of the input, one
-write, in append mode, for empty and populated tables alike.
+D1 moves one array, not the parsed row: each line is tokenized once
+into ``_toks`` and the timestamp, the window, the bucket key and the
+RequestID key are read from it. ``dropDuplicates`` plans as a
+SortAggregate with one ``first()`` per non-key column (``first`` over
+strings and arrays has no hash-aggregate buffer), so the width of the
+frame it gets is the width of both sorts, of the aggregation buffers
+and of the shuffle: it gets ``[_toks, ts]`` (two ``first()``s, not the
+27 of the parsed row), and the writer exchange and the materialized
+batch hold only ``[_toks, year, month, day, hour]``. The fields are
+projected once, after both shuffles (functions/parse.py:field_exprs).
+
+M3 (schema widening, SURVEY §1.3) costs no extra pass: the batch is
+materialized once behind the writer exchange while that same job
+observes max(size(_toks)). The write job then projects the base fields
+and exactly the learned number of ``ExtraField{N}`` columns from the
+materialized tokens — one read of the input, one write, in append
+mode, for empty and populated tables alike.
 
 At 100 TB: parse is map-only; the dedup shuffle is keyed by
 (bucket_key, agg_window, RequestID) — high-cardinality and uniform, so
@@ -36,9 +46,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.config import EngineConfig
-from s3logs_parquet_spark.functions.parse import extract_ts, parse_s3_access_log
+from s3logs_parquet_spark.functions.parse import (
+    TS_EXPR,
+    extract_ts,
+    field_expr,
+    field_exprs,
+    with_tokens,
+)
 from s3logs_parquet_spark.operators.dedup import dedup_log_rows
 from s3logs_parquet_spark.operators.windows import with_agg_window, with_bucket_key
+from s3logs_parquet_spark.schema import LOG_FIELDS
 from s3logs_parquet_spark.session import materialize, release
 from s3logs_parquet_spark.sources.text_source import read_log_lines
 from s3logs_parquet_spark.writer import (
@@ -59,18 +76,32 @@ class TransformResult:
     extra_fields: int
 
 
-def _window_and_dedup(clean: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """F1-clean rows → windowed (G1), bucket-keyed (G3), deduplicated (D1)."""
+def _clean_tokens(lines: DataFrame) -> DataFrame:
+    """Raw lines → ``[_toks, ts]``, unparseable lines dropped (F1)."""
+    ts = F.expr(TS_EXPR)
+    return with_tokens(lines).select("_toks", ts.alias("ts")).filter(ts.isNotNull())
+
+
+def _dedup_tokens(clean: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """``[_toks, ts]`` → windowed (G1), bucket-keyed (G3), deduplicated
+    (D1) ``[_toks, ts]``. The keys are positional like the reference's
+    (bucket = field 2, RequestID = field 6; utils.rs:44, 1076) and read
+    from ``_toks`` with the parser's '' padding, so the dedup carries
+    nothing but the two columns it returns."""
     windowed = with_agg_window(clean, align_seconds=cfg.aggregate_second)
-    return dedup_log_rows(with_bucket_key(windowed, cfg), cfg)
+    keyed = with_bucket_key(windowed, cfg, bucket=F.expr(field_expr(1))).withColumn(
+        "_id", F.expr(field_expr(5))
+    )
+    return dedup_log_rows(keyed, cfg, id_col="_id").select("_toks", "ts")
 
 
 def parse_and_dedup(lines: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Raw lines → parsed, filtered (F1), windowed (G1), bucket-keyed
-    (G3), deduplicated (D1) rows at the base schema width. Pure plan
-    builder — no action."""
-    parsed = parse_s3_access_log(lines, fields=cfg.schema_fields)
-    return _window_and_dedup(parsed.filter(F.col("ts").isNotNull()), cfg)
+    (G3), deduplicated (D1) rows: the base schema fields and ``ts``.
+    The batch ETL's narrow dedup, then the one field projection. Pure
+    plan builder — no action."""
+    rows = _dedup_tokens(_clean_tokens(lines), cfg)
+    return rows.selectExpr(*field_exprs(cfg.schema_fields or LOG_FIELDS), "ts")
 
 
 def corrupt_lines(lines: DataFrame) -> DataFrame:
@@ -93,19 +124,19 @@ def run_batch_transform(
     line has more than the base schema's fields, the table gets
     nullable ``ExtraField{27..N}`` columns (naming per
     utils.rs:1217-1222). The width is learned, not probed: job one
-    parses, dedups and runs the writer exchange into executor-local
-    blocks while observing rows in, rows parsed with max(n_fields), and
-    rows out; job two projects the base columns, the learned extra
-    fields and the partition columns from those blocks and appends them
-    once. The M3 cost is one max() riding the job that already runs,
-    plus storing the exchanged batch once. Every batch pays that
-    store, narrow ones (the common case) too: instead of one streaming
-    write job that Spark can recompute from lineage, the whole
-    exchanged batch sits in executor block storage, and a lost
-    executor between the two jobs fails the batch (rerun-safe, see the
-    module docstring). The cost is measured in local mode only (dense
-    level, PERF.md "Batch ETL writes each batch once"), not on a
-    cluster. Empty and populated
+    tokenizes, dedups the token arrays and runs the writer exchange
+    into executor-local blocks while observing rows in, rows parsed
+    with max(size(_toks)), and rows out; job two projects the base
+    fields, the learned extra fields and the partition columns from
+    the materialized tokens and appends them once. The M3 cost is one
+    max() riding the job that already runs, plus storing the exchanged
+    batch once. Every batch pays that store, narrow ones (the common
+    case) too: instead of one streaming write job that Spark can
+    recompute from lineage, the exchanged token arrays sit in executor
+    block storage, and a lost executor between the two jobs fails the
+    batch (rerun-safe, see the module docstring). The cost is measured
+    in local mode only (PERF.md "Batch ETL writes each batch once" and
+    "Narrow D1 dedup"), not on a cluster. Empty and populated
     destinations take the same path; nothing is rewritten, so no
     dynamic partition overwrite is needed (the reference restarts its
     file pass on mid-write widening instead,
@@ -137,38 +168,21 @@ def _transform_lines(
     ``value`` column), shared with the staged CLI path (``transform
     --staged``) so both write the same table: M3 widening, the writer
     salt ``files_per_partition`` and the counts."""
-    n_base = cfg.n_base_fields
     # Metrics ride the materializing job itself via Observation nodes —
     # no second pass and no output read-back, and rows_parsed is by
     # construction the SAME ts-not-null predicate the pipeline filters on.
     obs_in, obs_parsed, obs_out = Observation(), Observation(), Observation()
-    parsed = parse_s3_access_log(
-        lines.observe(obs_in, F.count(F.lit(1)).alias("n")),
-        fields=cfg.schema_fields,
-        keep_fields_array=True,
+    clean = _clean_tokens(lines.observe(obs_in, F.count(F.lit(1)).alias("n"))).observe(
+        obs_parsed, F.count(F.lit(1)).alias("n"), F.max(F.size("_toks")).alias("m")
     )
-    toks = F.col("_fields")
-    clean = (
-        parsed.withColumn(
-            "_tail", F.slice(toks, n_base + 1, F.greatest(F.size(toks) - n_base, F.lit(0)))
-        )
-        .drop("_fields")
-        .filter(F.col("ts").isNotNull())  # F1: drop unparseable
-        .observe(obs_parsed, F.count(F.lit(1)).alias("n"), F.max("n_fields").alias("m"))
-    )
-    rows = with_partition_columns(_window_and_dedup(clean, cfg), cfg).drop(
-        "n_fields", "ts", "agg_window", "bucket_key"
-    )
+    rows = with_partition_columns(_dedup_tokens(clean, cfg), cfg).drop("ts")
     staged = materialize(
         writer_exchange(rows.observe(obs_out, F.count(F.lit(1)).alias("n")), files_per_partition)
     )
     try:
-        extra = max(0, int(obs_parsed.get["m"] or 0) - n_base)
-        tail = F.col("_tail")
-        base = [c for c in staged.columns if c not in ("_tail", *PARTITION_COLS)]
-        wide = staged.select(
-            *base,
-            *(F.get(tail, j).alias(f"{cfg.extra_field_prefix}{n_base + j + 1}") for j in range(extra)),
+        extra = max(0, int(obs_parsed.get["m"] or 0) - cfg.n_base_fields)
+        wide = staged.selectExpr(
+            *field_exprs(cfg.schema_fields or LOG_FIELDS, extra, cfg.extra_field_prefix),
             *PARTITION_COLS,
         )
         write_partitioned_parquet(wide, output_path, cfg)

@@ -21,7 +21,6 @@ for the same reason).
 
 from __future__ import annotations
 
-import json
 import posixpath
 import uuid
 

@@ -251,9 +251,7 @@ def run_manifest_stream(
         if not paths:
             return
         rows = parse_and_dedup(read_log_lines(spark, paths), cfg)
-        out = rows.withColumn("dt", _event_date_col(cfg, scfg)).drop(
-            "n_fields", "ts", "agg_window", "bucket_key"
-        )
+        out = rows.withColumn("dt", _event_date_col(cfg, scfg)).drop("ts")
         out.write.mode("overwrite").option("compression", cfg.compression).option(
             "maxRecordsPerFile", cfg.threshold_lines
         ).partitionBy("dt").parquet(f"{output_dir}/batch={batch_id}")

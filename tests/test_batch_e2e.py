@@ -201,7 +201,7 @@ def test_wide_batch_scans_and_writes_once(spark, tmp_path, monkeypatch, dest):
 
         return wrapper
 
-    monkeypatch.setattr(batch, "parse_s3_access_log", counted("parse", batch.parse_s3_access_log))
+    monkeypatch.setattr(batch, "with_tokens", counted("parse", batch.with_tokens))
     monkeypatch.setattr(
         batch, "write_partitioned_parquet", counted("write", batch.write_partitioned_parquet)
     )
@@ -267,3 +267,75 @@ def test_writer_exchange_files_per_hive_partition(spark, tmp_path):
     one, three = tables[1], tables[3].select(tables[1].columns)
     assert one.count() == three.count() > 0
     assert one.exceptAll(three).count() == 0 and three.exceptAll(one).count() == 0
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        EngineConfig(),
+        EngineConfig(merge_orig_buckets=False),
+        # a config-file schema: renamed, and narrower than the built-in
+        # 26, so every full line widens and both keys stay positional
+        EngineConfig(
+            schema_fields=tuple(f"fld_{i:02d}" for i in range(24)), merge_orig_buckets=False
+        ),
+        EngineConfig(deduplication=False),
+    ],
+    ids=["default", "split_buckets", "custom_schema", "no_dedup"],
+)
+def test_narrow_dedup_matches_wide_parse(spark, tmp_path, cfg):
+    # The ETL dedups token arrays and projects the fields after its
+    # shuffles; it must write what parsing every field first and
+    # deduplicating the parsed rows writes.
+    from s3logs_parquet_spark.functions.parse import parse_s3_access_log
+    from s3logs_parquet_spark.operators.windows import with_agg_window, with_bucket_key
+    from s3logs_parquet_spark.plans.batch import TransformResult
+    from s3logs_parquet_spark.writer import with_partition_columns
+
+    lines = generate_lines(
+        600,
+        seed=31,
+        dup_fraction=0.1,
+        garbage_fraction=0.02,
+        short_fraction=0.02,
+        extra_fraction=0.05,
+        span_seconds=2 * 3600,
+    )
+    inp = _write_lines(tmp_path, "b.txt", lines)
+    out = str(tmp_path / "out")
+    got = run_batch_transform(spark, inp, out, cfg)
+
+    names = cfg.schema_fields or LOG_FIELDS
+    raw = spark.read.text(inp)
+    widest = (
+        parse_s3_access_log(raw, fields=cfg.schema_fields)
+        .filter("ts IS NOT NULL")
+        .agg(F.max("n_fields"))
+        .first()[0]
+    )
+    extra = max(0, widest - len(names))
+    parsed = parse_s3_access_log(
+        raw, extra_fields=extra, extra_prefix=cfg.extra_field_prefix, fields=cfg.schema_fields
+    ).filter("ts IS NOT NULL")
+    keyed = with_bucket_key(with_agg_window(parsed, align_seconds=cfg.aggregate_second), cfg)
+    if cfg.deduplication:
+        keyed = keyed.dropDuplicates(["bucket_key", "agg_window", names[5]])
+    # checkpointed: exceptAll straight over the dedup's plan trips a
+    # Spark binding error (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    want = (
+        with_partition_columns(keyed, cfg)
+        .drop("ts", "n_fields", "agg_window", "bucket_key")
+        .localCheckpoint()
+    )
+
+    assert got == TransformResult(len(lines), parsed.count(), want.count(), extra)
+    table = spark.read.parquet(out)
+    assert table.columns == want.columns
+    # read-back infers hour=08 as an int: compare the partition values
+    # as the zero-padded strings the writer puts in the directory names
+    widths = {"year": 4, "month": 2, "day": 2, "hour": 2}
+    table = table.select(
+        *want.columns[:-4],
+        *(F.lpad(F.col(c).cast("string"), n, "0").alias(c) for c, n in widths.items()),
+    )
+    assert table.exceptAll(want).count() == 0 and want.exceptAll(table).count() == 0

@@ -259,6 +259,34 @@ def test_maintenance_fold_index_cli(spark, tmp_path):
     assert spark.table(tbl).count() == 20
 
 
+def test_maintenance_fold_index_clusters_bands_store(spark, tmp_path):
+    """`maintenance fold-index` on a dirs-layout curation bands/ store
+    keeps its (band, band_hash) clustering: every folded file's rows
+    come out sorted by the bucket key the probe looks up."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    rng = random.Random(5)
+    store = tmp_path / "bands"
+    for b in (0, 1):
+        rows = [(rng.randrange(8), rng.randrange(1 << 40), 100 * b + i) for i in range(100)]
+        spark.createDataFrame(rows, "band int, band_hash long, doc_id long").coalesce(
+            1
+        ).write.parquet(str(store / f"batch={b}"))
+    rc = cli_main(["maintenance", "fold-index", str(store)])
+    assert rc == 0
+    files = sorted(store.glob("batch=1/*.parquet"))
+    assert files and not (store / "batch=0").exists()
+    n = 0
+    for f in files:
+        t = pq.read_table(f, columns=["band", "band_hash"]).to_pylist()
+        keys = [(r["band"], r["band_hash"]) for r in t]
+        assert keys == sorted(keys), f
+        n += len(keys)
+    assert n == 200
+
+
 def test_readme_production_recipe_end_to_end(spark, tmp_path):
     """README "Running it for real" smoke test (VERDICT r11 #7): the
     five recipe steps executed verbatim against a local manifest dir

@@ -64,13 +64,52 @@ def test_parse_path_is_map_only(spark):
 
 
 def test_dedup_single_exchange(spark):
-    """parse→window→dedup = exactly one shuffle (the dedup hash agg)."""
+    """parse→window→dedup = exactly one shuffle: the dedup's
+    SortAggregate, which sorts on both sides of it."""
     from s3logs_parquet_spark.config import EngineConfig
     from s3logs_parquet_spark.plans.batch import parse_and_dedup
 
     df = spark.createDataFrame([("x",)], ["value"])
     plan = _plan(spark, parse_and_dedup(df, EngineConfig()))
     assert _count_nodes(plan, "Exchange") == 1
+
+
+def test_etl_dedup_carries_one_token_array(spark, tmp_path, monkeypatch):
+    """The batch ETL's D1 aggregate carries the token array and the
+    timestamp, not the parsed row: dropDuplicates plans one first() per
+    non-key column and sorts them on both sides of its shuffle, so a
+    wide input makes it cost more than the tokenizer. The materializing
+    job has exactly two shuffles: the dedup and the writer exchange."""
+    import re
+
+    from s3logs_parquet_spark.config import EngineConfig
+    from s3logs_parquet_spark.plans import batch
+    from s3logs_parquet_spark.testing import generate_lines
+
+    inp = tmp_path / "in.log"
+    inp.write_text("\n".join(generate_lines(200, seed=4, extra_fraction=0.05)) + "\n")
+    plans = []
+    real = batch.materialize
+
+    def captured(df, *args, **kwargs):
+        plans.append(_plan(spark, df))  # before it runs: one (initial) plan
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(batch, "materialize", captured)
+    batch._transform_lines(
+        spark, spark.read.text(str(inp)), str(tmp_path / "out"), EngineConfig(), 1
+    )
+    (plan,) = plans
+    assert _count_nodes(plan, "Exchange") == 2
+    aggs = [
+        re.search(r"^Functions \[\d+\]: (.*)$", section, re.M).group(1)
+        for section in plan.split("\n\n")
+        if re.match(r"\(\d+\) \w*Aggregate", section)
+    ]
+    assert aggs, plan
+    for functions in aggs:
+        assert functions.count("first(") <= 2, functions
+        assert "first(_toks" in functions, functions
 
 
 # docs_remove_dup_spans' plan budget, shared by both span tests. The
