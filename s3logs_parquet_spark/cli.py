@@ -38,11 +38,16 @@ from s3logs_parquet_spark.streaming.job import StreamingJobConfig, run_streaming
 
 
 def _band_sort_cols(spark, store: str) -> tuple[str, str] | None:
-    """``("band", "band_hash")`` for a curation ``bands/`` store, whose
-    fold keeps each band bucket's rows in contiguous row groups for the
-    probe's bucket lookups; None for any other store."""
+    """``("band", "band_hash")`` for a dirs-layout curation ``bands/``
+    store, whose fold keeps each band bucket's rows in contiguous row
+    groups for the probe's bucket lookups; None for any other store (a
+    bucketed store keeps the sort order recorded at its creation)."""
     from pyspark.errors import AnalysisException
 
+    from s3logs_parquet_spark.plans.band_index import IndexStore
+
+    if IndexStore.layout_of(spark, store) == "bucketed":
+        return None
     try:
         cols = spark.read.parquet(store).columns
     except AnalysisException:  # an empty store has no schema to read
@@ -195,8 +200,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"partitions_compacted={len(res)}", file=sys.stderr)
             return 0
         if args.action == "fold-index":
-            # one per-batch index store (bucketed or dirs layout,
-            # auto-detected): the drain-window fold of the README's
+            # one per-batch index store (either layout, as the store
+            # reports it): the drain-window fold of the README's
             # step-5 cadence. Pass -k CKPT (the owning stream's
             # checkpointLocation) to enforce drained-stream safety.
             from s3logs_parquet_spark.plans.compact import compact_index_store

@@ -341,7 +341,6 @@ def incremental_neardup_pairs(
     materialize: bool = True,
     durable: bool = False,
     batch_banded: DataFrame | None = None,
-    broadcast_batch: bool = False,
     carry_signatures: bool = False,
     check_index: bool = True,
 ) -> DataFrame:
@@ -365,24 +364,6 @@ def incremental_neardup_pairs(
     band-join exchange for one carrying signatures — keep it False
     there (the round-7 exchange-slimming rationale). Results are
     identical either way (same pairs, same est_jaccard).
-
-    ``broadcast_batch`` (round 9): hint the BATCH side of the band join
-    and of the batch-signature rejoin as broadcasts, and prune the
-    corpus signature slice through a broadcast semi-join on candidate
-    ids — the index side is then never exchanged (the band join streams
-    over the index scan map-side; plan pinned in
-    tests/test_similarity.py::test_incremental_probe_broadcasts_batch_side).
-    Default False on MEASURED grounds: on local[32] with AQE the
-    forced-broadcast topology ran the hotprobe stress corpus 9-25%
-    SLOWER than letting AQE plan at runtime (420.3 s unhinted vs
-    458.4 s hinted vs 528.3 s for a first cut that recomputed the band
-    join for the broadcast build — PERF.md round 9); the extra
-    per-probe broadcast builds + candidate checkpoint cost more than
-    the avoided exchange at single-node scale. The knob exists for the
-    cluster posture it was designed for — index on object storage,
-    wide executor fleet, where re-exchanging the accumulated index
-    every probe is network cost AQE cannot remove — measure before
-    enabling.
 
     ``corpus_index`` is a minhash_banded output — typically read back
     from a table, NOT recomputed: the incremental cost is
@@ -452,8 +433,6 @@ def incremental_neardup_pairs(
         # band join (exchange-free on the index side), pair dedup is
         # one O(candidates) aggregate, no band-0 slice rejoin.
         l = bb.select(id_col, "band", "band_hash").alias("l")
-        if broadcast_batch:
-            l = F.broadcast(l)
         r = corpus_index.alias("r")
         matched = l.join(
             r,
@@ -475,10 +454,7 @@ def incremental_neardup_pairs(
     # signatures re-joined once per unique pair from each side's
     # band-0 slice (every doc appears exactly once per band) — the
     # minhash_lsh_pairs exchange-slimming rework, PERF.md round 7
-    bb_keys = bb.select(id_col, "band", "band_hash")
-    if broadcast_batch:
-        bb_keys = F.broadcast(bb_keys)
-    l, r = bb_keys.alias("l"), corpus_index.alias("r")
+    l, r = bb.select(id_col, "band", "band_hash").alias("l"), corpus_index.alias("r")
     pair_ids = (
         l.join(
             r,
@@ -493,24 +469,9 @@ def incremental_neardup_pairs(
         )
         .distinct()
     )
-    if broadcast_batch:
-        batch_sigs = F.broadcast(batch_sigs)
     corpus_sigs = corpus_index.filter(F.col("band") == 0).select(
         F.col(id_col).alias("corpus_id"), F.col("signature").alias("sig_b")
     )
-    if broadcast_batch:
-        # the corpus-signature rejoin would otherwise sort-merge —
-        # re-exchanging the index's whole band-0 slice (signatures
-        # included) every probe. Candidate corpus ids are bounded by
-        # the bucket-matched batch (the same contract as the batch
-        # broadcast above): broadcast them as a semi-filter so the
-        # slice prunes map-side and only matched rows shuffle.
-        # pair_ids feeds BOTH the broadcast build and the main join —
-        # checkpoint it once or the band join runs twice per probe.
-        if materialize:
-            pair_ids = _materialize(pair_ids, durable)
-        cand_ids = F.broadcast(pair_ids.select("corpus_id").distinct())
-        corpus_sigs = corpus_sigs.join(cand_ids, on="corpus_id", how="left_semi")
     pairs = pair_ids.join(batch_sigs, on="batch_id").join(
         corpus_sigs,
         on="corpus_id",
@@ -942,7 +903,6 @@ def connected_components_clusters(
     max_rounds: int = 20,
     durable: bool = False,
     driver_edge_limit: int = 2_000_000,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Union near-dup pairs into clusters (cluster_id = min id in the
     component). Returns (id, cluster_id).
@@ -976,9 +936,9 @@ def connected_components_clusters(
       Runs on the CONTRACTED list, only over edge-touched nodes;
       singletons bypass via one left-anti join.
 
-    ``strategy``: "auto" (budget-dispatched, contraction above),
-    "driver", "contract", or "loop"-by-setting-``driver_edge_limit=0``
-    — the explicit values exist for the strategy-parity tests.
+    ``driver_edge_limit`` picks the path: at or above the edge count
+    the driver union-find, below it the contraction (and its loop
+    fallback), and 0 the propagation loop alone.
 
     Both strategies produce identical labels: components are computed
     over edges whose BOTH endpoints are in ``ids`` (an edge through a
@@ -997,8 +957,6 @@ def connected_components_clusters(
         durable,
     )
     n_edges = edges.count()
-    if strategy not in ("auto", "driver", "contract", "loop"):
-        raise ValueError(f"connected_components_clusters: unknown strategy {strategy!r}")
     if n_edges == 0:
         # Zero-edge short-circuit (round 11, VERDICT r10 #8): every id
         # is its own singleton cluster — no collect, no component map,
@@ -1010,14 +968,11 @@ def connected_components_clusters(
         # zero-pair CC call end-to-end, PERF.md round 11).
         _release(edges)
         return ids.select(F.col(id_col), F.col(id_col).alias("cluster_id"))
-    use_driver = strategy == "driver" or (
-        strategy == "auto" and n_edges <= driver_edge_limit
-    )
-    if use_driver:
+    if n_edges <= driver_edge_limit:
         out = _cc_driver_union_find(edges, ids, id_col)
         _release(edges)
         return out
-    if strategy in ("auto", "contract") and driver_edge_limit > 0:
+    if driver_edge_limit > 0:
         # Above-budget path (VERDICT r5 #4): contract the edge list
         # with partition-local union-find until it fits the driver
         # budget — O(1..3) map-side passes instead of O(log diameter)

@@ -1,5 +1,7 @@
-"""Bucketed per-batch index stores: the 100 TB layout for streaming
-curation's persisted dedup indexes (digest store, MinHash band store).
+"""Per-batch index stores of the streaming dedup jobs (curation's
+digest and MinHash band stores, the semantic index): :class:`IndexStore`
+is the one place that knows the two layouts, and the bucketed layout —
+the 100 TB one — is built here.
 
 The dirs layout (``store/batch=<id>`` plain parquet, read back with
 ``spark.read.parquet(*dirs)``) keeps the T4 replay contract but gives
@@ -263,13 +265,218 @@ def prior_batches(
 ) -> DataFrame | None:
     """All contributions with batch id < ``batch_id`` as ONE bucketed
     scan (partition-pruned), or None when no prior batch exists — the
-    replay guard, exactly :func:`streaming.job._prior_batch_dirs`'s
-    contract: a crashed attempt's own ``batch=<id>`` partition is
-    invisible to its retry, and seeded ``batch=-1`` history joins every
-    real batch."""
+    replay guard, exactly :func:`prior_batch_dirs`'s contract: a
+    crashed attempt's own ``batch=<id>`` partition is invisible to its
+    retry, and seeded ``batch=-1`` history joins every real batch."""
     if read_spec(spark, store_dir) is None:
         return None
     tbl = ensure_table(spark, store_dir)
     if not any(i < batch_id for i in partition_ids(spark, tbl)):
         return None
     return spark.table(tbl).where(F.col("batch") < int(batch_id)).drop("batch")
+
+
+def prior_batch_dirs(spark: SparkSession, root: str, batch_id: int) -> list[str]:
+    """``batch=<id>`` directories under ``root`` with id < batch_id —
+    the dirs layout's replay guard: a crashed attempt may have already
+    written THIS batch's contribution, and reading it back would make
+    the batch's own rows match themselves. Negative ids are matched
+    too: ``batch=-1`` is the documented seeding convention for
+    pre-stream history, and seeded history must participate in every
+    batch's dedup. Hadoop-FS listing (fsutil), so the store may live
+    on s3a:// etc."""
+    import re
+
+    from s3logs_parquet_spark.fsutil import list_files
+
+    dirs = set()
+    for f in list_files(spark, root, recursive=True):
+        if not f.name.endswith(".parquet"):
+            continue
+        d = posixpath.dirname(f.path)
+        m = re.search(r"batch=(-?\d+)$", d)
+        if m and int(m.group(1)) < batch_id:
+            dirs.add(d)
+    return sorted(dirs)
+
+
+LAYOUTS = ("bucketed", "dirs")
+
+
+class IndexStore:
+    """One per-batch index store of a streaming job, in either layout.
+    The only place that knows what a layout means:
+
+    - ``"bucketed"``: the catalog table above — contributions go
+      through :func:`write_contribution`, history is the
+      partition-pruned :func:`prior_batches` scan, and the store can
+      fold itself between triggers;
+    - ``"dirs"``: plain ``batch=<id>`` parquet directories, read back
+      through :func:`prior_batch_dirs` (portable, catalog-free; every
+      probe re-shuffles the whole history, and the only fold is the
+      drain-window whole-store rename swap).
+
+    Both keep the T4 contract: one overwritable ``batch=<id>`` unit
+    per micro-batch, and ``history(batch_id)`` never shows the batch
+    its own contribution. :meth:`open` runs the start-of-stream checks
+    once; :meth:`first_probe` is the per-run latch for an index guard
+    that only a resume with other parameters can trip."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        layout: str,
+        bucket_cols: Sequence[str],
+        dedup_cols: Sequence[str],
+        n_buckets: int | None = None,
+        fold_every: int | None = None,
+    ) -> None:
+        self.spark = spark
+        self.path = path
+        self.layout = layout
+        self.bucket_cols = tuple(bucket_cols)
+        self.dedup_cols = tuple(dedup_cols)
+        self.n_buckets = n_buckets
+        self.fold_every = fold_every
+        self._probed = False
+
+    @staticmethod
+    def layout_of(spark: SparkSession, path: str) -> str:
+        """The layout an existing store was created with: a spec
+        sidecar means bucketed; anything else (dirs contributions, or
+        nothing yet) is read as dirs."""
+        return "bucketed" if read_spec(spark, path) is not None else "dirs"
+
+    @property
+    def bucketed(self) -> bool:
+        return self.layout == "bucketed"
+
+    @classmethod
+    def open(
+        cls,
+        spark: SparkSession,
+        path: str,
+        layout: str,
+        bucket_cols: Sequence[str],
+        dedup_cols: Sequence[str],
+        n_buckets: int | None = None,
+        fold_every: int | None = None,
+        resumed: bool = False,
+        owner: str = "IndexStore.open",
+    ) -> "IndexStore":
+        """Open the store at ``path`` for a stream that will probe and
+        extend it. Heals an interrupted fold swap first, then fails
+        loud (``owner`` prefixes the message) when:
+
+        - ``layout`` is unknown, or ``fold_every`` asks for in-stream
+          folds of a dirs store (its fold is a whole-store rename swap,
+          not safe mid-stream on object stores);
+        - the store on disk has the other layout (split brain: probing
+          one layout as the other dedups against the wrong shape);
+        - in-stream folds are asked of a bucketed store created
+          without ``dedup_cols`` — its folds cannot dedup, so the
+          fold crash-window healing never happens (creation-time
+          property: reseed the store);
+        - ``resumed`` (the checkpoint shows committed batches) but the
+          store is absent: a resume would dedup against nothing."""
+        from s3logs_parquet_spark.fsutil import exists
+        from s3logs_parquet_spark.plans.compact import recover_fold_siblings
+
+        if layout not in LAYOUTS:
+            raise ValueError(
+                f"{owner}: index layout {layout!r} — expected 'bucketed' or 'dirs'"
+            )
+        if fold_every is not None and layout != "bucketed":
+            raise ValueError(
+                f"{owner}: fold_every_n_batches requires the bucketed layout "
+                "(the dirs fold is a whole-store rename swap — run "
+                "`maintenance fold-index` on the store in a drain window instead)"
+            )
+        recover_fold_siblings(spark, path)
+        spec = read_spec(spark, path)
+        if spec is not None and layout != "bucketed":
+            raise ValueError(
+                f"{owner}: {path} was created with the bucketed layout — open "
+                "it as 'bucketed' (or rebuild the index to switch layouts)"
+            )
+        if spec is None and layout == "bucketed" and prior_batch_dirs(spark, path, 2**62):
+            raise ValueError(
+                f"{owner}: {path} holds dirs-layout contributions but the layout "
+                "asked for is 'bucketed' — open it as 'dirs' (or rebuild the "
+                "index to switch layouts)"
+            )
+        if fold_every is not None and spec is not None and not spec.get("dedup_cols"):
+            raise ValueError(
+                f"{owner}: the index store at {path} was created without "
+                "dedup_cols, so folds cannot dedup and the fold crash-window "
+                "healing never happens — reseed it through "
+                f"write_contribution(..., dedup_cols={tuple(dedup_cols)!r}) or "
+                "run without fold_every_n_batches"
+            )
+        if resumed and not exists(spark, path):
+            raise ValueError(
+                f"{owner}: the checkpoint shows committed batches but the index "
+                f"store is absent at {path} — resuming would dedup against "
+                "nothing. Restore the store (crashed fold? wrong path?) or "
+                "start a fresh checkpoint+index."
+            )
+        return cls(spark, path, layout, bucket_cols, dedup_cols, n_buckets, fold_every)
+
+    def first_probe(self) -> bool:
+        """True on the first call of a run only: the stream writes the
+        store with its own parameters, so an index guard can only fire
+        on a run's first probe (a resume with other parameters) —
+        checking every trigger would cost one bounded job per batch."""
+        first, self._probed = not self._probed, True
+        return first
+
+    def history(self, batch_id: int) -> DataFrame | None:
+        """Every contribution with id < ``batch_id`` (seed included),
+        or None when there is none yet."""
+        if self.bucketed:
+            return prior_batches(self.spark, self.path, batch_id)
+        dirs = prior_batch_dirs(self.spark, self.path, batch_id)
+        return self.spark.read.parquet(*dirs) if dirs else None
+
+    def write(self, df: DataFrame, batch_id: int, reads_store: bool = False) -> None:
+        """Overwrite this batch's contribution with ``df``.
+        ``reads_store``: ``df``'s lineage scans this store. A bucketed
+        insert would then read the table it overwrites, which Spark's
+        static cycle check rejects even though the partitions are
+        disjoint, so the O(batch) frame is checkpointed first and
+        released right after the write."""
+        if not self.bucketed:
+            df.write.mode("overwrite").parquet(f"{self.path}/batch={batch_id}")
+            return
+        from s3logs_parquet_spark.session import materialize, release
+
+        src = materialize(df) if reads_store else df
+        try:
+            write_contribution(
+                self.spark, self.path, src, batch_id, self.bucket_cols,
+                n_buckets=self.n_buckets, dedup_cols=self.dedup_cols,
+            )
+        finally:
+            if reads_store:
+                release(src)
+
+    def fold_before(self, batch_id: int) -> bool:
+        """The in-stream auto-fold, run before the trigger's probe every
+        ``fold_every`` batches: fold the not-yet-folded contributions
+        below ``batch_id`` into one (compact_index_store with
+        ``only_below``). ids < batch_id are committed by foreachBatch
+        sequencing, a crashed attempt's own partition is left for its
+        retry, and folded history keeps ids < every future batch.
+        Returns whether a fold ran."""
+        if (
+            self.fold_every is None
+            or batch_id <= 0
+            or batch_id % int(self.fold_every)
+            or read_spec(self.spark, self.path) is None
+        ):
+            return False
+        from s3logs_parquet_spark.plans.compact import compact_index_store
+
+        compact_index_store(self.spark, self.path, only_below=batch_id)
+        return True

@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.functions.parse import (
     TS_EXPR,
-    extract_ts,
     field_expr,
     field_exprs,
     with_tokens,
@@ -106,8 +105,10 @@ def parse_and_dedup(lines: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def corrupt_lines(lines: DataFrame) -> DataFrame:
     """F1 side channel — the lines the reference silently drops
-    (utils.rs:596-602), kept observable."""
-    return lines.filter(extract_ts(F.col("value")).isNull())
+    (utils.rs:596-602), kept observable: exactly the lines
+    :func:`_clean_tokens` drops, by the same ``TS_EXPR`` predicate over
+    the same token array."""
+    return with_tokens(lines).filter(F.expr(TS_EXPR).isNull()).select(lines.columns)
 
 
 def run_batch_transform(

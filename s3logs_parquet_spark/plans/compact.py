@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from s3logs_parquet_spark.fsutil import delete, list_files, rename
+from s3logs_parquet_spark.plans import band_index
 
 
 def _max_committed(spark: SparkSession, checkpoint_dir: str) -> int:
@@ -54,7 +55,7 @@ def recover_fold_siblings(spark: SparkSession, root: str) -> str | None:
     commit by ``write tmp → rename(root, old) → rename(tmp, root) →
     delete(old)``. A crash between the renames leaves ``root`` MISSING
     while the complete fold sits in the ``.folding-*`` sibling — and
-    downstream readers (``_prior_batch_dirs``, ``list_files``) treat a
+    downstream readers (``band_index.prior_batch_dirs``, ``list_files``) treat a
     missing store as EMPTY history, so a resumed stream would silently
     dedup against nothing.
 
@@ -73,7 +74,7 @@ def recover_fold_siblings(spark: SparkSession, root: str) -> str | None:
     Returns a short action string (``"finished-swap"`` /
     ``"dropped-leftovers"``) when something was healed, else None.
     Callers: both fold functions run this before proceeding, and
-    ``run_stream_curation`` runs it at stream start so a resumed
+    ``band_index.IndexStore.open`` runs it at stream start so a resumed
     stream can never observe the missing-store state."""
     parent = posixpath.dirname(root.rstrip("/"))
     base = posixpath.basename(root.rstrip("/"))
@@ -105,14 +106,38 @@ def recover_fold_siblings(spark: SparkSession, root: str) -> str | None:
     )
 
 
+def _parquet_files(spark: SparkSession, root: str) -> list:
+    """Every parquet data file under ``root``."""
+    return [
+        f for f in list_files(spark, root, recursive=True) if f.name.endswith(".parquet")
+    ]
+
+
+def _batch_ids(files: list) -> set[int]:
+    """The ids of the ``batch=<id>`` directories ``files`` sit under."""
+    ids = set()
+    for f in files:
+        for part in f.path.split("/"):
+            if part.startswith("batch="):
+                ids.add(int(part.split("=", 1)[1]))
+                break
+    return ids
+
+
+def _swap_in(spark: SparkSession, root: str, tmp: str) -> None:
+    """Commit a folded tree written at the ``tmp`` sibling: move
+    ``root`` aside, rename ``tmp`` in, drop the old tree. Atomic on
+    HDFS/local, copy+delete on object stores; a crash between the
+    renames is healed by :func:`recover_fold_siblings`."""
+    old = f"{root}.folded-old-{uuid.uuid4().hex[:8]}"
+    rename(spark, root, old)
+    rename(spark, tmp, root)
+    delete(spark, old)
+
+
 def _partition_dirs(spark: SparkSession, root: str) -> list[str]:
     """Leaf partition directories (those containing data files)."""
-    dirs = {
-        posixpath.dirname(f.path)
-        for f in list_files(spark, root, recursive=True)
-        if f.name.endswith(".parquet")
-    }
-    return sorted(dirs)
+    return sorted({posixpath.dirname(f.path) for f in _parquet_files(spark, root)})
 
 
 def compact_partitions(
@@ -208,13 +233,8 @@ def fold_stream_batches(
     "files_after"}.
     """
     recover_fold_siblings(spark, table_path)
-    files = [f for f in list_files(spark, table_path, recursive=True) if f.name.endswith(".parquet")]
-    ids = set()
-    for f in files:
-        for part in f.path.split("/"):
-            if part.startswith("batch="):
-                ids.add(int(part.split("=", 1)[1]))
-                break
+    files = _parquet_files(spark, table_path)
+    ids = _batch_ids(files)
     if checkpoint_dir is not None and ids:
         # commit markers live at <checkpoint>/commits/<batchId>; a data
         # dir with no marker ABOVE the highest marker is an uncommitted
@@ -254,12 +274,8 @@ def fold_stream_batches(
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", int(max_records_per_file))
     w.partitionBy("dt").parquet(dest)
-
-    old = f"{root}.folded-old-{uuid.uuid4().hex[:8]}"
-    rename(spark, root, old)
-    rename(spark, tmp, root)
-    delete(spark, old)
-    after = [f for f in list_files(spark, root, recursive=True) if f.name.endswith(".parquet")]
+    _swap_in(spark, root, tmp)
+    after = _parquet_files(spark, root)
     return {
         "batches_before": len(ids),
         "batches_after": 0 if final else 1,
@@ -274,15 +290,34 @@ def _fold_bucketed_store(
     spec: dict,
     maxc: int | None,
     only_below: int | None = None,
-    only_ids: list[int] | None = None,
-    fold_mode: str = "all",
 ) -> dict[str, int]:
     """compact_index_store for a BUCKETED store (plans/band_index.py):
-    fold every ``batch=<id>`` partition into ``batch=<max id>`` with one
+    fold ``batch=<id>`` partitions into ``batch=<max id>`` with one
     dynamic-partition-overwrite insert, then drop the emptied
     partitions — the store stays the same registered table with the
     same bucket spec throughout, so probes before/during/after the fold
     plan identically (no whole-store rename swap needed).
+
+    Which partitions fold follows from ``only_below``:
+
+    - None (the drain-window fold): every partition, the seed included.
+    - set (the in-stream auto-fold): the window every existing id in
+      ``[folded_below, only_below)``, derived from the store's fold
+      state, not from the cadence. Everything under the
+      ``folded_below`` watermark is an earlier fold's survivor or the
+      ``batch=-1`` seed, so each fold rewrites O(window) rows and the
+      cumulative in-stream cost is O(H), not a full fold's O(H²/N).
+      A restart with another ``fold_every_n_batches`` leaves no
+      never-folded gap: the next window covers the leftover ids too.
+      ids < the current batch are committed by foreachBatch
+      sequencing; the current batch's OWN partition may exist from a
+      crashed prior attempt and must neither fold (its replay rewrites
+      it) nor refuse the fold.
+
+    Both advance ``folded_below`` (its own atomically renamed sidecar;
+    the creation-time spec is never rewritten). The sidecar update is
+    the last step, so a crash before it re-folds the same window next
+    time (idempotent — dedup on the spec key).
 
     Crash windows, stated honestly: the insert commits atomically per
     partition (FileOutputCommitter), so a crash before it leaves the
@@ -291,92 +326,23 @@ def _fold_bucketed_store(
     the undropped older partitions. Duplicates are harmless to every
     consumer (probe candidates are deduped per pair, the digest
     anti-join is idempotent; bucket-cap counts inflate CONSERVATIVELY,
-    admitting fewer rows) and the next fold heals them — the fold
-    dropDuplicates on the spec's ``dedup_cols`` key. This trades the
-    dirs layout's missing-store window (the worse failure: silent
-    empty history) for a benign transient.
-
-    ``only_below`` (round 11, the in-stream auto-fold): fold ONLY the
-    partitions with id < ``only_below`` and leave the rest untouched
-    without raising — the between-triggers fold mode, where the
-    sequential foreachBatch contract already guarantees ids < the
-    current batch are committed, while the current batch's OWN
-    partition may exist from a crashed prior attempt and must neither
-    be folded (replay rewrites it) nor refuse the fold.
-
-    ``only_ids`` (round 11, the WINDOW fold): fold exactly these
-    partition ids (intersected with what exists) into their max,
-    leaving everything else — including older folded runs and the
-    ``batch=-1`` seed — untouched. This is the log-structured cadence:
-    each fold rewrites O(window) rows instead of O(history), so the
-    cumulative in-stream fold cost is O(H) rather than the full-fold
-    mode's O(H²/N) (PERF.md round 11's measured 20→54→67 s growth).
-    Composes with ``only_below`` (ids must also be < it). Visibility
-    and replay contracts are unchanged: folded ids stay < every future
-    batch. Crash-window difference vs the full fold: a crash between
-    the window fold's insert and its partition drops leaves the window
-    duplicated, and LATER window folds never revisit those ids — the
-    duplicates persist until an everything-fold
-    (:func:`compact_index_store` without ``only_ids``) dedups on the
-    spec key. Every consumer is duplicate-tolerant meanwhile (probe
-    candidates dedup per pair, the digest anti-join is idempotent,
-    bucket-cap counts inflate conservatively), so this is bounded
-    bloat, not wrong answers — schedule the occasional drain-window
-    full fold, as the deployment recipe says.
-
-    ``fold_mode="window"`` (round 12, ADVICE r11 #2): derive the window
-    from STORE STATE instead of an arithmetic range — the spec sidecar
-    records ``folded_below`` (everything under it is a fold survivor or
-    the seed), and the window is every existing id in
-    ``[folded_below, only_below)``. The r11 arithmetic window
-    (``range(batch_id - N, batch_id)``) left a permanent gap when a
-    stream restarted with a different ``fold_every_n_batches``:
-    partitions between the old and new fold boundaries fell outside
-    every future window. State-derived windows have no such gap — a
-    cadence change just makes the next fold's window cover the
-    leftover ids too. ``folded_below`` advances only when the fold
-    covered ALL existing ids below the new boundary (derived windows
-    and full folds; explicit ``only_ids`` subsets never advance it),
-    and a crash before the sidecar update merely re-folds the same
-    window next time (idempotent — dedup on the spec key)."""
+    admitting fewer rows) and the next whole-store fold heals them —
+    the fold dropDuplicates on the spec's ``dedup_cols`` key. This
+    trades the dirs layout's missing-store window (the worse failure:
+    silent empty history) for a benign transient."""
     from s3logs_parquet_spark.session import materialize, release
 
-    tbl = _bandidx_ensure(spark, root)
-    files = [
-        f
-        for f in list_files(spark, root, recursive=True)
-        if f.name.endswith(".parquet")
-    ]
+    tbl = band_index.ensure_table(spark, root)
+    files = _parquet_files(spark, root)
     # ids from the catalog UNION the directory listing: a crashed
     # insert (files committed, partition not yet registered) or a
     # stray dirs-layout write into a bucketed store must still hit the
     # commit-marker guard below, not silently escape the fold
-    listed = set()
-    for f in files:
-        for part in f.path.split("/"):
-            if part.startswith("batch="):
-                listed.add(int(part.split("=", 1)[1]))
-                break
-    all_ids = sorted(set(_bandidx_partition_ids(spark, tbl)) | listed)
-    ids = (
-        [i for i in all_ids if i < only_below] if only_below is not None else all_ids
-    )
-    covers_below = only_ids is None  # derived windows/full folds cover
-    if only_ids is not None:
-        wanted = set(only_ids)
-        ids = [i for i in ids if i in wanted]
-    elif fold_mode == "window":
-        # state-derived window (ADVICE r11 #2): everything under the
-        # folded_below watermark is a prior fold's survivor (or the
-        # batch=-1 seed, which full folds handle); the window is every
-        # existing id at/above it — cadence changes leave no gap. The
-        # watermark lives in its own atomically-renamed sidecar since
-        # round 13 (ADVICE r12 #1) so the creation-time spec stays
-        # immutable; read_fold_state honors the legacy in-spec field.
-        from s3logs_parquet_spark.plans.band_index import read_fold_state
-
-        start = read_fold_state(spark, root)
-        ids = [i for i in ids if i >= start]
+    all_ids = sorted(set(band_index.partition_ids(spark, tbl)) | _batch_ids(files))
+    ids = all_ids
+    if only_below is not None:
+        start = band_index.read_fold_state(spark, root)
+        ids = [i for i in all_ids if start <= i < only_below]
     stats = {"batches_before": len(all_ids), "files_before": len(files)}
     if len(ids) <= 1:
         stats.update(batches_after=len(all_ids), files_after=len(files))
@@ -393,9 +359,8 @@ def _fold_bucketed_store(
     m = max(ids)
     data = spark.table(tbl)
     if len(ids) < len(all_ids):
-        # partition-pruned scan of exactly the fold's id set — the
-        # derived window, explicit only_ids and only_below cases alike
-        # (an isin on the partition column prunes identically to `<`)
+        # partition-pruned scan of exactly the window (an isin on the
+        # partition column prunes identically to `<`)
         data = data.where(F.col("batch").isin([int(i) for i in ids]))
     data = data.drop("batch")
     if spec.get("dedup_cols"):
@@ -403,51 +368,23 @@ def _fold_bucketed_store(
     # sever the self-read before overwriting batch=<max> (the insert
     # reads the very partitions it rewrites otherwise)
     data = materialize(data)
-    from s3logs_parquet_spark.plans.band_index import write_contribution
-
-    write_contribution(spark, root, data, m, spec["bucket_cols"])
-    release(data)
+    try:
+        band_index.write_contribution(spark, root, data, m, spec["bucket_cols"])
+    finally:
+        release(data)
     for i in ids:
         if i == m:
             continue
         spark.sql(f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION (batch={i})")
         delete(spark, posixpath.join(root, f"batch={i}"))
-    after = [
-        f
-        for f in list_files(spark, root, recursive=True)
-        if f.name.endswith(".parquet")
-    ]
-    if covers_below:
-        # this fold covered EVERY existing id below the new boundary,
-        # so future derived windows may start there. Sidecar write is
-        # last — a crash before it re-folds the same window next time
-        # (idempotent). Explicit only_ids subsets never advance it.
-        # The watermark goes to its own atomic sidecar (ADVICE r12 #1);
-        # _INDEX_SPEC.json is never rewritten after creation.
-        new_below = int(only_below) if only_below is not None else m + 1
-        from s3logs_parquet_spark.plans.band_index import (
-            read_fold_state,
-            write_fold_state,
-        )
-
-        if new_below > read_fold_state(spark, root):
-            write_fold_state(spark, root, new_below)
+    after = _parquet_files(spark, root)
+    new_below = int(only_below) if only_below is not None else m + 1
+    if new_below > band_index.read_fold_state(spark, root):
+        band_index.write_fold_state(spark, root, new_below)
     stats.update(
         batches_after=len(all_ids) - len(ids) + 1, files_after=len(after)
     )
     return stats
-
-
-def _bandidx_ensure(spark: SparkSession, root: str) -> str:
-    from s3logs_parquet_spark.plans.band_index import ensure_table
-
-    return ensure_table(spark, root)
-
-
-def _bandidx_partition_ids(spark: SparkSession, tbl: str) -> list[int]:
-    from s3logs_parquet_spark.plans.band_index import partition_ids
-
-    return partition_ids(spark, tbl)
 
 
 def compact_index_store(
@@ -458,18 +395,17 @@ def compact_index_store(
     compression: str = "zstd",
     sort_cols: tuple[str, ...] | None = None,
     only_below: int | None = None,
-    only_ids: list[int] | None = None,
-    fold_mode: str = "all",
 ) -> dict[str, int]:
     """Fold ONE per-batch index store (``root/batch=<id>`` dirs or a
-    plans/band_index.py bucketed table — layout auto-detected from the
-    spec sidecar) into its highest batch id, so a long-running stream's
-    probe doesn't list and open one directory per micro-batch forever.
-    Every per-batch store shares this fold: the curation index's
-    ``digests/`` and ``bands/`` stores (fold ``bands`` with
-    ``sort_cols=("band", "band_hash")`` for contiguous row groups per
-    bucket) and ``run_stream_semantic_dedup``'s persisted semantic
-    index. ``maintenance fold-index`` runs it on one store.
+    plans/band_index.py bucketed table — the store reports its layout,
+    :meth:`band_index.IndexStore.layout_of`) into its highest batch
+    id, so a long-running stream's probe doesn't list and open one
+    directory per micro-batch forever. Every per-batch store shares
+    this fold: the curation index's ``digests/`` and ``bands/`` stores
+    (fold a dirs-layout ``bands`` with ``sort_cols=("band",
+    "band_hash")`` for contiguous row groups per bucket) and
+    ``run_stream_semantic_dedup``'s persisted semantic index.
+    ``maintenance fold-index`` runs it on one store.
 
     ``checkpoint_dir``: the owning stream's checkpointLocation —
     enforces drained-stream safety. Every batch id above the highest
@@ -481,57 +417,29 @@ def compact_index_store(
     ``minBatchesToRetain`` (see :func:`_max_committed`); negative ids
     (the ``batch=-1`` pre-stream seeding convention) are always exempt.
     Crash-interrupted prior folds are healed first
-    (:func:`recover_fold_siblings`). Replay contract: ``_prior_batch_dirs``
-    reads ids < the probing batch and resumed streams continue at
+    (:func:`recover_fold_siblings`). Replay contract: history reads
+    take ids < the probing batch and resumed streams continue at
     ``max+1``, so folding into ``batch=<max committed>`` keeps all
-    history visible to every future batch. ``only_below`` (bucketed stores
-    only): fold just the partitions with id < the value, leaving later
-    ones untouched — the in-stream auto-fold mode where foreachBatch
-    sequencing replaces the commit-marker check for ids below the
-    current batch (``run_stream_curation``/``run_stream_semantic_dedup``
-    ``fold_every_n_batches``). ``only_ids`` (bucketed only): an
-    explicit window-fold subset. ``fold_mode="window"`` (bucketed only,
-    round 12): derive that subset from the store's own ``folded_below``
-    state instead — cadence-change-safe; see
+    history visible to every future batch.
+
+    Without ``only_below`` the fold is whole-store (the drain-window
+    fold). ``only_below`` (bucketed stores only) is the in-stream
+    auto-fold (``fold_every_n_batches`` of ``run_stream_curation`` /
+    ``run_stream_semantic_dedup``): it folds the state-derived window
+    below that batch id and leaves later ids untouched — see
     :func:`_fold_bucketed_store`."""
-    if fold_mode not in ("all", "window"):
-        raise ValueError(
-            f"compact_index_store: fold_mode={fold_mode!r} — expected "
-            "'all' or 'window'"
-        )
-    if only_ids is not None and fold_mode == "window":
-        # ADVICE r12 #4: the only_ids branch would take precedence and
-        # never advance folded_below — a caller could believe
-        # state-derived windows are in effect while getting the
-        # gap-prone explicit subset. Conflicting; refuse.
-        raise ValueError(
-            "compact_index_store: only_ids and fold_mode='window' conflict "
-            "— an explicit id subset never advances the folded_below "
-            "watermark. Pass only_ids with the default fold_mode='all', "
-            "or let fold_mode='window' derive the id set from store state."
-        )
     maxc: int | None = None
     if checkpoint_dir is not None:
         maxc = _max_committed(spark, checkpoint_dir)
-    from s3logs_parquet_spark.plans import band_index as _bandidx
-
     recover_fold_siblings(spark, root)
-    spec = _bandidx.read_spec(spark, root)
-    if spec is not None:
+    if band_index.IndexStore.layout_of(spark, root) == "bucketed":
         return _fold_bucketed_store(
-            spark,
-            root,
-            spec,
-            maxc,
-            only_below=only_below,
-            only_ids=only_ids,
-            fold_mode=fold_mode,
+            spark, root, band_index.read_spec(spark, root), maxc, only_below
         )
-    if only_below is not None or only_ids is not None or fold_mode != "all":
+    if only_below is not None:
         raise ValueError(
-            f"compact_index_store: only_below/only_ids/fold_mode='window' "
-            f"(in-stream fold) requires the bucketed layout, but {root} has "
-            f"no {_bandidx.SPEC_FILE}"
+            f"compact_index_store: only_below (in-stream fold) requires the "
+            f"bucketed layout, but {root} has no {band_index.SPEC_FILE}"
         )
     return _fold_dirs_store(
         spark, root, maxc, files_per_store, compression, sort_cols
@@ -549,17 +457,8 @@ def _fold_dirs_store(
     """Dirs-layout fold: whole-store rewrite + two-rename sibling swap
     (atomic on HDFS/local; copy+delete on object stores — fold in the
     drain window on S3). See :func:`compact_index_store`."""
-    files = [
-        f
-        for f in list_files(spark, root, recursive=True)
-        if f.name.endswith(".parquet")
-    ]
-    ids: set[int] = set()
-    for f in files:
-        for part in f.path.split("/"):
-            if part.startswith("batch="):
-                ids.add(int(part.split("=", 1)[1]))
-                break
+    files = _parquet_files(spark, root)
+    ids = _batch_ids(files)
     stats = {"batches_before": len(ids), "files_before": len(files)}
     if len(ids) <= 1:
         stats.update(batches_after=len(ids), files_after=len(files))
@@ -587,14 +486,7 @@ def _fold_dirs_store(
     data.write.mode("overwrite").option("compression", compression).parquet(
         posixpath.join(tmp, f"batch={max(ids)}")
     )
-    old = f"{root}.folded-old-{uuid.uuid4().hex[:8]}"
-    rename(spark, root, old)
-    rename(spark, tmp, root)
-    delete(spark, old)
-    after = [
-        f
-        for f in list_files(spark, root, recursive=True)
-        if f.name.endswith(".parquet")
-    ]
+    _swap_in(spark, root, tmp)
+    after = _parquet_files(spark, root)
     stats.update(batches_after=1, files_after=len(after))
     return stats

@@ -53,6 +53,7 @@ from pyspark.sql.streaming import (
 from s3logs_parquet_spark.config import EngineConfig
 from s3logs_parquet_spark.functions.parse import parse_s3_access_log
 from s3logs_parquet_spark.functions.timeops import shifted
+from s3logs_parquet_spark.session import materialize, release
 from s3logs_parquet_spark.sources.text_source import KEY_DATE_PATTERN
 
 _log = logging.getLogger(__name__)
@@ -157,6 +158,93 @@ def _start(
     return writer.start()
 
 
+def _parquet_stream(
+    spark: SparkSession, input_dir: str, schema, scfg: StreamingJobConfig
+) -> DataFrame:
+    """The parquet file stream every foreachBatch job but the manifest
+    one reads: fixed schema, ``scfg.max_files_per_trigger`` files per
+    micro-batch (T5)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
+        .parquet(input_dir)
+    )
+
+
+class _Trigger:
+    """What :func:`_foreach_batch` hands each ``process`` call.
+    ``mark(label)`` closes a timed stage (driver wall time since the
+    previous mark: foreachBatch runs on the driver, so timing its eager
+    actions IS the per-stage breakdown; lazy sections read ~0).
+    ``keep(df)`` materializes ``df`` for the rest of the trigger, and
+    ``hold(df)`` takes a frame something else already materialized;
+    the skeleton releases both when the trigger ends, failed or not, so
+    a long-running stream's executor storage stays bounded by ONE
+    batch."""
+
+    def __init__(self) -> None:
+        self.stages: list[tuple[str, float]] = []
+        self._held: list[DataFrame] = []
+        self._t0 = time.perf_counter()
+
+    def mark(self, label: str) -> None:
+        now = time.perf_counter()
+        self.stages.append((label, now - self._t0))
+        self._t0 = now
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        return self.hold(materialize(df))
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        self._held.append(df)
+        return df
+
+    def release_all(self) -> None:
+        while self._held:
+            release(self._held.pop())
+
+
+def _foreach_batch(
+    name: str,
+    stream: DataFrame,
+    process,
+    checkpoint_dir: str,
+    scfg: StreamingJobConfig,
+) -> StreamingQuery:
+    """The one foreachBatch skeleton: start ``stream`` (:func:`_start`)
+    with ``process(batch_df, batch_id, trigger)`` run per micro-batch,
+    release whatever ``process`` kept (:class:`_Trigger`) in a
+    ``finally``, and log one DEBUG record per trigger —
+    ``<name> batch=<id> stage_s={...}`` with the marked stages."""
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        trigger = _Trigger()
+        try:
+            process(batch_df, batch_id, trigger)
+        finally:
+            trigger.release_all()
+        _log.debug(
+            "%s batch=%d stage_s=%s",
+            name,
+            batch_id,
+            json.dumps({k: round(v, 2) for k, v in trigger.stages}),
+        )
+
+    return _start(stream.writeStream.foreachBatch(_run), checkpoint_dir, scfg)
+
+
+def _write_batch(
+    df: DataFrame, root: str, batch_id: int, probe_key: str | None = None
+) -> None:
+    """Commit one micro-batch's output as ``root/batch=<id>`` with
+    mode=overwrite: a replayed batch rewrites its own directory
+    bit-identically (the run_manifest_stream T4 shape). ``probe_key``
+    names the frame for the per-trigger plan probe."""
+    if probe_key is not None:
+        _probe_plan(probe_key, df)
+    df.write.mode("overwrite").parquet(f"{root}/batch={batch_id}")
+
+
 def build_stream(
     spark: SparkSession,
     input_dir: str,
@@ -223,13 +311,17 @@ def run_manifest_stream(
     (the documented maintenance companion — see its docstring for the
     drained-stream precondition and atomicity).
 
+    Passthrough (P5) takes the dt from the object KEY, which the batch
+    already holds on the driver: the objects are grouped by key date,
+    each group is deduplicated on its own and gets its dt as a literal,
+    and the groups are written once. (A per-row ``input_file_name()``
+    cannot work here: it reads '' after the dedup shuffle.)
+
     ``object_root`` rebases object keys for testing (bucket/key →
     object_root/bucket/key); production leaves it None with
     scheme='s3a://'.
     """
-    from s3logs_parquet_spark.plans.batch import parse_and_dedup
     from s3logs_parquet_spark.sources.manifest_source import parse_s3_events
-    from s3logs_parquet_spark.sources.text_source import read_log_lines
 
     cfg = cfg or EngineConfig()
     scfg = scfg or StreamingJobConfig()
@@ -238,8 +330,9 @@ def run_manifest_stream(
             manifest_dir
         )
     )
+    dated_rows = _key_dated_rows if scfg.passthrough else _event_dated_rows
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         # Collect object NAMES only (one row per created object — small
         # by construction; the reference holds the same list in its SQS
         # receive buffer).
@@ -250,13 +343,58 @@ def run_manifest_stream(
         )
         if not paths:
             return
-        rows = parse_and_dedup(read_log_lines(spark, paths), cfg)
-        out = rows.withColumn("dt", _event_date_col(cfg, scfg)).drop("ts")
+        out = dated_rows(spark, paths, cfg, scfg)
         out.write.mode("overwrite").option("compression", cfg.compression).option(
             "maxRecordsPerFile", cfg.threshold_lines
         ).partitionBy("dt").parquet(f"{output_dir}/batch={batch_id}")
 
-    return _start(events.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    return _foreach_batch("manifest", events, _process, checkpoint_dir, scfg)
+
+
+def _event_dated_rows(
+    spark: SparkSession, paths: list[str], cfg: EngineConfig, scfg: StreamingJobConfig
+) -> DataFrame:
+    """The batch ETL's parse→F1→window→dedup rows of ``paths`` with the
+    event-time dt (T1)."""
+    from s3logs_parquet_spark.plans.batch import parse_and_dedup
+    from s3logs_parquet_spark.sources.text_source import read_log_lines
+
+    rows = parse_and_dedup(read_log_lines(spark, paths), cfg)
+    return rows.withColumn("dt", _event_date_col(cfg, scfg)).drop("ts")
+
+
+def _key_dated_rows(
+    spark: SparkSession, paths: list[str], cfg: EngineConfig, scfg: StreamingJobConfig
+) -> DataFrame:
+    """P5 for the manifest stream: rows of ``paths`` whose dt is their
+    object's key date (hour 00 under hourly granularity, like
+    :func:`_event_date_col`). One dedup per key-date group, so the D1
+    shuffle carries nothing more than the batch ETL's."""
+    import datetime
+    import functools
+    import re
+
+    from s3logs_parquet_spark.plans.batch import parse_and_dedup
+    from s3logs_parquet_spark.sources.text_source import read_log_lines
+
+    groups: dict[str, list[str]] = {}
+    for path in paths:
+        m = re.search(KEY_DATE_PATTERN, path)
+        if m is None:
+            raise ValueError(
+                "run_manifest_stream: passthrough takes the date from the "
+                "object key (...YYYY-MM-DD-HH-MM-SS-<16 hex>), which "
+                f"{path} does not have"
+            )
+        groups.setdefault(m.group(1), []).append(path)
+    fmt = "%Y%m%d" if scfg.partition_granularity == "day" else "%Y%m%d%H"
+    frames = [
+        parse_and_dedup(read_log_lines(spark, group), cfg)
+        .drop("ts")
+        .withColumn("dt", F.lit(datetime.datetime.strptime(day, "%Y-%m-%d").strftime(fmt)))
+        for day, group in sorted(groups.items())
+    ]
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def run_streaming_transform(
@@ -312,19 +450,15 @@ def run_stream_asof_enrich(
     from s3logs_parquet_spark.operators.temporal import asof_join
 
     scfg = scfg or StreamingJobConfig()
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         enriched = asof_join(
             batch_df, dim_df, time_col=time_col, by=list(by), right_cols=right_cols
         )
-        enriched.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
+        _write_batch(enriched, output_dir, batch_id)
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("asof_enrich", stream, _process, checkpoint_dir, scfg)
 
 
 def run_stream_semantic_dedup(
@@ -342,7 +476,6 @@ def run_stream_semantic_dedup(
     index_layout: str = "bucketed",
     index_buckets: int | None = None,
     fold_every_n_batches: int | None = None,
-    fold_mode: str = "window",
     scfg: StreamingJobConfig | None = None,
 ) -> StreamingQuery:
     """Continuous-ingest SemDeDup: each micro-batch of NEW vectors is
@@ -366,8 +499,9 @@ def run_stream_semantic_dedup(
     Under ``"dirs"`` (the round-10 plain-parquet layout, portable and
     catalog-free) every trigger re-shuffles the ENTIRE accumulated
     index on cell — the same O(history) exchange run_stream_curation's
-    stores shed in round 10. A store keeps the layout it was created
-    with; mixing fails loud at start. ``index_buckets`` sets the
+    stores shed in round 10. Both layouts live behind
+    plans/band_index.py:IndexStore; a store keeps the layout it was
+    created with, and mixing fails loud at start. ``index_buckets`` sets the
     bucket count at store creation (default
     ``spark.sql.shuffle.partitions``; a write-time property — size it
     for the cluster, it cannot drift across resumes).
@@ -392,25 +526,12 @@ def run_stream_semantic_dedup(
     shape, T4).
 
     ``fold_every_n_batches`` (round 11, VERDICT r10 #4): opt-in
-    auto-fold cadence for the forever-stream — every N batches the
-    accumulated ``batch=<id>`` partitions are folded into one
-    (plans/compact.compact_index_store, ``only_below=current``)
-    BEFORE the trigger's probe, bounding the index's file/partition
-    count without an operator remembering to run the fold in drain
-    windows. Bucketed layout only (the dirs fold is a whole-store
-    rename swap — not safe mid-stream on object stores). Safe under
-    replay: only ids < the current batch fold (committed by
-    foreachBatch sequencing), a crashed attempt's own partition is
-    left for its retry to overwrite, and folded history keeps ids <
-    every future batch so visibility is unchanged. ``fold_mode``:
-    ``"window"`` (default) folds only the not-yet-folded partitions —
-    derived from the store's ``folded_below`` sidecar state, so a
-    restart with a different cadence leaves no never-folded gap
-    (ADVICE r11 #2) — each fold rewrites O(batch·N) rows, cumulative
-    O(H), partition count bounded by H/N + seed; ``"all"`` folds the
-    entire store each time (fewest partitions, but O(history) per
-    fold — see run_stream_curation's measured numbers; prefer it only
-    as an occasional drain-window compact_index_store run).
+    auto-fold cadence for the forever-stream, bucketed layout only —
+    every N batches, BEFORE the trigger's probe, the store folds the
+    partitions no earlier fold covered into one
+    (IndexStore.fold_before states why that is replay-safe), bounding
+    the index's file/partition count without an operator remembering
+    to run ``maintenance fold-index`` in drain windows.
 
     Output rows: (id_col, cell, is_corpus_dup, is_batch_dup) per
     batch vector — corpus = duplicates history, batch = a LOWER-id
@@ -418,140 +539,50 @@ def run_stream_semantic_dedup(
     keep-min-id representative rule). Appended to the index: rows
     with NEITHER flag.
     """
-    from s3logs_parquet_spark.fsutil import exists as _exists
     from s3logs_parquet_spark.operators.dedup import (
         semantic_assign,
         semantic_dedup,
         semantic_dedup_incremental,
     )
-    from s3logs_parquet_spark.plans import band_index as _bandidx
-    from s3logs_parquet_spark.plans.compact import (
-        _max_committed,
-        compact_index_store,
-        recover_fold_siblings,
-    )
-    from s3logs_parquet_spark.session import materialize, release
+    from s3logs_parquet_spark.plans.band_index import IndexStore
+    from s3logs_parquet_spark.plans.compact import _max_committed
 
     scfg = scfg or StreamingJobConfig()
-
-    if index_layout not in ("bucketed", "dirs"):
-        raise ValueError(
-            f"run_stream_semantic_dedup: index_layout={index_layout!r} — "
-            "expected 'bucketed' or 'dirs'"
-        )
-    if fold_every_n_batches is not None and index_layout != "bucketed":
-        raise ValueError(
-            "run_stream_semantic_dedup: fold_every_n_batches requires "
-            "index_layout='bucketed' (the dirs fold is a whole-store rename "
-            "swap — run compact_index_store in a drain window instead)"
-        )
-    if fold_mode not in ("window", "all"):
-        raise ValueError(
-            f"run_stream_semantic_dedup: fold_mode={fold_mode!r} — expected "
-            "'window' or 'all'"
-        )
-    bucketed = index_layout == "bucketed"
-    # layout split-brain + resume-amnesia guards (the run_stream_curation
-    # shape): a store keeps its creation layout, and a checkpoint that
-    # says batches committed while the index store is missing means a
-    # resume would dedup against nothing — fail loud, don't forget.
-    recover_fold_siblings(spark, index_path)
-    _spec = _bandidx.read_spec(spark, index_path)
-    if _spec is not None and not bucketed:
-        raise ValueError(
-            f"run_stream_semantic_dedup: {index_path} was created with the "
-            "bucketed layout — pass index_layout='bucketed' (or rebuild the "
-            "index to switch layouts)"
-        )
-    if _spec is None and bucketed and _prior_batch_dirs(spark, index_path, 2**62):
-        raise ValueError(
-            f"run_stream_semantic_dedup: {index_path} holds dirs-layout "
-            "contributions but index_layout='bucketed' — pass 'dirs' (or "
-            "rebuild the index to switch layouts)"
-        )
-    if (
-        fold_every_n_batches is not None
-        and _spec is not None
-        and not _spec.get("dedup_cols")
-    ):
-        # ADVICE r11 #1: a store seeded without dedup_cols makes every
-        # fold skip dropDuplicates — the crash-window healing the fold
-        # docs promise silently never happens. Creation-time property,
-        # so the only fix is reseeding; fail before any batch commits.
-        raise ValueError(
-            f"run_stream_semantic_dedup: the index store at {index_path} "
-            "was created without dedup_cols, so folds cannot dedup and the "
-            "fold crash-window healing never happens — seed it with "
-            f"write_contribution(..., dedup_cols=({id_col!r},)) (rebuild "
-            "the store) or run without fold_every_n_batches"
-        )
-    if update_index and _max_committed(spark, checkpoint_dir) >= 0 and not _exists(
-        spark, index_path
-    ):
-        raise ValueError(
-            f"run_stream_semantic_dedup: checkpoint {checkpoint_dir} shows "
-            f"committed batches but the index store is absent at {index_path} "
-            "— resuming would dedup against nothing. Restore the store or "
-            "start a fresh checkpoint+index."
-        )
-
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
+    # a vec arrives in exactly one batch → its id keys the store, and
+    # folds dedup on it; the probe's cell key buckets it
+    index = IndexStore.open(
+        spark, index_path, index_layout, ("cell",), (id_col,),
+        n_buckets=index_buckets, fold_every=fold_every_n_batches,
+        resumed=update_index and _max_committed(spark, checkpoint_dir) >= 0,
+        owner="run_stream_semantic_dedup",
     )
 
-    # per-RUN latch for the index dim guard (the run_stream_curation
-    # pattern): the stream writes the index with its own quantizer, so
-    # only a resume with different centroids can trip it — first
-    # trigger checks, the rest skip the bounded probe job
-    _idx_checked = {"done": False}
-
-    def _read_history(batch_id: int) -> DataFrame | None:
-        if bucketed:
-            return _bandidx.prior_batches(spark, index_path, batch_id)
-        dirs = _prior_batch_dirs(spark, index_path, batch_id)
-        return spark.read.parquet(*dirs) if dirs else None
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if (
-            fold_every_n_batches is not None
-            and batch_id > 0
-            and batch_id % int(fold_every_n_batches) == 0
-            and _bandidx.read_spec(spark, index_path) is not None
-        ):
-            # between-triggers auto-fold: ids < batch_id are committed
-            # (sequential foreachBatch), a crashed attempt's own
-            # partition is skipped via only_below; window mode derives
-            # its id set from the store's folded_below state, so a
-            # cadence change leaves no never-folded gap (ADVICE r11 #2)
-            compact_index_store(
-                spark, index_path, only_below=batch_id, fold_mode=fold_mode
-            )
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
+        if index.fold_before(batch_id):
+            trigger.mark("auto-fold")
         # Assignment-reuse (round 10, the curation-stream fusion
         # applied here): the r9 shape ran the assignment kernel up to
         # THREE times per trigger (inside the history probe, inside
         # the within-batch dedup, and a third pass for the index
         # contribution) and round-tripped its own output through the
-        # sink to sever lineage. Assign ONCE, checkpoint, and feed all
-        # three consumers from the blocks; the output frame is
-        # checkpointed instead of re-read from parquet.
-        assigned = materialize(
-            semantic_assign(batch_df, id_col, vec_col, centroids)
-        )
-        index = _read_history(batch_id)
-        if index is not None:
+        # sink to sever lineage. Assign ONCE (semantic_assign returns
+        # it checkpointed) and feed all three consumers from the
+        # blocks; the output frame is checkpointed instead of re-read
+        # from parquet.
+        assigned = trigger.hold(semantic_assign(batch_df, id_col, vec_col, centroids))
+        trigger.mark("assign")
+        history = index.history(batch_id)
+        if history is not None:
             hist = semantic_dedup_incremental(
                 batch_df,
-                index,
+                history,
                 id_col,
                 vec_col,
                 centroids,
                 threshold,
                 batch_assigned=assigned,
-                check_index=not _idx_checked["done"],
+                check_index=index.first_probe(),
             ).select(id_col, "cell", F.col("is_semdup").alias("is_corpus_dup"))
-            _idx_checked["done"] = True
         else:
             # no history yet (unseeded first batch): nothing can be a
             # corpus dup
@@ -563,35 +594,19 @@ def run_stream_semantic_dedup(
         ).select(id_col, F.col("is_semdup").alias("is_batch_dup"))
         out = hist.join(within, on=id_col)
         _probe_plan("stream:semdedup/flags", out)
-        out = materialize(out)
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
+        out = trigger.keep(out)
+        trigger.mark("flags")
+        _write_batch(out, output_dir, batch_id)
+        trigger.mark("out-write")
         if update_index:
             kept = out.filter(
                 ~F.col("is_corpus_dup") & ~F.col("is_batch_dup")
             ).select(id_col)
-            contribution = assigned.join(kept, on=id_col)
-            if bucketed:
-                # one overwritable batch=<id> Hive partition, bucketed
-                # on the probe's cell key (T4 replay contract identical
-                # to the dirs write; a vec arrives in exactly one batch
-                # → id keys the store, folds dedup on it)
-                _bandidx.write_contribution(
-                    spark,
-                    index_path,
-                    contribution,
-                    batch_id,
-                    ("cell",),
-                    n_buckets=index_buckets,
-                    dedup_cols=(id_col,),
-                )
-            else:
-                contribution.write.mode("overwrite").parquet(
-                    f"{index_path}/batch={batch_id}"
-                )
-        release(out)
-        release(assigned)
+            index.write(assigned.join(kept, on=id_col), batch_id)
+            trigger.mark("index-write")
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("semdedup", stream, _process, checkpoint_dir, scfg)
 
 
 def run_stream_inference(
@@ -630,17 +645,12 @@ def run_stream_inference(
     from s3logs_parquet_spark.operators.inference import batched_inference
 
     scfg = scfg or StreamingJobConfig()
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
     bc = spark.sparkContext.broadcast(weights) if weights is not None else None
 
     def _scorer(pdf, _w_unused):
         return model_fn(pdf, bc.value if bc is not None else None)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         scored = batched_inference(
             batch_df,
             _scorer,
@@ -649,10 +659,10 @@ def run_stream_inference(
             weights=None,  # per-run broadcast above, not per-trigger
             passthrough_cols=list(passthrough_cols),
         )
-        _probe_plan("stream:inference/scored", scored)
-        scored.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
+        _write_batch(scored, output_dir, batch_id, "stream:inference/scored")
 
-    query = _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    query = _foreach_batch("inference", stream, _process, checkpoint_dir, scfg)
     if bc is not None:
         # per-run broadcast, per-run CLEANUP (ADVICE round 10): without
         # this, repeated run/stop cycles in one long-lived driver leak
@@ -730,18 +740,13 @@ def run_stream_kmv(
     from s3logs_parquet_spark.operators.sketches import group_kmins
 
     scfg = scfg or StreamingJobConfig()
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         contrib = group_kmins(batch_df, [group_col], value_col, k)
-        _probe_plan("stream:kmv/contribution", contrib)
-        contrib.write.mode("overwrite").parquet(f"{sketch_path}/batch={batch_id}")
+        _write_batch(contrib, sketch_path, batch_id, "stream:kmv/contribution")
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("kmv", stream, _process, checkpoint_dir, scfg)
 
 
 def read_kmv_sketch(
@@ -809,18 +814,13 @@ def run_stream_mg(
     from s3logs_parquet_spark.operators.sketches import mg_partition_summaries
 
     scfg = scfg or StreamingJobConfig()
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         contrib = mg_partition_summaries(batch_df, item_col, k)
-        _probe_plan("stream:mg/contribution", contrib)
-        contrib.write.mode("overwrite").parquet(f"{sketch_path}/batch={batch_id}")
+        _write_batch(contrib, sketch_path, batch_id, "stream:mg/contribution")
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("mg", stream, _process, checkpoint_dir, scfg)
 
 
 def run_stream_rollup(
@@ -868,18 +868,13 @@ def run_stream_rollup(
     from s3logs_parquet_spark.plans.rollup import rollup_events
 
     scfg = scfg or StreamingJobConfig()
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
         contrib = rollup_events(batch_df, window_seconds, list(by), ts_col, value_col)
-        _probe_plan("stream:rollup/contribution", contrib)
-        contrib.write.mode("overwrite").parquet(f"{rollup_path}/batch={batch_id}")
+        _write_batch(contrib, rollup_path, batch_id, "stream:rollup/contribution")
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("rollup", stream, _process, checkpoint_dir, scfg)
 
 
 def read_stream_rollup(
@@ -903,31 +898,6 @@ def read_mg_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
     return spark.read.parquet(sketch_path).select("_mg_item", "_mg_lb")
 
 
-def _prior_batch_dirs(spark: SparkSession, root: str, batch_id: int) -> list[str]:
-    """``batch=<id>`` directories under ``root`` with id < batch_id —
-    the replay guard for per-batch index stores: a crashed attempt may
-    have already written THIS batch's contribution, and reading it back
-    would make the batch's own rows match themselves. Negative ids are
-    matched too: ``batch=-1`` is the documented seeding convention for
-    pre-stream history (run_stream_semantic_dedup), and seeded history
-    must participate in every batch's dedup. Hadoop-FS listing
-    (fsutil), so the store may live on s3a:// etc."""
-    import posixpath
-    import re
-
-    from s3logs_parquet_spark.fsutil import list_files
-
-    dirs = set()
-    for f in list_files(spark, root, recursive=True):
-        if not f.name.endswith(".parquet"):
-            continue
-        d = posixpath.dirname(f.path)
-        m = re.search(r"batch=(-?\d+)$", d)
-        if m and int(m.group(1)) < batch_id:
-            dirs.add(d)
-    return sorted(dirs)
-
-
 def run_stream_curation(
     spark: SparkSession,
     input_dir: str,
@@ -949,7 +919,6 @@ def run_stream_curation(
     band_index_layout: str = "bucketed",
     index_buckets: int | None = None,
     fold_every_n_batches: int | None = None,
-    fold_mode: str = "window",
     scfg: StreamingJobConfig | None = None,
 ) -> StreamingQuery:
     """Continuous training-data curation — plans/curation.py's pipeline
@@ -983,21 +952,23 @@ def run_stream_curation(
     network) — bound it with ``band_index_max_bucket`` /
     ``index_dropped=False`` on flood corpora and fold the per-batch
     files with ``maintenance fold-index``. ``"dirs"`` keeps the round-9
-    plain-directory layout (portable, catalog-free); a store created
-    under one layout must keep it — mixing fails loud at start.
+    plain-directory layout (portable, catalog-free). Both layouts live
+    behind plans/band_index.py:IndexStore; a store created under one
+    layout must keep it — mixing fails loud at start.
     ``index_buckets`` sets the bucket count at store CREATION (default
     ``spark.sql.shuffle.partitions``; size it like shuffle width at
     the target scale — it is a write-time property that cannot drift
     across resumes, so pick for the cluster, not the first batch).
 
-    Per micro-batch: (1) quality/langid filter; (2) exact dedup within
-    the batch (min-id canonical) and against the persisted digest
-    index; (3) near-dup dedup within the batch (LSH candidates → CC →
-    min-id canonical, exactly curate_documents' semantics) and against
-    the persisted MinHash band index via incremental_neardup_pairs;
-    (4) append survivors to ``{out_dir}/batch=<id>`` and the batch's
-    contributions to ``{index_dir}/digests|bands/batch=<id>`` — all
-    mode=overwrite per-batch dirs, the T4 commit shape.
+    Per micro-batch: (1) quality/langid filter (plans/curation.py
+    quality_gate); (2) exact dedup within the batch (min-id canonical)
+    and against the persisted digest index; (3) near-dup dedup within
+    the batch (near_dup_canonicals: LSH candidates → CC → min-id
+    canonical, curate_documents' own stage) and against the persisted
+    MinHash band index via incremental_neardup_pairs; (4) append
+    survivors (assign_split) to ``{out_dir}/batch=<id>`` and the
+    batch's contributions to ``{index_dir}/digests|bands/batch=<id>``
+    — all mode=overwrite per-batch units, the T4 commit shape.
 
     With ``index_dropped=True`` (default) the BAND index covers every
     exact-unique arrived doc that passed the quality gate (INCLUDING
@@ -1015,29 +986,20 @@ def run_stream_curation(
     (16-byte rows; an exact copy of a dropped doc must always drop).
 
     ``fold_every_n_batches`` (round 11, VERDICT r10 #4): opt-in
-    auto-fold cadence — every N batches, BEFORE that trigger's probe,
-    both index stores' accumulated ``batch=<id>`` partitions fold into
-    one (plans/compact.compact_index_store with ``only_below=current``),
-    bounding the per-trigger directory/file growth the round-10
-    hotprobe measured (+10% per-trigger per 2x history from the index
-    scan term) without an operator remembering to run
-    ``maintenance fold-index`` in drain windows. Bucketed layout only.
-    Replay-safe: only ids < the current batch fold (committed by
-    foreachBatch sequencing), a crashed attempt's own partition is
-    left for its retry, and folded history keeps ids < every future
-    batch, so the probe's visibility contract is unchanged.
-    ``fold_mode="window"`` (default) folds only the not-yet-folded
-    partitions into one — derived from each store's ``folded_below``
-    sidecar state, so a cadence change leaves no never-folded gap
-    (ADVICE r11 #2) — O(batch·N) rows per fold, cumulative O(H),
-    partition count bounded by H/N (+ the untouched seed); ``"all"`` folds the
-    whole store each time, whose cost was measured honestly (PERF.md
-    round 11, 40x50k hotprobe): O(history) per fold — 20 s at 4M rows
-    growing to 67 s at 12M — cumulative O(H²/N), though survivors stay
-    fingerprint-identical and file counts drop 1280 -> 352 either way.
-    Pick the cadence for the file-count bound (object-store listing is
-    where unfolded stores hurt); run a drain-window
-    ``maintenance fold-index`` for the occasional everything-fold.
+    auto-fold cadence, bucketed layout only — every N batches, BEFORE
+    that trigger's probe, both index stores fold the partitions no
+    earlier fold covered into one (IndexStore.fold_before states why
+    that is replay-safe), bounding the per-trigger directory/file
+    growth the round-10 hotprobe measured (+10% per-trigger per 2x
+    history from the index scan term) without an operator remembering
+    to run ``maintenance fold-index`` in drain windows: O(batch·N)
+    rows per fold, cumulative O(H), partition count bounded by H/N
+    (+ the untouched seed). Folding the whole store every time cost
+    O(history) per fold (PERF.md round 11, 40x50k hotprobe: 20 s at
+    4M rows growing to 67 s at 12M); that fold is the occasional
+    drain-window ``maintenance fold-index``. Pick the cadence for the
+    file-count bound (object-store listing is where unfolded stores
+    hurt).
 
     ``band_index_max_bucket`` (round 9) bounds the warned O(history)
     probe blowup that ``index_dropped=False`` alone cannot: when a
@@ -1084,156 +1046,45 @@ def run_stream_curation(
     artifact.
 
     Replay safety: contribution reads exclude the current batch id
-    (:func:`_prior_batch_dirs`), so a crashed attempt's own writes are
+    (IndexStore.history), so a crashed attempt's own writes are
     invisible to its retry and the rewrite is bit-identical.
     """
     from pyspark.sql import Window
 
-    from s3logs_parquet_spark.functions.hashing import hash32
-    from s3logs_parquet_spark.functions.text_analysis import with_quality_and_lang
     from s3logs_parquet_spark.operators.dedup import (
         _content_digest,
         band_signatures,
-        connected_components_clusters,
         incremental_neardup_pairs,
-        minhash_lsh_pairs,
         minhash_signatures,
     )
-    from s3logs_parquet_spark.session import materialize, release
+    from s3logs_parquet_spark.plans.band_index import IndexStore
+    from s3logs_parquet_spark.plans.compact import _max_committed
+    from s3logs_parquet_spark.plans.curation import (
+        assign_split,
+        near_dup_canonicals,
+        quality_gate,
+    )
 
     scfg = scfg or StreamingJobConfig()
+    resumed = _max_committed(spark, checkpoint_dir) >= 0
 
-    # Resume-safety (ADVICE round 9): a crash-interrupted index fold
-    # can leave a store dir missing (mid-swap) — and a missing store
-    # reads as EMPTY history, so the resumed stream would silently
-    # dedup against nothing. Heal interrupted folds first; if a store
-    # is STILL missing while the checkpoint says batches committed,
-    # fail loud instead of resuming with amnesia.
-    from s3logs_parquet_spark.fsutil import exists as _exists
-    from s3logs_parquet_spark.plans.compact import (
-        _max_committed,
-        compact_index_store,
-        recover_fold_siblings,
-    )
-
-    if band_index_layout not in ("bucketed", "dirs"):
-        raise ValueError(
-            f"run_stream_curation: band_index_layout={band_index_layout!r} "
-            "— expected 'bucketed' or 'dirs'"
+    def _open(store: str, bucket_cols: tuple[str, ...], dedup_cols: tuple[str, ...]):
+        return IndexStore.open(
+            spark, f"{index_dir}/{store}", band_index_layout, bucket_cols, dedup_cols,
+            n_buckets=index_buckets, fold_every=fold_every_n_batches,
+            resumed=resumed, owner="run_stream_curation",
         )
-    if fold_every_n_batches is not None and band_index_layout != "bucketed":
-        raise ValueError(
-            "run_stream_curation: fold_every_n_batches requires "
-            "band_index_layout='bucketed' (the dirs fold is a whole-store "
-            "rename swap — run `maintenance fold-index` on each index store "
-            "in a drain window instead)"
-        )
-    if fold_mode not in ("window", "all"):
-        raise ValueError(
-            f"run_stream_curation: fold_mode={fold_mode!r} — expected "
-            "'window' or 'all'"
-        )
-    from s3logs_parquet_spark.plans import band_index as _bandidx
 
-    for _store in ("digests", "bands"):
-        _sd = f"{index_dir}/{_store}"
-        recover_fold_siblings(spark, _sd)
-        # layout split-brain guard: a store keeps the layout it was
-        # created with — silently probing a bucketed store as plain
-        # dirs (or vice versa) would dedup against the wrong shape
-        _spec = _bandidx.read_spec(spark, _sd)
-        if _spec is not None and band_index_layout != "bucketed":
-            raise ValueError(
-                f"run_stream_curation: {_sd} was created with the bucketed "
-                "layout — pass band_index_layout='bucketed' (or rebuild the "
-                "index to switch layouts)"
-            )
-        if (
-            _spec is None
-            and band_index_layout == "bucketed"
-            and _prior_batch_dirs(spark, _sd, 2**62)
-        ):
-            raise ValueError(
-                f"run_stream_curation: {_sd} holds dirs-layout contributions "
-                "but band_index_layout='bucketed' — pass 'dirs' (or rebuild "
-                "the index to switch layouts)"
-            )
-        if (
-            fold_every_n_batches is not None
-            and _spec is not None
-            and not _spec.get("dedup_cols")
-        ):
-            # ADVICE r11 #1 (same class as the semantic store): folds
-            # of a store seeded without dedup_cols cannot dedup, so
-            # the fold crash-window healing never happens — fail loud
-            raise ValueError(
-                f"run_stream_curation: the index store at {_sd} was created "
-                "without dedup_cols, so folds cannot dedup and the fold "
-                "crash-window healing never happens — reseed it through "
-                "write_contribution(..., dedup_cols=...) or run without "
-                "fold_every_n_batches"
-            )
-    if _max_committed(spark, checkpoint_dir) >= 0:
-        _missing = [
-            s for s in ("digests", "bands") if not _exists(spark, f"{index_dir}/{s}")
-        ]
-        if _missing:
-            raise ValueError(
-                f"run_stream_curation: checkpoint {checkpoint_dir} shows "
-                f"committed batches but index store(s) {_missing} are absent "
-                f"under {index_dir} — resuming would dedup against nothing. "
-                "Restore the store (crashed fold? wrong index_dir?) or start "
-                "a fresh checkpoint+index."
-            )
+    digest_store = _open("digests", ("_dg",), ("_dg",))
+    # a doc arrives in exactly one batch and appears once per band
+    # (carrier rows included) → (id, band) keys the store; folds dedup
+    # on it (see write_contribution)
+    band_store = _open("bands", ("band", "band_hash"), (id_col, "band"))
 
-    stream = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", scfg.max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    bucketed = band_index_layout == "bucketed"
-    dg_store = f"{index_dir}/digests"
-    band_store = f"{index_dir}/bands"
-
-    # per-RUN latch for the probe's index-parameter guard: the stream
-    # wrote the index with this run's own (num_hashes, bands), so the
-    # guard can only fire on the FIRST trigger of a run (a resume with
-    # different parameters) — checking it per trigger was one bounded
-    # collect job per batch for nothing (round-10 job-count audit)
-    _idx_checked = {"done": False}
-
-    # per-stage driver-side wall times, logged at DEBUG once per
-    # micro-batch (the job-count/floor profile, PERF.md round 10).
-    # foreachBatch runs on the driver, so timing the eager actions IS
-    # the per-stage breakdown; lazy sections read ~0.
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _marks: list[tuple[str, float]] = []
-        _t0 = time.perf_counter()
-
-        def _mark(label: str) -> None:
-            nonlocal _t0
-            now = time.perf_counter()
-            _marks.append((label, now - _t0))
-            _t0 = now
-
-        if (
-            fold_every_n_batches is not None
-            and batch_id > 0
-            and batch_id % int(fold_every_n_batches) == 0
-        ):
-            # between-triggers auto-fold (see docstring): ids <
-            # batch_id are committed by foreachBatch sequencing; a
-            # crashed attempt's own partition is skipped via
-            # only_below and stays for its retry to overwrite. Window
-            # mode derives its id set from each store's folded_below
-            # state — cadence changes leave no gap (ADVICE r11 #2)
-            for _store in (dg_store, band_store):
-                if _bandidx.read_spec(spark, _store) is not None:
-                    compact_index_store(
-                        spark, _store, only_below=batch_id, fold_mode=fold_mode
-                    )
-            _mark("auto-fold")
+    def _process(batch_df: DataFrame, batch_id: int, trigger: _Trigger) -> None:
+        folded = [store.fold_before(batch_id) for store in (digest_store, band_store)]
+        if any(folded):
+            trigger.mark("auto-fold")
         # A micro-batch arrives with the SOURCE's split count — often
         # ONE partition (a 50k-doc file is a single <128 MB split), and
         # the quality/langid expressions are the pipeline's most
@@ -1243,12 +1094,7 @@ def run_stream_curation(
         # first; one narrow exchange of the raw batch buys full-width
         # CPU for everything downstream of the source.
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        kept = with_quality_and_lang(
-            batch_df.repartition(n_shuffle), text_col
-        ).filter(
-            (F.col("quality") >= min_quality)
-            & F.col("lang_pred").isin(*languages)
-        )
+        kept = quality_gate(batch_df.repartition(n_shuffle), text_col, min_quality, languages)
         # Fused gate→dedup pass (round-10 job-count rework): the r9
         # shape checkpointed `kept` separately because exact_dedup's
         # narrow path scans its input twice; keying the within-batch
@@ -1262,11 +1108,6 @@ def run_stream_curation(
         # pre-partitioned under the bucketed layout — so the whole
         # pass exchanges the O(batch) side twice (rebalance + _dg),
         # nothing else.
-        if bucketed:
-            hist = _bandidx.prior_batches(spark, dg_store, batch_id)
-        else:
-            prior_dg = _prior_batch_dirs(spark, dg_store, batch_id)
-            hist = spark.read.parquet(*prior_dg) if prior_dg else None
         w_dg = Window.partitionBy("_dg").orderBy(id_col)
         base = (
             kept.withColumn("_dg", _content_digest(text_col))
@@ -1274,10 +1115,11 @@ def run_stream_curation(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+        hist = digest_store.history(batch_id)
         if hist is not None:
             base = base.join(hist, on="_dg", how="left_anti")
-        base = materialize(base)
-        _mark("gate+dedup")
+        base = trigger.keep(base)
+        trigger.mark("gate+dedup")
 
         # Signature-reuse (round-9 rework, fused further in round 10):
         # compute MinHash signatures ONCE per trigger and carry them as
@@ -1291,37 +1133,25 @@ def run_stream_curation(
         # signature frame) but stays eligible to survive and still
         # contributes its digest.
         sigs = minhash_signatures(base, id_col, text_col, num_hashes, shingle_k)
-        fresh = materialize(base.join(sigs, on=id_col, how="left"))
+        fresh = trigger.keep(base.join(sigs, on=id_col, how="left"))
+        # `base` is read only through `fresh` from here on: free its
+        # blocks now rather than at the end of the trigger
         release(base)
-        _mark("signatures")
+        trigger.mark("signatures")
         banded_fresh = band_signatures(
             fresh.filter(F.col("signature").isNotNull()).select(id_col, "signature"),
             id_col,
             num_hashes,
             bands,
         )
-        pairs = minhash_lsh_pairs(
-            fresh,
-            id_col,
-            text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            max_bucket_size=lsh_max_bucket_size,
-            oversize_policy="star",
-            banded=banded_fresh,
+        canon = near_dup_canonicals(
+            fresh, id_col, text_col, num_hashes, bands, shingle_k,
+            jaccard_threshold, lsh_max_bucket_size, banded=banded_fresh,
         )
-        labels = connected_components_clusters(pairs, fresh.select(id_col), id_col)
-        _mark("lsh+cc")
-        canon = labels.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
+        trigger.mark("lsh+cc")
         survivors = fresh.join(canon, id_col, "left_semi")
 
-        if bucketed:
-            idx = _bandidx.prior_batches(spark, band_store, batch_id)
-        else:
-            prior_bands = _prior_batch_dirs(spark, band_store, batch_id)
-            idx = spark.read.parquet(*prior_bands) if prior_bands else None
+        idx = band_store.history(batch_id)
         if idx is not None:
             hits = incremental_neardup_pairs(
                 survivors,
@@ -1337,13 +1167,9 @@ def run_stream_curation(
                 # (band, band_hash) — carry signatures through the
                 # exchange-free band join instead of rejoining the
                 # band-0 slice (the round-9 O(history) exchange)
-                carry_signatures=bucketed,
-                # the stream wrote the index with this run's own
-                # parameters — guard only the first trigger (resume
-                # with different num_hashes), not every micro-batch
-                check_index=not _idx_checked["done"],
+                carry_signatures=band_store.bucketed,
+                check_index=band_store.first_probe(),
             )
-            _idx_checked["done"] = True
             # the r9/r10 scale defects lived exactly here: the
             # batch x history probe join's index side must plan
             # exchange-free against the bucketed store
@@ -1354,21 +1180,10 @@ def run_stream_curation(
         # digest contributions always cover every exact-unique ARRIVED
         # doc; band contributions follow index_dropped (see docstring)
         def _write_digests() -> None:
-            if bucketed:
-                _bandidx.write_contribution(
-                    spark, dg_store, fresh.select("_dg"), batch_id,
-                    ("_dg",), n_buckets=index_buckets, dedup_cols=("_dg",),
-                )
-            else:
-                fresh.select(F.col("_dg")).write.mode("overwrite").parquet(
-                    f"{dg_store}/batch={batch_id}"
-                )
+            digest_store.write(fresh.select("_dg"), batch_id)
 
-        def _write_bands(band_out: DataFrame):
-            """Optional bucket cap + band contribution write. Returns
-            the checkpointed frame to release after the trigger (or
-            None)."""
-            band_ckpt = None
+        def _write_bands(band_out: DataFrame) -> None:
+            """Optional bucket cap + band contribution write."""
             if band_index_max_bucket is not None:
                 # first-K-arrivals bucket cap (see docstring): rank-cap
                 # the batch's contribution per bucket AGAINST the
@@ -1419,44 +1234,20 @@ def run_stream_curation(
                     )
                 )
                 band_out = band_out.unionByName(restored)
-            if bucketed and idx is not None and (
-                not index_dropped or band_index_max_bucket is not None
-            ):
-                # survivors-only band_out (and the cap's history counts)
-                # READ the bands table the insert below overwrites —
-                # Spark's static cycle check rejects that even though
-                # the partitions are disjoint. Checkpoint severs the
-                # lineage; O(batch) rows, released right after the
-                # write.
-                band_out = band_ckpt = materialize(band_out)
-            if bucketed:
-                _bandidx.write_contribution(
-                    spark, band_store, band_out, batch_id,
-                    ("band", "band_hash"), n_buckets=index_buckets,
-                    # a doc arrives in exactly one batch and appears
-                    # once per band (carrier rows included) →
-                    # (id, band) keys the store; folds dedup on it
-                    # (see write_contribution)
-                    dedup_cols=(id_col, "band"),
-                )
-            else:
-                band_out.write.mode("overwrite").parquet(
-                    f"{band_store}/batch={batch_id}"
-                )
-            return band_ckpt
+            # survivors-only band_out and the cap's history counts READ
+            # the bands store this write overwrites
+            band_store.write(
+                band_out,
+                batch_id,
+                reads_store=idx is not None
+                and (not index_dropped or band_index_max_bucket is not None),
+            )
 
         def _write_survivors() -> None:
-            bucket = F.pmod(hash32(F.col(id_col).cast("string")), F.lit(100))
-            split = (
-                F.when(bucket < 80, F.lit("train"))
-                .when(bucket < 90, F.lit("val"))
-                .otherwise(F.lit("test"))
+            _write_batch(
+                assign_split(survivors, id_col), out_dir, batch_id,
+                "stream:curation/survivors",
             )
-            out = survivors.select(
-                id_col, "lang_pred", "quality", split.alias("split")
-            )
-            _probe_plan("stream:curation/survivors", out)
-            out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
         band_in = (
             banded_fresh
@@ -1492,29 +1283,19 @@ def run_stream_curation(
                 f_dg = pool.submit(_write_digests)
                 f_bd = pool.submit(_write_bands, band_in)
                 _write_survivors()
-                band_ckpt = f_bd.result()
+                f_bd.result()
                 f_dg.result()
-            _mark("sinks-parallel+probe")
+            trigger.mark("sinks-parallel+probe")
         else:
             _write_digests()
-            _mark("digest-write")
-            band_ckpt = _write_bands(band_in)
-            _mark("band-write")
+            trigger.mark("digest-write")
+            _write_bands(band_in)
+            trigger.mark("band-write")
             _write_survivors()
-            _mark("probe+out-write")
-        # all consumers above are actions that already ran — drop this
-        # batch's checkpoint blocks so a long-running stream's executor
-        # storage stays bounded by ONE batch, not the whole history
-        release(fresh)
-        if band_ckpt is not None:
-            release(band_ckpt)
-        _log.debug(
-            "curation batch=%d stage_s=%s",
-            batch_id,
-            json.dumps({k: round(v, 2) for k, v in _marks}),
-        )
+            trigger.mark("probe+out-write")
 
-    return _start(stream.writeStream.foreachBatch(_process), checkpoint_dir, scfg)
+    stream = _parquet_stream(spark, input_dir, input_schema, scfg)
+    return _foreach_batch("curation", stream, _process, checkpoint_dir, scfg)
 
 
 def graceful_drain(query: StreamingQuery, timeout_sec: float | None = None) -> None:

@@ -377,11 +377,11 @@ def test_semantic_probe_plan_no_exchange_on_index_side(spark, tmp_path):
 
 
 def test_compact_index_store_window_and_dirs_guard(spark, tmp_path):
-    """compact_index_store API surface (round 11): only_ids folds
-    exactly the named window into its max (older runs and the seed
-    untouched); a crash-duplicated window is healed by a later FULL
-    fold via the spec's dedup key; only_below/only_ids on a dirs-layout
-    store fail loud."""
+    """compact_index_store API surface: only_below folds the
+    state-derived window below it into its max (the seed and later
+    batches untouched); a crash-duplicated window is healed by a later
+    FULL fold via the spec's dedup key; only_below on a dirs-layout
+    store fails loud."""
     import pytest as _pytest
 
     from s3logs_parquet_spark.plans.compact import compact_index_store
@@ -394,7 +394,7 @@ def test_compact_index_store_window_and_dirs_guard(spark, tmp_path):
         )
     tbl = bi.ensure_table(spark, store)
     # window fold {0,1} -> 1; seed and batch 2 untouched
-    res = compact_index_store(spark, store, only_ids=[0, 1])
+    res = compact_index_store(spark, store, only_below=2)
     assert res["batches_before"] == 4 and res["batches_after"] == 3
     assert bi.partition_ids(spark, tbl) == [-1, 1, 2]
     assert spark.table(tbl).count() == 16
@@ -410,26 +410,19 @@ def test_compact_index_store_window_and_dirs_guard(spark, tmp_path):
     assert res2["batches_after"] == 1
     assert spark.table(tbl).count() == 16  # healed
 
-    # dirs layout refuses the in-stream fold modes
+    # dirs layout refuses the in-stream fold
     droot = str(tmp_path / "dirs_store")
     _contrib(spark, range(4)).write.parquet(f"{droot}/batch=0")
     with _pytest.raises(ValueError, match="requires the bucketed layout"):
         compact_index_store(spark, droot, only_below=5)
-    with _pytest.raises(ValueError, match="requires the bucketed layout"):
-        compact_index_store(spark, droot, only_ids=[0])
-    with _pytest.raises(ValueError, match="requires the bucketed layout"):
-        compact_index_store(spark, droot, only_below=5, fold_mode="window")
 
 
 def test_window_fold_state_derived_no_cadence_gap(spark, tmp_path):
-    """ADVICE r11 #2: fold_mode='window' derives its id set from the
-    store's folded_below sidecar state, not an arithmetic
+    """ADVICE r11 #2: the in-stream fold (only_below) derives its id
+    set from the store's folded_below sidecar state, not an arithmetic
     range(batch_id - N, batch_id) — so a stream restarted with a
     DIFFERENT fold cadence still folds the ids the old cadence left
-    behind (the r11 arithmetic window orphaned them forever).
-    Explicit only_ids subsets never advance the state."""
-    import pytest as _pytest
-
+    behind (the r11 arithmetic window orphaned them forever)."""
     from s3logs_parquet_spark.plans.compact import compact_index_store
 
     store = str(tmp_path / "store")
@@ -444,7 +437,7 @@ def test_window_fold_state_derived_no_cadence_gap(spark, tmp_path):
 
     # first in-stream fold at batch 4 (cadence N=4): window derives
     # [0, 4) from folded_below default 0 — seed untouched
-    res = compact_index_store(spark, store, only_below=4, fold_mode="window")
+    res = compact_index_store(spark, store, only_below=4)
     assert res["batches_before"] == 5 and res["batches_after"] == 2
     assert bi.partition_ids(spark, tbl) == [-1, 3]
     assert bi.read_fold_state(spark, store) == 4
@@ -458,32 +451,20 @@ def test_window_fold_state_derived_no_cadence_gap(spark, tmp_path):
             spark, store, _contrib(spark, range(10 * (b + 2), 10 * (b + 2) + 4)),
             b, ("band", "band_hash"),
         )
-    res2 = compact_index_store(spark, store, only_below=8, fold_mode="window")
+    res2 = compact_index_store(spark, store, only_below=8)
     assert res2["batches_after"] == 3  # seed, 3, 7 — nothing orphaned
     assert bi.partition_ids(spark, tbl) == [-1, 3, 7]
     assert bi.read_fold_state(spark, store) == 8
     assert spark.table(tbl).count() == 9 * 4  # every row survived
 
-    # an explicit only_ids subset fold must NOT advance the state:
-    # it may skip ids the derived window would still need to cover
-    for b in (8, 9):
+    # next derived window picks up from the RECORDED state (8): every
+    # id in [8, 12) folds, nothing below the boundary is ever orphaned
+    for b in (8, 9, 10, 11):
         bi.write_contribution(
             spark, store, _contrib(spark, range(10 * (b + 2), 10 * (b + 2) + 4)),
             b, ("band", "band_hash"),
         )
-    compact_index_store(spark, store, only_ids=[8, 9])
-    assert bi.partition_ids(spark, tbl) == [-1, 3, 7, 9]
-    assert bi.read_fold_state(spark, store) == 8
-
-    # next derived window picks up from the RECORDED state (8), so the
-    # only_ids survivor 9 folds forward with the new batches — nothing
-    # below the boundary is ever orphaned
-    for b in (10, 11):
-        bi.write_contribution(
-            spark, store, _contrib(spark, range(10 * (b + 2), 10 * (b + 2) + 4)),
-            b, ("band", "band_hash"),
-        )
-    res3 = compact_index_store(spark, store, only_below=12, fold_mode="window")
+    res3 = compact_index_store(spark, store, only_below=12)
     assert res3["batches_after"] == 4  # seed + survivors 3, 7 + new 11
     assert bi.partition_ids(spark, tbl) == [-1, 3, 7, 11]
     assert bi.read_fold_state(spark, store) == 12
@@ -497,7 +478,7 @@ def test_window_fold_state_derived_no_cadence_gap(spark, tmp_path):
     # the stale window [8,12) holds only survivor 11 -> single-id
     # no-op (early return): nothing rewritten, state intentionally
     # left for the next real fold
-    compact_index_store(spark, store, only_below=12, fold_mode="window")
+    compact_index_store(spark, store, only_below=12)
     assert bi.partition_ids(spark, tbl) == [-1, 3, 7, 11]
     assert bi.read_fold_state(spark, store) == 8
     # ...which heals forward as soon as the window has >1 id: the
@@ -507,14 +488,10 @@ def test_window_fold_state_derived_no_cadence_gap(spark, tmp_path):
             spark, store, _contrib(spark, range(10 * (b + 2), 10 * (b + 2) + 4)),
             b, ("band", "band_hash"),
         )
-    compact_index_store(spark, store, only_below=14, fold_mode="window")
+    compact_index_store(spark, store, only_below=14)
     assert bi.partition_ids(spark, tbl) == [-1, 3, 7, 13]
     assert bi.read_fold_state(spark, store) == 14  # healed
     assert spark.table(tbl).count() == 15 * 4  # nothing lost, nothing doubled
-
-    # bad mode fails loud
-    with _pytest.raises(ValueError, match="fold_mode"):
-        compact_index_store(spark, store, only_below=14, fold_mode="bogus")
 
 
 def test_spec_immutable_and_fold_state_sidecar_atomic(spark, tmp_path):
@@ -537,7 +514,7 @@ def test_spec_immutable_and_fold_state_sidecar_atomic(spark, tmp_path):
         )
     spec_path = pathlib.Path(store) / bi.SPEC_FILE
     before = spec_path.read_bytes()
-    compact_index_store(spark, store, only_below=4, fold_mode="window")
+    compact_index_store(spark, store, only_below=4)
     assert bi.read_fold_state(spark, store) == 4
     # the spec bytes are untouched by the fold; the watermark lives in
     # its own sidecar; the temp sibling was renamed away
@@ -551,7 +528,7 @@ def test_spec_immutable_and_fold_state_sidecar_atomic(spark, tmp_path):
             spark, store, _contrib(spark, range(10 * b, 10 * b + 4)),
             b, ("band", "band_hash"),
         )
-    compact_index_store(spark, store, only_below=6, fold_mode="window")
+    compact_index_store(spark, store, only_below=6)
     assert json.loads(state_path.read_text()) == {"folded_below": 6}
     assert spec_path.read_bytes() == before
 
@@ -615,26 +592,6 @@ def test_fold_state_honors_legacy_in_spec_watermark(spark, tmp_path):
     # ...but never backwards (max semantics)
     bi.write_fold_state(spark, store, 3)
     assert bi.read_fold_state(spark, store) == 7
-
-
-def test_only_ids_window_mode_conflict_rejected(spark, tmp_path):
-    """ADVICE r12 #4: only_ids + fold_mode='window' silently ignored
-    window mode (the explicit subset took precedence and never advanced
-    folded_below) — now a loud ValueError, mirroring the fold_mode
-    validation."""
-    from s3logs_parquet_spark.plans.compact import compact_index_store
-
-    store = str(tmp_path / "store")
-    for b in (0, 1):
-        bi.write_contribution(
-            spark, store, _contrib(spark, range(10 * b, 10 * b + 4)),
-            b, ("band", "band_hash"), n_buckets=2,
-        )
-    with pytest.raises(ValueError, match="only_ids and fold_mode='window' conflict"):
-        compact_index_store(spark, store, only_ids=[0], fold_mode="window")
-    # store untouched by the rejected call
-    tbl = bi.ensure_table(spark, store)
-    assert bi.partition_ids(spark, tbl) == [0, 1]
 
 
 def test_probe_plan_after_full_fold_still_bucketed(spark, tmp_path):

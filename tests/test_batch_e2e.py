@@ -119,6 +119,20 @@ def test_corrupt_side_channel_and_archive(spark, tmp_path):
     assert res.rows_out == len(lines) - n_garbage
 
 
+def test_corrupt_lines_are_exactly_the_dropped_lines(spark, tmp_path):
+    # A line whose third token is not a time but that holds a bracketed
+    # time further on passes the full-line TS_PATTERN, yet the pipeline
+    # drops it: the side channel must carry it too.
+    lines = generate_lines(50, seed=3, dup_fraction=0.0, garbage_fraction=0.1)
+    lines.append("a b c [06/Feb/2019:00:00:38 +0000] x y")
+    inp = _write_lines(tmp_path, "logs.txt", lines)
+    corrupt = str(tmp_path / "corrupt")
+    res = run_batch_transform(spark, inp, str(tmp_path / "out"), corrupt_path=corrupt)
+    got = [r.value for r in spark.read.text(corrupt).collect()]
+    assert len(got) == res.rows_in - res.rows_parsed
+    assert "a b c [06/Feb/2019:00:00:38 +0000] x y" in got
+
+
 def test_gzip_compressed_input(spark, tmp_path):
     """S3 access logs are commonly delivered gzip-compressed; the text
     source must read .gz transparently (Hadoop codec discovery)."""

@@ -335,58 +335,6 @@ def test_precomputed_banded_paths_match(spark):
         incremental_neardup_pairs(batch, index, batch_banded=batch, **kw)
 
 
-def test_incremental_probe_broadcasts_batch_side(spark):
-    """broadcast_batch (round 9): the probe must stream over the corpus
-    index map-side — the band join is a BroadcastHashJoin with the
-    BATCH side built, so the accumulated index is never re-exchanged
-    per probe. Results identical with the hint off."""
-    from pyspark.sql import functions as F
-
-    from s3logs_parquet_spark.operators.dedup import (
-        incremental_neardup_pairs,
-        minhash_banded,
-    )
-
-    base = [
-        "the quick brown fox jumps over the lazy dog near the river bank today",
-        "spark physical plans use exchanges and codegen for scalable execution",
-    ]
-    rows = [
-        (i, base[i % 2] + (" slightly changed" if i % 5 == 0 else ""))
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(num_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.3)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    index = minhash_banded(corpus, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3)
-
-    import re
-
-    # materialize=False exposes the whole lazy topology (the hinted
-    # path checkpoints pair_ids, hiding the band join behind an
-    # ExistingRDD); broadcast_batch is opt-in (default False on
-    # measured local grounds — see the operator docstring)
-    hinted = incremental_neardup_pairs(
-        batch, index, materialize=False, broadcast_batch=True, **kw
-    )
-    plan = hinted._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    # the (band, band_hash) join is a broadcast join with the BATCH
-    # side built — the index is never exchanged on the band keys
-    assert re.search(r"BroadcastHashJoin \[band#", plan), plan
-    assert "SortMergeJoin [band" not in plan
-    # the corpus band-0 signature slice prunes through a broadcast
-    # semi join on candidate ids instead of re-exchanging whole
-    assert "LeftSemi, BuildRight" in plan or "LeftSemi" in plan
-
-    unhinted = incremental_neardup_pairs(batch, index, broadcast_batch=False, **kw)
-    assert {tuple(r) for r in hinted.collect()} == {
-        tuple(r) for r in unhinted.collect()
-    } != set()
-
-
 def test_exact_dedup_narrow_and_legacy_modes(spark):
     """All three exact_dedup modes agree on survivors: the narrow
     (digest + semi-join, the 100 TB path), the digest-keyed min-struct,
@@ -952,7 +900,9 @@ def test_cc_contract_strategy_parity(spark):
     so the three budgets below exercise: contraction that lands inside
     the budget (55), contraction that stalls at the floor and falls
     back to the propagation loop (20), and a skip-contraction
-    straight-to-driver finish (60 ≥ canonical count)."""
+    straight-to-driver finish (60 ≥ canonical count). driver_edge_limit
+    alone picks the path: the 118 directed edges exceed every budget,
+    so none of them takes the direct driver union-find."""
     from s3logs_parquet_spark.operators.dedup import connected_components_clusters
 
     ids = spark.range(200).selectExpr("id AS doc_id")
@@ -968,7 +918,7 @@ def test_cc_contract_strategy_parity(spark):
         got = {
             r["doc_id"]: r["cluster_id"]
             for r in connected_components_clusters(
-                p, ids, "doc_id", driver_edge_limit=limit, strategy="contract"
+                p, ids, "doc_id", driver_edge_limit=limit
             ).collect()
         }
         assert got == want, f"contract path diverged at driver_edge_limit={limit}"

@@ -248,6 +248,58 @@ def test_manifest_stream_exactly_once_across_restart(spark, tmp_path):
     assert t2.select("batch").distinct().count() == 2
 
 
+def test_manifest_stream_passthrough_key_dates(spark, tmp_path):
+    """P5 on the manifest stream: each object's rows land under its KEY
+    date, not the lines' event date; a redelivered object (same lines
+    under a second key of the same date) is deduplicated within its
+    key-date group."""
+    import json
+
+    from s3logs_parquet_spark.streaming.job import run_manifest_stream
+
+    objroot = tmp_path / "objects"
+    (objroot / "bkt").mkdir(parents=True)
+    keys = {
+        "2024-06-01-00-00-00-ABCDEF0123456789": generate_lines(
+            40, seed=31, base_ts=BASE_TS, dup_fraction=0.0, garbage_fraction=0.0
+        ),
+        "2024-06-02-13-00-00-0123456789ABCDEF": generate_lines(
+            30, seed=32, base_ts=BASE_TS, dup_fraction=0.0, garbage_fraction=0.0
+        ),
+    }
+    # redelivery: the first object's lines again under another key of
+    # the same date
+    keys["2024-06-01-05-00-00-FEDCBA9876543210"] = keys[
+        "2024-06-01-00-00-00-ABCDEF0123456789"
+    ]
+    for key, lines in keys.items():
+        (objroot / "bkt" / key).write_text("\n".join(lines) + "\n")
+    man, out, ckpt = (str(tmp_path / d) for d in ("man", "out", "ckpt"))
+    os.makedirs(man)
+    (tmp_path / "man" / "m0.json").write_text(
+        "\n".join(
+            json.dumps(
+                {"Records": [{"eventName": "ObjectCreated:Put",
+                              "s3": {"bucket": {"name": "bkt"},
+                                     "object": {"key": key, "size": 1}}}]}
+            )
+            for key in keys
+        )
+        + "\n"
+    )
+    q = run_manifest_stream(
+        spark, man, out, ckpt, EngineConfig(),
+        StreamingJobConfig(available_now=True, passthrough=True),
+        scheme="file://", object_root=str(objroot),
+    )
+    drain(q)
+    got = {
+        str(r["dt"]): r["count"]
+        for r in spark.read.parquet(out).groupBy("dt").count().collect()
+    }
+    assert got == {"20240601": 40, "20240602": 30}
+
+
 def test_fold_stream_batches_after_drain(spark, tmp_path):
     """VERDICT r2 #5: a drained manifest stream's batch=<id> commit
     dirs fold into a single batch dir (resumable mode) and into bare
@@ -796,10 +848,11 @@ def _curation_fixture_docs():
     return files
 
 
-def test_curation_logs_stage_times_once_per_trigger(spark, tmp_path, caplog):
-    """The per-stage wall times of run_stream_curation go to the job
-    module's logger at DEBUG: one record per trigger, carrying the
-    stage labels."""
+@pytest.mark.parametrize("runner", ["curation", "semdedup"])
+def test_index_runner_logs_stage_times_once_per_trigger(spark, tmp_path, caplog, runner):
+    """Every index-backed stream job logs its per-stage wall times to
+    the job module's logger at DEBUG: one record per trigger, carrying
+    the stage labels (the foreachBatch skeleton's record)."""
     import logging
 
     from pyspark.sql import types as T
@@ -807,31 +860,101 @@ def test_curation_logs_stage_times_once_per_trigger(spark, tmp_path, caplog):
     from s3logs_parquet_spark.streaming.job import (
         StreamingJobConfig,
         run_stream_curation,
+        run_stream_semantic_dedup,
     )
+
+    scfg = StreamingJobConfig(available_now=True, max_files_per_trigger=1)
+    inp, out, idx, ck = (str(tmp_path / d) for d in ("in", "out", "idx", "ck"))
+    if runner == "curation":
+        schema = T.StructType(
+            [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+        )
+        files = _curation_fixture_docs()[:2]
+        labels = ("gate+dedup", "signatures", "lsh+cc")
+
+        def start():
+            return run_stream_curation(
+                spark, inp, schema, out, idx, ck, min_quality=0.3, scfg=scfg
+            )
+    else:
+        schema = T.StructType(
+            [
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("embedding", T.ArrayType(T.DoubleType())),
+            ]
+        )
+        files = [[(0, [1.0, 0.0]), (1, [0.0, 1.0])], [(2, [0.99, 0.01])]]
+        labels = ("assign", "flags", "index-write")
+
+        def start():
+            return run_stream_semantic_dedup(
+                spark, inp, schema, idx, [[1.0, 0.0], [0.0, 1.0]], 0.99, out, ck,
+                scfg=scfg,
+            )
+    for rows in files:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inp)
+    logger = "s3logs_parquet_spark.streaming.job"
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        drain(start())
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == logger and r.getMessage().startswith(f"{runner} batch=")
+    ]
+    assert [m.split()[1] for m in msgs] == ["batch=0", "batch=1"], msgs
+    for m in msgs:
+        for label in labels:
+            assert f'"{label}"' in m, m
+
+
+def test_foreach_batch_releases_blocks_when_process_raises(spark, tmp_path):
+    """The skeleton releases every materialization a trigger kept, also
+    when the trigger fails: no cached or checkpointed blocks outlive a
+    failed micro-batch, for a bare process and for run_stream_curation
+    failing at its survivors write (after `fresh` was checkpointed)."""
+    from pyspark.sql import types as T
+
+    from s3logs_parquet_spark.streaming.job import (
+        StreamingJobConfig,
+        _foreach_batch,
+        _parquet_stream,
+        run_stream_curation,
+    )
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
     )
-    inp, out, idx, ck = (str(tmp_path / d) for d in ("in", "out", "idx", "ck"))
-    for rows in _curation_fixture_docs()[:2]:
+    inp = str(tmp_path / "in")
+    for rows in _curation_fixture_docs()[:1]:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inp)
-    logger = "s3logs_parquet_spark.streaming.job"
-    with caplog.at_level(logging.DEBUG, logger=logger):
-        drain(
-            run_stream_curation(
-                spark, inp, schema, out, idx, ck, min_quality=0.3,
-                scfg=StreamingJobConfig(available_now=True, max_files_per_trigger=1),
-            )
-        )
-    msgs = [
-        r.getMessage()
-        for r in caplog.records
-        if r.name == logger and r.getMessage().startswith("curation batch=")
-    ]
-    assert [m.split()[1] for m in msgs] == ["batch=0", "batch=1"], msgs
-    for m in msgs:
-        for label in ("gate+dedup", "signatures", "lsh+cc"):
-            assert f'"{label}"' in m, m
+    scfg = StreamingJobConfig(available_now=True, max_files_per_trigger=1)
+    before = persistent()
+
+    def process(batch_df, batch_id, trigger):
+        trigger.keep(batch_df.select("doc_id"))
+        assert persistent() - before  # the kept frame holds blocks
+        raise RuntimeError("injected")
+
+    q = _foreach_batch(
+        "raises", _parquet_stream(spark, inp, schema, scfg), process,
+        str(tmp_path / "ck0"), scfg,
+    )
+    with pytest.raises(Exception, match="injected"):
+        q.awaitTermination(300)
+    assert not persistent() - before
+
+    # the survivors write fails: its target's parent is a regular file
+    (tmp_path / "out-is-a-file").write_text("not a directory")
+    q = run_stream_curation(
+        spark, inp, schema, str(tmp_path / "out-is-a-file"), str(tmp_path / "idx"),
+        str(tmp_path / "ck1"), min_quality=0.3, scfg=scfg,
+    )
+    with pytest.raises(Exception):
+        q.awaitTermination(300)
+    assert not persistent() - before
 
 
 def test_stream_curation_invariants_and_single_batch_equality(spark, tmp_path):
@@ -953,7 +1076,7 @@ def test_stream_curation_invariants_and_single_batch_equality(spark, tmp_path):
 def test_prior_batch_dirs_excludes_current_and_later(spark, tmp_path):
     """The replay guard: a crashed attempt's own contribution dir (and
     any later one) must be invisible when re-deriving its batch."""
-    from s3logs_parquet_spark.streaming.job import _prior_batch_dirs
+    from s3logs_parquet_spark.plans.band_index import prior_batch_dirs as _prior_batch_dirs
 
     root = str(tmp_path / "store")
     for b in (0, 1, 2):
@@ -1696,14 +1819,12 @@ def test_run_broadcast_cleanup_listener_unit():
     assert fake_spark.streams.removed == [lst]
 
 
-@pytest.mark.parametrize("fold_mode", ["window", "all"])
-def test_stream_curation_auto_fold_matches_manual(spark, tmp_path, fold_mode):
+def test_stream_curation_auto_fold_matches_manual(spark, tmp_path):
     """Round 11 (VERDICT r10 #4): fold_every_n_batches folds the
     bucketed index stores BETWEEN triggers, invisibly — survivors
     identical to a never-folded control, the store's partition count
-    stays bounded, and the knob refuses the dirs layout. Both fold
-    modes: 'window' (log-structured, O(batch*N) per fold — the scale
-    default) and 'all' (whole-store)."""
+    stays bounded (log-structured: O(batch*N) per fold), and the knob
+    refuses the dirs layout."""
     from pyspark.sql import types as T
 
     from s3logs_parquet_spark.plans import band_index as bi
@@ -1738,7 +1859,7 @@ def test_stream_curation_auto_fold_matches_manual(spark, tmp_path, fold_mode):
         q = run_stream_curation(
             spark, inp, schema, out, idx, ck,
             min_quality=0.3, jaccard_threshold=0.3, index_dropped=True,
-            fold_every_n_batches=fold_every, fold_mode=fold_mode, scfg=scfg,
+            fold_every_n_batches=fold_every, scfg=scfg,
         )
         drain(q)
         parts = {
@@ -1752,12 +1873,10 @@ def test_stream_curation_auto_fold_matches_manual(spark, tmp_path, fold_mode):
     assert control == folded
     assert 900 not in folded  # exact dup caught through folded history
     assert parts_c["bands"] == [0, 1, 2, 3, 4, 5]
-    # cadence 2, mode 'all': fold before batch 2 ({0,1}->1), before
-    # batch 4 ({1,2,3}->3). Mode 'window': {0,1}->1 and {2,3}->3 —
-    # older folded runs stay put (log-structured).
-    expect = [3, 4, 5] if fold_mode == "all" else [1, 3, 4, 5]
-    assert parts_f["bands"] == expect
-    assert parts_f["digests"] == expect
+    # cadence 2: fold before batch 2 ({0,1}->1) and before batch 4
+    # ({2,3}->3) — older folded runs stay put (log-structured)
+    assert parts_f["bands"] == [1, 3, 4, 5]
+    assert parts_f["digests"] == [1, 3, 4, 5]
 
     with pytest.raises(ValueError, match="fold_every_n_batches requires"):
         run_stream_curation(
@@ -1767,8 +1886,7 @@ def test_stream_curation_auto_fold_matches_manual(spark, tmp_path, fold_mode):
         )
 
 
-@pytest.mark.parametrize("fold_mode", ["window", "all"])
-def test_stream_semantic_dedup_auto_fold_and_manual_fold(spark, tmp_path, fold_mode):
+def test_stream_semantic_dedup_auto_fold_and_manual_fold(spark, tmp_path):
     """Round 11: the semantic index store folds like the curation
     stores — (a) fold_every_n_batches auto-folds between triggers with
     flags identical to a never-folded control; (b) the standalone
@@ -1813,7 +1931,7 @@ def test_stream_semantic_dedup_auto_fold_and_manual_fold(spark, tmp_path, fold_m
         scfg = StreamingJobConfig(available_now=True, max_files_per_trigger=1)
         q = run_stream_semantic_dedup(
             spark, inp, schema, idx, cents, 0.999, out, ck,
-            fold_every_n_batches=fold_every, fold_mode=fold_mode, scfg=scfg,
+            fold_every_n_batches=fold_every, scfg=scfg,
         )
         drain(q)
         flags = {
@@ -1831,9 +1949,9 @@ def test_stream_semantic_dedup_auto_fold_and_manual_fold(spark, tmp_path, fold_m
     assert control[0][0] is False
     assert all(control[10 * b][0] for b in range(1, 5)), control
     assert parts_c == [0, 1, 2, 3, 4]
-    # 'all': fold before batch 2 ({0,1}->1) and batch 4 ({1,2,3}->3);
-    # 'window': {0,1}->1 stays put when {2,3}->3 folds
-    assert parts_f == ([3, 4] if fold_mode == "all" else [1, 3, 4])
+    # fold before batch 2 ({0,1}->1) and batch 4 ({2,3}->3): the
+    # folded {0,1} run stays put
+    assert parts_f == [1, 3, 4]
 
     # (b) manual drained-stream fold + resume: fold everything, then a
     # new batch duplicating old history must still flag
